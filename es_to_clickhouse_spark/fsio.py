@@ -13,7 +13,8 @@ they accept any Hadoop-compatible URI, including bare local paths (which
 resolve against the default ``file://`` filesystem).
 
 All calls here are driver-side METADATA operations (exists / list /
-read+write a tiny JSON file) — O(1) per sync round, never data-path.
+read+write a tiny JSON or state file) — O(1) per sync round, never
+data-path.
 """
 
 from __future__ import annotations
@@ -58,25 +59,33 @@ def has_glob(spark: SparkSession, pattern: str) -> bool:
     return matches is not None and len(matches) > 0
 
 
-def read_text(spark: SparkSession, path: str) -> str:
+def read_bytes(spark: SparkSession, path: str) -> bytes:
     fs, p = _fs_path(spark, path)
     stream = fs.open(p)
     try:
         # commons-io ships on every Spark classpath
-        return spark._jvm.org.apache.commons.io.IOUtils.toString(stream, "UTF-8")
+        return spark._jvm.org.apache.commons.io.IOUtils.toByteArray(stream)
     finally:
         stream.close()
 
 
-def write_text(spark: SparkSession, path: str, text: str) -> None:
+def read_text(spark: SparkSession, path: str) -> str:
+    return read_bytes(spark, path).decode("utf-8")
+
+
+def write_bytes(spark: SparkSession, path: str, data: bytes) -> None:
     """Create-or-overwrite a small metadata file (single RPC on object
     stores; no POSIX assumptions)."""
     fs, p = _fs_path(spark, path)
     out = fs.create(p, True)
     try:
-        out.write(bytearray(text, "utf-8"))
+        out.write(bytearray(data))
     finally:
         out.close()
+
+
+def write_text(spark: SparkSession, path: str, text: str) -> None:
+    write_bytes(spark, path, text.encode("utf-8"))
 
 
 def join(*parts: str) -> str:

@@ -653,9 +653,9 @@ def sync_incremental_http(
        start date is forced; neither -> the 1-day bootstrap (P6);
     2. the table reads DISTRIBUTED (``read_table`` with the condition
        pushed into every range query, executor-side fetch), then
-       ``localCheckpoint``s — ONE snapshot feeds the count, the append,
-       and the watermark (the source is not re-read, so the reported n
-       is exactly what was appended);
+       ``localCheckpoint``s — ONE snapshot feeds the count and the
+       watermark (one aggregate) and the append (the source is not
+       re-read, so the reported n is exactly what was appended);
     3. rows append to the warehouse target (system columns + schema
        evolution handled by the sink);
     4. the watermark advances to ``max(time_column)`` OVER THE APPENDED
@@ -683,13 +683,12 @@ def sync_incremental_http(
         bounds=bounds,
         num_partitions=num_partitions,
     ).localCheckpoint()  # one source pass; count/append/watermark share it
-    n = df.count()
+    n, max_time = df.agg(
+        F.count(F.lit(1)), F.max(F.col(time_column)).cast("string")
+    ).collect()[0]
     if n == 0:
         return 0, cond, last
     target.append(table, df)
-    max_time = df.agg(
-        F.max(F.col(time_column)).cast("string").alias("m")
-    ).collect()[0]["m"]
     new_wm = max_time or last
     state.commit(
         SyncState(

@@ -1192,29 +1192,28 @@ def sync_incremental_es_http(
     df = df.localCheckpoint()  # one wire drain materialized here
     _rdd.unpersist()  # transport cache released (poll daemons leak otherwise)
     out = flatten_es(df, stringify=False)
-    n = out.count()
-    if n == 0:
-        return mode, 0, since
     cols = out.columns
     time_field = time_field if time_field in cols else detect_time_field(cols)
     update_field = detect_update_time_field(cols)
-    target.append(index, out)
     # ADVICE r10 (Mongo split twin): if ANY slice died mid-drain, the
     # appended snapshot's max(time) belongs to the HEALTHY slices and
     # may overshoot the failed slice's undrained tail — committing it
     # would lose that tail forever. Append the partial rows (at-least-
     # once) but HOLD the watermark; the next round re-fetches from the
-    # old one (duplicates possible, loss impossible).
-    aggs = (
-        [F.max(F.col(time_field)).cast("string").alias("max_t")]
-        if time_field and complete
-        else []
-    )
+    # old one (duplicates possible, loss impossible). The count and the
+    # maxima share one aggregate over the checkpointed snapshot.
+    aggs = [F.count(F.lit(1)).alias("n")]
+    if time_field and complete:
+        aggs.append(F.max(F.col(time_field)).cast("string").alias("max_t"))
     if update_field and complete:
         aggs.append(F.max(F.col(update_field)).cast("string").alias("max_u"))
-    row = out.agg(*aggs).collect()[0] if aggs else None
-    max_t = row["max_t"] if row is not None and time_field else None
-    max_u = row["max_u"] if row is not None and update_field else None
+    row = out.agg(*aggs).collect()[0].asDict()
+    n = row["n"]
+    if n == 0:
+        return mode, 0, since
+    target.append(index, out)
+    max_t = row.get("max_t")
+    max_u = row.get("max_u")
     # monotone merge (engine._mono_time contract): a late-update batch's
     # maxima can sit below the stored marks
     last = st.last_sync_time if st else since

@@ -13,10 +13,25 @@ the latest row per source table:
   (mongodb/mongodb_to_bytehouse.py:218-262).
 
 Here the state lives as an append-only parquet table inside the target
-warehouse — same queryability, and the append-only + latest-wins design
-means state commits are cheap blind appends at any scale (no read-modify-
-write). Latest-row reads use a window (`row_number() = 1`), the Spark
-expression of the reference's ORDER BY … DESC LIMIT 1.
+warehouse: one single-row part file per commit, and the latest row per
+table (by ``updated_at``) wins, so a commit is a blind append — no
+read-modify-write. The reference's INSERT and ORDER BY … DESC LIMIT 1 are
+one cheap round trip each, so ``commit`` and ``get`` run on the driver
+and fire no Spark job:
+
+- ``commit`` serialises the row with pyarrow against the Arrow twin of
+  ``STATE_SCHEMA`` (a mistyped field raises before any byte lands), writes
+  it through the Hadoop FS API under a dot-prefixed temp name and renames
+  it to ``part-<uuid>.parquet``. Spark and pyarrow skip dot-files, so a
+  crash mid-write never exposes a partial part.
+- ``get`` lists the directory on every call (so commits from other
+  writers and restored snapshots are seen), parses only part files it has
+  not seen before, forgets parts that vanished, and folds latest-by-
+  ``updated_at``. Parts written by Spark carry naive ``updated_at`` values
+  in the session time zone (UTC); they are read as UTC.
+
+The files stay one queryable table: ``read_all`` / ``latest`` / ``status``
+read it with Spark (the CLI ``status`` mode).
 
 Watermarks are kept as *strings* in the table for reference parity
 (lexicographic ISO compare — es/es_to_bytehouse.py:912,918) but the engine
@@ -26,12 +41,15 @@ compares typed values internally (SURVEY §7.4 risk 3).
 from __future__ import annotations
 
 import uuid
-from dataclasses import dataclass
+from dataclasses import asdict, dataclass, fields
 from datetime import datetime, timezone
 
-from pyspark.sql import Row, SparkSession
+import pyarrow as pa
+import pyarrow.parquet as pq
+from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.window import Window
 
 from es_to_clickhouse_spark import fsio
@@ -49,6 +67,8 @@ STATE_SCHEMA = T.StructType(
         T.StructField("updated_at", T.TimestampType()),
     ]
 )
+# updated_at becomes timestamp[us, tz=UTC], which Spark reads as TimestampType
+ARROW_STATE_SCHEMA = to_arrow_schema(STATE_SCHEMA)
 
 
 @dataclass
@@ -72,6 +92,7 @@ class StateStore:
         # (file:// hdfs:// s3a://) — never driver-local os.* calls.
         self.path = fsio.join(warehouse, "_sync_state")
         fsio.mkdirs(spark, warehouse)
+        self._parts: dict[str, list[dict]] = {}  # part name -> parsed rows
 
     def _exists(self) -> bool:
         return fsio.has_glob(self.spark, fsio.join(self.path, "*.parquet"))
@@ -92,52 +113,55 @@ class StateStore:
             .drop("_rn")
         )
 
+    def _refresh(self) -> None:
+        names = {
+            n
+            for n in fsio.listdir(self.spark, self.path)
+            if n.endswith(".parquet") and not n.startswith((".", "_"))
+        }
+        self._parts = {n: rows for n, rows in self._parts.items() if n in names}
+        for n in names - self._parts.keys():
+            data = fsio.read_bytes(self.spark, fsio.join(self.path, n))
+            table = pq.read_table(pa.BufferReader(data))
+            i = table.schema.get_field_index("updated_at")
+            # naive (Spark-written) values are UTC instants: the cast keeps them
+            ts = table.column(i).cast(
+                ARROW_STATE_SCHEMA.field("updated_at").type, safe=False
+            )
+            self._parts[n] = table.set_column(i, "updated_at", ts).to_pylist()
+
     def get(self, table_name: str) -> SyncState | None:
-        rows = self.latest().where(F.col("table_name") == table_name).collect()
+        self._refresh()
+        rows = [
+            r
+            for part in self._parts.values()
+            for r in part
+            if r["table_name"] == table_name
+        ]
         if not rows:
             return None
-        r = rows[0]
-        return SyncState(
-            table_name=r.table_name,
-            source_name=r.source_name,
-            time_field=r.time_field,
-            update_time_field=r.update_time_field,
-            last_sync_time=r.last_sync_time,
-            last_update_time=r.last_update_time,
-            last_id=r.last_id,
-            last_sync_count=r.last_sync_count or 0,
-        )
+        r = max(rows, key=lambda r: r["updated_at"])
+        st = SyncState(**{f.name: r[f.name] for f in fields(SyncState)})
+        st.last_sync_count = st.last_sync_count or 0
+        return st
 
     def has_synced_before(self, table_name: str) -> bool:
         """Auto-mode probe (mongodb/mongodb_to_bytehouse.py:285-295)."""
-        return (
-            self.read_all().where(F.col("table_name") == table_name).limit(1).count()
-            > 0
-        )
+        return self.get(table_name) is not None
 
     def commit(self, state: SyncState) -> None:
-        """Append one watermark row (es/es_to_bytehouse.py:454-465). Blind
-        append — no shuffle, no read — so commits stay O(1) at scale."""
-        row = Row(
-            table_name=state.table_name,
-            source_name=state.source_name,
-            time_field=state.time_field,
-            update_time_field=state.update_time_field,
-            last_sync_time=state.last_sync_time,
-            last_update_time=state.last_update_time,
-            last_id=state.last_id,
-            last_sync_count=state.last_sync_count,
-            updated_at=datetime.now(timezone.utc).replace(tzinfo=None),
-        )
-        df = self.spark.createDataFrame([row], STATE_SCHEMA).coalesce(1)
-        # unique filename per commit via uuid inside a single-file append
-        df.write.mode("append").parquet(self.path)
+        """Append one watermark row (es/es_to_bytehouse.py:454-465) as its
+        own part file, written from the driver: no Spark job, no read."""
+        row = {**asdict(state), "updated_at": datetime.now(timezone.utc)}
+        buf = pa.BufferOutputStream()
+        pq.write_table(pa.Table.from_pylist([row], schema=ARROW_STATE_SCHEMA), buf)
+        name = f"part-{uuid.uuid4().hex}.parquet"
+        tmp = fsio.join(self.path, f".{name}.tmp")
+        fsio.write_bytes(self.spark, tmp, buf.getvalue().to_pybytes())
+        if not fsio.rename(self.spark, tmp, fsio.join(self.path, name)):
+            raise OSError(f"state commit: rename {tmp} -> {name} failed")
 
     def status(self, limit: int = 10):
         """`--mode status` inspection: most recent commits first
         (clickhouse/clickhouse_to_bytehouse.py:205-224)."""
         return self.read_all().orderBy(F.desc("updated_at")).limit(limit)
-
-
-def new_run_id() -> str:
-    return uuid.uuid4().hex[:12]

@@ -3,7 +3,10 @@
 from __future__ import annotations
 
 import hashlib
+import os
+import shutil
 
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
@@ -12,21 +15,42 @@ from es_to_clickhouse_spark.sink import (
     insert_with_repair,
     upsert_view,
 )
-from es_to_clickhouse_spark.state import StateStore, SyncState
+from es_to_clickhouse_spark.state import (
+    ARROW_STATE_SCHEMA,
+    STATE_SCHEMA,
+    StateStore,
+    SyncState,
+)
+
+
+def _state_files(tmp_path):
+    return sorted(os.listdir(tmp_path / "_sync_state"))
 
 
 def test_state_roundtrip_latest_wins(spark, tmp_path):
+    """Point reads and commits run on the driver: no Spark job at all."""
     store = StateStore(spark, str(tmp_path))
-    assert store.get("t1") is None
-    assert not store.has_synced_before("t1")
-    store.commit(SyncState("t1", time_field="ts", last_sync_time="2024-01-01"))
-    store.commit(SyncState("t1", time_field="ts", last_sync_time="2024-01-02"))
-    st = store.get("t1")
+    sc = spark.sparkContext
+    sc.setJobGroup("state-ops", "driver-side state", False)
+    try:
+        assert store.get("t1") is None
+        assert not store.has_synced_before("t1")
+        store.commit(SyncState("t1", time_field="ts", last_sync_time="2024-01-01"))
+        store.commit(SyncState("t1", time_field="ts", last_sync_time="2024-01-02"))
+        st = store.get("t1")
+        assert store.has_synced_before("t1")
+    finally:
+        sc.setJobGroup("", "", False)
+    assert sc.statusTracker().getJobIdsForGroup("state-ops") == []
     # latest row per key (ORDER BY updated_at DESC LIMIT 1,
     # es/es_to_bytehouse.py:437-440)
     assert st.last_sync_time == "2024-01-02"
-    assert store.has_synced_before("t1")
     assert store.read_all().count() == 2  # append-only underneath
+    # each commit is one plain parquet part, readable without Spark
+    parts = [n for n in _state_files(tmp_path) if n.endswith(".parquet")]
+    assert len(parts) == 2
+    t = pq.read_table(str(tmp_path / "_sync_state" / parts[0]))
+    assert t.schema.equals(ARROW_STATE_SCHEMA)
 
 
 def test_state_status_ordering(spark, tmp_path):
@@ -36,6 +60,65 @@ def test_state_status_ordering(spark, tmp_path):
     rows = store.status(limit=2).collect()
     assert len(rows) == 2
     assert rows[0].updated_at >= rows[1].updated_at
+
+
+def test_state_resumes_spark_written_parts(spark, tmp_path):
+    """A state directory written by the older Spark writer (naive
+    updated_at, several part files) resumes with the same watermark, and
+    newer driver-written commits win over it."""
+    from datetime import datetime
+
+    old = [
+        ("t1", None, "ts", None, "2024-01-01", None, None, 5, datetime(2024, 1, 1)),
+        ("t2", None, "ts", None, "2024-03-01", None, None, 7, datetime(2024, 3, 1)),
+    ]
+    spark.createDataFrame(old, STATE_SCHEMA).repartition(2).write.parquet(
+        str(tmp_path / "_sync_state")
+    )
+    store = StateStore(spark, str(tmp_path))
+    st = store.get("t1")
+    assert (st.last_sync_time, st.last_sync_count) == ("2024-01-01", 5)
+    store.commit(SyncState("t1", time_field="ts", last_sync_time="2024-01-02"))
+    store.commit(SyncState("t1", time_field="ts", last_sync_time="2024-01-03"))
+    assert store.get("t1").last_sync_time == "2024-01-03"
+    assert store.get("t2").last_sync_time == "2024-03-01"
+    assert store.read_all().count() == 4
+    rows = store.status(limit=10).collect()
+    assert [r.last_sync_time for r in rows] == [
+        "2024-01-03",
+        "2024-01-02",
+        "2024-03-01",
+        "2024-01-01",
+    ]
+    latest = {r.table_name: r.last_sync_time for r in store.latest().collect()}
+    assert latest == {"t1": "2024-01-03", "t2": "2024-03-01"}
+
+
+def test_state_sees_other_writers_and_restored_snapshots(spark, tmp_path):
+    """get lists the directory on every call: a commit through another
+    instance is visible, and a restored snapshot wins over a cached row."""
+    first = StateStore(spark, str(tmp_path))
+    first.commit(SyncState("t1", last_sync_time="2024-01-01"))
+    assert first.get("t1").last_sync_time == "2024-01-01"
+    snap = tmp_path / "snap"
+    shutil.copytree(tmp_path / "_sync_state", snap)
+    StateStore(spark, str(tmp_path)).commit(SyncState("t1", last_sync_time="2024-01-02"))
+    assert first.get("t1").last_sync_time == "2024-01-02"
+    shutil.rmtree(tmp_path / "_sync_state")
+    shutil.copytree(snap, tmp_path / "_sync_state")
+    assert first.get("t1").last_sync_time == "2024-01-01"
+
+
+def test_state_commit_rejects_mistyped_field(spark, tmp_path):
+    """A raw int in a string column raises before any byte lands — no
+    part file (and no temp file) is left behind."""
+    store = StateStore(spark, str(tmp_path))
+    store.commit(SyncState("t1", last_id="int:1"))
+    before = _state_files(tmp_path)
+    with pytest.raises(TypeError):
+        store.commit(SyncState("t1", last_id=2))
+    assert _state_files(tmp_path) == before
+    assert store.get("t1").last_id == "int:1"
 
 
 def test_target_append_and_evolution(spark, tmp_path):
