@@ -99,12 +99,6 @@ class ParquetCatalog:
         return self.read(name).count()
 
 
-def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    """Convenience: read every testbed table into a dict of DataFrames."""
-    cat = ParquetCatalog(spark, sf_dir)
-    return {t.name: cat.read(t.name) for t in cat.list_tables()}
-
-
 def register_views(spark: SparkSession, sf_dir: str) -> list[str]:
     """Register every testbed table as a temp view; returns names."""
     names = []

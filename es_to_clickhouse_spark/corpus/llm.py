@@ -278,7 +278,7 @@ def d18_embedding_neardup_cell(spark, sf_dir):
     # rule assumed dense ids and saturated on any strided/sparse id
     # layout (operators/similarity.sampled_centroids has the measured
     # 23.6x-decade autopsy; judge r11 #5)
-    n_emb = emb.count()  # one metadata job: centroid cut + block hint
+    n_emb = emb.count()  # one metadata job: the centroid cut
     cents = sampled_centroids(emb, n=n_emb)
     cell = ivf_assign_probes(emb, cents, n_probes=2).select(
         "vec_id", "cent_id"
@@ -291,12 +291,8 @@ def d18_embedding_neardup_cell(spark, sf_dir):
         "_blk",
         F.concat(F.col("label"), F.lit("|"), F.col("cent_id").cast("string")),
     )
-    # block hint: (label x cell) blocks number at least the cell count —
-    # a conservative lower bound keeps the adaptive salting safe
-    k_cells = max(8, n_emb // 256)
     return embedding_neardup_pairs(
-        base, "vec_id", "embedding", "_blk", threshold=0.4,
-        n_blocks_hint=k_cells,
+        base, "vec_id", "embedding", "_blk", threshold=0.4
     ).distinct()
 
 
@@ -355,14 +351,12 @@ def d21_crosslabel_leakage(spark, sf_dir):
     )
 
     emb = t(spark, sf_dir, "embeddings")
-    n_emb = emb.count()  # one metadata job: centroid cut + block hint
+    n_emb = emb.count()  # one metadata job: the centroid cut
     cents = sampled_centroids(emb, n=n_emb)
     cell = ivf_assign_auto(emb, cents).select("vec_id", "cent_id")
     base = emb.join(cell.hint("SHUFFLE_HASH"), "vec_id")
-    k_cells = max(8, n_emb // 256)
     pairs = embedding_neardup_pairs(
-        base, "vec_id", "embedding", "cent_id", threshold=0.4,
-        n_blocks_hint=k_cells,
+        base, "vec_id", "embedding", "cent_id", threshold=0.4
     )
     lab = emb.select("vec_id", "label")
     return (

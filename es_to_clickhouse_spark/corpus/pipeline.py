@@ -576,9 +576,7 @@ def d14_semantic_dedup(spark, sf_dir):
     )
 
     emb = t(spark, sf_dir, "embeddings")
-    # ONE corpus count feeds the centroid cut AND the block hint below
-    # (parquet metadata job; r14 — was two)
-    n_emb = emb.count()
+    n_emb = emb.count()  # one metadata job: the centroid cut
     # hash-sampled centroids, NOT `vec_id < n/256`: the value-threshold
     # rule assumed dense ids and saturated on any strided/sparse id
     # layout (operators/similarity.sampled_centroids has the measured
@@ -590,13 +588,8 @@ def d14_semantic_dedup(spark, sf_dir):
     # threshold 0.4 is calibrated to the synthetic corpus (its max pairwise
     # cosine is ~0.51 — no planted exact dups); on a real embedding model
     # SemDeDup's 0.9+ applies, and the threshold is just this parameter.
-    # Block hint = the cell count, so the pair stage's salting adapts:
-    # many cells -> no payload replication through the pair exchange
-    # (operators/dedup.py adaptive_salts — the r13 dim-768 disk autopsy).
-    k_cells = max(8, n_emb // 256)
     pairs = embedding_neardup_pairs(
-        base, "vec_id", "embedding", "cent_id", threshold=0.4,
-        n_blocks_hint=k_cells,
+        base, "vec_id", "embedding", "cent_id", threshold=0.4
     ).select("id_a", "id_b")
     clusters = connected_components(
         pairs, "id_a", "id_b", out_node="vec_id", out_label="cluster_id"

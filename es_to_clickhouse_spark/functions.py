@@ -179,11 +179,6 @@ def sanitize_table_name(name: str, dialect: str = "es") -> str:
     return out
 
 
-def glob_to_regex(pattern: str) -> str:
-    """One glob pattern → anchored regex (fnmatch semantics)."""
-    return fnmatch.translate(pattern)
-
-
 def match_names(names: list[str], patterns: str) -> list[str]:
     """Comma-separated glob/exact patterns → matching names, order-preserving
     dedup (clickhouse/clickhouse_to_bytehouse.py:83-98)."""

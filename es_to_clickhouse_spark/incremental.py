@@ -95,12 +95,6 @@ def keyset_predicate(id_field: str, last_id, dtype=None) -> Column:
     return F.col(id_field) > lit
 
 
-def bootstrap_window_predicate(time_field: str, days: int = 1) -> Column:
-    """First-incremental-run-with-no-state default: trailing window
-    ``t > now() - INTERVAL 1 DAY`` (clickhouse/clickhouse_to_bytehouse.py:467)."""
-    return F.col(time_field) > F.current_timestamp() - F.expr(f"INTERVAL {days} DAY")
-
-
 @dataclass
 class BatchWatermarks:
     rows: int

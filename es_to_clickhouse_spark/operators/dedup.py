@@ -455,8 +455,12 @@ def sized_block_salts(
     ``stats`` (r15): optional dict; when given, ONE extra scalar
     aggregate over the block histogram (a driver job returning 3
     numbers — the j9/rj2 bounded-probe pattern) records
-    ``stats["replicated_rows"]`` (exact post-salt row count per pair
-    side: rows + oversized-block excess), ``stats["n_rows"]`` and
+    ``stats["replicated_rows"]`` (rows × salts summed over blocks: it
+    approximates the COMBINED replicated volume of both pair sides,
+    which is exactly rows × (salts + 1), and so bounds each side from
+    above — a side carries about rows × (salts + 1) / 2; as a sizing
+    input it errs toward more partitions, the safe direction),
+    ``stats["n_rows"]`` and
     ``stats["max_width"]`` (max array size of ``size_col``), so the
     caller can size the pair exchange to the REPLICATED volume instead
     of a core-count constant (the 2M realdim hash-build OOM)."""
@@ -508,7 +512,6 @@ def embedding_neardup_pairs(
     vec_col: str,
     block_col: str,
     threshold: float = 0.9,
-    n_blocks_hint: int | None = None,
 ) -> DataFrame:
     """Embedding-cosine near-dup pairs, blocked (label / coarse quantizer /
     LSH bucket) to avoid the global cross join.
@@ -530,7 +533,13 @@ def embedding_neardup_pairs(
     bit-identical: same fold shapes, same multiply order, and both dot
     and the norm product are exactly symmetric under operand swap, so
     the least/greatest orientation from salted_block_pairs changes
-    nothing. Pairing/skew balance: salted_block_pairs."""
+    nothing. Pairing/skew balance: salted_block_pairs.
+
+    NOT fully lazy: building the frame runs one eager Spark job —
+    :func:`sized_block_salts`' stats probe (``.first()`` over the block
+    histogram, which also materializes the base checkpoint) sizes the
+    pair exchange. A caller that only builds the plan (explain, plan
+    dumps, an unexecuted branch) still pays the upstream scan."""
     from es_to_clickhouse_spark.operators.similarity import dot, norm
 
     n_tasks = df.sparkSession.sparkContext.defaultParallelism
@@ -591,9 +600,6 @@ def embedding_neardup_pairs(
     # (first decade 41.8x). Population-keyed salts split exactly the
     # oversized blocks while uniform histograms (d18's label x cell)
     # keep the zero-replication plan the r13 disk autopsy demanded.
-    # `n_blocks_hint` is retained for API compatibility; the observed
-    # histogram subsumes it (count says nothing about skew).
-    del n_blocks_hint
     # Pair-exchange partition count from the OBSERVED replicated volume
     # (r15, guide §2.2/§5): the forced SHUFFLE_HASH join builds
     # ~build_bytes/n_parts per partition, and the old defaultParallelism

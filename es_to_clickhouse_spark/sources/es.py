@@ -1,13 +1,18 @@
-"""Elasticsearch source via elasticsearch-hadoop (connector not installed —
-options logic is pure + tested; the read raises with setup instructions).
+"""Jar-free Elasticsearch source: the wire protocol the reference daemon
+speaks (es/es_to_bytehouse.py), driven over stdlib HTTP.
 
-Reference behaviors mapped:
-- scroll pagination (es/es_to_bytehouse.py:577-673) ↔ connector-managed
-  per-shard splits (``es.scroll.size``);
-- range watermark in query DSL (es/es_to_bytehouse.py:841-861) ↔
-  ``es.query`` pushdown built by :func:`range_query`;
-- catalog pattern (`_cat/indices/{pattern}`, es/es_to_bytehouse.py:239-258)
-  ↔ index wildcard in the resource string.
+- :class:`ScrollSession` / :class:`SearchAfterSession`: the scroll and
+  PIT + ``search_after`` cursors as pure request builders, golden folds
+  over recorded responses (``drain``), and ONE live paging loop with one
+  retry loop, shared by both cursors (``drain_http*``);
+- :func:`read_index_http`: the executor-parallel sliced read behind the
+  corpus queries and the sync round;
+- :func:`sync_incremental_es_http`: one live incremental sync round
+  (mapping fetch → range-query drain → flatten → append → watermark);
+- mapping helpers (typed schemas from ``_mapping``), :func:`range_query`
+  (the reference's incremental DSL) and :class:`EsSource` (the
+  elasticsearch-hadoop connector options; the connector is not
+  installed, so its read raises with setup instructions).
 """
 
 from __future__ import annotations
@@ -156,15 +161,17 @@ class ScrollSession:
 
     ``drain(pages)`` replays recorded response bodies and returns
     ``(rows, transcript)`` so tests can golden-check the wire exchange
-    with zero network. The production read path is the connector
-    (:class:`EsSource` — scroll managed per shard JVM-side); this class
-    pins the PROTOCOL contract the connector must honor."""
+    with zero network. The live drain (:meth:`drain_http_status`,
+    :meth:`drain_http_pages_status`, :meth:`drain_http_incremental`)
+    issues the same requests over a real socket through ONE paging
+    loop; a cursor subclass (:class:`SearchAfterSession`) overrides only
+    the cursor hooks that loop calls."""
 
     host: str = "http://localhost:9200"
     size: int = 1000
     timeout: str = "5m"
     #: transient-retry budget for the live paths — applied ONLY to
-    #: idempotent requests (see _send): the init search (no scroll
+    #: idempotent requests (see _exchange): the init search (no scroll
     #: context exists yet; a duplicate context from a lost response
     #: expires server-side at `timeout`) and the DELETE cleanup.
     #: A PAGE request is NEVER retried: each `/_search/scroll` call
@@ -176,12 +183,18 @@ class ScrollSession:
     #: so the next sync round re-fetches from there (the safe outcome).
     max_retries: int = 3
     backoff_s: float = 0.2
+    #: ascending sort field for watermark-ordered incremental reads
+    #: (es/es_to_bytehouse.py:869-871); None = no sort clause.
+    sort_field: str | None = None
+
+    #: whether a page request after the first may be retried (see
+    #: max_retries): never for scroll, whose pages advance the cursor
+    retry_pages = False
 
     def initial_request(
         self,
         index: str,
         query: dict | None = None,
-        sort_field: str | None = None,
         slice_id: int | None = None,
         slice_max: int | None = None,
     ) -> dict:
@@ -196,11 +209,8 @@ class ScrollSession:
                     f" got max={slice_max}"
                 )
             body["slice"] = {"id": slice_id, "max": slice_max}
-        if sort_field:
-            # the incremental scan sorts ascending on the (original) time
-            # field so pages arrive in watermark order
-            # (es/es_to_bytehouse.py:869-871)
-            body["sort"] = [{sort_field: "asc"}]
+        if self.sort_field:
+            body["sort"] = [{self.sort_field: "asc"}]
         return {
             "method": "POST",
             "url": f"{self.host}/{index}/_search",
@@ -249,23 +259,52 @@ class ScrollSession:
             transcript.append(self.cleanup_request(scroll_id))
         return rows, transcript
 
-    def _send_text(
-        self, request: dict, idempotent: bool = False, _parse: bool = False
-    ) -> str | dict:
+    # -- cursor hooks: the only places the live loop differs by cursor
+
+    def _open(self, index: str) -> str | None:
+        """Cursor held before the first search: none for scroll (the
+        init search opens the context)."""
+        return None
+
+    def _first_request(
+        self, index: str, cursor: str | None, query, slice_id, slice_max
+    ) -> dict:
+        return self.initial_request(index, query, slice_id, slice_max)
+
+    def _next_request(
+        self, cursor: str | None, hits: list, query, slice_id, slice_max
+    ) -> dict | None:
+        """The request for the page after ``hits``; None = no cursor to
+        go on (the drain stops, not completed)."""
+        return self.page_request(cursor)
+
+    def _cursor(self, page: dict, cursor: str | None) -> str | None:
+        return page.get("_scroll_id", cursor)
+
+    def _close_request(self, cursor: str) -> dict:
+        return self.cleanup_request(cursor)
+
+    # -- the live wire: one retry loop, one paging loop
+
+    def _exchange(
+        self, request: dict, idempotent: bool = False
+    ) -> tuple[str, dict]:
         """Issue one protocol request dict (the exact shape the pure
         builders above produce) over a REAL socket with stdlib urllib —
         JSON body, query params, method override for DELETE — returning
-        the RAW response text (the page-passthrough path hands it to
-        the JVM unparsed). No third-party HTTP client: the sandbox has
-        no package egress, and the reference's requests.post/delete
-        calls (es/es_to_bytehouse.py:589,600,658) map 1:1.
+        the raw response text AND its parse (the raw-page path hands
+        the text to the JVM unopened). No third-party HTTP client: the
+        reference's requests.post/delete calls
+        (es/es_to_bytehouse.py:589,600,658) map 1:1.
 
         ``idempotent=True`` enables the bounded transient-retry loop
         (transport OSError, garbled 200 body, HTTP 429/502/503/504 — a
-        definite status like 400/404/500 re-raises immediately) — callers
-        assert idempotency; scroll PAGE requests must pass False
-        because the server-side cursor advance makes a lost-response
-        retry skip data (see max_retries on the class)."""
+        definite status like 400/404/500 re-raises immediately). The
+        body is parsed INSIDE the retry window, so a garbled 200 reply
+        retries like a transport failure. Callers assert idempotency;
+        scroll PAGE requests must pass False because the server-side
+        cursor advance makes a lost-response retry skip data (see
+        max_retries on the class)."""
         import time as _time
         import urllib.error
         import urllib.parse
@@ -276,86 +315,94 @@ class ScrollSession:
         url = request["url"]
         if request.get("params"):
             url += "?" + urllib.parse.urlencode(request["params"])
-
-        def one() -> str | dict:
-            # body None = send NO payload (PIT open on ES < 8.12 rejects
-            # any body); the Content-Type header goes with the payload
-            body = request.get("body")
-            req = urllib.request.Request(
-                url,
-                data=(
-                    None
-                    if body is None
-                    else json.dumps(body).encode("utf-8")
-                ),
-                headers=(
-                    {}
-                    if body is None
-                    else {"Content-Type": "application/json"}
-                ),
-                method=request["method"],
-            )
-            with urllib.request.urlopen(req, timeout=30) as resp:
-                text = resp.read().decode("utf-8")
-            # parse INSIDE the retry window: a garbled 200 body raises
-            # ValueError here and retries with backoff like a transport
-            # failure (identical to the pre-split behavior)
-            return json.loads(text) if _parse else text
-
-        if not idempotent:
-            return one()
+        # body None = send NO payload (GETs; PIT open on ES < 8.12
+        # rejects any body); the Content-Type header goes with the payload
+        body = request.get("body")
+        data = None if body is None else json.dumps(body).encode("utf-8")
+        headers = {} if body is None else {"Content-Type": "application/json"}
+        budget = self.max_retries if idempotent else 0
         attempt = 0
         while True:
             try:
-                return one()
+                req = urllib.request.Request(
+                    url, data=data, headers=headers, method=request["method"]
+                )
+                with urllib.request.urlopen(req, timeout=30) as resp:
+                    text = resp.read().decode("utf-8")
+                return text, json.loads(text)
             except urllib.error.HTTPError as e:
                 # HTTPError subclasses OSError, so it must be caught FIRST:
                 # only transient statuses (429/5xx gateway) are retried —
                 # a 400 (bad query DSL) or 404 (missing index) fails the
-                # same way every time, and retrying it 3x with backoff
-                # just delays the real error (mirrors ch_http.execute's
+                # same way every time (mirrors ch_http.execute's
                 # TRANSIENT_HTTP filter).
-                if e.code not in TRANSIENT_HTTP or attempt >= self.max_retries:
+                if e.code not in TRANSIENT_HTTP or attempt >= budget:
                     raise
             except (OSError, ValueError):
-                if attempt >= self.max_retries:
+                if attempt >= budget:
                     raise
             _time.sleep(self.backoff_s * (2 ** attempt))
             attempt += 1
 
     def _send(self, request: dict, idempotent: bool = False) -> dict:
-        """:meth:`_send_text` with the response parsed — the original
-        dict-returning protocol send, retry semantics unchanged."""
-        return self._send_text(request, idempotent=idempotent, _parse=True)
+        """:meth:`_exchange`'s parsed response."""
+        return self._exchange(request, idempotent=idempotent)[1]
 
-    def drain_http(
+    def _drain_wire(
         self,
         index: str,
+        keep,
         query: dict | None = None,
-        store_source: bool = False,
         max_pages: int = 10_000,
         slice_id: int | None = None,
         slice_max: int | None = None,
-    ) -> list[dict]:
-        """The LIVE counterpart of :meth:`drain`: the same protocol fold,
-        but each request actually goes over the wire (loopback
-        ``http.server`` in tests; a real ES otherwise). Failure contract
-        matches drain: a page error keeps the partial rows, and the
-        scroll context is DELETEd whenever an id exists — failure or not
-        (finally semantics; the reference leaks the context on error,
-        a deliberate divergence documented on the class). ``max_pages``
-        bounds a server that never returns an empty page.
+    ) -> bool:
+        """THE live paging loop: open the cursor, request pages until an
+        empty one, call ``keep(text, page)`` for every non-empty page,
+        and close the cursor whenever one exists — failure or not
+        (finally semantics; the reference leaks the context on error, a
+        deliberate divergence documented on the class). A page error
+        keeps what ``keep`` already received. ``max_pages`` bounds a
+        server that never returns an empty page.
 
-        ``slice_id``/``slice_max`` open ONE slice of a sliced scroll —
-        the unit :func:`read_index_http` fans out per executor."""
-        return self.drain_http_status(
-            index,
-            query=query,
-            store_source=store_source,
-            max_pages=max_pages,
-            slice_id=slice_id,
-            slice_max=slice_max,
-        )[0]
+        Returns ``completed``: True only when the scan drained to
+        exhaustion (empty page). A parallel-sliced caller needs it —
+        committing a watermark computed over OTHER slices' rows past an
+        incomplete slice's undrained tail loses that tail forever (the
+        ADVICE r10 Mongo split bug; same class here)."""
+        cursor: str | None = None
+        completed = False
+        try:
+            cursor = self._open(index)
+            request = self._first_request(
+                index, cursor, query, slice_id, slice_max
+            )
+            idempotent = True  # the first search opens no page cursor
+            for _ in range(max_pages):
+                text, page = self._exchange(request, idempotent=idempotent)
+                cursor = self._cursor(page, cursor)
+                hits = page.get("hits", {}).get("hits", [])
+                if not hits:
+                    completed = True
+                    break
+                keep(text, page)
+                request = self._next_request(
+                    cursor, hits, query, slice_id, slice_max
+                )
+                if request is None:
+                    break  # completed stays False: tail state unknown
+                idempotent = self.retry_pages
+        except (OSError, ValueError):
+            # OSError = transport failure (HTTPError included);
+            # ValueError = a 200 body that is not valid JSON
+            pass  # partial progress kept; cleanup still runs below
+        finally:
+            if cursor:
+                try:
+                    self._send(self._close_request(cursor), idempotent=True)
+                except (OSError, ValueError):
+                    pass  # cleanup is best-effort, like the reference
+        return completed
 
     def drain_http_status(
         self,
@@ -366,69 +413,23 @@ class ScrollSession:
         slice_id: int | None = None,
         slice_max: int | None = None,
     ) -> tuple[list[dict], bool]:
-        """:meth:`drain_http` plus a ``completed`` flag: True only when
-        the scan drained to exhaustion (empty page). A parallel-sliced
-        caller needs it — committing a watermark computed over OTHER
-        slices' rows past an incomplete slice's undrained tail loses
-        that tail forever (the ADVICE r10 Mongo split bug; same class
-        here)."""
+        """The LIVE counterpart of :meth:`drain`: ``(rows, completed)``
+        over a real socket (loopback ``http.server`` in tests; a real ES
+        otherwise). ``slice_id``/``slice_max`` drain ONE slice of a
+        sliced scan — the unit :func:`read_index_http` fans out per
+        executor."""
         rows: list[dict] = []
-        scroll_id: str | None = None
-        completed = False
-        try:
-            page = self._send(
-                self.initial_request(
-                    index, query, slice_id=slice_id, slice_max=slice_max
-                ),
-                idempotent=True,  # no scroll context exists yet
-            )
-            for _ in range(max_pages):
-                scroll_id = page.get("_scroll_id", scroll_id)
-                hits = page.get("hits", {}).get("hits", [])
-                if not hits:
-                    completed = True
-                    break
-                rows.extend(scroll_docs(page, store_source=store_source))
-                page = self._send(self.page_request(scroll_id))
-        except (OSError, ValueError):
-            # OSError = transport failure; ValueError = 200 response whose
-            # body is not valid JSON (json.loads). Both keep partial rows.
-            pass  # partial progress kept; cleanup still runs below
-        finally:
-            if scroll_id:
-                try:
-                    self._send(
-                        self.cleanup_request(scroll_id), idempotent=True
-                    )
-                except (OSError, ValueError):
-                    pass  # cleanup is best-effort, like the reference
-        return rows, completed
-
-    def drain_http_pages(
-        self,
-        index: str,
-        query: dict | None = None,
-        max_pages: int = 10_000,
-        slice_id: int | None = None,
-        slice_max: int | None = None,
-    ) -> list[str]:
-        """:meth:`drain_http` returning RAW page texts instead of row
-        dicts — the executor-side transport of the typed production
-        read (:func:`read_index_http`): Python touches each page ONCE
-        (a control-only ``json.loads`` for scroll-id rotation and the
-        empty-page stop); the per-hit work — dict merge of ``_id`` into
-        ``_source`` and a per-row ``json.dumps`` back out — moves to
-        the JVM as an explode over the page schema (judge r9: that
-        per-row parse→re-dump was pure Python CPU in the drain hot
-        loop). Same failure contract: a page error keeps the pages
-        already drained, cleanup always runs."""
-        return self.drain_http_pages_status(
+        completed = self._drain_wire(
             index,
-            query=query,
-            max_pages=max_pages,
-            slice_id=slice_id,
-            slice_max=slice_max,
-        )[0]
+            lambda _text, page: rows.extend(
+                scroll_docs(page, store_source=store_source)
+            ),
+            query,
+            max_pages,
+            slice_id,
+            slice_max,
+        )
+        return rows, completed
 
     def drain_http_pages_status(
         self,
@@ -438,36 +439,20 @@ class ScrollSession:
         slice_id: int | None = None,
         slice_max: int | None = None,
     ) -> tuple[list[str], bool]:
-        """:meth:`drain_http_pages` plus the ``completed`` flag (see
-        :meth:`drain_http_status` for why sliced callers need it)."""
+        """:meth:`drain_http_status` returning the RAW page texts instead
+        of row dicts — the executor-side transport of the typed
+        production read (:func:`read_index_http`): Python parses each
+        page once for control (cursor and empty-page stop); the per-hit
+        work moves to the JVM as an explode over the page schema."""
         pages: list[str] = []
-        scroll_id: str | None = None
-        completed = False
-        try:
-            text = self._send_text(
-                self.initial_request(
-                    index, query, slice_id=slice_id, slice_max=slice_max
-                ),
-                idempotent=True,
-            )
-            for _ in range(max_pages):
-                page = json.loads(text)  # control only; hits stay raw
-                scroll_id = page.get("_scroll_id", scroll_id)
-                if not page.get("hits", {}).get("hits", []):
-                    completed = True
-                    break
-                pages.append(text)
-                text = self._send_text(self.page_request(scroll_id))
-        except (OSError, ValueError):
-            pass  # partial pages kept; cleanup still runs below
-        finally:
-            if scroll_id:
-                try:
-                    self._send(
-                        self.cleanup_request(scroll_id), idempotent=True
-                    )
-                except (OSError, ValueError):
-                    pass
+        completed = self._drain_wire(
+            index,
+            lambda text, _page: pages.append(text),
+            query,
+            max_pages,
+            slice_id,
+            slice_max,
+        )
         return pages, completed
 
     def drain_http_incremental(
@@ -483,7 +468,7 @@ class ScrollSession:
         slice_id: int | None = None,
         slice_max: int | None = None,
     ) -> tuple[list[dict], str, str | None]:
-        """The INCREMENTAL scroll session over a real socket — the live
+        """The INCREMENTAL drain over a real socket — the live
         counterpart of the reference's ``scroll_es_incremental``
         (es/es_to_bytehouse.py:825-961), end-to-end:
 
@@ -493,8 +478,8 @@ class ScrollSession:
           es/es_to_bytehouse.py:837-840) — including the OR-of-ranges +
           ``minimum_should_match=1`` shape when an update field rides
           along;
-        - the initial request sorts ascending on the original time field;
-        - watermarks advance as a running max over each hit's SANITIZED
+        - the drain sorts ascending on the original time field;
+        - watermarks are the max over each drained hit's SANITIZED
           document (so ``@timestamp`` values land on ``timestamp``),
           string-compared exactly like the reference's in-flight max
           (es/es_to_bytehouse.py:909-919); a failed page keeps both the
@@ -503,66 +488,42 @@ class ScrollSession:
 
         Returns ``(rows, max_time, max_update_time)``. The Spark
         production path computes the same watermarks as one distributed
-        agg (:func:`incremental.batch_watermarks`); this driver-side fold
-        pins the wire-protocol contract on bounded test transcripts.
+        agg over the appended snapshot; this driver-side fold pins the
+        wire-protocol contract on bounded test transcripts.
 
-        With ``slice_id``/``slice_max`` the fold drains ONE slice of a
-        sliced scroll: each slice's running max is a partial watermark,
-        and the global max is the fold of the per-slice maxes (string
-        max is associative/commutative — the same partial-aggregation
-        argument that makes batch_watermarks one distributed agg)."""
+        With ``slice_id``/``slice_max`` the fold drains ONE slice: each
+        slice's max is a partial watermark, and the global max is the
+        fold of the per-slice maxes (string max is associative)."""
+        from dataclasses import replace
+
         from es_to_clickhouse_spark.functions import sanitize_field_name
 
         original = original_time_field(time_field, mapping_response)
         query = json.loads(
             range_query(original, since, update_field, since_update)
         )["query"]
-        rows: list[dict] = []
-        max_time = since
-        max_update = since_update
-        scroll_id: str | None = None
-        try:
-            page = self._send(
-                self.initial_request(
-                    index,
-                    query,
-                    sort_field=original,
-                    slice_id=slice_id,
-                    slice_max=slice_max,
-                ),
-                idempotent=True,  # no scroll context exists yet
-            )
-            for _ in range(max_pages):
-                scroll_id = page.get("_scroll_id", scroll_id)
-                hits = page.get("hits", {}).get("hits", [])
-                if not hits:
-                    break
-                page_rows = scroll_docs(page, store_source=store_source)
-                for row in page_rows:
-                    flat = {
-                        sanitize_field_name(k): v
-                        for k, v in row.items()
-                        if k not in ("_id", "_source")
-                    }
-                    t = flat.get(time_field, "")
-                    if t and t > max_time:
-                        max_time = t
-                    if update_field:
-                        u = flat.get(update_field, "")
-                        if u and (max_update is None or u > max_update):
-                            max_update = u
-                rows.extend(page_rows)
-                page = self._send(self.page_request(scroll_id))
-        except (OSError, ValueError):
-            pass  # partial rows + watermark progress kept
-        finally:
-            if scroll_id:
-                try:
-                    self._send(
-                        self.cleanup_request(scroll_id), idempotent=True
-                    )
-                except (OSError, ValueError):
-                    pass
+        rows, _completed = replace(self, sort_field=original).drain_http_status(
+            index,
+            query=query,
+            store_source=store_source,
+            max_pages=max_pages,
+            slice_id=slice_id,
+            slice_max=slice_max,
+        )
+        max_time, max_update = since, since_update
+        for row in rows:
+            flat = {
+                sanitize_field_name(k): v
+                for k, v in row.items()
+                if k not in ("_id", "_source")
+            }
+            t = flat.get(time_field, "")
+            if t and t > max_time:
+                max_time = t
+            if update_field:
+                u = flat.get(update_field, "")
+                if u and (max_update is None or u > max_update):
+                    max_update = u
         return rows, max_time, max_update
 
 
@@ -571,10 +532,10 @@ class SearchAfterSession(ScrollSession):
     """Point-in-time + ``search_after`` pagination — the public ES 8.x
     cursor that replaces scroll (scroll is deprecated for deep
     pagination upstream; the reference daemon predates that,
-    es/es_to_bytehouse.py:577-673). Same drain surface as
-    :class:`ScrollSession`, so :func:`read_index_http` runs UNCHANGED
-    over either session (the two ``drain_http*_status`` methods are the
-    polymorphic seam):
+    es/es_to_bytehouse.py:577-673). It overrides only the request
+    builders and the cursor hooks of :class:`ScrollSession`'s live
+    paging loop, so every drain view and :func:`read_index_http` run
+    unchanged over either session:
 
     - open:  ``POST {host}/{index}/_pit?keep_alive={timeout}`` → pit id
       (a frozen snapshot of the index: pages are consistent even while
@@ -601,9 +562,8 @@ class SearchAfterSession(ScrollSession):
     scroll (``slice`` in the body alongside ``pit``), so the
     executor-parallel fan-out is unchanged."""
 
-    #: ascending sort field for watermark-ordered incremental reads;
-    #: None = pure doc-order pagination on the ``_shard_doc`` tiebreak.
-    sort_field: str | None = None
+    #: stateless cursor: every page request is retry-safe
+    retry_pages = True
 
     def open_pit_request(self, index: str) -> dict:
         # body None (not {}): Elasticsearch 8.0-8.11 rejects ANY request
@@ -705,157 +665,25 @@ class SearchAfterSession(ScrollSession):
             transcript.append(self.close_pit_request(pit_id))
         return rows, transcript
 
-    def drain_http_status(
-        self,
-        index: str,
-        query: dict | None = None,
-        store_source: bool = False,
-        max_pages: int = 10_000,
-        slice_id: int | None = None,
-        slice_max: int | None = None,
-    ) -> tuple[list[dict], bool]:
-        rows: list[dict] = []
-        pit_id: str | None = None
-        after: list | None = None
-        completed = False
-        try:
-            pit_id = self._send(
-                self.open_pit_request(index), idempotent=True
-            ).get("id")
-            for _ in range(max_pages):
-                page = self._send(
-                    self.search_request(
-                        pit_id, query, after, slice_id, slice_max
-                    ),
-                    idempotent=True,  # stateless cursor: retry-safe
-                )
-                pit_id = page.get("pit_id", pit_id)
-                hits = page.get("hits", {}).get("hits", [])
-                if not hits:
-                    completed = True
-                    break
-                rows.extend(scroll_docs(page, store_source=store_source))
-                after = hits[-1].get("sort")
-                if after is None:
-                    break  # completed stays False: tail state unknown
-        except (OSError, ValueError):
-            pass  # partial progress kept; close still runs below
-        finally:
-            if pit_id:
-                try:
-                    self._send(
-                        self.close_pit_request(pit_id), idempotent=True
-                    )
-                except (OSError, ValueError):
-                    pass
-        return rows, completed
-
-    def drain_http_incremental(
-        self,
-        index: str,
-        time_field: str,
-        since: str,
-        update_field: str | None = None,
-        since_update: str | None = None,
-        mapping_response: dict | None = None,
-        store_source: bool = False,
-        max_pages: int = 10_000,
-        slice_id: int | None = None,
-        slice_max: int | None = None,
-    ) -> tuple[list[dict], str, str | None]:
-        """PIT twin of the scroll incremental fold (same range
-        predicate via :func:`range_query` against the ORIGINAL field
-        name, same sanitized running-max watermark over drained rows) —
-        WITHOUT the scroll path's non-retryable pages: the inherited
-        scroll method would silently open a scroll context and abandon
-        the round to partial on one transient page fault, contradicting
-        this class's contract, so it is overridden. Sort rides the
-        original time field then the ``_shard_doc`` tiebreak; a failure
-        past the retry budget keeps partial rows and the watermark
-        stops at what was actually seen (identical failure contract,
-        reached less often)."""
-        from dataclasses import replace
-
-        from es_to_clickhouse_spark.functions import sanitize_field_name
-
-        original = original_time_field(time_field, mapping_response)
-        query = json.loads(
-            range_query(original, since, update_field, since_update)
-        )["query"]
-        sess = replace(self, sort_field=original)
-        rows, _completed = sess.drain_http_status(
-            index,
-            query=query,
-            store_source=store_source,
-            max_pages=max_pages,
-            slice_id=slice_id,
-            slice_max=slice_max,
+    def _open(self, index: str) -> str | None:
+        return self._send(self.open_pit_request(index), idempotent=True).get(
+            "id"
         )
-        # post-hoc fold == the scroll path's in-flight running max:
-        # both range over exactly the drained rows
-        max_time, max_update = since, since_update
-        for row in rows:
-            flat = {
-                sanitize_field_name(k): v
-                for k, v in row.items()
-                if k not in ("_id", "_source")
-            }
-            t = flat.get(time_field, "")
-            if t and t > max_time:
-                max_time = t
-            if update_field:
-                u = flat.get(update_field, "")
-                if u and (max_update is None or u > max_update):
-                    max_update = u
-        return rows, max_time, max_update
 
-    def drain_http_pages_status(
-        self,
-        index: str,
-        query: dict | None = None,
-        max_pages: int = 10_000,
-        slice_id: int | None = None,
-        slice_max: int | None = None,
-    ) -> tuple[list[str], bool]:
-        """Raw-page transport (typed production reads): pages pass to
-        the JVM unopened except the control parse, which here also
-        lifts the last hit's ``sort`` tuple — the next cursor."""
-        pages: list[str] = []
-        pit_id: str | None = None
-        after: list | None = None
-        completed = False
-        try:
-            pit_id = self._send(
-                self.open_pit_request(index), idempotent=True
-            ).get("id")
-            for _ in range(max_pages):
-                text = self._send_text(
-                    self.search_request(
-                        pit_id, query, after, slice_id, slice_max
-                    ),
-                    idempotent=True,
-                )
-                page = json.loads(text)  # control only; hits stay raw
-                pit_id = page.get("pit_id", pit_id)
-                hits = page.get("hits", {}).get("hits", [])
-                if not hits:
-                    completed = True
-                    break
-                pages.append(text)
-                after = hits[-1].get("sort")
-                if after is None:
-                    break
-        except (OSError, ValueError):
-            pass
-        finally:
-            if pit_id:
-                try:
-                    self._send(
-                        self.close_pit_request(pit_id), idempotent=True
-                    )
-                except (OSError, ValueError):
-                    pass
-        return pages, completed
+    def _first_request(self, index, cursor, query, slice_id, slice_max):
+        return self.search_request(cursor, query, None, slice_id, slice_max)
+
+    def _next_request(self, cursor, hits, query, slice_id, slice_max):
+        after = hits[-1].get("sort")
+        if after is None:
+            return None  # no sort tuple: cannot form the next cursor
+        return self.search_request(cursor, query, after, slice_id, slice_max)
+
+    def _cursor(self, page, cursor):
+        return page.get("pit_id", cursor)
+
+    def _close_request(self, cursor):
+        return self.close_pit_request(cursor)
 
 
 #: Prefix marking a per-slice status line inside the drained RDD (never
@@ -886,42 +714,39 @@ def read_index_http(
     max_pages: int = 10_000,
     with_status: bool = False,
 ) -> DataFrame:
-    """Distributed jar-free ES read via SLICED scroll — the executor-
+    """Distributed jar-free ES read via SLICED drains — the executor-
     parallel form of the reference's serial scroll loop
     (es/es_to_bytehouse.py:577-673) and the ES twin of
     :meth:`sources.ch_http.ClickHouseHttpSource.read_table`:
 
     - N slice ids fan out over ``sparkContext.parallelize`` — each
-      EXECUTOR opens its own scroll context with ``slice: {id, max}``
-      (public ES API, ES >= 5) and drains its disjoint share of the
-      index in pages of ``session.size``;
-    - rows travel as NDJSON strings and parse JVM-side via
-      ``spark.read.schema(...).json`` (pass the
-      :func:`mapping_to_spark_fields`-derived schema for typed columns;
-      without one Spark samples/infers);
+      EXECUTOR opens its own cursor (a scroll context, or a PIT for
+      :class:`SearchAfterSession`) with ``slice: {id, max}`` (public ES
+      API) and drains its disjoint share of the index in pages of
+      ``session.size``;
     - each slice keeps the drain failure contract (partial rows kept,
-      scroll context DELETEd best-effort), so a failed slice degrades
-      to partial data for THAT slice only — at-least-once per slice,
-      identical to the serial drain's contract.
+      cursor closed best-effort), so a failed slice degrades to partial
+      data for THAT slice only — at-least-once per slice.
 
-    ``slices=1`` degrades to a single unsliced scroll on one executor
+    ``slices=1`` degrades to a single unsliced drain on one executor
     (ES requires ``slice.max >= 2``). At 100 TB the slice count should
-    track the index's shard count — each slice is one scroll context
+    track the index's shard count — each slice is one cursor
     server-side, and ES caps open contexts.
 
-    Typed reads (schema given, no ``store_source``) take the RAW-PAGE
-    path: executors pass each scroll page's response text through
-    UNOPENED (:meth:`ScrollSession.drain_http_pages` — one control-only
-    parse per page, zero per-row Python) and the JVM explodes
-    ``hits.hits`` under a wrapper schema. Measured on a loopback server
-    (tools/es_drain_bench.py, 100k docs × 12 fields, page 1000): the
-    drain runs 1.5× faster end-to-end than the per-row parse→re-dump
-    path (2.39 s → 1.60 s, and the loopback server's own fold is a
-    large shared constant in both), and the RDD carries pages (1000×
-    fewer elements) instead of rows.
-    ``store_source`` keeps the row path — its contract is the RAW
-    per-hit ``_source`` text, which ``to_json`` of a struct would
-    reorder and prune.
+    What a slice emits depends on the read:
+
+    - typed (``schema`` given, no ``store_source``): the RAW page texts
+      (:meth:`ScrollSession.drain_http_pages_status`, zero per-row
+      Python); the JVM explodes ``hits.hits`` under a wrapper schema.
+      Measured on a loopback server (tools/es_drain_bench.py, 100k docs
+      × 12 fields, page 1000): 1.5× faster than the per-row path (2.39 s
+      → 1.60 s), and the RDD carries pages (1000× fewer elements);
+    - ``store_source`` or schemaless: NDJSON rows
+      (:meth:`ScrollSession.drain_http_status`) parsed by
+      ``spark.read.json`` — ``store_source``'s contract is the RAW
+      per-hit ``_source`` text, which ``to_json`` of a struct would
+      reorder and prune. Schemaless reads cache the RDD, because JSON
+      inference would otherwise drain the index twice.
 
     ``with_status=True`` returns ``(df, all_slices_complete, rdd)``
     instead (``rdd`` = the cached transport RDD — the caller MUST
@@ -939,14 +764,28 @@ def read_index_http(
     drain; the returned DataFrame re-reads the cached RDD."""
     n = max(1, slices)
     sess = session  # dataclass — pickles to executors
+    typed = schema is not None and not store_source
 
-    def _with_status(rdd, build_df):
-        rdd = rdd.cache()
-        sent = rdd.filter(lambda s: s.startswith(SLICE_SENTINEL)).collect()
-        data = rdd.filter(lambda s: not s.startswith(SLICE_SENTINEL))
-        return build_df(data), _slices_complete(sent, n), rdd
+    def _drain(i: int) -> list[str]:
+        kw = dict(
+            query=query,
+            max_pages=max_pages,
+            slice_id=i if n > 1 else None,
+            slice_max=n if n > 1 else None,
+        )
+        if typed:
+            out, completed = sess.drain_http_pages_status(index, **kw)
+        else:
+            rows, completed = sess.drain_http_status(
+                index, store_source=store_source, **kw
+            )
+            out = [json.dumps(r, ensure_ascii=False, default=str) for r in rows]
+        if with_status:
+            out.append(f"{SLICE_SENTINEL}{i}:{'C' if completed else 'P'}")
+        return out
 
-    if schema is not None and not store_source:
+    lines = spark.sparkContext.parallelize(range(n), n).flatMap(_drain)
+    if typed:
         want_id = any(f.name == "_id" for f in schema.fields)
         inner = T.StructType([f for f in schema.fields if f.name != "_id"])
         wrapper = T.StructType([
@@ -957,24 +796,6 @@ def read_index_http(
                 ])), True),
             ]), True),
         ])
-
-        def _drain_pages(i: int) -> list[str]:
-            pages, completed = sess.drain_http_pages_status(
-                index,
-                query=query,
-                max_pages=max_pages,
-                slice_id=i if n > 1 else None,
-                slice_max=n if n > 1 else None,
-            )
-            if with_status:
-                pages.append(
-                    f"{SLICE_SENTINEL}{i}:{'C' if completed else 'P'}"
-                )
-            return pages
-
-        pages = spark.sparkContext.parallelize(range(n), n).flatMap(
-            _drain_pages
-        )
         # output columns == the caller's schema exactly: _id (the hit
         # envelope field, NOT a _source key) only when asked for
         cols = ([F.col("h._id").alias("_id")] if want_id else []) + [
@@ -988,38 +809,16 @@ def read_index_http(
                 .select(F.explode("hits.hits").alias("h"))
                 .select(*cols)
             )
-
-        if with_status:
-            return _with_status(pages, build_df)
-        return build_df(pages)
-
-    def _drain(i: int) -> list[str]:
-        rows, completed = sess.drain_http_status(
-            index,
-            query=query,
-            store_source=store_source,
-            max_pages=max_pages,
-            slice_id=i if n > 1 else None,
-            slice_max=n if n > 1 else None,
-        )
-        out = [json.dumps(r, ensure_ascii=False, default=str) for r in rows]
-        if with_status:
-            out.append(f"{SLICE_SENTINEL}{i}:{'C' if completed else 'P'}")
-        return out
-
-    lines = spark.sparkContext.parallelize(range(n), n).flatMap(_drain)
-    reader = spark.read
-    if schema is not None:
-        if with_status:
-            return _with_status(lines, reader.schema(schema).json)
-        return reader.schema(schema).json(lines)
-    # schemaless: Spark's JSON inference would compute the RDD once
-    # for the schema and AGAIN for the data — two full scrolls of
-    # the index. Cache so the wire is hit once (typed production
-    # reads should pass the mapping-derived schema instead).
-    if with_status:
-        return _with_status(lines, reader.json)
-    return reader.json(lines.cache())
+    elif schema is not None:
+        build_df = spark.read.schema(schema).json
+    else:
+        build_df = spark.read.json
+    if not with_status:
+        return build_df(lines if schema is not None else lines.cache())
+    lines = lines.cache()
+    sent = lines.filter(lambda s: s.startswith(SLICE_SENTINEL)).collect()
+    data = lines.filter(lambda s: not s.startswith(SLICE_SENTINEL))
+    return build_df(data), _slices_complete(sent, n), lines
 
 
 def get_json(session: ScrollSession, path: str):
@@ -1028,28 +827,10 @@ def get_json(session: ScrollSession, path: str):
     es/es_to_bytehouse.py:239-273) with the session's transient-retry
     contract — GETs have no server-side cursor, so retry is always
     safe."""
-    import time as _time
-    import urllib.error
-    import urllib.request
-
-    from es_to_clickhouse_spark.sources.ch_http import TRANSIENT_HTTP
-
-    attempt = 0
-    while True:
-        try:
-            req = urllib.request.Request(
-                f"{session.host}{path}", method="GET"
-            )
-            with urllib.request.urlopen(req, timeout=30) as resp:
-                return json.loads(resp.read().decode("utf-8"))
-        except urllib.error.HTTPError as e:
-            if e.code not in TRANSIENT_HTTP or attempt >= session.max_retries:
-                raise
-        except (OSError, ValueError):
-            if attempt >= session.max_retries:
-                raise
-        _time.sleep(session.backoff_s * (2 ** attempt))
-        attempt += 1
+    return session._send(
+        {"method": "GET", "url": f"{session.host}{path}", "body": None},
+        idempotent=True,
+    )
 
 
 def list_indices(session: ScrollSession) -> list[str]:
@@ -1081,7 +862,7 @@ def probe_time_values(session: ScrollSession, index: str, field: str) -> bool:
         "body": {"query": {"exists": {"field": field}}, "size": 1},
     }
     try:
-        resp = session._send_text(req, idempotent=True, _parse=True)
+        resp = session._send(req, idempotent=True)
         return bool(resp.get("hits", {}).get("hits"))
     except Exception:
         return False
@@ -1118,7 +899,7 @@ def sync_incremental_es_http(
     3. rows flatten/sanitize (``flatten_es``: ``@timestamp`` →
        ``timestamp`` value-side, P13) and append to the target;
     4. the watermark advances to ``max(time_field)`` over the appended
-       snapshot as ONE distributed agg — the per-slice running maxes of
+       snapshot as ONE distributed agg — the per-slice maxes of
        the serial fold (drain_http_incremental) collapse into the same
        associative max, computed where the rows already live.
 

@@ -283,7 +283,7 @@ class MongoWireSession:
         from, plus whether the range DRAINED TO EXHAUSTION (the server
         returned an empty page). A transport error or malformed reply
         keeps the partial rows AND the watermark progress
-        (at-least-once, like drain_http) but reports
+        (at-least-once, like the ES drain_http_status) but reports
         ``completed=False`` — a parallel-split caller must not advance
         a committed watermark past an incomplete range (a completed
         HIGHER range would otherwise mask this range's undrained tail

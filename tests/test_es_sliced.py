@@ -62,10 +62,11 @@ def test_sliced_drains_reassemble_full_scan(fake_es):
     through its own scroll context with its own cleanup."""
     host, log, cleanups = fake_es
     s = ScrollSession(host=host, size=10)
-    full = s.drain_http("idx")
+    full = s.drain_http_status("idx")[0]
     assert len(full) == 103
     parts = [
-        s.drain_http("idx", slice_id=i, slice_max=4) for i in range(4)
+        s.drain_http_status("idx", slice_id=i, slice_max=4)[0]
+        for i in range(4)
     ]
     ids = [r["_id"] for p in parts for r in p]
     assert sorted(ids) == sorted(r["_id"] for r in full)

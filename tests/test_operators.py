@@ -4,6 +4,7 @@ from __future__ import annotations
 
 import hashlib
 import math
+from decimal import ROUND_HALF_UP, Decimal
 
 import pytest
 from pyspark.sql import functions as F
@@ -2370,7 +2371,13 @@ def test_embedding_neardup_prefix_bound_prunes_exactly(spark):
                 dp += p * q
             na = math.sqrt(sum(t * t for t in a))
             nb = math.sqrt(sum(t * t for t in b))
-            c = round(dp / (na * nb), 4)
+            # F.round is HALF_UP over the double's shortest decimal
+            # form (Scala BigDecimal(d)); Python's round() is HALF_EVEN
+            c = float(
+                Decimal(repr(dp / (na * nb))).quantize(
+                    Decimal("0.0001"), rounding=ROUND_HALF_UP
+                )
+            )
             if c >= 0.9:
                 exp.append((ids[x], ids[y], c))
     assert got == sorted(exp)

@@ -127,7 +127,7 @@ def test_connected_components_topology_round_pins(spark):
     (small instances of tools/cc_scale_bench.py's generators): star
     contraction's convergence round stays O(log n) on path and grid
     and constant on the dedup-cluster blob shape; the default probe
-    schedule (3, then every 2) confirms within 2 rounds of the true
+    schedule (5, then every 2) confirms within 2 rounds of the true
     convergence round."""
     from es_to_clickhouse_spark.operators.graph import connected_components
 

@@ -647,6 +647,15 @@ def _serve_scroll(pages):
     return srv, log, f"http://127.0.0.1:{srv.server_address[1]}"
 
 
+def _drain_view(sess, index, view):
+    """``(rows, completed)`` through the row view or the raw-page view
+    of the live drain — the two must agree."""
+    if view == "rows":
+        return sess.drain_http_status(index)
+    texts, completed = sess.drain_http_pages_status(index)
+    return [r for t in texts for r in scroll_docs(json.loads(t))], completed
+
+
 def test_scroll_http_loopback_full_session():
     """The scroll fold over a REAL socket (http.server on 127.0.0.1):
     HTTP framing, pagination with a rotated scroll id, the empty page
@@ -659,9 +668,9 @@ def test_scroll_http_loopback_full_session():
     ]
     srv, log, host = _serve_scroll(pages)
     try:
-        rows = ScrollSession(host=host, size=2, timeout="5m").drain_http(
-            "idx-a"
-        )
+        rows = ScrollSession(
+            host=host, size=2, timeout="5m"
+        ).drain_http_status("idx-a")[0]
     finally:
         srv.shutdown()
     assert [r["_id"] for r in rows] == ["a", "b", "c"]
@@ -686,7 +695,7 @@ def test_scroll_http_loopback_failure_keeps_partial_and_cleans_up():
     pages = [_page("sid-1", ["a", "b"]), "fail"]
     srv, log, host = _serve_scroll(pages)
     try:
-        rows = ScrollSession(host=host, size=2).drain_http("idx-a")
+        rows = ScrollSession(host=host, size=2).drain_http_status("idx-a")[0]
     finally:
         srv.shutdown()
     assert [r["_id"] for r in rows] == ["a", "b"]
@@ -700,23 +709,32 @@ def test_scroll_http_loopback_failure_keeps_partial_and_cleans_up():
 
 def test_scroll_http_loopback_bad_json_keeps_partial_and_cleans_up():
     """A 200 response whose body is not valid JSON (truncated proxy
-    reply) raises ValueError from json.loads — the fold must treat it
-    like a transport error: keep the partial rows and still DELETE the
-    scroll context (ADVICE r6: previously only OSError was caught and
-    the partial rows were lost)."""
-    pages = [_page("sid-1", ["a", "b"]), "garbage"]
-    srv, log, host = _serve_scroll(pages)
-    try:
-        rows = ScrollSession(host=host, size=2).drain_http("idx-a")
-    finally:
-        srv.shutdown()
-    assert [r["_id"] for r in rows] == ["a", "b"]
-    assert [(r["method"], r["path"]) for r in log] == [
-        ("POST", "/idx-a/_search"),
-        ("POST", "/_search/scroll"),
-        ("DELETE", "/_search/scroll"),
-    ]
-    assert log[-1]["body"] == {"scroll_id": "sid-1"}
+    reply) raises ValueError from json.loads — on a scroll PAGE the
+    fold must treat it like a transport error: keep the partial rows
+    and still DELETE the scroll context (ADVICE r6: previously only
+    OSError was caught and the partial rows were lost). The same
+    garbled reply on the INIT search is retried — no scroll context
+    exists yet, so the request is idempotent. Both hold through the
+    row view and the raw-page view alike."""
+    init = ("POST", "/idx-a/_search")
+    for pages, inits in (
+        ([_page("sid-1", ["a", "b"]), "garbage"], [init]),
+        (["garbage", _page("sid-1", ["a", "b"]), "garbage"], [init, init]),
+    ):
+        for view in ("rows", "pages"):
+            srv, log, host = _serve_scroll(pages)
+            try:
+                sess = ScrollSession(host=host, size=2, backoff_s=0.01)
+                rows, completed = _drain_view(sess, "idx-a", view)
+            finally:
+                srv.shutdown()
+            assert not completed
+            assert [r["_id"] for r in rows] == ["a", "b"]
+            assert [(r["method"], r["path"]) for r in log] == inits + [
+                ("POST", "/_search/scroll"),
+                ("DELETE", "/_search/scroll"),
+            ]
+            assert log[-1]["body"] == {"scroll_id": "sid-1"}
 
 
 def test_scroll_http_loopback_empty_index_no_cleanup():
@@ -724,7 +742,7 @@ def test_scroll_http_loopback_empty_index_no_cleanup():
     and no DELETE (no context was ever opened)."""
     srv, log, host = _serve_scroll([{"hits": {"hits": []}}])
     try:
-        rows = ScrollSession(host=host).drain_http("idx-empty")
+        rows = ScrollSession(host=host).drain_http_status("idx-empty")[0]
     finally:
         srv.shutdown()
     assert rows == []
@@ -792,10 +810,11 @@ class _PitHandler:
     """Functional loopback PIT server: serves the doc set through the
     real search_after contract — opens pits, applies the search_after
     cursor against per-slice doc lists, and can inject transient 503s
-    by request ordinal to exercise the retry-completes contract."""
+    or garbled 200 bodies by request ordinal to exercise the
+    retry-completes contract."""
 
     @staticmethod
-    def make(docs, log, fail_ordinals=frozenset()):
+    def make(docs, log, fail_ordinals=frozenset(), garbled_ordinals=frozenset()):
         import urllib.parse
         from http.server import BaseHTTPRequestHandler
 
@@ -834,6 +853,13 @@ class _PitHandler:
                 state["n"] += 1
                 if state["n"] in fail_ordinals:
                     self._reply({"error": "transient"}, code=503)
+                    return
+                if state["n"] in garbled_ordinals:
+                    data = b'{"hits": {"hi'  # truncated proxy reply
+                    self.send_response(200)
+                    self.send_header("Content-Length", str(len(data)))
+                    self.end_headers()
+                    self.wfile.write(data)
                     return
                 if self.path.startswith("/") and "/_pit" in self.path:
                     self._reply({"id": "pit-1"})
@@ -875,13 +901,14 @@ class _PitHandler:
         return Handler
 
 
-def _serve_pit(docs, fail_ordinals=frozenset()):
+def _serve_pit(docs, fail_ordinals=frozenset(), garbled_ordinals=frozenset()):
     import threading
     from http.server import ThreadingHTTPServer
 
     log: list[dict] = []
     srv = ThreadingHTTPServer(
-        ("127.0.0.1", 0), _PitHandler.make(docs, log, fail_ordinals)
+        ("127.0.0.1", 0),
+        _PitHandler.make(docs, log, fail_ordinals, garbled_ordinals),
     )
     threading.Thread(target=srv.serve_forever, daemon=True).start()
     return srv, log, f"http://127.0.0.1:{srv.server_address[1]}"
@@ -919,26 +946,28 @@ def test_search_after_http_loopback_full_session():
 
 
 def test_search_after_retry_completes_where_scroll_cannot():
-    """THE reason the session exists: a transient 503 on a PAGE fetch.
-    The stateless cursor retries the identical request and the drain
-    COMPLETES with every row — a scroll page can never be retried
-    (the server-side cursor may have advanced), so the same fault
-    degrades a scroll drain to partial rows."""
+    """THE reason the session exists: a transient 503 — or a garbled
+    200 body — on a PAGE fetch. The stateless cursor retries the
+    identical request and the drain COMPLETES with every row, through
+    the row view and the raw-page view alike — a scroll page can never
+    be retried (the server-side cursor may have advanced), so the same
+    fault degrades a scroll drain to partial rows."""
     from es_to_clickhouse_spark.sources.es import SearchAfterSession
 
     # ordinal 3 = the second _search (after _pit=1, first _search=2)
-    srv, log, host = _serve_pit(_PIT_DOCS, fail_ordinals={3})
-    try:
-        rows, completed = SearchAfterSession(
-            host=host, size=3, backoff_s=0.01
-        ).drain_http_status("idx-a")
-    finally:
-        srv.shutdown()
-    assert completed
-    assert [r["_id"] for r in rows] == [f"d{i}" for i in range(7)]
-    # the failed ordinal was re-issued with an IDENTICAL body
-    searches = [r["body"] for r in log if r["path"] == "/_search"]
-    assert searches[1] == searches[2]
+    for fault in ({"fail_ordinals": {3}}, {"garbled_ordinals": {3}}):
+        for view in ("rows", "pages"):
+            srv, log, host = _serve_pit(_PIT_DOCS, **fault)
+            try:
+                sess = SearchAfterSession(host=host, size=3, backoff_s=0.01)
+                rows, completed = _drain_view(sess, "idx-a", view)
+            finally:
+                srv.shutdown()
+            assert completed, (fault, view)
+            assert [r["_id"] for r in rows] == [f"d{i}" for i in range(7)]
+            # the failed ordinal was re-issued with an IDENTICAL body
+            searches = [r["body"] for r in log if r["path"] == "/_search"]
+            assert searches[1] == searches[2]
 
 
 def test_search_after_failure_keeps_partial_and_closes_pit():

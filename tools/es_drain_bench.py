@@ -1,8 +1,8 @@
-"""Measure the jar-free ES drain's Python CPU: per-row parse→re-dump
-(the pre-r10 transport, `drain_http` + per-row json.dumps) vs raw-page
-passthrough (`drain_http_pages`, one control-only parse per page) over
-the same loopback corpus — the judge-r9 item 6 evidence. Run SOLO
-(host noise rules).
+"""Measure the jar-free ES drain's Python CPU: the row view
+(`drain_http_status` + per-row json.dumps, the NDJSON transport) vs the
+raw-page view (`drain_http_pages_status`, one control parse per page,
+the typed transport) over the same loopback corpus. Run SOLO (host
+noise rules).
 
 Usage: python tools/es_drain_bench.py [n_docs] [page_size]
 """
@@ -12,8 +12,9 @@ from __future__ import annotations
 import json
 import sys
 import time
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 
 def main() -> int:
@@ -43,15 +44,15 @@ def main() -> int:
     try:
         sess = ScrollSession(host=host, size=page)
 
-        # path A: pre-r10 transport — dict rows + per-row re-dump
+        # path A: row view — dict rows + per-row re-dump
         t0 = time.perf_counter()
-        rows = sess.drain_http("bench")
+        rows = sess.drain_http_status("bench")[0]
         lines = [json.dumps(r, ensure_ascii=False, default=str) for r in rows]
         t_rows = time.perf_counter() - t0
 
-        # path B: raw-page passthrough (control-only parse per page)
+        # path B: raw-page view (control parse per page)
         t0 = time.perf_counter()
-        pages = sess.drain_http_pages("bench")
+        pages = sess.drain_http_pages_status("bench")[0]
         t_pages = time.perf_counter() - t0
 
         n_from_pages = sum(

@@ -152,10 +152,8 @@ def d18_pipeline(spark, src: str):
         "_blk",
         F.concat(F.col("label"), F.lit("|"), F.col("cent_id").cast("string")),
     )
-    k_cells = max(8, emb.count() // 256)
     return embedding_neardup_pairs(
-        base, "vec_id", "embedding", "_blk", threshold=THRESHOLD,
-        n_blocks_hint=k_cells,
+        base, "vec_id", "embedding", "_blk", threshold=THRESHOLD
     ).distinct()
 
 
@@ -180,10 +178,8 @@ def d14_pipeline(spark, src: str):
     cents = sampled_centroids(emb)
     cell = ivf_assign_auto(emb, cents).select("vec_id", "cent_id")
     base = emb.join(cell.hint("SHUFFLE_HASH"), "vec_id")
-    k_cells = max(8, emb.count() // 256)
     pairs = embedding_neardup_pairs(
-        base, "vec_id", "embedding", "cent_id", threshold=THRESHOLD,
-        n_blocks_hint=k_cells,
+        base, "vec_id", "embedding", "cent_id", threshold=THRESHOLD
     ).select("id_a", "id_b")
     clusters = connected_components(
         pairs, "id_a", "id_b", out_node="vec_id", out_label="cluster_id"
