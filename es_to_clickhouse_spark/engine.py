@@ -5,24 +5,34 @@ Re-expresses the reference's three daemons' orchestration (SURVEY §3):
 - ``full``      — es/es_to_bytehouse.py:1153-1207 (run_full_sync)
 - ``incremental``/``continuous`` — es/es_to_bytehouse.py:1053-1102
 - ``auto``      — mongodb/mongodb_to_bytehouse.py:811-866 (full for unseen
-                  tables, then continuous incremental)
+                  tables, incremental for the rest)
 - ``status``    — clickhouse/clickhouse_to_bytehouse.py:205-224
 - ``list``      — es/es_to_bytehouse.py:1246-1253 (--list-only)
+
+Every mode runs one per-table round (``SyncEngine._round``): read the
+table once, filter it by the stored watermark (a full round is the round
+with no predicate and no prior state), skip it when the filtered batch is
+empty, and land it with ``land_batch`` — the reference daemons' loop body
+(es/es_to_bytehouse.py:963-1006): count the batch, append it, commit the
+next state. ``StreamingSync`` lands its micro-batches the same way.
 
 Spark-first differences from the reference (deliberate, SURVEY §3.1):
 the per-batch client-side pagination loop collapses into ONE distributed
 read + write per table per round (Catalyst plans the scan; partitioning
 replaces paging; no O(n²) OFFSET walk). Schema discovery is the
-connector's inferred schema unioned with a sampled scan. Watermarks are
-``max()`` aggregates computed in the same job.
+connector's inferred schema unioned with a sampled scan. The count and
+the watermark maxima ride the append job as an Observation, and
+``SyncState.advance`` merges them monotonically into the stored marks.
 """
 
 from __future__ import annotations
 
 import logging
 import time
+from collections.abc import Callable
 from dataclasses import dataclass, field
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
@@ -30,6 +40,7 @@ from es_to_clickhouse_spark.catalog import ParquetCatalog
 from es_to_clickhouse_spark.flatten import flatten_es, flatten_mongo
 from es_to_clickhouse_spark.functions import sanitize_table_name
 from es_to_clickhouse_spark.incremental import (
+    batch_aggregate,
     detect_time_field,
     detect_update_time_field,
     keyset_predicate,
@@ -54,33 +65,53 @@ class SyncReport:
     neardup_dropped: int = 0
 
 
-def _mono_time(new: str | None, old: str | None) -> str | None:
-    """Monotone watermark merge: a LATE-UPDATE batch (old created_at
-    caught via the update-time OR-clause) has a batch-max time BELOW the
-    stored watermark — committing it verbatim would regress the
-    watermark and re-fetch every newer row on the next round, forever
-    (duplicate ingestion found by tests/test_soak.py round 2). Timestamp
-    watermarks are ``cast("string")`` of a timestamp — fixed-width ISO,
-    so lexicographic order IS chronological order."""
-    if new is None:
-        return old
-    if old is None:
-        return new
-    return new if new > old else old
+def land_batch(
+    batch: DataFrame,
+    prior: SyncState,
+    state: StateStore,
+    append: Callable[[DataFrame], None],
+    neardup=None,
+    id_col: str | None = None,
+    persist: bool = False,
+) -> tuple[SyncState, int]:
+    """Land one batch: append it through ``append`` and commit
+    ``prior.advance`` over its count and maxima. Returns the committed
+    state and the number of rows dropped as near-dups.
 
-
-def _mono_id(new: str | None, old: str | None) -> str | None:
-    """Monotone id-watermark merge; numeric ids compare numerically
-    ('99' > '100' lexicographically — the keyset-predicate side already
-    casts back to the native type, incremental.py)."""
-    if new is None:
-        return old
-    if old is None:
-        return new
-    try:
-        return new if int(new) > int(old) else old
-    except ValueError:
-        return new if new > old else old
+    Without a near-dup screen the count and maxima ride the append job
+    (Observation): one pass over the batch. With a ``neardup`` store
+    whose id/text columns the batch has, the batch is materialized once
+    — ``persist(DISK_ONLY)`` when ``persist`` (a whole table: lineage
+    kept, so lost blocks recompute from the source after an executor
+    loss), else ``localCheckpoint`` — and the order is screen → sink
+    append → state commit → store append. The store append comes last
+    so that a crash between sink and store only re-appends signatures on
+    replay (the store dedups them); with the store first, the replayed
+    batch would screen as a near-dup of its own failed attempt and be
+    lost. The maxima cover the dropped rows too, so an all-dup batch
+    still advances the watermark; it appends nothing."""
+    metrics = batch_aggregate(prior.time_field, prior.update_time_field, id_col)
+    screened = {getattr(neardup, "id_col", None), getattr(neardup, "text_col", None)}
+    if neardup is None or not screened <= set(batch.columns):
+        obs = Observation()
+        append(batch.observe(obs, *metrics))
+        committed = prior.advance(**obs.get)
+        state.commit(committed)
+        return committed, 0
+    kept = batch.persist(StorageLevel.DISK_ONLY) if persist else batch.localCheckpoint()
+    novel, matched = neardup.screen_split(kept)
+    dropped = matched.count()
+    observed = kept.agg(*metrics).first().asDict()
+    observed["n"] -= dropped
+    if observed["n"] > 0:
+        append(novel)
+    committed = prior.advance(**observed)
+    state.commit(committed)
+    if observed["n"] > 0:
+        neardup.append(novel)
+    if persist:
+        kept.unpersist()
+    return committed, dropped
 
 
 @dataclass
@@ -96,10 +127,11 @@ class SyncEngine:
     store_source: bool = False  # keep whole doc as _source JSON (STORE_SOURCE)
     reporter: ProgressReporter = field(default_factory=ProgressReporter)
     #: optional ingest-time near-dup screen
-    #: (operators.dedup.PersistedNearDupStore): each incremental round
-    #: screens its batch against the parquet-persisted LSH store, drops
-    #: verified near-dups from the sink append, and appends the novel
-    #: rows' signatures — history text is never rescanned, history
+    #: (operators.dedup.PersistedNearDupStore): each round (the full
+    #: round seeds the store) screens its batch against the
+    #: parquet-persisted LSH store, drops verified near-dups from the
+    #: sink append, and appends the novel rows' signatures (see
+    #: ``land_batch``) — history text is never rescanned, history
     #: signatures never re-derived. Tables missing the store's id/text
     #: columns pass through untouched.
     neardup: object | None = None
@@ -129,280 +161,103 @@ class SyncEngine:
     def list_tables(self, pattern: str | None = None) -> list[str]:
         return [t.name for t in self.catalog.list_tables(pattern)]
 
-    def sync_full(self, pattern: str | None = None) -> list[SyncReport]:
-        """Full sync of every matching table (§3.1)."""
-        reports = []
-        for t in self.catalog.list_tables(pattern):
-            t0 = time.time()
-            target_name = sanitize_table_name(t.name, self.dialect)
-            df = self._transform(self.catalog.read(t.name))
-            cols = df.columns
-            time_field = detect_time_field(cols)
-            update_field = detect_update_time_field(cols)
-            # Watermarks + count observed DURING the write (Observation
-            # rides the write job) — the reference re-queries the target
-            # after loading (es/es_to_bytehouse.py:1115-1131), which at
-            # 100 TB would be a second full scan; here the sync is ONE pass.
-            obs = Observation(f"sync_full:{target_name}")
-            metrics = [F.count(F.lit(1)).alias("n")]
-            if time_field:
-                metrics.append(F.max(time_field).cast("string").alias("max_t"))
-            if update_field:
-                metrics.append(F.max(update_field).cast("string").alias("max_u"))
-            # keyset seed: max over the NATIVE id column when known, so a
-            # numeric id's watermark is its numeric max, not a string max
-            # ('99' > '100' lexicographically — ADVICE incremental.py:85)
-            id_src = (
-                self.id_field
-                if self.id_field and self.id_field in cols
-                else (ID_COL if ID_COL in cols else None)
-            )
-            if id_src:
-                metrics.append(F.max(id_src).cast("string").alias("max_id"))
-            nd = self.neardup
-            nd_dropped = 0
-            if (
-                nd is not None
-                and getattr(nd, "id_col", None) in cols
-                and nd.text_col in cols
-            ):
-                # full sync SEEDS the near-dup store: screen (virgin
-                # store → everything is novel), drop in-history dups on
-                # a re-run, append the kept rows' signatures — the
-                # incremental rounds then screen against these without
-                # ever rescanning this text. Store append comes LAST
-                # (after the sink append below and the state commit at
-                # the bottom): a crash between sink and store merely
-                # re-appends signatures on replay (store-side dedup
-                # absorbs it); the old order silently dropped the
-                # replayed batch as a near-dup of its own failed
-                # attempt (ADVICE r12, high).
-                # persist, not localCheckpoint, for the FULL-sync seed:
-                # this materializes the ENTIRE source table, and
-                # localCheckpoint's truncated lineage on executor
-                # storage makes an executor loss mid-round unrecoverable
-                # at that scale (ADVICE r12). DISK_ONLY keeps lineage
-                # (lost blocks recompute from the source) and never
-                # competes with execution memory.
-                from pyspark import StorageLevel
-
-                df_all = nd_seed_df = df.persist(StorageLevel.DISK_ONLY)
-                novel, matched = nd.screen_split(df_all)
-                nd_dropped = matched.count()
-                observed = df_all.agg(*metrics).first().asDict()
-                rows_kept = observed["n"] - nd_dropped
-                nd_novel = None
-                if rows_kept > 0:
-                    self.target.append(target_name, novel)
-                    nd_novel = novel
-                observed["n"] = rows_kept
-            else:
-                nd_novel = nd_seed_df = None
-                self.target.append(target_name, df.observe(obs, *metrics))
-                observed = obs.get
-            wm = observed.get("max_t")
-            wm_u = observed.get("max_u")
-            rows = observed["n"]
+    def _round(
+        self, name: str, st: SyncState | None, start_date: str | None = None
+    ) -> SyncReport | None:
+        """One table round. ``st`` is the stored state; None with no
+        ``start_date`` is a full round (no predicate), None with one
+        bootstraps from it (the Mongo daemon's ``--start-date``,
+        mongodb/mongodb_to_bytehouse.py:611-631). Returns None when the
+        table is skipped."""
+        t0 = time.time()
+        target_name = sanitize_table_name(name, self.dialect)
+        df = self._transform(self.catalog.read(name))
+        cols = df.columns
+        # the id watermark is a max over the NATIVE id column when known,
+        # so a numeric id compares numerically, not as a string
+        id_src = (
+            self.id_field
+            if self.id_field and self.id_field in cols
+            else (ID_COL if ID_COL in cols else None)
+        )
+        full = st is None and start_date is None
+        if st is None:
             st = SyncState(
                 table_name=target_name,
-                source_name=t.name,
-                time_field=time_field,
-                update_time_field=update_field,
-                last_sync_time=str(wm) if wm is not None else None,
-                last_update_time=str(wm_u) if wm_u is not None else None,
-                last_id=str(observed["max_id"])
-                if observed.get("max_id") is not None
-                else None,
-                last_sync_count=rows,
+                source_name=name,
+                time_field=detect_time_field(cols),
+                update_time_field=detect_update_time_field(cols),
+                last_sync_time=start_date,
             )
-            self.state.commit(st)
-            if nd_novel is not None:
-                # store append LAST — see the ordering comment above
-                nd.append(nd_novel)
-            if nd_seed_df is not None:
-                nd_seed_df.unpersist()
-            rep = SyncReport(
-                t.name,
-                "full",
-                rows,
-                time.time() - t0,
-                st.last_sync_time,
-                neardup_dropped=nd_dropped,
+        if full:
+            batch = df
+        elif st.time_field and st.last_sync_time:
+            batch = df.where(
+                watermark_predicate(
+                    st.time_field,
+                    st.last_sync_time,
+                    st.update_time_field if st.last_update_time else None,
+                    st.last_update_time,
+                )
             )
-            self.reporter.table_done(rep.table, rep.rows, rep.seconds)
-            reports.append(rep)
-        return reports
+        elif st.last_id and id_src:
+            batch = df.where(
+                keyset_predicate(id_src, st.last_id, df.schema[id_src].dataType)
+            )
+        else:
+            log.warning("%s: no watermark to sync from; run full sync first", name)
+            return None
+        mode = "full" if full else "incremental"
+        # Idle-round no-op (es/es_to_bytehouse.py:996-1004: zero rows
+        # moved → nothing appended, state untouched): a limit-1 probe
+        # that exits at the first matching row, so no idle round appends
+        # an empty part and no round scans the source twice in full.
+        if not full and batch.isEmpty():
+            return self._report(name, mode, 0, t0, st.last_sync_time)
+        committed, dropped = land_batch(
+            batch,
+            st,
+            self.state,
+            lambda b: self.target.append(target_name, b),
+            self.neardup,
+            id_src,
+            persist=full,
+        )
+        return self._report(
+            name, mode, committed.last_sync_count, t0, committed.last_sync_time, dropped
+        )
+
+    def _report(self, name, mode, rows, t0, watermark, dropped=0) -> SyncReport:
+        rep = SyncReport(name, mode, rows, time.time() - t0, watermark, dropped)
+        self.reporter.table_done(rep.table, rep.rows, rep.seconds)
+        return rep
+
+    def _state(self, name: str) -> SyncState | None:
+        return self.state.get(sanitize_table_name(name, self.dialect))
+
+    def sync_full(self, pattern: str | None = None) -> list[SyncReport]:
+        """Full sync of every matching table (§3.1)."""
+        return [self._round(t.name, None) for t in self.catalog.list_tables(pattern)]
 
     def sync_incremental_once(
         self, pattern: str | None = None, start_date: str | None = None
     ) -> list[SyncReport]:
         """One incremental round over matching tables (§3.2).
 
-        ``start_date``: bootstrap for stateless tables — the Mongo
-        daemon's ``--start-date`` (mongodb/mongodb_to_bytehouse.py:611-631:
-        no state → sync rows with time > start_date and seed state).
-        Without it, stateless tables are skipped (ES refuses incremental
-        before a full sync, es/es_to_bytehouse.py:968-971).
+        ``start_date``: bootstrap for stateless tables — rows with time >
+        start_date sync and seed the state. Without it, stateless tables
+        are skipped (ES refuses incremental before a full sync,
+        es/es_to_bytehouse.py:968-971).
         """
         reports = []
         for t in self.catalog.list_tables(pattern):
-            target_name = sanitize_table_name(t.name, self.dialect)
-            st = self.state.get(target_name)
-            if st is None and start_date is not None:
-                cols = self._transform(self.catalog.read(t.name)).columns
-                tf = detect_time_field(cols)
-                if tf:
-                    st = SyncState(
-                        table_name=target_name,
-                        source_name=t.name,
-                        time_field=tf,
-                        update_time_field=detect_update_time_field(cols),
-                        last_sync_time=start_date,
-                    )
-            if st is None:
-                # ES refuses incremental before a full sync
-                # (es/es_to_bytehouse.py:968-971)
+            st = self._state(t.name)
+            if st is None and start_date is None:
                 log.warning("%s: no sync state; run full sync first", t.name)
                 continue
-            t0 = time.time()
-            df = self._transform(self.catalog.read(t.name))
-            keyset_col = None
-            if st.time_field and st.last_sync_time:
-                pred = watermark_predicate(
-                    st.time_field,
-                    st.last_sync_time,
-                    st.update_time_field if st.last_update_time else None,
-                    st.last_update_time,
-                )
-            elif st.last_id:
-                # compare on the NATIVE id column when known (numeric ids
-                # break under string compare — ADVICE incremental.py:85);
-                # the stored string watermark is cast back to its type
-                keyset_col = (
-                    self.id_field
-                    if self.id_field and self.id_field in df.columns
-                    else ID_COL
-                )
-                pred = keyset_predicate(
-                    keyset_col, st.last_id, df.schema[keyset_col].dataType
-                )
-            else:
-                log.warning("%s: state lacks watermark fields; skipping", t.name)
-                continue
-            # ONE job per round: count + watermarks ride the append via
-            # Observation (same pattern as sync_full). The old shape — a
-            # batch_watermarks() aggregate job, then the append re-scanning
-            # the source — doubled the scan cost AND could commit a
-            # watermark that missed rows arriving between the two jobs
-            # (permanent re-fetch duplicates on tables without _id).
-            batch = df.where(pred)
-            # Idle-round no-op (es/es_to_bytehouse.py:996-1004: zero rows
-            # moved → nothing inserted, state untouched). Without this
-            # probe every idle round appends an EMPTY parquet part — at
-            # the reference's 60 s interval that is ~1440 junk files per
-            # table per day, a scan-degradation scale-killer for any
-            # long-running continuous deployment. The probe is a
-            # limit(1) job: on active rounds it early-exits at the first
-            # matching row (epsilon cost before the real append scan);
-            # on idle rounds it replaces the append's own full scan, so
-            # no round ever scans the source twice in full.
-            if batch.isEmpty():
-                rep = SyncReport(t.name, "incremental", 0, time.time() - t0, st.last_sync_time)
-                self.reporter.table_done(rep.table, rep.rows, rep.seconds)
+            rep = self._round(t.name, st, start_date)
+            if rep is not None:
                 reports.append(rep)
-                continue
-            metrics = [F.count(F.lit(1)).alias("n")]
-            if st.time_field:
-                metrics.append(F.max(st.time_field).cast("string").alias("max_t"))
-            if st.update_time_field:
-                metrics.append(
-                    F.max(st.update_time_field).cast("string").alias("max_u")
-                )
-            id_src = keyset_col
-            if id_src is None and st.last_id:
-                # time-watermark path still advances the id watermark
-                id_src = (
-                    self.id_field
-                    if self.id_field and self.id_field in df.columns
-                    else (ID_COL if ID_COL in df.columns else None)
-                )
-            if id_src:
-                metrics.append(F.max(id_src).cast("string").alias("max_id"))
-            nd = self.neardup
-            nd_dropped = 0
-            nd_novel = None
-            if (
-                nd is not None
-                and getattr(nd, "id_col", None) in batch.columns
-                and nd.text_col in batch.columns
-            ):
-                # Ingest-time near-dup screen. One source scan: the
-                # checkpoint materializes the batch; the screen, the
-                # watermark agg, the sink append and the store append
-                # all read it from executor storage. The STORE append
-                # runs after the state commit below — a crash between
-                # sink and store re-appends signatures on replay
-                # (harmless, store-side dedup) instead of silently
-                # dropping the replayed batch as a near-dup of its own
-                # failed attempt (ADVICE r12, high).
-                batch_all = batch.localCheckpoint()
-                novel, matched = nd.screen_split(batch_all)
-                nd_dropped = matched.count()
-                # Watermarks come from the FULL batch: a round whose
-                # newest rows are all near-dups must still advance the
-                # watermark, else those rows re-fetch (and re-screen)
-                # every round forever.
-                observed = batch_all.agg(*metrics).first().asDict()
-                rows = observed["n"] - nd_dropped
-                if rows > 0:
-                    # all-dup rounds skip the append entirely — same
-                    # junk-empty-part concern as the idle-round probe
-                    self.target.append(target_name, novel)
-                    nd_novel = novel
-            else:
-                obs = Observation(f"sync_incremental:{target_name}")
-                self.target.append(
-                    target_name, batch.observe(obs, *metrics)
-                )
-                observed = obs.get
-                rows = observed["n"]
-            max_time = observed.get("max_t")
-            if rows > 0 or nd_dropped > 0:
-                # commit only when rows moved (es/es_to_bytehouse.py:996-1004),
-                # and merge every watermark MONOTONICALLY: a late-update
-                # batch's maxima can sit below the stored marks
-                self.state.commit(
-                    SyncState(
-                        table_name=target_name,
-                        source_name=t.name,
-                        time_field=st.time_field,
-                        update_time_field=st.update_time_field,
-                        last_sync_time=_mono_time(max_time, st.last_sync_time),
-                        last_update_time=_mono_time(
-                            observed.get("max_u"), st.last_update_time
-                        ),
-                        last_id=_mono_id(
-                            str(observed["max_id"])
-                            if observed.get("max_id") is not None
-                            else None,
-                            st.last_id,
-                        ),
-                        last_sync_count=rows,
-                    )
-                )
-            if nd_novel is not None:
-                # store append LAST — see the ordering comment above
-                nd.append(nd_novel)
-            rep = SyncReport(
-                t.name,
-                "incremental",
-                rows,
-                time.time() - t0,
-                max_time,
-                neardup_dropped=nd_dropped,
-            )
-            self.reporter.table_done(rep.table, rep.rows, rep.seconds)
-            reports.append(rep)
         return reports
 
     def sync_continuous(
@@ -440,9 +295,9 @@ class SyncEngine:
                             )
                 # the near-dup store accumulates files_per_append
                 # parquet parts per table per round, same degradation
-                # curve as the sink (judge r12 #5) — compact it on the
-                # same cadence. Safe here: the loop is between rounds,
-                # so no append is in flight.
+                # curve as the sink — compact it on the same cadence.
+                # Safe here: the loop is between rounds, so no append
+                # is in flight.
                 if self.neardup is not None and hasattr(
                     self.neardup, "compact"
                 ):
@@ -465,19 +320,14 @@ class SyncEngine:
         return rounds
 
     def sync_auto(self, pattern: str | None = None) -> list[SyncReport]:
-        """Auto mode: full-sync unseen tables, incremental the rest
+        """Auto mode: one pass over the listing, full round for unseen
+        tables, incremental for the rest
         (mongodb/mongodb_to_bytehouse.py:811-866)."""
         reports = []
-        unseen = [
-            t.name
-            for t in self.catalog.list_tables(pattern)
-            if not self.state.has_synced_before(sanitize_table_name(t.name, self.dialect))
-        ]
-        if unseen:
-            reports.extend(self.sync_full(",".join(unseen)))
-        reports.extend(
-            self.sync_incremental_once(pattern)
-        )
+        for t in self.catalog.list_tables(pattern):
+            rep = self._round(t.name, self._state(t.name))
+            if rep is not None:
+                reports.append(rep)
         return reports
 
     def status(self, limit: int = 10) -> DataFrame:

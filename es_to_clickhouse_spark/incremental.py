@@ -8,15 +8,14 @@ predicates — Catalyst pushes them into the scan (parquet row-group pruning
 / JDBC WHERE / connector pushdown), so the same declarative filter is the
 pushdown.
 
-Watermarks advance via ``max()`` aggregates over the batch (the Spark
-version of the reference's in-flight running max, es/es_to_bytehouse.py:909-919).
+Watermarks advance via ``max()`` aggregates over the batch
+(``batch_aggregate``, the Spark version of the reference's in-flight
+running max, es/es_to_bytehouse.py:909-919).
 """
 
 from __future__ import annotations
 
-from dataclasses import dataclass
-
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 #: time-field autodetection candidates (es/es_to_bytehouse.py:156)
@@ -95,35 +94,19 @@ def keyset_predicate(id_field: str, last_id, dtype=None) -> Column:
     return F.col(id_field) > lit
 
 
-@dataclass
-class BatchWatermarks:
-    rows: int
-    max_time: str | None
-    max_update: str | None
-    max_id: str | None
-
-
-def batch_watermarks(
-    df: DataFrame,
-    time_field: str | None,
+def batch_aggregate(
+    time_field: str | None = None,
     update_field: str | None = None,
     id_field: str | None = None,
-) -> BatchWatermarks:
-    """One pass over the batch: count + max(t) + max(u) + max(id)
-    (replaces the reference's per-row running max, es/es_to_bytehouse.py:909-919).
-    A single partial-aggregated job — no collect of data rows."""
-    aggs = [F.count(F.lit(1)).alias("n")]
-    if time_field:
-        aggs.append(F.max(time_field).cast("string").alias("max_t"))
-    if update_field:
-        aggs.append(F.max(update_field).cast("string").alias("max_u"))
-    if id_field:
-        aggs.append(F.max(id_field).cast("string").alias("max_id"))
-    row = df.agg(*aggs).collect()[0]
-    d = row.asDict()
-    return BatchWatermarks(
-        rows=d["n"],
-        max_time=d.get("max_t"),
-        max_update=d.get("max_u"),
-        max_id=d.get("max_id"),
-    )
+) -> list[Column]:
+    """A batch's count and watermark maxima as aggregate columns named
+    like ``SyncState.advance``'s parameters: ``n``, ``max_t``, ``max_u``,
+    ``max_id`` (one per given field). The maxima are cast to string, the
+    state table's watermark type. Partial-aggregated in one job, or
+    riding a write as an Observation (replaces the reference's per-row
+    running max, es/es_to_bytehouse.py:909-919)."""
+    cols = [F.count(F.lit(1)).alias("n")]
+    for alias, name in (("max_t", time_field), ("max_u", update_field), ("max_id", id_field)):
+        if name:
+            cols.append(F.max(name).cast("string").alias(alias))
+    return cols

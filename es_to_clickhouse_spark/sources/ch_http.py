@@ -668,8 +668,7 @@ def sync_incremental_http(
        timestamp is excluded by ``>`` next round.
 
     Returns ``(rows_synced, condition, new_watermark)``."""
-    from pyspark.sql import functions as F
-
+    from es_to_clickhouse_spark.incremental import batch_aggregate
     from es_to_clickhouse_spark.state import SyncState
 
     st = state.get(table)
@@ -683,20 +682,16 @@ def sync_incremental_http(
         bounds=bounds,
         num_partitions=num_partitions,
     ).localCheckpoint()  # one source pass; count/append/watermark share it
-    n, max_time = df.agg(
-        F.count(F.lit(1)), F.max(F.col(time_column)).cast("string")
-    ).collect()[0]
-    if n == 0:
+    row = df.agg(*batch_aggregate(time_column)).collect()[0].asDict()
+    if row["n"] == 0:
         return 0, cond, last
     target.append(table, df)
-    new_wm = max_time or last
-    state.commit(
-        SyncState(
-            table_name=table,
-            source_name=f"ch_http:{source.database}.{table}",
-            time_field=time_column,
-            last_sync_time=new_wm,
-            last_sync_count=n,
-        )
+    prior = SyncState(
+        table_name=table,
+        source_name=f"ch_http:{source.database}.{table}",
+        time_field=time_column,
+        last_sync_time=last,
     )
-    return n, cond, new_wm
+    committed = prior.advance(**row)
+    state.commit(committed)
+    return row["n"], cond, committed.last_sync_time

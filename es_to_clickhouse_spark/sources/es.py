@@ -904,10 +904,9 @@ def sync_incremental_es_http(
        associative max, computed where the rows already live.
 
     Returns ``(mode, rows, new_watermark)``."""
-    from pyspark.sql import functions as F
-
     from es_to_clickhouse_spark.flatten import flatten_es
     from es_to_clickhouse_spark.incremental import (
+        batch_aggregate,
         detect_time_field,
         detect_update_time_field,
     )
@@ -928,10 +927,10 @@ def sync_incremental_es_http(
         # The reference daemon refuses such indices outright
         # (es/es_to_bytehouse.py:968-971); having accepted ONE full
         # bootstrap under auto semantics, we hold instead of re-scan —
-        # but the hold must not be PERMANENT (ADVICE r10 low): each
-        # round cheaply re-probes the live mapping for a candidate
-        # field and, if one exists, asks the index (1-doc exists query)
-        # whether usable values have MATERIALIZED since the bootstrap.
+        # but the hold must not be PERMANENT: each round cheaply
+        # re-probes the live mapping for a candidate field and, if one
+        # exists, asks the index (1-doc exists query) whether usable
+        # values have MATERIALIZED since the bootstrap.
         # When they have, fall through to ONE more full scan that this
         # time commits a real max(time_field) watermark, unlocking
         # incremental rounds — a single at-least-once re-drain beats
@@ -976,43 +975,27 @@ def sync_incremental_es_http(
     cols = out.columns
     time_field = time_field if time_field in cols else detect_time_field(cols)
     update_field = detect_update_time_field(cols)
-    # ADVICE r10 (Mongo split twin): if ANY slice died mid-drain, the
-    # appended snapshot's max(time) belongs to the HEALTHY slices and
-    # may overshoot the failed slice's undrained tail — committing it
-    # would lose that tail forever. Append the partial rows (at-least-
-    # once) but HOLD the watermark; the next round re-fetches from the
-    # old one (duplicates possible, loss impossible). The count and the
-    # maxima share one aggregate over the checkpointed snapshot.
-    aggs = [F.count(F.lit(1)).alias("n")]
-    if time_field and complete:
-        aggs.append(F.max(F.col(time_field)).cast("string").alias("max_t"))
-    if update_field and complete:
-        aggs.append(F.max(F.col(update_field)).cast("string").alias("max_u"))
-    row = out.agg(*aggs).collect()[0].asDict()
-    n = row["n"]
-    if n == 0:
+    # If ANY slice died mid-drain, the snapshot's maxima belong to the
+    # healthy slices and may overshoot the failed slice's undrained tail:
+    # append the partial rows (at-least-once) but pass no maxima, so the
+    # marks hold and the next round re-fetches from them (duplicates
+    # possible, loss impossible).
+    marks = (time_field, update_field) if complete else ()
+    row = out.agg(*batch_aggregate(*marks)).collect()[0].asDict()
+    if row["n"] == 0:
         return mode, 0, since
     target.append(index, out)
-    max_t = row.get("max_t")
-    max_u = row.get("max_u")
-    # monotone merge (engine._mono_time contract): a late-update batch's
-    # maxima can sit below the stored marks
-    last = st.last_sync_time if st else since
-    new_wm = max_t if max_t and (not last or max_t > last) else last
-    last_u = st.last_update_time if st else None
-    new_u = max_u if max_u and (not last_u or max_u > last_u) else last_u
-    state.commit(
-        SyncState(
-            table_name=index,
-            source_name=f"es_http:{index}",
-            time_field=time_field,
-            update_time_field=update_field,
-            last_sync_time=new_wm,
-            last_update_time=new_u,
-            last_sync_count=n,
-        )
+    prior = SyncState(
+        table_name=index,
+        source_name=f"es_http:{index}",
+        time_field=time_field,
+        update_time_field=update_field,
+        last_sync_time=st.last_sync_time if st else since,
+        last_update_time=st.last_update_time if st else None,
     )
-    return mode, n, new_wm
+    committed = prior.advance(**row)
+    state.commit(committed)
+    return mode, row["n"], committed.last_sync_time
 
 
 def original_time_field(

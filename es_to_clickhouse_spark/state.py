@@ -34,14 +34,15 @@ The files stay one queryable table: ``read_all`` / ``latest`` / ``status``
 read it with Spark (the CLI ``status`` mode).
 
 Watermarks are kept as *strings* in the table for reference parity
-(lexicographic ISO compare — es/es_to_bytehouse.py:912,918) but the engine
-compares typed values internally (SURVEY §7.4 risk 3).
+(lexicographic ISO compare — es/es_to_bytehouse.py:912,918); the source
+predicates cast them back to the column type (SURVEY §7.4 risk 3), and
+``SyncState.advance`` is the one rule that moves them.
 """
 
 from __future__ import annotations
 
 import uuid
-from dataclasses import asdict, dataclass, fields
+from dataclasses import asdict, dataclass, fields, replace
 from datetime import datetime, timezone
 
 import pyarrow as pa
@@ -81,6 +82,42 @@ class SyncState:
     last_update_time: str | None = None
     last_id: str | None = None
     last_sync_count: int = 0
+
+    def advance(
+        self,
+        n: int,
+        max_t: str | None = None,
+        max_u: str | None = None,
+        max_id: str | None = None,
+    ) -> SyncState:
+        """The state to commit after landing ``n`` rows whose maxima of
+        ``time_field``, ``update_time_field`` and the id are ``max_t``,
+        ``max_u`` and ``max_id`` (``incremental.batch_aggregate`` names
+        its columns so). Every mark only moves forward: a late-update
+        batch (old time, caught by the update-time OR-clause) or a forced
+        re-read below the stored mark has maxima under the stored marks,
+        and committing them would re-fetch every newer row next round,
+        forever. A missing maximum keeps the stored mark."""
+        return replace(
+            self,
+            last_sync_time=_later(max_t, self.last_sync_time),
+            last_update_time=_later(max_u, self.last_update_time),
+            last_id=_later(max_id, self.last_id),
+            last_sync_count=n,
+        )
+
+
+def _later(new: str | None, old: str | None) -> str | None:
+    """The later of two string watermarks. Integers compare as numbers
+    ('99' > '100' as strings); anything else as strings, which is
+    chronological for the fixed-width ISO text of a timestamp cast and
+    exact for fixed-width ids."""
+    if new is None or old is None:
+        return old if new is None else new
+    try:
+        return new if int(new) > int(old) else old
+    except ValueError:
+        return new if new > old else old
 
 
 class StateStore:
@@ -144,10 +181,6 @@ class StateStore:
         st = SyncState(**{f.name: r[f.name] for f in fields(SyncState)})
         st.last_sync_count = st.last_sync_count or 0
         return st
-
-    def has_synced_before(self, table_name: str) -> bool:
-        """Auto-mode probe (mongodb/mongodb_to_bytehouse.py:285-295)."""
-        return self.get(table_name) is not None
 
     def commit(self, state: SyncState) -> None:
         """Append one watermark row (es/es_to_bytehouse.py:454-465) as its

@@ -29,8 +29,9 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from es_to_clickhouse_spark.engine import land_batch
 from es_to_clickhouse_spark.flatten import flatten_es
-from es_to_clickhouse_spark.incremental import batch_watermarks, detect_time_field
+from es_to_clickhouse_spark.incremental import detect_time_field
 from es_to_clickhouse_spark.sink import ID_COL, WarehouseTarget
 from es_to_clickhouse_spark.state import StateStore, SyncState
 
@@ -52,9 +53,9 @@ class StreamingSync:
     #: (operators.dedup.PersistedNearDupStore) — the foreachBatch twin
     #: of SyncEngine.neardup: each micro-batch screens against the
     #: parquet-persisted LSH store, drops verified near-dups from the
-    #: sink, appends the novel rows' signatures. State still commits
-    #: the FULL batch's watermark (wm is computed before the screen),
-    #: so all-dup micro-batches cannot stall the stream's progress.
+    #: sink, appends the novel rows' signatures. The committed watermark
+    #: covers the dropped rows too, so all-dup micro-batches cannot
+    #: stall the stream's progress.
     neardup: object | None = None
     #: compact the near-dup store's append-round small files every N
     #: micro-batches (the streaming twin of SyncEngine.sync_continuous
@@ -67,55 +68,30 @@ class StreamingSync:
     compact_store_every: int | None = None
 
     def _handle_batch(self, table: str, source_name: str, batch: DataFrame, batch_id: int) -> None:
-        """One micro-batch: flatten → append → state commit (the streaming
-        twin of SyncEngine.sync_incremental_once)."""
+        """One micro-batch: flatten, then land it like an incremental
+        round (``engine.land_batch``: append → monotone state commit, with
+        the near-dup store append last); empty batches are skipped."""
         out = flatten_es(batch, stringify=False)
         if self.id_field and self.id_field in out.columns and ID_COL not in out.columns:
             out = out.withColumn(ID_COL, F.col(self.id_field).cast("string"))
-        time_field = detect_time_field(out.columns)
-        wm = batch_watermarks(out, time_field)
-        if wm.rows == 0:
+        if out.isEmpty():
             return
-        nd = self.neardup
-        nd_novel = None
-        if (
-            nd is not None
-            and getattr(nd, "id_col", None) in out.columns
-            and nd.text_col in out.columns
-        ):
-            # screen_split, NOT ingest: the store append must come
-            # after the sink append + state commit below, else a crash
-            # between store and sink makes the checkpoint-replayed
-            # batch screen as a near-dup of its own failed attempt —
-            # dropped from the sink while the watermark advances,
-            # breaking the effectively-once contract the ch_target
-            # epoch path advertises (ADVICE r12, high). Post-commit
-            # append is replay-safe: a re-appended signature set is
-            # absorbed by screen_against_store's store-side dedup.
-            out, _ = nd.screen_split(out.localCheckpoint())
-            if out.isEmpty():
-                # all near-dups: nothing to append, but the state
-                # commit below still advances the full-batch watermark
-                out = None
-            else:
-                nd_novel = out
-        if out is not None:
-            self.target.append(table, out)
+        stored = self.state.get(table)
+        prior = SyncState(
+            table_name=table,
+            source_name=source_name,
+            time_field=detect_time_field(out.columns),
+            last_sync_time=stored.last_sync_time if stored else None,
+        )
+
+        def append(df: DataFrame) -> None:
+            self.target.append(table, df)
             if self.ch_target is not None:
                 # checkpoint-durable epoch: replayed batch → replayed tokens
-                self.ch_target.append(table, out, epoch=f"{table}:{batch_id}")
-        self.state.commit(
-            SyncState(
-                table_name=table,
-                source_name=source_name,
-                time_field=time_field,
-                last_sync_time=wm.max_time,
-                last_sync_count=wm.rows,
-            )
-        )
-        if nd_novel is not None:
-            # store append LAST — see the ordering comment above
-            nd.append(nd_novel)
+                self.ch_target.append(table, df, epoch=f"{table}:{batch_id}")
+
+        land_batch(out, prior, self.state, append, self.neardup)
+        nd = self.neardup
         if (
             nd is not None
             and self.compact_store_every

@@ -315,6 +315,31 @@ def test_sync_incremental_http_rounds(fake_ch, spark, tmp_path):
         TABLE_ROWS.pop()
 
 
+def test_sync_incremental_http_forced_start_keeps_later_mark(fake_ch, spark, tmp_path):
+    """A forced start date re-reads history below the stored mark: the
+    re-read rows land, but the stored watermark (later than every row
+    read) must stay where it was, not move back to the batch maximum."""
+    from es_to_clickhouse_spark.sink import WarehouseTarget
+    from es_to_clickhouse_spark.sources.ch_http import sync_incremental_http
+    from es_to_clickhouse_spark.state import StateStore, SyncState
+
+    host, _, _ = fake_ch
+    target = WarehouseTarget(spark, str(tmp_path / "wh"))
+    state = StateStore(spark, str(tmp_path / "wh"))
+    t0, t1, t2 = "2024-05-08 12:00:00", "2024-05-09 10:00:08", "2024-06-01 00:00:00"
+    state.commit(SyncState(table_name="t1", time_field="created_at", last_sync_time=t2))
+    n, cond, wm = sync_incremental_http(
+        spark, _src(host), target, state, "t1",
+        time_column="created_at", start_date=t0,
+    )
+    assert cond == f"`created_at` > '{t0}'"
+    assert n == 1  # the one row at t1
+    assert target.read("t1").collect()[0].created_at.isoformat(" ") == t1
+    assert wm == t2
+    st = state.get("t1")
+    assert st.last_sync_time == t2 and st.last_sync_count == 1
+
+
 def test_cli_incremental_ch_http_mode(fake_ch, spark, tmp_path, capsys):
     """The CLI's env-driven live mode: CH_HTTP_URL switches
     --mode incremental to the HTTP source — no --source-dir needed —
@@ -674,7 +699,9 @@ def test_ch_target_engine_sync_rounds_e2e(spark, tmp_path):
             dialect="ch",
         )
         reports = engine.sync_auto("ev")
-        assert [(r.mode, r.rows) for r in reports] == [("full", 2), ("incremental", 0)]
+        # one round per table: the freshly seeded table gets no idle
+        # incremental round in the same call
+        assert [(r.mode, r.rows) for r in reports] == [("full", 2)]
         kinds = [
             r["sql"].split(" ")[0] for r in log
             if r["sql"].startswith(("CREATE", "ALTER", "INSERT"))

@@ -99,15 +99,20 @@ def test_upsert_dedup_on_redelivery(pipeline, spark):
 
 def test_auto_mode(pipeline, spark, tmp_path):
     engine, source = pipeline
-    # unseen → full
+    # unseen → full, and only full: the seeded table gets no idle
+    # incremental round in the same call
     reports = engine.sync_auto()
-    assert any(r.mode == "full" for r in reports)
+    assert [(r.table, r.mode, r.rows) for r in reports] == [("logs", "full", 3)]
     # second table appears later; auto full-syncs only the new one
     df = spark.createDataFrame([(1, "x")], "k long, v string")
     df.write.parquet(str(source / "extra.parquet"))
     reports2 = engine.sync_auto()
     fulls = [r.table for r in reports2 if r.mode == "full"]
     assert fulls == ["extra"]
+    assert [(r.table, r.mode) for r in reports2] == [
+        ("extra", "full"),
+        ("logs", "incremental"),
+    ]
 
 
 def test_status_and_list(pipeline):
@@ -278,10 +283,9 @@ def test_numeric_keyset_watermark_not_lexicographic(spark, tmp_path):
 
 def test_incremental_round_is_single_source_pass(pipeline, spark):
     """The watermark/count observation rides the append job (Observation,
-    like sync_full) — one source scan per table per round. The old shape
-    (a separate batch_watermarks aggregate job, then the append
-    re-scanning) fired one extra job; pin the per-round job count so a
-    reintroduced double-scan fails here."""
+    like sync_full) — one source scan per table per round. A separate
+    aggregate job before the append would scan the source twice; pin the
+    per-round job count so a reintroduced double-scan fails here."""
     engine, source = pipeline
     engine.sync_full()
     _append_rows(spark, source, [(4, "2024-01-04 00:00:00", "d")])
@@ -300,6 +304,22 @@ def test_incremental_round_is_single_source_pass(pipeline, spark):
     # FULL watermark-aggregate job over the source, or a state read or
     # write going back onto the scheduler, pushes this to 4+
     assert len(jobs) <= 3, f"expected ≤3 jobs per round, saw {len(jobs)}"
+
+
+def test_full_round_job_count(pipeline, spark):
+    """A full round of one table is the catalog's mergeSchema footer read
+    plus the observed append (scan, count and watermark maxima in one
+    write job); no emptiness probe, no separate aggregate, no state job."""
+    engine, _ = pipeline
+    sc = spark.sparkContext
+    sc.setJobGroup("full-round", "full round job count", False)
+    try:
+        reports = engine.sync_full()
+    finally:
+        sc.setJobGroup("", "", False)
+    assert reports[0].rows == 3
+    jobs = sc.statusTracker().getJobIdsForGroup("full-round")
+    assert len(jobs) == 2, jobs
 
 
 def test_mongo_dialect_keyset_incremental(spark, tmp_path):
@@ -830,3 +850,29 @@ def test_streaming_foreachbatch_neardup_store(spark, tmp_path):
     )
     assert {r.doc_id for r in sync.target.read("posts").collect()} == {1, 3}
     assert sync.state.get("posts").last_sync_time.startswith("2024-01-04")
+
+
+def test_streaming_batch_never_moves_watermark_back(spark, tmp_path):
+    """A micro-batch whose newest row is older than an earlier batch's
+    (a late file) lands its rows but leaves the committed watermark at
+    the earlier maximum: the merge is monotone on every landing path."""
+    from es_to_clickhouse_spark.streaming.sync import StreamingSync
+
+    sync = StreamingSync(
+        spark=spark,
+        target=WarehouseTarget(spark, str(tmp_path / "wh")),
+        state=StateStore(spark, str(tmp_path / "wh")),
+        id_field="event_id",
+    )
+
+    def batch(rows):
+        return spark.createDataFrame(
+            rows, "event_id long, created_at string, payload string"
+        ).withColumn("created_at", F.col("created_at").cast("timestamp"))
+
+    sync._handle_batch("logs", "logs", batch([(1, "2024-01-05 00:00:00", "a")]), 0)
+    sync._handle_batch("logs", "logs", batch([(2, "2024-01-02 00:00:00", "b")]), 1)
+    assert sync.target.read("logs").count() == 2
+    st = sync.state.get("logs")
+    assert st.last_sync_time.startswith("2024-01-05")
+    assert st.last_sync_count == 1

@@ -665,7 +665,7 @@ def test_sync_es_http_late_update_or_ranges(spark, tmp_path):
     updated_at moved past the update watermark must be re-fetched by
     the OR-of-ranges query (minimum_should_match=1), and the time
     watermark must NOT regress to the late batch's older max
-    (engine._mono_time contract, es/es_to_bytehouse.py:841-861)."""
+    (SyncState.advance, es/es_to_bytehouse.py:841-861)."""
     from es_to_clickhouse_spark.sink import WarehouseTarget
     from es_to_clickhouse_spark.sources.es import (
         ScrollSession,

@@ -34,11 +34,9 @@ def test_state_roundtrip_latest_wins(spark, tmp_path):
     sc.setJobGroup("state-ops", "driver-side state", False)
     try:
         assert store.get("t1") is None
-        assert not store.has_synced_before("t1")
         store.commit(SyncState("t1", time_field="ts", last_sync_time="2024-01-01"))
         store.commit(SyncState("t1", time_field="ts", last_sync_time="2024-01-02"))
         st = store.get("t1")
-        assert store.has_synced_before("t1")
     finally:
         sc.setJobGroup("", "", False)
     assert sc.statusTracker().getJobIdsForGroup("state-ops") == []

@@ -20,8 +20,9 @@ Exit 1 if any oracle-checked query is empty at EVERY audited SF.
 from __future__ import annotations
 
 import sys
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 from tools.check_correctness import TABLES  # noqa: E402
 

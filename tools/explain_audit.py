@@ -22,8 +22,9 @@ Usage: python tools/explain_audit.py [sf_dir] [--plan-only]
 from __future__ import annotations
 
 import sys
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 #: queries where a BroadcastNestedLoopJoin is the intended plan: the
 #: broadcast side is a tiny scalar/query-vector frame (≤ a few rows).
