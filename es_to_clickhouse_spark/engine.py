@@ -19,10 +19,14 @@ next state. ``StreamingSync`` lands its micro-batches the same way.
 Spark-first differences from the reference (deliberate, SURVEY §3.1):
 the per-batch client-side pagination loop collapses into ONE distributed
 read + write per table per round (Catalyst plans the scan; partitioning
-replaces paging; no O(n²) OFFSET walk). Schema discovery is the
-connector's inferred schema unioned with a sampled scan. The count and
-the watermark maxima ride the append job as an Observation, and
-``SyncState.advance`` merges them monotonically into the stored marks.
+replaces paging; no O(n²) OFFSET walk). The source schema is the merge
+of its files' parquet footers, read on the driver
+(``ParquetCatalog.read``). The count and the watermark maxima ride the
+append job as an Observation, and ``SyncState.advance`` merges them
+monotonically into the stored marks. So an active table costs the
+append job plus, on incremental rounds, a limit-1 emptiness probe; a
+table whose listing and stored state are unchanged since a round that
+settled it costs no job at all (``SyncEngine._settled``).
 """
 
 from __future__ import annotations
@@ -114,6 +118,15 @@ def land_batch(
     return committed, dropped
 
 
+def _predicate_kind(st: SyncState, id_src: str | None) -> str | None:
+    """The incremental predicate ``st`` selects with: the time watermark
+    (``"time"``), the same with the update-time OR arm (``"time|update"``),
+    the id keyset (``"id"``), or none."""
+    if st.time_field and st.last_sync_time:
+        return "time|update" if st.update_time_field and st.last_update_time else "time"
+    return "id" if st.last_id and id_src else None
+
+
 @dataclass
 class SyncEngine:
     """One engine instance = one (source catalog → warehouse target) pipeline."""
@@ -135,6 +148,16 @@ class SyncEngine:
     #: signatures never re-derived. Tables missing the store's id/text
     #: columns pass through untouched.
     neardup: object | None = None
+    #: per source table, the listing and state the last round left when
+    #: that round proves the next one idle: it committed a batch or found
+    #: none, so every listed row is at or below the stored marks. An
+    #: equal listing and an equal stored state then give an empty batch
+    #: again, so that round reads nothing. Any other listing or state (a
+    #: new, changed or vanished file, a mark moved by another writer or a
+    #: restore, a new engine) runs the round. Assumes a file is never
+    #: rewritten in place with the same size and mtime, as Spark's
+    #: ``FileStatusCache`` does.
+    _settled: dict = field(default_factory=dict, init=False, repr=False)
 
     # -- transforms ----------------------------------------------------
 
@@ -168,10 +191,17 @@ class SyncEngine:
         ``start_date`` is a full round (no predicate), None with one
         bootstraps from it (the Mongo daemon's ``--start-date``,
         mongodb/mongodb_to_bytehouse.py:611-631). Returns None when the
-        table is skipped."""
+        table is skipped.
+
+        A round whose table listing and stored state both equal what the
+        last landing or empty round of this engine left reports 0 rows
+        without reading the table (see ``_settled``)."""
         t0 = time.time()
         target_name = sanitize_table_name(name, self.dialect)
-        df = self._transform(self.catalog.read(name))
+        files = self.catalog.listing(name)
+        if st is not None and files and self._settled.get(name) == (files, st):
+            return self._report(name, "incremental", 0, t0, st.last_sync_time)
+        df = self._transform(self.catalog.read(name, files))
         cols = df.columns
         # the id watermark is a max over the NATIVE id column when known,
         # so a numeric id compares numerically, not as a string
@@ -189,9 +219,10 @@ class SyncEngine:
                 update_time_field=detect_update_time_field(cols),
                 last_sync_time=start_date,
             )
+        kind = None if full else _predicate_kind(st, id_src)
         if full:
             batch = df
-        elif st.time_field and st.last_sync_time:
+        elif kind in ("time", "time|update"):
             batch = df.where(
                 watermark_predicate(
                     st.time_field,
@@ -200,7 +231,7 @@ class SyncEngine:
                     st.last_update_time,
                 )
             )
-        elif st.last_id and id_src:
+        elif kind == "id":
             batch = df.where(
                 keyset_predicate(id_src, st.last_id, df.schema[id_src].dataType)
             )
@@ -213,6 +244,7 @@ class SyncEngine:
         # that exits at the first matching row, so no idle round appends
         # an empty part and no round scans the source twice in full.
         if not full and batch.isEmpty():
+            self._settle(name, files, st)
             return self._report(name, mode, 0, t0, st.last_sync_time)
         committed, dropped = land_batch(
             batch,
@@ -223,9 +255,22 @@ class SyncEngine:
             id_src,
             persist=full,
         )
+        # the next round's predicate selects nothing of these files only
+        # if every row it could select was in this batch: true after a
+        # full round, or when the predicate keeps its kind (an arm that
+        # switches on reaches rows this round's predicate never looked at)
+        nxt = _predicate_kind(committed, id_src)
+        if nxt is not None and (full or nxt == kind):
+            self._settle(name, files, committed)
+        else:
+            self._settled.pop(name, None)
         return self._report(
             name, mode, committed.last_sync_count, t0, committed.last_sync_time, dropped
         )
+
+    def _settle(self, name: str, files: tuple, st: SyncState) -> None:
+        if files:
+            self._settled[name] = (files, st)
 
     def _report(self, name, mode, rows, t0, watermark, dropped=0) -> SyncReport:
         rep = SyncReport(name, mode, rows, time.time() - t0, watermark, dropped)

@@ -10,12 +10,14 @@ Spark-first, the target is a warehouse table (parquet directory here; the
 same interface backs a JDBC/ClickHouse writer):
 
 - **Schema evolution** is a driver-side diff of ``df.schema`` vs the live
-  target schema; new columns append naturally because reads go through
-  ``mergeSchema`` — the parquet analog of ADD COLUMN, with no table rewrite
-  (constant-time at 100 TB). The live schema records column TYPES, so a
+  target schema, kept in the table's ``_schema.json`` sidecar; new
+  columns append naturally because reads use the sidecar's typed columns
+  as their schema (older parts read NULL for them) — the parquet analog
+  of ADD COLUMN, with no table rewrite (constant-time at 100 TB) and no
+  schema-inference job. The live schema records column TYPES, so a
   batch that omits a previously-written typed column projects a NULL of
-  that type (not string) — otherwise the next mergeSchema read fails with
-  CANNOT_MERGE_SCHEMAS and the table is unreadable.
+  that type (not string), and every part holds the sidecar's type for
+  every column it carries.
 - **Upsert** (UNIQUE KEY _id) is materialized at read time as a
   last-write-wins window over ``_id`` — the Spark expression of
   CnchMergeTree's merge-on-read. Appends stay shuffle-free; the dedup cost
@@ -31,6 +33,7 @@ from __future__ import annotations
 
 import json
 
+from pyspark.errors import ParseException
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
@@ -85,13 +88,20 @@ class WarehouseTarget:
             return dict(columns)
         return {c: "string" for c in columns}
 
+    def _sidecar(self, table: str) -> dict[str, str] | list[str] | None:
+        """The ``_schema.json`` columns as stored: column → Spark DDL type,
+        or a bare name list (v1 metadata, the wide-String layout); None
+        without a sidecar."""
+        meta = fsio.join(self.table_path(table), SCHEMA_FILE)
+        if not fsio.exists(self.spark, meta):
+            return None
+        return json.loads(fsio.read_text(self.spark, meta))["columns"]
+
     def live_schema(self, table: str) -> dict[str, str]:
         """DESCRIBE-driven column cache analog (es/es_to_bytehouse.py:1008-1018):
         column → Spark DDL type string."""
-        meta = fsio.join(self.table_path(table), SCHEMA_FILE)
-        if fsio.exists(self.spark, meta):
-            cols = json.loads(fsio.read_text(self.spark, meta))["columns"]
-            # v1 metadata stored a bare name list (wide-String layout)
+        cols = self._sidecar(table)
+        if cols is not None:
             return cols if isinstance(cols, dict) else {c: "string" for c in cols}
         if self.table_exists(table):
             df = self.read(table, dedup=False)
@@ -115,14 +125,19 @@ class WarehouseTarget:
         batches are cast to it (target schema is authoritative, like the
         reference's fixed Nullable(String) target)."""
         live = self.live_schema(table)
-        typed = self._as_typed(new_cols)
-        added = sorted(set(typed) - set(live))
-        if added:
-            merged = dict(live)
-            for c in added:
-                merged[c] = typed[c]
-            self._write_schema(table, merged)
-        return len(added)
+        return len(self._evolve(table, live, self._as_typed(new_cols))) - len(live)
+
+    def _evolve(
+        self, table: str, live: dict[str, str], typed: dict[str, str]
+    ) -> dict[str, str]:
+        """``live`` plus the columns of ``typed`` it lacks, written to the
+        sidecar when any were added."""
+        added = {c: t for c, t in typed.items() if c not in live}
+        if not added:
+            return live
+        merged = {**live, **added}
+        self._write_schema(table, merged)
+        return merged
 
     # -- write path ---------------------------------------------------
 
@@ -135,11 +150,12 @@ class WarehouseTarget:
         if add_system_cols and TS_COL not in df.columns:
             df = df.withColumn(TS_COL, F.current_timestamp())
         batch_types = {f.name: f.dataType.simpleString() for f in df.schema.fields}
-        if not self.table_exists(table):
-            self.create_table(table, batch_types)
-        else:
-            self.add_new_columns(table, batch_types)
         live = self.live_schema(table)
+        if not live:
+            self.create_table(table, batch_types)
+            live = batch_types
+        else:
+            live = self._evolve(table, live, batch_types)
         # project onto the live column set: missing → NULL of the LIVE
         # type; present-but-retyped → cast to the live type (target schema
         # is authoritative — es/es_to_bytehouse.py:681-688)
@@ -151,7 +167,7 @@ class WarehouseTarget:
                 select.append(F.col(f"`{c}`").cast(live[c]).alias(c))
             else:
                 select.append(F.col(f"`{c}`").alias(c))
-        writer = df.select(*select).write.mode("append").option("mergeSchema", "true")
+        writer = df.select(*select).write.mode("append")
         if self.max_records_per_file:
             writer = writer.option("maxRecordsPerFile", str(self.max_records_per_file))
         writer.parquet(self.table_path(table))
@@ -160,10 +176,20 @@ class WarehouseTarget:
 
     def read(self, table: str, dedup: bool = True) -> DataFrame:
         """Read the target; ``dedup=True`` applies the UNIQUE KEY _id
-        last-write-wins merge (es/es_to_bytehouse.py:329-334)."""
-        df = self.spark.read.option("mergeSchema", "true").parquet(
-            self.table_path(table)
-        )
+        last-write-wins merge (es/es_to_bytehouse.py:329-334).
+
+        The typed sidecar is the read schema, so the read fires no
+        schema-inference job; a table without one (v1 name-list metadata,
+        or parts written by another tool) infers with ``mergeSchema``."""
+        cols = self._sidecar(table)
+        reader = self.spark.read.option("mergeSchema", "true")
+        if isinstance(cols, dict):
+            ddl = ", ".join(f"`{c.replace('`', '``')}` {t}" for c, t in cols.items())
+            try:
+                reader = self.spark.read.schema(ddl)
+            except ParseException:
+                pass  # a nested field name the DDL text cannot carry
+        df = reader.parquet(self.table_path(table))
         if dedup and ID_COL in df.columns and TS_COL in df.columns:
             df = upsert_view(df, ID_COL, TS_COL)
         return df
@@ -220,19 +246,6 @@ class WarehouseTarget:
             [f for f in fsio.listdir(self.spark, path) if f.endswith(".parquet")]
         )
         return (n_before, n_after)
-
-    def max_of(self, table: str, column: str):
-        """SELECT max(col) watermark seed (es/es_to_bytehouse.py:1115-1131),
-        guarded by the NULL/empty filter (P9)."""
-        df = self.read(table, dedup=False)
-        if column not in df.columns:
-            return None
-        row = (
-            df.where(F.col(column).isNotNull() & (F.col(column).cast("string") != ""))
-            .agg(F.max(column).alias("m"))
-            .collect()[0]
-        )
-        return row.m
 
 
 def row_fingerprint(df: DataFrame, cols: list[str] | None = None) -> Column:

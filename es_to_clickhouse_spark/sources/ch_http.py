@@ -38,7 +38,7 @@ import urllib.parse
 import urllib.request
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import types as T
 
 #: ClickHouse scalar type → Spark type (DESCRIBE TABLE vocabulary).
@@ -653,9 +653,10 @@ def sync_incremental_http(
        start date is forced; neither -> the 1-day bootstrap (P6);
     2. the table reads DISTRIBUTED (``read_table`` with the condition
        pushed into every range query, executor-side fetch), then
-       ``localCheckpoint``s — ONE snapshot feeds the count and the
-       watermark (one aggregate) and the append (the source is not
-       re-read, so the reported n is exactly what was appended);
+       ``localCheckpoint``s — an Observation on that one job carries the
+       count and the watermark, and the append reads the snapshot (the
+       source is not re-read, so the reported n is exactly what was
+       appended); zero rows fire no further job;
     3. rows append to the warehouse target (system columns + schema
        evolution handled by the sink);
     4. the watermark advances to ``max(time_column)`` OVER THE APPENDED
@@ -674,15 +675,20 @@ def sync_incremental_http(
     st = state.get(table)
     last = st.last_sync_time if st else None
     cond = source.since_condition(time_column, last, start_date)
-    df = source.read_table(
-        spark,
-        table,
-        where=cond,
-        partition_column=partition_column,
-        bounds=bounds,
-        num_partitions=num_partitions,
-    ).localCheckpoint()  # one source pass; count/append/watermark share it
-    row = df.agg(*batch_aggregate(time_column)).collect()[0].asDict()
+    obs = Observation()
+    df = (
+        source.read_table(
+            spark,
+            table,
+            where=cond,
+            partition_column=partition_column,
+            bounds=bounds,
+            num_partitions=num_partitions,
+        )
+        .observe(obs, *batch_aggregate(time_column))
+        .localCheckpoint()  # one source pass; count/append/watermark share it
+    )
+    row = obs.get
     if row["n"] == 0:
         return 0, cond, last
     target.append(table, df)

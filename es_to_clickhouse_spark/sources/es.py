@@ -20,7 +20,7 @@ from __future__ import annotations
 import json
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -487,8 +487,8 @@ class ScrollSession:
           at-least-once, the resume point never overshoots the data.
 
         Returns ``(rows, max_time, max_update_time)``. The Spark
-        production path computes the same watermarks as one distributed
-        agg over the appended snapshot; this driver-side fold pins the
+        production path computes the same watermarks as an Observation
+        on the snapshot it appends; this driver-side fold pins the
         wire-protocol contract on bounded test transcripts.
 
         With ``slice_id``/``slice_max`` the fold drains ONE slice: each
@@ -686,21 +686,11 @@ class SearchAfterSession(ScrollSession):
         return self.close_pit_request(cursor)
 
 
-#: Prefix marking a per-slice status line inside the drained RDD (never
-#: a valid JSON page/row start — same device as mongo_wire.WM_SENTINEL).
-SLICE_SENTINEL = "\x00slice\x00"
-
-
-def _slices_complete(sentinels: list[str], n: int) -> bool:
-    """True iff every slice 0..n-1 reported ``C`` (drained to
-    exhaustion). A missing report counts as incomplete — a lost task's
-    data cannot be assumed drained."""
-    done = {
-        int(s[len(SLICE_SENTINEL):].split(":", 1)[0])
-        for s in sentinels
-        if s[len(SLICE_SENTINEL):].split(":", 1)[1] == "C"
-    }
-    return done >= set(range(n))
+#: Column carrying the per-slice completion status through a read: each
+#: slice that drained to exhaustion adds one JSON line ``{SLICE_DONE: id}``
+#: to its output, parsed with the pages into a row whose other columns
+#: are NULL; data rows carry NULL here.
+SLICE_DONE = "_slice_done"
 
 
 def read_index_http(
@@ -748,20 +738,16 @@ def read_index_http(
       reorder and prune. Schemaless reads cache the RDD, because JSON
       inference would otherwise drain the index twice.
 
-    ``with_status=True`` returns ``(df, all_slices_complete, rdd)``
-    instead (``rdd`` = the cached transport RDD — the caller MUST
-    ``unpersist`` it once the DataFrame is materialized, e.g. after
-    ``localCheckpoint``; a poll daemon caching one per round would
-    otherwise leak executor memory):
-    each slice reports drained-to-exhaustion vs partial through a
-    sentinel line in the (then cached) transport RDD, the same device
-    as ``mongo_wire``'s watermark sentinels. An incremental-sync caller
-    MUST know this: a slice that died mid-drain keeps its partial rows
-    (at-least-once), but a watermark computed over the other slices'
-    appended rows would overshoot its undrained tail and lose those
-    rows forever — the exact ADVICE r10 Mongo split bug, whose ES twin
-    this closes. The status collect is the action that executes the
-    drain; the returned DataFrame re-reads the cached RDD."""
+    ``with_status=True`` adds the integer column :data:`SLICE_DONE`:
+    every slice that drained to exhaustion contributes one row holding
+    its id (all other columns NULL), and data rows hold NULL. The status
+    travels in the same lines as the pages, so one job both drains and
+    reports. An incremental-sync caller MUST know it: a slice that died
+    mid-drain keeps its partial rows (at-least-once), but a watermark
+    computed over the other slices' rows would overshoot its undrained
+    tail and lose those rows forever — the exact ADVICE r10 Mongo split
+    bug, whose ES twin this closes. A slice that reports nothing (failed,
+    or its task lost) counts as not drained."""
     n = max(1, slices)
     sess = session  # dataclass — pickles to executors
     typed = schema is not None and not store_source
@@ -780,11 +766,13 @@ def read_index_http(
                 index, store_source=store_source, **kw
             )
             out = [json.dumps(r, ensure_ascii=False, default=str) for r in rows]
-        if with_status:
-            out.append(f"{SLICE_SENTINEL}{i}:{'C' if completed else 'P'}")
+        if with_status and completed:
+            out.append(json.dumps({SLICE_DONE: i}))
         return out
 
     lines = spark.sparkContext.parallelize(range(n), n).flatMap(_drain)
+    done = [T.StructField(SLICE_DONE, T.IntegerType(), True)] if with_status else []
+    status = [F.col(SLICE_DONE)] if with_status else []
     if typed:
         want_id = any(f.name == "_id" for f in schema.fields)
         inner = T.StructType([f for f in schema.fields if f.name != "_id"])
@@ -795,30 +783,24 @@ def read_index_http(
                     T.StructField("_source", inner, True),
                 ])), True),
             ]), True),
+            *done,
         ])
         # output columns == the caller's schema exactly: _id (the hit
-        # envelope field, NOT a _source key) only when asked for
+        # envelope field, NOT a _source key) only when asked for; a
+        # status line has no hits, and explode_outer keeps it as one row
         cols = ([F.col("h._id").alias("_id")] if want_id else []) + [
             F.col("h._source.*")
         ]
-
-        def build_df(rdd):
-            return (
-                spark.read.schema(wrapper)
-                .json(rdd)
-                .select(F.explode("hits.hits").alias("h"))
-                .select(*cols)
-            )
-    elif schema is not None:
-        build_df = spark.read.schema(schema).json
-    else:
-        build_df = spark.read.json
-    if not with_status:
-        return build_df(lines if schema is not None else lines.cache())
-    lines = lines.cache()
-    sent = lines.filter(lambda s: s.startswith(SLICE_SENTINEL)).collect()
-    data = lines.filter(lambda s: not s.startswith(SLICE_SENTINEL))
-    return build_df(data), _slices_complete(sent, n), lines
+        explode = F.explode_outer if with_status else F.explode
+        return (
+            spark.read.schema(wrapper)
+            .json(lines)
+            .select(explode("hits.hits").alias("h"), *status)
+            .select(*cols, *status)
+        )
+    if schema is not None:
+        return spark.read.schema(T.StructType(schema.fields + done)).json(lines)
+    return spark.read.json(lines.cache())
 
 
 def get_json(session: ScrollSession, path: str):
@@ -892,16 +874,21 @@ def sync_incremental_es_http(
        (auto semantics — the reference ES daemon instead refuses,
        es/es_to_bytehouse.py:968-971; the full-bootstrap divergence
        matches our CLI's auto mode);
-    2. the index reads DISTRIBUTED (:func:`read_index_http`: N sliced
-       scroll contexts drained ON THE EXECUTORS, NDJSON parsed
-       JVM-side), then ``localCheckpoint``s — ONE wire drain feeds the
-       count, the append, and the watermark;
-    3. rows flatten/sanitize (``flatten_es``: ``@timestamp`` →
-       ``timestamp`` value-side, P13) and append to the target;
-    4. the watermark advances to ``max(time_field)`` over the appended
-       snapshot as ONE distributed agg — the per-slice maxes of
-       the serial fold (drain_http_incremental) collapse into the same
-       associative max, computed where the rows already live.
+    2. ONE job drains the index DISTRIBUTED (:func:`read_index_http`: N
+       sliced cursors drained ON THE EXECUTORS, pages parsed JVM-side),
+       flattens the rows (``flatten_es``: ``@timestamp`` → ``timestamp``
+       value-side, P13) and ``localCheckpoint``s them. An Observation on
+       that checkpoint carries the row count, the number of slices that
+       drained to exhaustion and the watermark maxima — the per-slice
+       maxes of the serial fold (drain_http_incremental) collapse into
+       the same associative max, computed where the rows already live;
+    3. zero rows → return, no further job. Otherwise the snapshot (its
+       slice-status rows dropped) appends to the target — a separate job
+       over the checkpoint, so a task retry re-sends the same rows in the
+       same order and a ClickHouse ``insert_deduplication_token`` holds;
+    4. the state advances over the observed maxima — or, when any slice
+       did not drain to exhaustion, over the count alone, so the marks
+       hold and the next round re-fetches the failed slice's tail.
 
     Returns ``(mode, rows, new_watermark)``."""
     from es_to_clickhouse_spark.flatten import flatten_es
@@ -968,23 +955,22 @@ def sync_incremental_es_http(
         store_source=store_source,
         with_status=True,
     )
-    df, complete, _rdd = df
-    df = df.localCheckpoint()  # one wire drain materialized here
-    _rdd.unpersist()  # transport cache released (poll daemons leak otherwise)
     out = flatten_es(df, stringify=False)
-    cols = out.columns
+    cols = [c for c in out.columns if c != SLICE_DONE]
     time_field = time_field if time_field in cols else detect_time_field(cols)
     update_field = detect_update_time_field(cols)
-    # If ANY slice died mid-drain, the snapshot's maxima belong to the
-    # healthy slices and may overshoot the failed slice's undrained tail:
-    # append the partial rows (at-least-once) but pass no maxima, so the
-    # marks hold and the next round re-fetches from them (duplicates
-    # possible, loss impossible).
-    marks = (time_field, update_field) if complete else ()
-    row = out.agg(*batch_aggregate(*marks)).collect()[0].asDict()
-    if row["n"] == 0:
+    obs = Observation()
+    snap = out.observe(
+        obs,
+        *batch_aggregate(time_field, update_field),
+        F.count(SLICE_DONE).alias("done"),
+    ).localCheckpoint()  # the one wire drain
+    marks = obs.get
+    # status rows are counted by "n" too; they hold no watermark values
+    n = marks.pop("n") - marks["done"]
+    if n == 0:
         return mode, 0, since
-    target.append(index, out)
+    target.append(index, snap.where(F.col(SLICE_DONE).isNull()).drop(SLICE_DONE))
     prior = SyncState(
         table_name=index,
         source_name=f"es_http:{index}",
@@ -993,9 +979,15 @@ def sync_incremental_es_http(
         last_sync_time=st.last_sync_time if st else since,
         last_update_time=st.last_update_time if st else None,
     )
-    committed = prior.advance(**row)
+    # If ANY slice did not drain to exhaustion, the snapshot's maxima
+    # belong to the healthy slices and may overshoot the failed slice's
+    # undrained tail: the partial rows are appended (at-least-once) but
+    # the marks hold, and the next round re-fetches from them
+    # (duplicates possible, loss impossible).
+    complete = marks.pop("done") == max(1, slices)
+    committed = prior.advance(n, **(marks if complete else {}))
     state.commit(committed)
-    return mode, row["n"], committed.last_sync_time
+    return mode, n, committed.last_sync_time
 
 
 def original_time_field(

@@ -1,6 +1,7 @@
 from __future__ import annotations
 
 import sys
+import uuid
 from pathlib import Path
 
 import pytest
@@ -24,3 +25,21 @@ def spark():
     s = get_spark("tests", cpus=8)
     s.sparkContext.setLogLevel("ERROR")
     return s
+
+
+@pytest.fixture()
+def count_jobs(spark):
+    """``count_jobs(fn)`` -> ``(fn(), number of Spark jobs fn fired)``,
+    counted in a job group of its own."""
+
+    def run(fn):
+        group = f"count-jobs-{uuid.uuid4().hex}"
+        sc = spark.sparkContext
+        sc.setJobGroup(group, group, False)
+        try:
+            out = fn()
+        finally:
+            sc.setJobGroup("", "", False)
+        return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    return run

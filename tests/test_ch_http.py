@@ -315,6 +315,31 @@ def test_sync_incremental_http_rounds(fake_ch, spark, tmp_path):
         TABLE_ROWS.pop()
 
 
+def test_sync_incremental_http_round_job_count(fake_ch, spark, tmp_path, count_jobs):
+    """An active round is the snapshot job (range fetches + parse +
+    localCheckpoint, count and watermark observed on it) plus the
+    append; an idle round is the snapshot alone — no separate
+    aggregate job."""
+    from es_to_clickhouse_spark.sink import WarehouseTarget
+    from es_to_clickhouse_spark.sources.ch_http import sync_incremental_http
+    from es_to_clickhouse_spark.state import StateStore
+
+    host, _, _ = fake_ch
+    src = _src(host)
+    target = WarehouseTarget(spark, str(tmp_path / "wh"))
+    state = StateStore(spark, str(tmp_path / "wh"))
+
+    def round_jobs(**kw):
+        (n, _, _), jobs = count_jobs(lambda: sync_incremental_http(
+            spark, src, target, state, "t1", time_column="created_at",
+            partition_column="id", bounds=(0, 9), num_partitions=2, **kw,
+        ))
+        return n, jobs
+
+    assert round_jobs(start_date="2024-05-03 00:00:00") == (7, 2)
+    assert round_jobs() == (0, 1)
+
+
 def test_sync_incremental_http_forced_start_keeps_later_mark(fake_ch, spark, tmp_path):
     """A forced start date re-reads history below the stored mark: the
     re-read rows land, but the stored watermark (later than every row

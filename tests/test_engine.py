@@ -297,19 +297,21 @@ def test_incremental_round_is_single_source_pass(pipeline, spark):
         sc.setJobGroup("", "", False)
     assert reports[0].rows == 1
     jobs = sc.statusTracker().getJobIdsForGroup("incr-round")
-    # the catalog's mergeSchema footer read (1 job) + the early-exit
-    # isEmpty probe (limit-1, NOT a full pass) + the observed append
-    # (1 write job — scan and watermark agg fused) = 3; state.get and
-    # state.commit are driver-side and fire none. A reintroduced separate
-    # FULL watermark-aggregate job over the source, or a state read or
-    # write going back onto the scheduler, pushes this to 4+
-    assert len(jobs) <= 3, f"expected ≤3 jobs per round, saw {len(jobs)}"
+    # the early-exit isEmpty probe (limit-1, NOT a full pass) + the
+    # observed append (1 write job — scan and watermark agg fused) = 2;
+    # the catalog's footer schema, state.get and state.commit are
+    # driver-side and fire none. A reintroduced separate FULL
+    # watermark-aggregate job over the source, a schema-inference job,
+    # or a state read or write going back onto the scheduler, pushes
+    # this to 3+
+    assert len(jobs) <= 2, f"expected ≤2 jobs per round, saw {len(jobs)}"
 
 
 def test_full_round_job_count(pipeline, spark):
-    """A full round of one table is the catalog's mergeSchema footer read
-    plus the observed append (scan, count and watermark maxima in one
-    write job); no emptiness probe, no separate aggregate, no state job."""
+    """A full round of one table is the observed append alone (scan,
+    count and watermark maxima in one write job): the schema comes from
+    the parquet footers on the driver; no emptiness probe, no separate
+    aggregate, no state job."""
     engine, _ = pipeline
     sc = spark.sparkContext
     sc.setJobGroup("full-round", "full round job count", False)
@@ -319,7 +321,120 @@ def test_full_round_job_count(pipeline, spark):
         sc.setJobGroup("", "", False)
     assert reports[0].rows == 3
     jobs = sc.statusTracker().getJobIdsForGroup("full-round")
-    assert len(jobs) == 2, jobs
+    assert len(jobs) == 1, jobs
+
+
+def _round_jobs(count_jobs, engine):
+    """One incremental round's row counts and the Spark jobs it fired."""
+    return count_jobs(lambda: [r.rows for r in engine.sync_incremental_once()])
+
+
+def test_unchanged_listing_and_state_fire_no_job(pipeline, spark, count_jobs):
+    """After a landing round, an unchanged listing with an unchanged
+    stored state proves the round idle: 0 rows, no read, no probe."""
+    engine, source = pipeline
+    engine.sync_full()
+    assert _round_jobs(count_jobs, engine) == ([0], 0)
+    _append_rows(spark, source, [(4, "2024-01-04 00:00:00", "d")])
+    assert _round_jobs(count_jobs, engine) == ([1], 2)
+    assert _round_jobs(count_jobs, engine) == ([0], 0)
+    assert engine.state.get("logs").last_sync_time.startswith("2024-01-04")
+
+
+def test_appended_old_rows_probe_then_settle(pipeline, spark, count_jobs):
+    """A new file whose rows are all at or below the mark changes the
+    listing: the probe runs and appends nothing; the round after that
+    sees the same listing and state and fires no job."""
+    engine, source = pipeline
+    engine.sync_full()
+    before = _part_files(engine, "logs")
+    _append_rows(
+        spark, source,
+        [(8, "2024-01-03 00:00:00", "at-mark"), (9, "2023-12-31 00:00:00", "old")],
+    )
+    assert _round_jobs(count_jobs, engine) == ([0], 1)
+    assert _part_files(engine, "logs") == before
+    assert _round_jobs(count_jobs, engine) == ([0], 0)
+
+
+def test_row_at_mark_idle_one_microsecond_later_lands(pipeline, spark, count_jobs):
+    engine, source = pipeline
+    engine.sync_full()
+    _append_rows(spark, source, [(4, "2024-01-03 00:00:00", "at")])
+    assert _round_jobs(count_jobs, engine)[0] == [0]
+    _append_rows(spark, source, [(5, "2024-01-03 00:00:00.000001", "after")])
+    assert _round_jobs(count_jobs, engine)[0] == [1]
+    got = {r.event_id for r in engine.target.read("logs").collect()}
+    assert got == {1, 2, 3, 5}
+
+
+def test_mark_moved_back_with_same_listing_rereads(pipeline, spark, count_jobs):
+    """A stored mark moved back (a restore, another writer) with the
+    listing unchanged: the round reads again and lands the rows above
+    the restored mark."""
+    from dataclasses import replace
+
+    engine, _ = pipeline
+    engine.sync_full()
+    st = engine.state.get("logs")
+    engine.state.commit(replace(st, last_sync_time="2024-01-01 12:00:00"))
+    assert _round_jobs(count_jobs, engine)[0] == [2]
+    assert engine.state.get("logs").last_sync_time.startswith("2024-01-03")
+
+
+def test_new_engine_instance_runs_the_probe(pipeline, spark, count_jobs):
+    engine, source = pipeline
+    engine.sync_full()
+    fresh = SyncEngine(
+        spark=spark,
+        catalog=ParquetCatalog(spark, str(source)),
+        target=engine.target,
+        state=engine.state,
+        id_field="event_id",
+    )
+    assert _round_jobs(count_jobs, fresh) == ([0], 1)
+    assert _round_jobs(count_jobs, fresh) == ([0], 0)
+
+
+def test_update_arm_switching_on_reruns_the_round(spark, tmp_path, count_jobs):
+    """A round whose predicate gains the update-time arm reaches rows the
+    previous predicate never looked at: a row with an old time and an
+    update time above the newly set update mark. The listing did not
+    change, but the round must still run and land that row."""
+    source = tmp_path / "source"
+    os.makedirs(source)
+    schema = "event_id long, created_at string, updated_at string"
+
+    def write(rows, mode):
+        spark.createDataFrame(rows, schema).select(
+            "event_id",
+            F.col("created_at").cast("timestamp").alias("created_at"),
+            F.col("updated_at").cast("timestamp").alias("updated_at"),
+        ).write.mode(mode).parquet(str(source / "docs.parquet"))
+
+    write([(1, "2024-01-01 00:00:00", None)], "overwrite")
+    engine = SyncEngine(
+        spark=spark,
+        catalog=ParquetCatalog(spark, str(source)),
+        target=WarehouseTarget(spark, str(tmp_path / "wh")),
+        state=StateStore(spark, str(tmp_path / "wh")),
+        id_field="event_id",
+    )
+    engine.sync_full()
+    assert engine.state.get("docs").last_update_time is None
+    write(
+        [
+            (2, "2024-01-02 00:00:00", "2024-01-02 00:00:00"),
+            (3, "2023-12-01 00:00:00", "2024-02-01 00:00:00"),
+        ],
+        "append",
+    )
+    # time arm only: row 2 lands and sets the update mark
+    assert _round_jobs(count_jobs, engine)[0] == [1]
+    # the update arm is now on and selects row 3 from the same files
+    assert _round_jobs(count_jobs, engine)[0] == [1]
+    assert _round_jobs(count_jobs, engine) == ([0], 0)
+    assert {r.event_id for r in engine.target.read("docs").collect()} == {1, 2, 3}
 
 
 def test_mongo_dialect_keyset_incremental(spark, tmp_path):

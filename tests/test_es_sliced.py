@@ -15,6 +15,7 @@ import pytest
 from pyspark.sql import types as T
 
 from es_to_clickhouse_spark.sources.es import (
+    SLICE_DONE,
     ScrollSession,
     read_index_http,
 )
@@ -759,23 +760,140 @@ def test_cli_es_continuous_mode(spark, tmp_path, capsys):
         srv.shutdown()
 
 
-def test_slices_complete_fold():
-    """The per-slice status fold: complete only when EVERY slice 0..n-1
-    reported C; a missing report (lost task) or a P counts against —
-    the watermark-hold depends on this being conservative."""
-    from es_to_clickhouse_spark.sources.es import (
-        SLICE_SENTINEL,
-        _slices_complete,
+def test_slices_complete_fold(spark):
+    """The per-slice status carrier: a slice that drained to exhaustion
+    contributes one SLICE_DONE row with its id; a slice that failed
+    reports nothing, so a missing report counts as not drained — the
+    watermark hold depends on this being conservative. Partial rows
+    are kept either way."""
+    from es_to_clickhouse_spark.sources.chaos_fixture import Chaos
+    from es_to_clickhouse_spark.sources.es_fixture import serve_index
+
+    schema = T.StructType(
+        [T.StructField("_id", T.StringType()), T.StructField("n", T.LongType())]
     )
 
-    def s(i, st):
-        return f"{SLICE_SENTINEL}{i}:{st}"
+    def read(chaos, slices):
+        srv, host = serve_index(DOCS[:12], chaos=chaos)
+        try:
+            rows = read_index_http(
+                spark, ScrollSession(host=host, size=2, backoff_s=0.01), "events",
+                slices=slices, schema=schema, with_status=True,
+            ).collect()
+        finally:
+            srv.shutdown()
+        done = sorted(r[SLICE_DONE] for r in rows if r[SLICE_DONE] is not None)
+        return done, [r for r in rows if r[SLICE_DONE] is None]
 
-    assert _slices_complete([s(0, "C"), s(1, "C")], 2)
-    assert not _slices_complete([s(0, "C"), s(1, "P")], 2)
-    assert not _slices_complete([s(0, "C")], 2)  # missing report
-    assert not _slices_complete([], 1)
-    assert _slices_complete([s(0, "C"), s(1, "C"), s(1, "C")], 2)
+    done, data = read(None, 3)
+    assert done == [0, 1, 2] and len(data) == 12
+    assert all(r["n"] is not None for r in data)
+    # unsliced: the one drain reports as slice 0
+    done, data = read(None, 1)
+    assert done == [0] and len(data) == 12
+    # every data-plane request fails: no slice reports, no rows
+    assert read(Chaos("all", reset_prob=1.0), 2) == ([], [])
+    # init + one page succeed, then the drain dies: partial rows, no report
+    done, data = read(Chaos("mid", reset_prob=1.0, immune=2), 1)
+    assert done == [] and len(data) == 4
+
+
+@pytest.mark.parametrize(
+    "slices,store_source", [(2, False), (1, False), (2, True)]
+)
+def test_sync_es_http_round_job_count(
+    spark, tmp_path, count_jobs, slices, store_source
+):
+    """An active round is the snapshot job (drain + parse + flatten +
+    localCheckpoint, the count, slice status and maxima observed on it)
+    plus the append; an idle round is the snapshot alone. Pinned for the
+    typed page path, the unsliced drain and the store_source row path."""
+    from es_to_clickhouse_spark.sink import WarehouseTarget
+    from es_to_clickhouse_spark.sources.es import (
+        ScrollSession,
+        sync_incremental_es_http,
+    )
+    from es_to_clickhouse_spark.state import StateStore
+
+    docs = [
+        {"_id": str(i), "id": i, "name": f"n{i}",
+         "created_at": f"2024-05-0{i} 10:00:00"}
+        for i in (1, 2, 3)
+    ]
+    srv, host, _log = _es_sync_parts(tmp_path, docs)
+    try:
+        sess = ScrollSession(host=host, size=2)
+        target = WarehouseTarget(spark, str(tmp_path / "wh"))
+        state = StateStore(spark, str(tmp_path / "wh"))
+
+        def sync():
+            return sync_incremental_es_http(
+                spark, sess, target, state, "ev", slices=slices,
+                store_source=store_source,
+            )
+
+        out, jobs = count_jobs(sync)
+        assert out == ("full", 3, "2024-05-03 10:00:00") and jobs == 2
+        docs.append({"_id": "4", "id": 4, "name": "n4",
+                     "created_at": "2024-05-04 10:00:00"})
+        out, jobs = count_jobs(sync)
+        assert out == ("incremental", 1, "2024-05-04 10:00:00") and jobs == 2
+        out, jobs = count_jobs(sync)
+        assert out == ("incremental", 0, "2024-05-04 10:00:00") and jobs == 1
+        wh = target.read("ev", dedup=False)
+        assert SLICE_DONE not in wh.columns
+        assert sorted(r["id"] for r in wh.collect()) == [1, 2, 3, 4]
+        if store_source:
+            src = {r["id"]: json.loads(r["_source"]) for r in wh.collect()}
+            assert src[4] == {k: v for k, v in docs[3].items() if k != "_id"}
+    finally:
+        srv.shutdown()
+
+
+def test_sync_es_http_failed_slice_appends_partial_and_holds(spark, tmp_path):
+    """A drain that dies mid-scan: the rows it did read are appended
+    (at-least-once), the watermark holds, and the next healthy round
+    re-fetches from the held mark and advances it (tier-1 twin of the
+    chaos test)."""
+    from es_to_clickhouse_spark.sink import WarehouseTarget
+    from es_to_clickhouse_spark.sources.chaos_fixture import Chaos
+    from es_to_clickhouse_spark.sources.es import (
+        ScrollSession,
+        sync_incremental_es_http,
+    )
+    from es_to_clickhouse_spark.sources.es_fixture import serve_index
+    from es_to_clickhouse_spark.state import StateStore
+
+    docs = [{"_id": "0", "id": 0, "name": "a", "created_at": "2024-05-01 10:00:00"}]
+    chaos = Chaos("hold")  # healthy until reset_prob is raised
+    srv, host = serve_index(docs, index="ev", mapping=EV_MAPPING, chaos=chaos)
+    try:
+        sess = ScrollSession(host=host, size=1, backoff_s=0.01)
+        target = WarehouseTarget(spark, str(tmp_path / "wh"))
+        state = StateStore(spark, str(tmp_path / "wh"))
+
+        def sync():
+            return sync_incremental_es_http(
+                spark, sess, target, state, "ev", slices=1
+            )
+
+        assert sync() == ("full", 1, "2024-05-01 10:00:00")
+        docs.extend(
+            {"_id": str(i), "id": i, "name": "b",
+             "created_at": f"2024-05-0{1 + i} 10:00:00"}
+            for i in (1, 2, 3, 4)
+        )
+        # the init search and one scroll page land, then every page fails
+        chaos.reset_prob, chaos.immune = 1.0, chaos._n + 2
+        assert sync() == ("incremental", 2, "2024-05-01 10:00:00")
+        st = state.get("ev")
+        assert (st.last_sync_time, st.last_sync_count) == ("2024-05-01 10:00:00", 2)
+        chaos.reset_prob = 0.0
+        assert sync() == ("incremental", 4, "2024-05-05 10:00:00")
+        ids = sorted(r["id"] for r in target.read("ev", dedup=False).collect())
+        assert set(ids) == {0, 1, 2, 3, 4} and len(ids) == 7  # 2 re-fetched
+    finally:
+        srv.shutdown()
 
 
 @pytest.mark.slow  # r15: driver test-gate budget

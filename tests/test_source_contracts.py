@@ -1032,12 +1032,13 @@ def test_search_after_drain_tolerates_failed_open():
 def test_read_index_http_runs_unchanged_over_search_after_session():
     """The polymorphic seam: read_index_http fans the SAME sliced
     executor drain out over a SearchAfterSession — typed raw-page path,
-    slice bodies riding alongside the pit, per-slice completion
-    sentinels — with zero changes to the reader."""
+    slice bodies riding alongside the pit, per-slice completion status
+    rows — with zero changes to the reader."""
     import pyspark.sql.types as T2
 
     from es_to_clickhouse_spark.session import get_spark
     from es_to_clickhouse_spark.sources.es import (
+        SLICE_DONE,
         read_index_http,
         SearchAfterSession,
     )
@@ -1051,19 +1052,19 @@ def test_read_index_http_runs_unchanged_over_search_after_session():
     )
     srv, log, host = _serve_pit(_PIT_DOCS)
     try:
-        df, complete, rdd = read_index_http(
+        rows = read_index_http(
             spark,
             SearchAfterSession(host=host, size=3),
             "idx-a",
             slices=2,
             schema=schema,
             with_status=True,
-        )
-        got = sorted((r["_id"], r["k"]) for r in df.collect())
-        rdd.unpersist()
+        ).collect()
     finally:
         srv.shutdown()
-    assert complete
+    done = sorted(r[SLICE_DONE] for r in rows if r[SLICE_DONE] is not None)
+    got = sorted((r["_id"], r["k"]) for r in rows if r[SLICE_DONE] is None)
+    assert done == [0, 1]  # both slices drained to exhaustion
     assert got == [(f"d{i}", i) for i in range(7)]
     # both slices opened their own PIT and closed it
     assert sum(1 for r in log if r["path"] == "/idx-a/_pit") == 2

@@ -3,6 +3,7 @@
 from __future__ import annotations
 
 import hashlib
+import json
 import os
 import shutil
 
@@ -298,15 +299,52 @@ def test_insert_with_repair_exhausts_retries(spark):
         insert_with_repair(df, sink.insert, lambda cols: 0, retries=1)
 
 
-def test_max_of_with_null_empty_guard(spark, tmp_path):
+def test_target_read_uses_sidecar_schema(spark, tmp_path, count_jobs):
+    """The typed ``_schema.json`` is the read schema: no inference job,
+    and an evolved column reads NULL in the parts written before it."""
     target = WarehouseTarget(spark, str(tmp_path))
-    df = spark.createDataFrame(
-        [("1", "2024-01-01"), ("2", ""), ("3", None)], "_id string, ts string"
+    target.append("tbl", spark.createDataFrame([("1", 1)], "_id string, n bigint"))
+    target.append(
+        "tbl", spark.createDataFrame([("2", 2, "x")], "_id string, n bigint, c string")
     )
-    target.append("tbl", df)
-    # P9: empty strings excluded from max()
-    assert target.max_of("tbl", "ts") == "2024-01-01"
-    assert target.max_of("tbl", "missing_col") is None
+    df, jobs = count_jobs(lambda: target.read("tbl", dedup=False))
+    assert jobs == 0
+    assert dict(df.dtypes) == {
+        "_id": "string", "n": "bigint", "c": "string", "_timestamp": "timestamp"
+    }
+    assert sorted((r["_id"], r["c"]) for r in df.collect()) == [("1", None), ("2", "x")]
+
+
+def test_target_read_without_typed_sidecar_infers(spark, tmp_path):
+    """v1 name-list metadata carries no types: the read infers."""
+    from es_to_clickhouse_spark import fsio
+
+    target = WarehouseTarget(spark, str(tmp_path))
+    target.append("tbl", spark.createDataFrame([("1", 7)], "_id string, n bigint"))
+    fsio.write_text(
+        spark,
+        str(tmp_path / "tbl" / "_schema.json"),
+        json.dumps({"columns": ["_id", "n", "_timestamp"]}),
+    )
+    assert dict(target.read("tbl", dedup=False).dtypes)["n"] == "bigint"
+
+
+def test_target_append_reads_sidecar_once(spark, tmp_path, monkeypatch):
+    """One append reads the sidecar once, and so do the evolving and the
+    steady-state appends after it; no glob runs on an existing table."""
+    from es_to_clickhouse_spark import fsio
+
+    target = WarehouseTarget(spark, str(tmp_path))
+    target.append("tbl", spark.createDataFrame([("1",)], "_id string"))
+    reads, globs = [], []
+    read_text, has_glob = fsio.read_text, fsio.has_glob
+    monkeypatch.setattr(fsio, "read_text", lambda *a: reads.append(a) or read_text(*a))
+    monkeypatch.setattr(fsio, "has_glob", lambda *a: globs.append(a) or has_glob(*a))
+    target.append("tbl", spark.createDataFrame([("2", 5)], "_id string, n bigint"))
+    assert len(reads) == 1 and globs == []
+    target.append("tbl", spark.createDataFrame([("3", 6)], "_id string, n bigint"))
+    assert len(reads) == 2 and globs == []
+    assert target.live_schema("tbl")["n"] == "bigint"
 
 
 def test_compact_many_small_parts(spark, tmp_path):
