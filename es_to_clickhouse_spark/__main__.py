@@ -9,6 +9,12 @@ Reference entry points re-expressed (SURVEY §3):
 - ``--mode status``      clickhouse/clickhouse_to_bytehouse.py:205-224
 - ``--list-only``        es/es_to_bytehouse.py:1246-1253
 
+The CLI only builds the source (the parquet catalog, or with
+``--ch-http-url`` / ``--es-http-url`` / ``--mongo-uri`` a live wire in
+the incremental and continuous modes) and the target; ``SyncEngine``
+runs every mode, prints one JSON line per table round or error, and
+the exit code is 1 when any listing, table round or pattern failed.
+
 Usage::
 
     python -m es_to_clickhouse_spark \
@@ -21,10 +27,13 @@ from __future__ import annotations
 import argparse
 import json
 import sys
+import urllib.parse
 
 from es_to_clickhouse_spark.catalog import ParquetCatalog
 from es_to_clickhouse_spark.config import EnvConfig
-from es_to_clickhouse_spark.engine import SyncEngine
+from es_to_clickhouse_spark.engine import SyncEngine, WireSource
+from es_to_clickhouse_spark.functions import is_system_name
+from es_to_clickhouse_spark.observability import ProgressReporter
 from es_to_clickhouse_spark.session import get_spark
 from es_to_clickhouse_spark.sink import WarehouseTarget
 from es_to_clickhouse_spark.state import StateStore
@@ -203,49 +212,81 @@ def build_parser(env: EnvConfig | None = None) -> argparse.ArgumentParser:
     return p
 
 
-def _expand_patterns(
-    patterns: str,
-    available: list[str],
-    seen_errors: set[str] | None = None,
-) -> tuple[list[str], int]:
-    """Expand comma-separated glob patterns against a LIVE catalog and
-    reject typo'd plain names up front — the same contract as the
-    parquet-catalog path (fnmatch glob semantics,
-    clickhouse_to_bytehouse.py:83-98). Prints one JSON error line per
-    failure; returns (tables deduped in order, failure count). The
-    failure count is PER CALL — a continuous loop re-lists the catalog
-    every round, so a name that only materializes after round 1 must
-    stop counting once it matches (ADVICE r9). ``seen_errors``: a set
-    the caller carries across rounds to print each distinct error line
-    once instead of every round."""
-    import fnmatch
+def _wire_source(spark, args, target, state) -> WireSource:
+    """The live jar-free source ``args`` selects: its catalog listing
+    (system objects filtered) and its table round, whose record the
+    engine prints."""
+    if args.ch_http_url:
+        # (clickhouse_to_bytehouse.py:499-512)
+        from es_to_clickhouse_spark.sources.ch_http import (
+            ClickHouseHttpSource,
+            sync_incremental_http,
+        )
 
-    tables: list[str] = []
-    failures = 0
+        src = ClickHouseHttpSource(host=args.ch_http_url, database=args.ch_database)
 
-    def _err(line: dict) -> None:
-        key = json.dumps(line, sort_keys=True)
-        if seen_errors is None or key not in seen_errors:
-            print(json.dumps(line))
-            if seen_errors is not None:
-                seen_errors.add(key)
+        def ch_round(table):
+            n, cond, wm = sync_incremental_http(
+                spark, src, target, state, table,
+                time_column=args.time_column, start_date=args.start_date,
+            )
+            return {"table": table, "mode": "incremental_ch_http",
+                    "rows": n, "condition": cond, "watermark": wm}
 
-    for pat in (patterns or "").split(","):
-        pat = pat.strip()
-        if not pat:
-            continue
-        if any(ch in pat for ch in "*?["):
-            hits = [t for t in available if fnmatch.fnmatch(t, pat)]
-            if not hits:
-                _err({"pattern": pat, "error": "no match"})
-                failures += 1
-            tables.extend(hits)
-        elif pat not in available:
-            _err({"table": pat, "error": "table not found"})
-            failures += 1
-        else:
-            tables.append(pat)
-    return list(dict.fromkeys(tables)), failures
+        return WireSource(src.list_tables, ch_round)
+    if args.es_http_url:
+        # sliced-scroll live ES (es/es_to_bytehouse.py:963-1006);
+        # composed with --ch-sink-url this is the reference's exact
+        # ES→ClickHouse pipeline, end-to-end jar-free
+        from es_to_clickhouse_spark.sources.es import (
+            ScrollSession,
+            SearchAfterSession,
+            list_indices,
+            sync_incremental_es_http,
+        )
+
+        cursor = SearchAfterSession if args.es_cursor == "search_after" else ScrollSession
+        sess = cursor(host=args.es_http_url)
+
+        def es_round(index):
+            mode, n, wm = sync_incremental_es_http(
+                spark, sess, target, state, index,
+                start_date=args.start_date, slices=args.slices,
+                store_source=args.store_source,
+            )
+            return {"table": index, "mode": f"{mode}_es_http",
+                    "rows": n, "watermark": wm}
+
+        return WireSource(
+            lambda: [n for n in list_indices(sess) if not is_system_name(n, "es")],
+            es_round,
+        )
+    # raw OP_MSG live Mongo (mongodb_to_bytehouse.py:811-866)
+    from es_to_clickhouse_spark.sources.mongo_wire import (
+        MongoWireSession,
+        list_collections,
+        sync_incremental_mongo_wire,
+    )
+
+    u = urllib.parse.urlsplit(args.mongo_uri)
+    msess = MongoWireSession(
+        host=u.hostname or "127.0.0.1",
+        port=u.port or 27017,
+        database=args.mongo_database,
+    )
+
+    def mongo_round(coll):
+        # --slices drives the _id-range pre-split like ES sliced scroll
+        mode, n, wm = sync_incremental_mongo_wire(
+            spark, msess, target, state, coll, splits=args.slices
+        )
+        return {"table": coll, "mode": f"{mode}_mongo_wire",
+                "rows": n, "watermark": wm}
+
+    return WireSource(
+        lambda: [c for c in list_collections(msess) if not is_system_name(c, "mongo")],
+        mongo_round,
+    )
 
 
 def main(argv: list[str] | None = None, environ: dict | None = None) -> int:
@@ -261,24 +302,19 @@ def main(argv: list[str] | None = None, environ: dict | None = None) -> int:
             f"invalid ES_CURSOR / --es-cursor {args.es_cursor!r}: "
             "expected 'scroll' or 'search_after'"
         )
-    live_capable = args.mode in ("incremental", "continuous")
-    ch_http_mode = live_capable and args.ch_http_url
-    es_http_mode = live_capable and args.es_http_url
-    mongo_mode = live_capable and args.mongo_uri
-    live_modes = [m for m in (ch_http_mode, es_http_mode, mongo_mode) if m]
-    if len(live_modes) > 1:
+    live = args.mode in ("incremental", "continuous") and [
+        u for u in (args.ch_http_url, args.es_http_url, args.mongo_uri) if u
+    ]
+    if live and len(live) > 1:
         parser.error(
             "--ch-http-url / --es-http-url / --mongo-uri are mutually "
             "exclusive source selections"
         )
-    live_mode = bool(live_modes)
-    if not args.source_dir and not live_mode:
+    if not args.source_dir and not live:
         parser.error("--source-dir is required (or set SOURCE_DIR)")
-    if live_mode and not [
-        t for t in (args.tables or "").split(",") if t.strip()
-    ]:
-        # an empty pattern would loop zero tables and exit 0 — a silent
-        # green no-op (ADVICE r7); fail loudly like the catalog path
+    if live and not [t for t in (args.tables or "").split(",") if t.strip()]:
+        # an empty pattern would sync zero tables and exit 0 — a silent
+        # green no-op; fail loudly like the catalog path
         parser.error(
             "--tables is required with a live source "
             "(or set INDEX_PATTERN / COLLECTION_PATTERN)"
@@ -306,149 +342,20 @@ def main(argv: list[str] | None = None, environ: dict | None = None) -> int:
         target.max_records_per_file = args.batch_size
         if args.ch_sink_url:
             target.source.batch_size = args.batch_size
-    if live_mode:
-        # live jar-free sources — all three reference daemons'
-        # incremental loop bodies on one shared rounds loop. --mode
-        # incremental = one round; --mode continuous = the reference's
-        # poll loop (es/es_to_bytehouse.py:1053-1102: re-list the
-        # catalog, sync each match, sleep INCREMENTAL_INTERVAL),
-        # bounded by --max-rounds for tests, forever otherwise.
-        import time as _time
-
-        from es_to_clickhouse_spark.functions import is_system_name
-
-        state = StateStore(spark, args.warehouse)
-        if ch_http_mode:
-            # (clickhouse_to_bytehouse.py:499-512)
-            from es_to_clickhouse_spark.sources.ch_http import (
-                ClickHouseHttpSource,
-                sync_incremental_http,
-            )
-
-            src = ClickHouseHttpSource(
-                host=args.ch_http_url, database=args.ch_database
-            )
-            list_fn = src.list_tables
-
-            def sync_one(table):
-                n, cond, wm = sync_incremental_http(
-                    spark, src, target, state, table,
-                    time_column=args.time_column, start_date=args.start_date,
-                )
-                return {"table": table, "mode": "incremental_ch_http",
-                        "rows": n, "condition": cond, "watermark": wm}
-        elif es_http_mode:
-            # sliced-scroll live ES (es/es_to_bytehouse.py:963-1006);
-            # composed with --ch-sink-url this is the reference's exact
-            # ES→ClickHouse pipeline, end-to-end jar-free
-            from es_to_clickhouse_spark.sources.es import (
-                ScrollSession,
-                SearchAfterSession,
-                list_indices,
-                sync_incremental_es_http,
-            )
-
-            # the two sessions share the whole drain surface — the
-            # sync loop and read_index_http run unchanged over either
-            cursor_cls = (
-                SearchAfterSession
-                if args.es_cursor == "search_after"
-                else ScrollSession
-            )
-            sess = cursor_cls(host=args.es_http_url)
-
-            def list_fn():
-                return [
-                    n for n in list_indices(sess)
-                    if not is_system_name(n, "es")
-                ]
-
-            def sync_one(index):
-                mode, n, wm = sync_incremental_es_http(
-                    spark, sess, target, state, index,
-                    start_date=args.start_date, slices=args.slices,
-                    store_source=args.store_source,
-                )
-                return {"table": index, "mode": f"{mode}_es_http",
-                        "rows": n, "watermark": wm}
-        else:
-            # raw OP_MSG live Mongo (mongodb_to_bytehouse.py:811-866)
-            import urllib.parse as _up
-
-            from es_to_clickhouse_spark.sources.mongo_wire import (
-                MongoWireSession,
-                list_collections,
-                sync_incremental_mongo_wire,
-            )
-
-            u = _up.urlsplit(args.mongo_uri)
-            msess = MongoWireSession(
-                host=u.hostname or "127.0.0.1",
-                port=u.port or 27017,
-                database=args.mongo_database,
-            )
-
-            def list_fn():
-                return [
-                    c for c in list_collections(msess)
-                    if not is_system_name(c, "mongo")
-                ]
-
-            def sync_one(coll):
-                # --slices drives the _id-range pre-split exactly like
-                # ES sliced scroll (1 = the reference's serial walk)
-                mode, n, wm = sync_incremental_mongo_wire(
-                    spark, msess, target, state, coll, splits=args.slices
-                )
-                return {"table": coll, "mode": f"{mode}_mongo_wire",
-                        "rows": n, "watermark": wm}
-
-        failures = 0
-        pattern_failures = 0  # latest round only: a plain name that
-        rounds = 0            # appears mid-run stops counting (ADVICE r9)
-        seen_errors: set[str] = set()
-        while True:
-            available = None
-            try:
-                # re-listed EVERY round like the reference daemons —
-                # tables created mid-run join the next round
-                available = list_fn()
-            except (OSError, ValueError) as e:
-                # OSError = transport; ValueError = garbled response
-                # surviving the retry budget. A one-shot mode fails the
-                # invocation; a CONTINUOUS daemon must outlive a
-                # transient catalog blip and retry next round — exiting
-                # here turned one reset into a dead pipeline (the chaos
-                # tests' liveness contract).
-                print(json.dumps({"error": f"catalog: {e}"}))
-                failures += 1
-                if args.mode != "continuous":
-                    return 1
-            if available is not None:
-                tables, pattern_failures = _expand_patterns(
-                    args.tables, available, seen_errors=seen_errors
-                )
-                for table in tables:
-                    try:
-                        print(json.dumps(sync_one(table)))
-                    except (OSError, ValueError) as e:
-                        print(json.dumps({"table": table, "error": str(e)}))
-                        failures += 1
-            rounds += 1
-            if args.mode != "continuous" or (
-                args.max_rounds is not None and rounds >= args.max_rounds
-            ):
-                break
-            _time.sleep(args.interval)
-        return 1 if failures or pattern_failures else 0
+    state = StateStore(spark, args.warehouse)
     engine = SyncEngine(
         spark=spark,
-        catalog=ParquetCatalog(spark, args.source_dir),
+        catalog=(
+            _wire_source(spark, args, target, state)
+            if live
+            else ParquetCatalog(spark, args.source_dir)
+        ),
         target=target,
-        state=StateStore(spark, args.warehouse),
+        state=state,
         dialect=args.dialect,
         id_field=args.id_field,
         store_source=args.store_source,
+        reporter=ProgressReporter(emit=lambda line: print(json.dumps(line))),
     )
     if args.list_only or args.mode == "list":
         for name in engine.list_tables(args.tables):
@@ -458,37 +365,18 @@ def main(argv: list[str] | None = None, environ: dict | None = None) -> int:
         for row in engine.status().collect():
             print(json.dumps(row.asDict(), default=str))
         return 0
-    if args.mode == "full":
-        reports = engine.sync_full(args.tables)
-    elif args.mode == "incremental":
-        reports = engine.sync_incremental_once(args.tables, start_date=args.start_date)
+    if args.mode == "full" or (args.mode == "entrypoint" and not args.skip_full_sync):
+        # entrypoint = full→continuous handoff (es/entrypoint.sh:23-48)
+        engine.sync_full(args.tables)
+    if args.mode == "incremental":
+        engine.sync_incremental_once(args.tables, start_date=args.start_date)
     elif args.mode == "auto":
-        reports = engine.sync_auto(args.tables)
-    elif args.mode == "entrypoint":
-        # full→continuous handoff (es/entrypoint.sh:23-48)
-        reports = [] if args.skip_full_sync else engine.sync_full(args.tables)
-        rounds = engine.sync_continuous(
+        engine.sync_auto(args.tables)
+    elif args.mode in ("continuous", "entrypoint"):
+        engine.sync_continuous(
             args.tables, interval_s=args.interval, max_rounds=args.max_rounds
         )
-        reports += [r for rnd in rounds for r in rnd]
-    else:  # continuous
-        rounds = engine.sync_continuous(
-            args.tables, interval_s=args.interval, max_rounds=args.max_rounds
-        )
-        reports = [r for rnd in rounds for r in rnd]
-    for r in reports:
-        print(
-            json.dumps(
-                {
-                    "table": r.table,
-                    "mode": r.mode,
-                    "rows": r.rows,
-                    "seconds": round(r.seconds, 3),
-                    "watermark": r.watermark,
-                }
-            )
-        )
-    return 0
+    return 1 if engine.errors or engine.unmatched else 0
 
 
 if __name__ == "__main__":

@@ -14,7 +14,6 @@ filters are shared, pure functions so every source behaves identically.
 from __future__ import annotations
 
 import json
-from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -35,12 +34,6 @@ _CONVERSION_CONFS = (
 
 #: one data file of a table: (qualified path, size in bytes, mtime in ms)
 FileKey = tuple[str, int, int]
-
-
-@dataclass
-class TableInfo:
-    name: str
-    path: str
 
 
 def _is_data_file(name: str) -> bool:
@@ -66,7 +59,7 @@ class ParquetCatalog:
         #: table path -> {file path: (size, mtime, confs, schema json, nanos columns)}
         self._footers: dict[str, dict[str, tuple]] = {}
 
-    def list_tables(self, pattern: str | None = None) -> list[TableInfo]:
+    def list_tables(self, pattern: str | None = None) -> list[str]:
         # Hadoop-FS listing (fsio), so the source root can be an object
         # store URI, same as the warehouse side
         names = sorted(
@@ -77,9 +70,7 @@ class ParquetCatalog:
         # system-object filter (es/es_to_bytehouse.py:250-253,
         # mongodb/mongodb_to_bytehouse.py:303-304)
         names = [n for n in names if not is_system_name(n, self.dialect)]
-        if pattern and pattern not in ("*", ""):
-            names = match_names(names, pattern)
-        return [TableInfo(n, fsio.join(self.root, f"{n}.parquet")) for n in names]
+        return match_names(names, pattern) if pattern else names
 
     def _path(self, name: str) -> str:
         return fsio.join(self.root, f"{name}.parquet")

@@ -9,24 +9,29 @@ Re-expresses the reference's three daemons' orchestration (SURVEY §3):
 - ``status``    — clickhouse/clickhouse_to_bytehouse.py:205-224
 - ``list``      — es/es_to_bytehouse.py:1246-1253 (--list-only)
 
-Every mode runs one per-table round (``SyncEngine._round``): read the
-table once, filter it by the stored watermark (a full round is the round
-with no predicate and no prior state), skip it when the filtered batch is
-empty, and land it with ``land_batch`` — the reference daemons' loop body
-(es/es_to_bytehouse.py:963-1006): count the batch, append it, commit the
-next state. ``StreamingSync`` lands its micro-batches the same way.
+Every source lists with ``list_tables(pattern)``, and its table round
+yields a batch and the state it may commit. ``SyncEngine`` drives a
+``ParquetCatalog`` or a live wire (``WireSource``: ES, ClickHouse, Mongo)
+through one pass (``_pass``) and one poll loop (``sync_continuous``) —
+the reference daemons' loop body (es/es_to_bytehouse.py:963-1006): list,
+resume from the mark, drain, insert, commit the mark. A failed listing or
+table round (``OSError``/``ValueError``) reports one line and counts in
+``errors``; the next round retries it.
 
-Spark-first differences from the reference (deliberate, SURVEY §3.1):
-the per-batch client-side pagination loop collapses into ONE distributed
-read + write per table per round (Catalyst plans the scan; partitioning
-replaces paging; no O(n²) OFFSET walk). The source schema is the merge
-of its files' parquet footers, read on the driver
-(``ParquetCatalog.read``). The count and the watermark maxima ride the
-append job as an Observation, and ``SyncState.advance`` merges them
-monotonically into the stored marks. So an active table costs the
-append job plus, on incremental rounds, a limit-1 emptiness probe; a
-table whose listing and stored state are unchanged since a round that
-settled it costs no job at all (``SyncEngine._settled``).
+A parquet round lands with ``land_batch``: its files can be read again,
+so the count and the watermark maxima ride the append job as an
+Observation, and a table whose listing and stored state are what its
+last settling round left costs no job (``SyncEngine._settled``).
+``StreamingSync`` lands its micro-batches the same way. A wire round
+lands with ``land_snapshot``: a drain cannot be repeated, so one job
+checkpoints and observes it, and the append is a second job over the
+checkpoint. Either way ``SyncState.advance`` merges the maxima
+monotonically into the stored marks.
+
+Spark-first difference from the reference (SURVEY §3.1): the per-batch
+client-side pagination loop collapses into ONE distributed read + write
+per table per round (Catalyst plans the scan; partitioning replaces
+paging; no O(n²) OFFSET walk).
 """
 
 from __future__ import annotations
@@ -42,7 +47,11 @@ from pyspark.sql import functions as F
 
 from es_to_clickhouse_spark.catalog import ParquetCatalog
 from es_to_clickhouse_spark.flatten import flatten_es, flatten_mongo
-from es_to_clickhouse_spark.functions import sanitize_table_name
+from es_to_clickhouse_spark.functions import (
+    expand_patterns,
+    match_names,
+    sanitize_table_name,
+)
 from es_to_clickhouse_spark.incremental import (
     batch_aggregate,
     detect_time_field,
@@ -56,17 +65,34 @@ from es_to_clickhouse_spark.state import StateStore, SyncState
 
 log = logging.getLogger("es_to_clickhouse_spark.engine")
 
+#: what a pass survives in one table round or listing: transport errors
+#: and garbled responses that outlived the source's retry budget
+ROUND_ERRORS = (OSError, ValueError)
+
 
 @dataclass
 class SyncReport:
     table: str
     mode: str
     rows: int
-    seconds: float
+    seconds: float = 0.0
     watermark: str | None = None
     #: batch rows dropped as near-dups of the persisted LSH store
     #: (0 unless the engine has a ``neardup`` store configured)
     neardup_dropped: int = 0
+    #: the round's record as its wire source shapes it (no seconds; the
+    #: ClickHouse source adds its condition); None for a parquet round
+    record: dict | None = None
+
+    def line(self) -> dict:
+        """The round's one-line JSON record (the CLI prints it)."""
+        return self.record or {
+            "table": self.table,
+            "mode": self.mode,
+            "rows": self.rows,
+            "seconds": round(self.seconds, 3),
+            "watermark": self.watermark,
+        }
 
 
 def land_batch(
@@ -118,6 +144,60 @@ def land_batch(
     return committed, dropped
 
 
+def land_snapshot(
+    drain: DataFrame,
+    prior: SyncState,
+    state: StateStore,
+    append: Callable[[DataFrame], None],
+    status: str | None = None,
+    marks: Callable[[dict, list], dict] = lambda maxima, reports: maxima,
+) -> SyncState:
+    """Land one wire round's ``drain``, which cannot be read twice.
+
+    One job ``localCheckpoint``s the drain, and an Observation on it
+    carries the row count and the maxima of ``prior``'s time and
+    update-time fields. A drain whose tasks report their status as rows
+    names the column in ``status`` (NULL on data rows); the observation
+    also collects those reports. No data rows: nothing is appended or
+    committed, and ``prior`` with a count of 0 is returned. Otherwise
+    the data rows, ``status`` dropped, go to ``append`` in a second job
+    over the checkpoint, so a retried task re-sends the same rows in the
+    same order and a ClickHouse ``insert_deduplication_token`` holds.
+    Last, ``prior.advance`` over the count and ``marks(maxima,
+    reports)`` — the observed maxima by default; a source whose drain
+    can end short narrows them — is committed and returned."""
+    metrics = batch_aggregate(prior.time_field, prior.update_time_field)
+    if status:
+        metrics.append(F.collect_list(status).alias(status))
+    obs = Observation()
+    snap = drain.observe(obs, *metrics).localCheckpoint()
+    maxima = obs.get
+    reports = maxima.pop(status, []) if status else []
+    n = maxima.pop("n") - len(reports)
+    if n == 0:
+        return prior.advance(0)
+    append(snap.where(F.col(status).isNull()).drop(status) if status else snap)
+    committed = prior.advance(n, **marks(maxima, reports))
+    state.commit(committed)
+    return committed
+
+
+@dataclass
+class WireSource:
+    """A live wire (ES, ClickHouse, Mongo) as ``SyncEngine`` drives it.
+    ``names`` lists the catalog (system objects filtered); ``round`` runs
+    one table's round, which lands its own snapshot (``land_snapshot``),
+    and returns the round's record: ``table``, ``mode``, ``rows`` and
+    ``watermark`` at least."""
+
+    names: Callable[[], list[str]]
+    round: Callable[[str], dict]
+
+    def list_tables(self, pattern: str | None = None) -> list[str]:
+        names = self.names()
+        return match_names(names, pattern) if pattern else names
+
+
 def _predicate_kind(st: SyncState, id_src: str | None) -> str | None:
     """The incremental predicate ``st`` selects with: the time watermark
     (``"time"``), the same with the update-time OR arm (``"time|update"``),
@@ -129,10 +209,11 @@ def _predicate_kind(st: SyncState, id_src: str | None) -> str | None:
 
 @dataclass
 class SyncEngine:
-    """One engine instance = one (source catalog → warehouse target) pipeline."""
+    """One engine instance = one (source → warehouse target) pipeline.
+    ``catalog`` is a ``ParquetCatalog`` or a ``WireSource``."""
 
     spark: SparkSession
-    catalog: ParquetCatalog
+    catalog: ParquetCatalog | WireSource
     target: WarehouseTarget
     state: StateStore
     dialect: str = "es"
@@ -148,6 +229,12 @@ class SyncEngine:
     #: signatures never re-derived. Tables missing the store's id/text
     #: columns pass through untouched.
     neardup: object | None = None
+    #: failed listings and table rounds since the engine was built
+    errors: int = field(default=0, init=False)
+    #: patterns the latest listing matched no table for
+    unmatched: int = field(default=0, init=False)
+    #: pattern error lines already reported (each is reported once)
+    _seen_errors: set = field(default_factory=set, init=False, repr=False)
     #: per source table, the listing and state the last round left when
     #: that round proves the next one idle: it committed a batch or found
     #: none, so every listed row is at or below the stored marks. An
@@ -179,16 +266,16 @@ class SyncEngine:
             out = out.withColumn(ID_COL, F.col(self.id_field).cast("string"))
         return out
 
-    # -- modes ----------------------------------------------------------
+    # -- rounds ---------------------------------------------------------
 
     def list_tables(self, pattern: str | None = None) -> list[str]:
-        return [t.name for t in self.catalog.list_tables(pattern)]
+        return self.catalog.list_tables(pattern)
 
     def _round(
         self, name: str, st: SyncState | None, start_date: str | None = None
     ) -> SyncReport | None:
-        """One table round. ``st`` is the stored state; None with no
-        ``start_date`` is a full round (no predicate), None with one
+        """One parquet table round. ``st`` is the stored state; None with
+        no ``start_date`` is a full round (no predicate), None with one
         bootstraps from it (the Mongo daemon's ``--start-date``,
         mongodb/mongodb_to_bytehouse.py:611-631). Returns None when the
         table is skipped.
@@ -196,11 +283,10 @@ class SyncEngine:
         A round whose table listing and stored state both equal what the
         last landing or empty round of this engine left reports 0 rows
         without reading the table (see ``_settled``)."""
-        t0 = time.time()
         target_name = sanitize_table_name(name, self.dialect)
         files = self.catalog.listing(name)
         if st is not None and files and self._settled.get(name) == (files, st):
-            return self._report(name, "incremental", 0, t0, st.last_sync_time)
+            return SyncReport(name, "incremental", 0, watermark=st.last_sync_time)
         df = self._transform(self.catalog.read(name, files))
         cols = df.columns
         # the id watermark is a max over the NATIVE id column when known,
@@ -245,7 +331,7 @@ class SyncEngine:
         # an empty part and no round scans the source twice in full.
         if not full and batch.isEmpty():
             self._settle(name, files, st)
-            return self._report(name, mode, 0, t0, st.last_sync_time)
+            return SyncReport(name, mode, 0, watermark=st.last_sync_time)
         committed, dropped = land_batch(
             batch,
             st,
@@ -264,25 +350,83 @@ class SyncEngine:
             self._settle(name, files, committed)
         else:
             self._settled.pop(name, None)
-        return self._report(
-            name, mode, committed.last_sync_count, t0, committed.last_sync_time, dropped
+        return SyncReport(
+            name, mode, committed.last_sync_count, 0.0, committed.last_sync_time, dropped
         )
 
     def _settle(self, name: str, files: tuple, st: SyncState) -> None:
         if files:
             self._settled[name] = (files, st)
 
-    def _report(self, name, mode, rows, t0, watermark, dropped=0) -> SyncReport:
-        rep = SyncReport(name, mode, rows, time.time() - t0, watermark, dropped)
-        self.reporter.table_done(rep.table, rep.rows, rep.seconds)
-        return rep
-
     def _state(self, name: str) -> SyncState | None:
         return self.state.get(sanitize_table_name(name, self.dialect))
 
+    def _table_round(
+        self, name: str, mode: str, start_date: str | None
+    ) -> SyncReport | None:
+        """One table round of a ``full``, ``incremental`` or ``auto``
+        pass. A wire source runs its own round, which bootstraps an
+        unseen table itself."""
+        if isinstance(self.catalog, WireSource):
+            rec = self.catalog.round(name)
+            return SyncReport(
+                name, rec["mode"], rec["rows"], watermark=rec["watermark"], record=rec
+            )
+        st = None if mode == "full" else self._state(name)
+        if st is None and mode == "incremental" and start_date is None:
+            # ES refuses incremental before a full sync
+            # (es/es_to_bytehouse.py:968-971)
+            log.warning("%s: no sync state; run full sync first", name)
+            return None
+        return self._round(name, st, start_date)
+
+    def _fail(self, line: dict) -> None:
+        self.errors += 1
+        self.reporter.error(line)
+
+    def _pass(
+        self,
+        pattern: str | None,
+        mode: str,
+        start_date: str | None = None,
+        round_no: int | None = None,
+    ) -> list[SyncReport]:
+        """One round: list the source — every round, like the reference
+        daemons, so tables created mid-run join the next round — match
+        ``pattern`` (all tables when None) and run each table's round. A
+        failed listing or table round is reported and counted, and the
+        pass goes on to the next table."""
+        try:
+            names = self.catalog.list_tables()
+        except ROUND_ERRORS as e:
+            self._fail({"error": f"catalog: {e}"})
+            return []
+        tables, self.unmatched = (
+            expand_patterns(pattern, names, self._seen_errors, self.reporter.error)
+            if pattern
+            else (names, 0)
+        )
+        if round_no is not None:
+            self.reporter.round_start(round_no, len(tables))
+        reports = []
+        for name in tables:
+            t0 = time.time()
+            try:
+                rep = self._table_round(name, mode, start_date)
+            except ROUND_ERRORS as e:
+                self._fail({"table": name, "error": str(e)})
+                continue
+            if rep is not None:
+                rep.seconds = time.time() - t0
+                self.reporter.table_done(rep)
+                reports.append(rep)
+        return reports
+
+    # -- modes ----------------------------------------------------------
+
     def sync_full(self, pattern: str | None = None) -> list[SyncReport]:
         """Full sync of every matching table (§3.1)."""
-        return [self._round(t.name, None) for t in self.catalog.list_tables(pattern)]
+        return self._pass(pattern, "full")
 
     def sync_incremental_once(
         self, pattern: str | None = None, start_date: str | None = None
@@ -294,16 +438,13 @@ class SyncEngine:
         are skipped (ES refuses incremental before a full sync,
         es/es_to_bytehouse.py:968-971).
         """
-        reports = []
-        for t in self.catalog.list_tables(pattern):
-            st = self._state(t.name)
-            if st is None and start_date is None:
-                log.warning("%s: no sync state; run full sync first", t.name)
-                continue
-            rep = self._round(t.name, st, start_date)
-            if rep is not None:
-                reports.append(rep)
-        return reports
+        return self._pass(pattern, "incremental", start_date)
+
+    def sync_auto(self, pattern: str | None = None) -> list[SyncReport]:
+        """Auto mode: one pass over the listing, full round for unseen
+        tables, incremental for the rest
+        (mongodb/mongodb_to_bytehouse.py:811-866)."""
+        return self._pass(pattern, "auto")
 
     def sync_continuous(
         self,
@@ -312,8 +453,11 @@ class SyncEngine:
         max_rounds: int | None = None,
         compact_every: int | None = None,
     ) -> list[list[SyncReport]]:
-        """Continuous micro-batch loop (es/es_to_bytehouse.py:1069-1102).
-        ``max_rounds`` bounds the loop for tests; None = run forever.
+        """The poll loop (es/es_to_bytehouse.py:1053-1102): each round
+        re-lists the source and runs one incremental pass, then sleeps
+        ``interval_s``. ``max_rounds`` bounds the loop; None = run
+        forever. A failed listing or table round is reported and counted
+        (``errors``), and the next round retries it.
 
         ``compact_every``: run ``target.compact`` on every synced table
         each N rounds — the maintenance the reference outsources to its
@@ -325,33 +469,11 @@ class SyncEngine:
         n = 0
         while max_rounds is None or n < max_rounds:
             t0 = time.time()
-            self.reporter.round_start(n + 1, len(self.catalog.list_tables(pattern)))
-            reports = self.sync_incremental_once(pattern)
-            rounds.append(reports)
             n += 1
+            reports = self._pass(pattern, "incremental", round_no=n)
+            rounds.append(reports)
             if compact_every and n % compact_every == 0:
-                for rep in reports:
-                    tname = sanitize_table_name(rep.table, self.dialect)
-                    if self.target.table_exists(tname):
-                        before, after = self.target.compact(tname)
-                        if after < before:
-                            log.info(
-                                "%s: compacted %d -> %d parts", tname, before, after
-                            )
-                # the near-dup store accumulates files_per_append
-                # parquet parts per table per round, same degradation
-                # curve as the sink — compact it on the same cadence.
-                # Safe here: the loop is between rounds, so no append
-                # is in flight.
-                if self.neardup is not None and hasattr(
-                    self.neardup, "compact"
-                ):
-                    done_files = self.neardup.compact(self.spark)
-                    if done_files:
-                        log.info(
-                            "neardup store compacted to %s files/table",
-                            done_files,
-                        )
+                self._compact(reports)
             done = max_rounds is not None and n >= max_rounds
             self.reporter.round_done(
                 n,
@@ -359,21 +481,25 @@ class SyncEngine:
                 time.time() - t0,
                 None if done else interval_s,
             )
-            if done:
-                break
-            time.sleep(interval_s)
+            if not done:
+                time.sleep(interval_s)
         return rounds
 
-    def sync_auto(self, pattern: str | None = None) -> list[SyncReport]:
-        """Auto mode: one pass over the listing, full round for unseen
-        tables, incremental for the rest
-        (mongodb/mongodb_to_bytehouse.py:811-866)."""
-        reports = []
-        for t in self.catalog.list_tables(pattern):
-            rep = self._round(t.name, self._state(t.name))
-            if rep is not None:
-                reports.append(rep)
-        return reports
+    def _compact(self, reports: list[SyncReport]) -> None:
+        for rep in reports:
+            tname = sanitize_table_name(rep.table, self.dialect)
+            if self.target.table_exists(tname):
+                before, after = self.target.compact(tname)
+                if after < before:
+                    log.info("%s: compacted %d -> %d parts", tname, before, after)
+        # the near-dup store accumulates files_per_append parquet parts
+        # per table per round, same degradation curve as the sink —
+        # compact it on the same cadence. Safe here: the loop is between
+        # rounds, so no append is in flight.
+        if self.neardup is not None and hasattr(self.neardup, "compact"):
+            done_files = self.neardup.compact(self.spark)
+            if done_files:
+                log.info("neardup store compacted to %s files/table", done_files)
 
     def status(self, limit: int = 10) -> DataFrame:
         return self.state.status(limit)

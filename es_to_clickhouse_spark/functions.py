@@ -22,7 +22,9 @@ Reference behaviors re-expressed here:
 from __future__ import annotations
 
 import fnmatch
+import json
 import re
+from collections.abc import Callable
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
@@ -179,20 +181,48 @@ def sanitize_table_name(name: str, dialect: str = "es") -> str:
     return out
 
 
+def _print_line(line: dict) -> None:
+    print(json.dumps(line))
+
+
+def expand_patterns(
+    patterns: str,
+    names: list[str],
+    seen_errors: set[str] | None = None,
+    emit: Callable[[dict], None] = _print_line,
+) -> tuple[list[str], int]:
+    """Comma-separated glob/exact patterns against a listing
+    (clickhouse/clickhouse_to_bytehouse.py:83-98): the matching names in
+    listing order, deduped, and the number of patterns that matched
+    nothing. Each such pattern is reported through ``emit`` as one line,
+    ``{"table": p, "error": "table not found"}`` for a plain name or
+    ``{"pattern": p, "error": "no match"}`` for a glob. The count is per
+    call: a poll loop re-lists every round, so a name that appears
+    mid-run stops counting once it matches. ``seen_errors``, carried by
+    the caller across calls, reports each distinct line once."""
+    pats = [p.strip() for p in (patterns or "").split(",") if p.strip()]
+    hits = {p: {n for n in names if n == p or fnmatch.fnmatch(n, p)} for p in pats}
+    seen = set() if seen_errors is None else seen_errors
+    failures = 0
+    for p, found in hits.items():
+        if found:
+            continue
+        failures += 1
+        if any(ch in p for ch in "*?["):
+            line = {"pattern": p, "error": "no match"}
+        else:
+            line = {"table": p, "error": "table not found"}
+        key = json.dumps(line, sort_keys=True)
+        if key not in seen:
+            emit(line)
+            seen.add(key)
+    matched = set().union(*hits.values())
+    return [n for n in dict.fromkeys(names) if n in matched], failures
+
+
 def match_names(names: list[str], patterns: str) -> list[str]:
-    """Comma-separated glob/exact patterns → matching names, order-preserving
-    dedup (clickhouse/clickhouse_to_bytehouse.py:83-98)."""
-    pats = [p.strip() for p in patterns.split(",") if p.strip()]
-    out: list[str] = []
-    seen: set[str] = set()
-    for name in names:
-        for p in pats:
-            if name == p or fnmatch.fnmatch(name, p):
-                if name not in seen:
-                    seen.add(name)
-                    out.append(name)
-                break
-    return out
+    """The names :func:`expand_patterns` selects, reporting nothing."""
+    return expand_patterns(patterns, names, emit=lambda line: None)[0]
 
 
 def glob_filter_column(col: Column, patterns: str) -> Column:

@@ -10,6 +10,7 @@ pluggable callable (no-op by default — no network dependency).
 
 from __future__ import annotations
 
+import json
 import logging
 import time
 from collections.abc import Callable
@@ -52,10 +53,28 @@ class AlertHook:
 @dataclass
 class ProgressReporter:
     alerts: AlertHook = field(default_factory=AlertHook)
+    #: where each table round's record and each error line go as they
+    #: happen (the CLI prints them as JSON lines); None = the log only
+    emit: Callable[[dict], None] | None = None
 
-    def table_done(self, table: str, rows: int, seconds: float) -> None:
-        speed, _, _ = speed_eta(rows, rows, seconds)
-        log.info("%s: %d rows in %.2fs (%.0f rows/s)", table, rows, seconds, speed)
+    def table_done(self, report) -> None:
+        """One table round finished (an ``engine.SyncReport``)."""
+        speed, _, _ = speed_eta(report.rows, report.rows, report.seconds)
+        log.info(
+            "%s: %d rows in %.2fs (%.0f rows/s)",
+            report.table,
+            report.rows,
+            report.seconds,
+            speed,
+        )
+        if self.emit is not None:
+            self.emit(report.line())
+
+    def error(self, line: dict) -> None:
+        """A failed listing, table round or unmatched pattern."""
+        self.alerts.alert("ERROR", json.dumps(line))
+        if self.emit is not None:
+            self.emit(line)
 
     # -- continuous-loop round telemetry (es/es_to_bytehouse.py:1069-1102:
     # "[round N] starting … / tables to check: X" then

@@ -1,8 +1,6 @@
-"""ClickHouse source/sink over the HTTP interface (public wire format,
-no driver jar needed — the gap that kept S7/S15 "done-modulo-environment"
-through r6: the sandbox has neither the JDBC jar nor the native-TCP
-driver, but ClickHouse's HTTP interface is plain ``POST /?query=`` and
-stdlib urllib drives it).
+"""ClickHouse source/sink over the HTTP interface (public wire format:
+no JDBC jar or native-TCP client is needed, because ClickHouse's HTTP
+interface is plain ``POST /?query=`` and stdlib urllib drives it).
 
 Reference behaviors mapped (clickhouse/clickhouse_to_bytehouse.py):
 
@@ -38,7 +36,7 @@ import urllib.parse
 import urllib.request
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
 #: ClickHouse scalar type → Spark type (DESCRIBE TABLE vocabulary).
@@ -328,7 +326,7 @@ class ClickHouseHttpSource:
         partition is unbounded below and also routes NULL partition
         keys, the last is unbounded above, so rows outside stale bounds
         (or with a NULL key) still arrive instead of being silently
-        dropped (ADVICE r7)."""
+        dropped."""
         schema = self.table_schema(table)
         base_where = f"({where})" if where else None
         col = partition_column
@@ -556,11 +554,11 @@ class ClickHouseHttpTarget:
       stays at-least-once — the same contract as the reference daemon,
       which has no token at all (:313-316). The instance uuid is
       load-bearing for at-least-once itself: two target instances in
-      ONE application (e.g. a driver program syncing in phases) would
-      otherwise both start their seq at 0 and the second instance's
-      FIRST round would replay the first's tokens — the server then
-      silently DROPS legitimate new rows (r10, caught by the soak
-      test's restart rounds sharing the test JVM's applicationId).
+      ONE application (a program syncing in phases, an engine
+      restarted in the same JVM) would otherwise both start their seq
+      at 0 and the second instance's FIRST round would replay the
+      first's tokens — the server then silently DROPS legitimate new
+      rows.
     - streaming path: ``StreamingSync`` passes
       ``epoch=f"{table}:{batch_id}"`` where ``batch_id`` comes from the
       Structured Streaming CHECKPOINT — durable across restarts, so the
@@ -652,11 +650,11 @@ def sync_incremental_http(
     1. condition = last-sync watermark from the StateStore, unless a
        start date is forced; neither -> the 1-day bootstrap (P6);
     2. the table reads DISTRIBUTED (``read_table`` with the condition
-       pushed into every range query, executor-side fetch), then
-       ``localCheckpoint``s — an Observation on that one job carries the
-       count and the watermark, and the append reads the snapshot (the
-       source is not re-read, so the reported n is exactly what was
-       appended); zero rows fire no further job;
+       pushed into every range query, executor-side fetch) and lands
+       through :func:`engine.land_snapshot`: one job checkpoints it and
+       observes the count and the watermark, the append reads the
+       checkpoint (the source is not re-read, so the reported n is
+       exactly what was appended), and zero rows fire no further job;
     3. rows append to the warehouse target (system columns + schema
        evolution handled by the sink);
     4. the watermark advances to ``max(time_column)`` OVER THE APPENDED
@@ -669,35 +667,25 @@ def sync_incremental_http(
        timestamp is excluded by ``>`` next round.
 
     Returns ``(rows_synced, condition, new_watermark)``."""
-    from es_to_clickhouse_spark.incremental import batch_aggregate
+    from es_to_clickhouse_spark.engine import land_snapshot
     from es_to_clickhouse_spark.state import SyncState
 
     st = state.get(table)
     last = st.last_sync_time if st else None
     cond = source.since_condition(time_column, last, start_date)
-    obs = Observation()
-    df = (
-        source.read_table(
-            spark,
-            table,
-            where=cond,
-            partition_column=partition_column,
-            bounds=bounds,
-            num_partitions=num_partitions,
-        )
-        .observe(obs, *batch_aggregate(time_column))
-        .localCheckpoint()  # one source pass; count/append/watermark share it
+    df = source.read_table(
+        spark,
+        table,
+        where=cond,
+        partition_column=partition_column,
+        bounds=bounds,
+        num_partitions=num_partitions,
     )
-    row = obs.get
-    if row["n"] == 0:
-        return 0, cond, last
-    target.append(table, df)
     prior = SyncState(
         table_name=table,
         source_name=f"ch_http:{source.database}.{table}",
         time_field=time_column,
         last_sync_time=last,
     )
-    committed = prior.advance(**row)
-    state.commit(committed)
-    return row["n"], cond, committed.last_sync_time
+    committed = land_snapshot(df, prior, state, lambda snap: target.append(table, snap))
+    return committed.last_sync_count, cond, committed.last_sync_time

@@ -20,7 +20,7 @@ from __future__ import annotations
 import json
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -368,8 +368,7 @@ class ScrollSession:
         Returns ``completed``: True only when the scan drained to
         exhaustion (empty page). A parallel-sliced caller needs it —
         committing a watermark computed over OTHER slices' rows past an
-        incomplete slice's undrained tail loses that tail forever (the
-        ADVICE r10 Mongo split bug; same class here)."""
+        incomplete slice's undrained tail loses that tail forever."""
         cursor: str | None = None
         completed = False
         try:
@@ -569,7 +568,7 @@ class SearchAfterSession(ScrollSession):
         # body None (not {}): Elasticsearch 8.0-8.11 rejects ANY request
         # body on POST /{index}/_pit (body support arrived in 8.12), so
         # the open must go out with no payload at all to span the full
-        # 8.x line the cursor advertises (ADVICE r11).
+        # 8.x line the cursor advertises.
         return {
             "method": "POST",
             "url": f"{self.host}/{index}/_pit",
@@ -638,7 +637,7 @@ class SearchAfterSession(ScrollSession):
         # A failed PIT open (Exception past the retry budget, or a
         # response with no 'id') folds to the zero-progress contract —
         # same tolerance ScrollSession.drain has for an Exception in
-        # any position (ADVICE r11): nothing was read, nothing to
+        # any position: nothing was read, nothing to
         # close, the transcript shows the one attempted open.
         opened = responses[0]
         if isinstance(opened, Exception) or not isinstance(opened, dict):
@@ -745,9 +744,8 @@ def read_index_http(
     reports. An incremental-sync caller MUST know it: a slice that died
     mid-drain keeps its partial rows (at-least-once), but a watermark
     computed over the other slices' rows would overshoot its undrained
-    tail and lose those rows forever — the exact ADVICE r10 Mongo split
-    bug, whose ES twin this closes. A slice that reports nothing (failed,
-    or its task lost) counts as not drained."""
+    tail and lose those rows forever. A slice that reports nothing
+    (failed, or its task lost) counts as not drained."""
     n = max(1, slices)
     sess = session  # dataclass — pickles to executors
     typed = schema is not None and not store_source
@@ -833,7 +831,7 @@ def probe_time_values(session: ScrollSession, index: str, field: str) -> bool:
     """1-document existence probe: does the index hold ANY non-null
     value for ``field``? Public ``exists`` query DSL, ``size: 1``, no
     scroll param (so no server-side cursor), idempotent-retried. Used
-    by the ``skipped_no_time_field`` hold (ADVICE r10 low) to notice
+    by the ``skipped_no_time_field`` hold to notice
     when real timestamps MATERIALIZE after a bootstrap that found none
     — without it the hold is permanent and only a manual state reset
     recovers the index. Any failure answers False: the hold continues,
@@ -874,26 +872,26 @@ def sync_incremental_es_http(
        (auto semantics — the reference ES daemon instead refuses,
        es/es_to_bytehouse.py:968-971; the full-bootstrap divergence
        matches our CLI's auto mode);
-    2. ONE job drains the index DISTRIBUTED (:func:`read_index_http`: N
-       sliced cursors drained ON THE EXECUTORS, pages parsed JVM-side),
-       flattens the rows (``flatten_es``: ``@timestamp`` → ``timestamp``
-       value-side, P13) and ``localCheckpoint``s them. An Observation on
-       that checkpoint carries the row count, the number of slices that
-       drained to exhaustion and the watermark maxima — the per-slice
-       maxes of the serial fold (drain_http_incremental) collapse into
-       the same associative max, computed where the rows already live;
-    3. zero rows → return, no further job. Otherwise the snapshot (its
-       slice-status rows dropped) appends to the target — a separate job
-       over the checkpoint, so a task retry re-sends the same rows in the
-       same order and a ClickHouse ``insert_deduplication_token`` holds;
-    4. the state advances over the observed maxima — or, when any slice
-       did not drain to exhaustion, over the count alone, so the marks
-       hold and the next round re-fetches the failed slice's tail.
+    2. the index drains DISTRIBUTED (:func:`read_index_http`: N sliced
+       cursors drained ON THE EXECUTORS, pages parsed JVM-side), the
+       rows flatten (``flatten_es``: ``@timestamp`` → ``timestamp``
+       value-side, P13), and :func:`engine.land_snapshot` lands them:
+       one job checkpoints the drain and observes the row count, the
+       slices that drained to exhaustion (``SLICE_DONE`` rows) and the
+       watermark maxima — the per-slice maxes of the serial fold
+       (drain_http_incremental) collapse into the same associative max,
+       computed where the rows already live; zero rows fire no further
+       job, otherwise the append is a second job over the checkpoint;
+    3. the state advances over the observed maxima — or, when any slice
+       did not drain to exhaustion, over the count alone: the maxima
+       then belong to the healthy slices and may overshoot the failed
+       slice's undrained tail, so the marks hold and the next round
+       re-fetches that tail (duplicates possible, loss impossible).
 
     Returns ``(mode, rows, new_watermark)``."""
+    from es_to_clickhouse_spark.engine import land_snapshot
     from es_to_clickhouse_spark.flatten import flatten_es
     from es_to_clickhouse_spark.incremental import (
-        batch_aggregate,
         detect_time_field,
         detect_update_time_field,
     )
@@ -957,37 +955,23 @@ def sync_incremental_es_http(
     )
     out = flatten_es(df, stringify=False)
     cols = [c for c in out.columns if c != SLICE_DONE]
-    time_field = time_field if time_field in cols else detect_time_field(cols)
-    update_field = detect_update_time_field(cols)
-    obs = Observation()
-    snap = out.observe(
-        obs,
-        *batch_aggregate(time_field, update_field),
-        F.count(SLICE_DONE).alias("done"),
-    ).localCheckpoint()  # the one wire drain
-    marks = obs.get
-    # status rows are counted by "n" too; they hold no watermark values
-    n = marks.pop("n") - marks["done"]
-    if n == 0:
-        return mode, 0, since
-    target.append(index, snap.where(F.col(SLICE_DONE).isNull()).drop(SLICE_DONE))
     prior = SyncState(
         table_name=index,
         source_name=f"es_http:{index}",
-        time_field=time_field,
-        update_time_field=update_field,
+        time_field=time_field if time_field in cols else detect_time_field(cols),
+        update_time_field=detect_update_time_field(cols),
         last_sync_time=st.last_sync_time if st else since,
         last_update_time=st.last_update_time if st else None,
     )
-    # If ANY slice did not drain to exhaustion, the snapshot's maxima
-    # belong to the healthy slices and may overshoot the failed slice's
-    # undrained tail: the partial rows are appended (at-least-once) but
-    # the marks hold, and the next round re-fetches from them
-    # (duplicates possible, loss impossible).
-    complete = marks.pop("done") == max(1, slices)
-    committed = prior.advance(n, **(marks if complete else {}))
-    state.commit(committed)
-    return mode, n, committed.last_sync_time
+    committed = land_snapshot(
+        out,
+        prior,
+        state,
+        lambda snap: target.append(index, snap),
+        status=SLICE_DONE,
+        marks=lambda maxima, done: maxima if len(done) == max(1, slices) else {},
+    )
+    return mode, committed.last_sync_count, committed.last_sync_time
 
 
 def original_time_field(

@@ -400,37 +400,26 @@ def typed_watermark(s: str | None):
     return s
 
 
-#: Prefix marking a watermark sentinel line inside the drained-lines RDD
-#: (never a valid JSON document start, so it can share the cached RDD
-#: with the row lines and be split off by a cheap filter).
-WM_SENTINEL = "\x00wm\x00"
-
-
 def commit_watermark_prefix(
-    wm_lines: list[str], fallback: str | None
+    ranges: list[tuple], fallback: str | None
 ) -> str | None:
-    """Fold the per-range ``idx:status:candidate`` sentinels into the
-    watermark that is SAFE to commit: walk ranges in index order, take
-    each candidate as the running watermark, and STOP at the first
-    range that is not fully complete (``P``) or whose sentinel is
-    missing (a gap means the task's report was lost — treat as
-    incomplete). The ranges are ``_id``-chained, so the prefix walk's
-    final candidate proves every ``_id`` at or below it was drained;
-    anything above an incomplete range's progress re-drains next round.
-    Returns ``fallback`` (the previously committed watermark) when no
-    range proved any progress."""
-    entries = []
-    for ln in wm_lines:
-        idx_s, status, tag = ln[len(WM_SENTINEL):].split(":", 2)
-        entries.append((int(idx_s), status, tag))
-    entries.sort()
+    """Fold the per-range ``(idx, done, mark)`` reports
+    (:func:`read_collection_wire`) into the watermark that is SAFE to
+    commit: walk ranges in index order, take each mark as the running
+    watermark, and STOP at the first range that did not drain to
+    exhaustion or whose report is missing (its task's report was lost —
+    treat as incomplete). The ranges are ``_id``-chained, so the walk's
+    final mark proves every ``_id`` at or below it was drained; anything
+    above an incomplete range's progress re-drains next round. Returns
+    ``fallback`` (the previously committed watermark) when no range
+    proved any progress."""
     wm = fallback
-    for expect, (idx, status, tag) in enumerate(entries):
+    for expect, (idx, done, mark) in enumerate(sorted(ranges)):
         if idx != expect:
             break  # missing range report → nothing beyond it is proven
-        if tag:
-            wm = tag
-        if status != "C":
+        if mark:
+            wm = mark
+        if not done:
             break  # partial range: its own progress counts, nothing above
     return wm
 
@@ -534,6 +523,10 @@ def split_ranges(
     return ranges
 
 
+#: the per-range status column of :func:`read_collection_wire`
+RANGE_STATUS = "_range"
+
+
 def read_collection_wire(
     spark,
     session: MongoWireSession,
@@ -542,57 +535,49 @@ def read_collection_wire(
     store_source: bool = False,
     splits: int = 1,
 ):
-    """Executor-side keyset drain → cached NDJSON lines RDD (the Mongo
-    twin of ``read_index_http``'s transport). ``splits=1`` is the
-    reference's serial ordered walk (mongodb_to_bytehouse.py:524-531)
-    as ONE executor task; ``splits>1`` pre-splits the ``_id`` keyspace
-    (:func:`split_ranges`) and drains each range as its own executor
-    task with its own socket — the jar-free path's scale story, the
-    Mongo twin of ES sliced scroll. Returns the lines RDD; the caller
-    counts/parses it (zero-row rounds must be detected BEFORE schema
-    inference, which cannot infer from no rows).
+    """Executor-side keyset drain → a DataFrame of NDJSON documents in
+    ``value`` (the Mongo twin of ``read_index_http``'s transport).
+    ``splits=1`` is the reference's serial ordered walk
+    (mongodb_to_bytehouse.py:524-531) as ONE executor task; ``splits>1``
+    pre-splits the ``_id`` keyspace (:func:`split_ranges`) and drains
+    each range as its own executor task with its own socket — the Mongo
+    twin of ES sliced scroll.
 
-    EVERY range reports back one :data:`WM_SENTINEL`-prefixed line
-    ``idx:status:candidate`` through the same cached RDD: ``status`` is
-    ``C`` (drained to exhaustion) or ``P`` (transport error mid-range —
-    partial rows kept), and ``candidate`` is the furthest TYPED ``_id``
-    position this range PROVES synced — its ``lte`` boundary when it
-    completed a bounded range (idle ranges included: an empty completed
-    range still proves everything up to its boundary is drained), else
-    the last drained id (the cursor is ``_id``-sorted, so that IS the
-    server-order max seen). The caller commits the watermark from the
-    longest contiguous prefix of completed ranges only — a completed
-    HIGHER range must never advance the watermark past an incomplete
-    lower range's undrained tail (those rows would be lost forever; the
-    tail is instead re-drained next round: at-least-once, exactly the
-    serial walk's posture). The executor is the only place the BSON
-    type is still known; a driver-side re-derivation from the
-    stringified rows would have to guess the type back (the exact bug
-    :func:`tag_watermark` kills)."""
+    EVERY range also reports one row whose :data:`RANGE_STATUS` column
+    (NULL on document rows) is ``(idx, done, mark)``: ``done`` is True
+    when the range drained to exhaustion (False: transport error
+    mid-range, partial rows kept), and ``mark`` is the furthest TYPED
+    ``_id`` position the range PROVES synced, in :func:`tag_watermark`
+    form — its ``lte`` boundary when it completed a bounded range (idle
+    ranges included: an empty completed range still proves everything
+    up to its boundary is drained), else the last drained id (the cursor
+    is ``_id``-sorted, so that IS the server-order max seen). The caller
+    commits the watermark over the longest contiguous prefix of
+    completed ranges only (:func:`commit_watermark_prefix`). The executor
+    is the only place the BSON type is still known; a re-derivation
+    from the stringified rows would have to guess the type back."""
     sess = session  # dataclass — pickles to the executor
     ranges = split_ranges(sess, collection, splits, start_after=start_after)
 
-    def _drain(task: tuple[int, tuple]) -> list[str]:
+    def _drain(task: tuple[int, tuple]) -> list[tuple]:
         idx, (gt, lte) = task
-        rows, _last, completed = sess.drain_socket(
+        rows, last, completed = sess.drain_socket(
             collection, store_source=store_source, start_after=gt, lte=lte
         )
-        out = [json.dumps(r, ensure_ascii=False, default=str) for r in rows]
+        out = [(json.dumps(r, ensure_ascii=False, default=str), None) for r in rows]
         if completed and lte is not None:
-            cand = lte  # whole bounded range proven drained (even if idle)
+            mark = lte  # whole bounded range proven drained (even if idle)
         elif rows:
-            cand = _last  # ordered cursor → furthest id actually seen
+            mark = last  # ordered cursor → furthest id actually seen
         else:
-            cand = None  # nothing proven beyond the committed watermark
-        status = "C" if completed else "P"
-        tag = tag_watermark(cand) if cand is not None else ""
-        out.append(f"{WM_SENTINEL}{idx:08d}:{status}:{tag}")
+            mark = None  # nothing proven beyond the committed watermark
+        out.append((None, (idx, completed, tag_watermark(mark))))
         return out
 
-    return (
-        spark.sparkContext.parallelize(list(enumerate(ranges)), len(ranges))
-        .flatMap(_drain)
-        .cache()
+    rdd = spark.sparkContext.parallelize(list(enumerate(ranges)), len(ranges))
+    return spark.createDataFrame(
+        rdd.flatMap(_drain),
+        f"value string, {RANGE_STATUS} struct<idx:int, done:boolean, mark:string>",
     )
 
 
@@ -612,53 +597,49 @@ def sync_incremental_mongo_wire(
     1. the keyset resumes from the committed ``last_id`` watermark
        (typed via :func:`typed_watermark`); no state → full scan
        seeding it (the reference's auto bootstrap);
-    2. the collection drains executor-side (one ordered keyset walk)
-       and parses JVM-side from NDJSON;
-    3. rows stringify-project (``flatten_mongo`` — the Mongo dialect)
-       and append to the target;
+    2. the collection drains executor-side (:func:`read_collection_wire`)
+       and lands through :func:`engine.land_snapshot`: one job
+       checkpoints the document lines and the range reports and
+       observes their count; zero documents fire no further job;
+    3. the documents parse from the checkpoint (``spark.read.json``,
+       one schema pass), stringify-project (``flatten_mongo`` — the
+       Mongo dialect) and append to the target;
     4. the watermark advances along the LONGEST CONTIGUOUS PREFIX of
        fully-completed ranges (:func:`commit_watermark_prefix`): the
-       first incomplete range contributes its partial progress (the
-       ordered cursor's last id) and then STOPS the walk, so a
-       completed higher range can never mask a failed range's
-       undrained tail — that tail re-drains next round
+       first incomplete range contributes its partial progress and then
+       STOPS the walk, so a completed higher range can never mask a
+       failed range's undrained tail — that tail re-drains next round
        (at-least-once, the serial walk's posture; the already-appended
-       higher-range rows may duplicate on that retry, which
-       at-least-once permits and the CH sink's dedup tokens absorb
-       within a round). Committed in :func:`tag_watermark`'s tagged
-       string form so the BSON type survives the StringType state
-       column and numeric ``_id`` collections commit cleanly (a raw
-       Python int would fail STATE_SCHEMA verification AFTER the
-       append already landed, duplicating rows on retry).
+       higher-range rows may duplicate on that retry, which the CH
+       sink's dedup tokens absorb within a round). The mark is
+       committed in :func:`tag_watermark`'s tagged string form, so the
+       BSON type survives the StringType state column.
 
     Returns ``(mode, rows, new_last_id)`` — ``new_last_id`` tagged."""
+    from es_to_clickhouse_spark.engine import land_snapshot
     from es_to_clickhouse_spark.flatten import flatten_mongo
     from es_to_clickhouse_spark.state import SyncState
 
     st = state.get(collection)
     last = st.last_id if st else None
     mode = "incremental" if last is not None else "full"
-    raw = read_collection_wire(
+    drain = read_collection_wire(
         spark, session, collection,
         start_after=typed_watermark(last), splits=splits,
     )
-    wm_lines = raw.filter(lambda s: s.startswith(WM_SENTINEL)).collect()
-    new_last = commit_watermark_prefix(wm_lines, fallback=last)
-    lines = raw.filter(lambda s: not s.startswith(WM_SENTINEL))
-    if lines.isEmpty():  # idle round: nothing drained, nothing to commit
-        raw.unpersist()
-        return mode, 0, last
-    df = spark.read.json(lines).localCheckpoint()  # one wire drain
-    raw.unpersist()  # transport cache released (poll daemons leak otherwise)
-    out = flatten_mongo(df)
-    n = out.count()
-    target.append(collection, out)
-    state.commit(
-        SyncState(
-            table_name=collection,
-            source_name=f"mongo_wire:{session.database}.{collection}",
-            last_id=new_last,
-            last_sync_count=n,
-        )
+    prior = st or SyncState(
+        table_name=collection,
+        source_name=f"mongo_wire:{session.database}.{collection}",
     )
-    return mode, n, new_last
+    committed = land_snapshot(
+        drain,
+        prior,
+        state,
+        lambda snap: target.append(
+            collection,
+            flatten_mongo(spark.read.json(snap.rdd.map(lambda r: r.value))),
+        ),
+        status=RANGE_STATUS,
+        marks=lambda _, ranges: {"max_id": commit_watermark_prefix(ranges, last)},
+    )
+    return mode, committed.last_sync_count, committed.last_id

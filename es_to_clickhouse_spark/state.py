@@ -108,14 +108,18 @@ class SyncState:
 
 
 def _later(new: str | None, old: str | None) -> str | None:
-    """The later of two string watermarks. Integers compare as numbers
-    ('99' > '100' as strings); anything else as strings, which is
-    chronological for the fixed-width ISO text of a timestamp cast and
-    exact for fixed-width ids."""
+    """The later of two string watermarks. Integers, bare or both under
+    the Mongo ``int:`` type tag, compare as numbers ('99' > '100' as
+    strings); anything else as strings, which is chronological for the
+    fixed-width ISO text of a timestamp cast and exact for fixed-width
+    ids."""
     if new is None or old is None:
         return old if new is None else new
+    a, b = new, old
+    if a.startswith("int:") and b.startswith("int:"):
+        a, b = a[4:], b[4:]
     try:
-        return new if int(new) > int(old) else old
+        return new if int(a) > int(b) else old
     except ValueError:
         return new if new > old else old
 

@@ -149,6 +149,29 @@ def test_cli_list_and_status_modes(spark, tmp_path, capsys):
     assert int(rows[0]["last_sync_count"]) == 3
 
 
+def test_cli_parquet_unknown_table_is_nonzero(spark, tmp_path, capsys):
+    """A typo'd ``--tables`` on the parquet catalog reports the same
+    error line a wire source does and exits 1; the tables that match
+    still sync."""
+    import json as _json
+
+    source, wh = tmp_path / "src", tmp_path / "wh"
+    _seed_source(spark, source)
+    env = {"SOURCE_DIR": str(source), "WAREHOUSE_DIR": str(wh)}
+    assert main(["--mode", "full", "--tables", "typo,logs,zz*"], environ=env) == 1
+    out = [
+        _json.loads(ln) for ln in capsys.readouterr().out.splitlines()
+        if ln.startswith("{")
+    ]
+    assert {"table": "typo", "error": "table not found"} in out
+    assert {"pattern": "zz*", "error": "no match"} in out
+    assert [o["rows"] for o in out if o.get("table") == "logs"] == [3]
+    assert main(["--mode", "incremental", "--tables", "typo"], environ=env) == 1
+    assert capsys.readouterr().out.splitlines() == [
+        '{"table": "typo", "error": "table not found"}'
+    ]
+
+
 def test_resolve_master_honors_deployment():
     """A cluster deployment must be able to own the master: env-var
     masters win, a spark-submit --master gets no code-side override,
@@ -174,18 +197,18 @@ def test_expand_patterns_per_call_failures_and_dedup(capsys):
     that materializes mid-run stops failing the exit code), and a
     caller-carried seen_errors set prints each distinct error line
     once instead of every round."""
-    from es_to_clickhouse_spark.__main__ import _expand_patterns
+    from es_to_clickhouse_spark.functions import expand_patterns
 
     seen: set[str] = set()
-    tables, f = _expand_patterns("late_tbl,miss*", [], seen_errors=seen)
+    tables, f = expand_patterns("late_tbl,miss*", [], seen_errors=seen)
     assert (tables, f) == ([], 2)
     # same round shape again: still counted, NOT reprinted
-    tables, f = _expand_patterns("late_tbl,miss*", [], seen_errors=seen)
+    tables, f = expand_patterns("late_tbl,miss*", [], seen_errors=seen)
     assert (tables, f) == ([], 2)
     out = capsys.readouterr().out
     assert out.count("late_tbl") == 1 and out.count("miss*") == 1
     # the table materializes: this round reports zero failures
-    tables, f = _expand_patterns(
+    tables, f = expand_patterns(
         "late_tbl,miss*", ["late_tbl", "missing"], seen_errors=seen
     )
     assert (tables, f) == (["late_tbl", "missing"], 0)

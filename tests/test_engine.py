@@ -203,6 +203,66 @@ def test_continuous_bounded_rounds(pipeline, spark):
     assert rounds[1][0].rows == 0  # second round: nothing new
 
 
+def _continuous_run(spark, root, faults: bool):
+    """A full sync, two new rows, then ``sync_continuous(max_rounds=3)``;
+    with ``faults`` the listing raises ``OSError`` in round 2 and the
+    table round raises ``ValueError`` in round 1."""
+
+    class FlakyCatalog(ParquetCatalog):
+        lists = 0
+        bad_reads = 1
+
+        def list_tables(self, pattern=None):
+            self.lists += 1
+            if self.lists == 2:
+                raise OSError("connection reset by peer")
+            return super().list_tables(pattern)
+
+        def read(self, name, files=None):
+            if self.bad_reads:
+                self.bad_reads -= 1
+                raise ValueError("garbled page")
+            return super().read(name, files)
+
+    source, wh = root / "source", str(root / "warehouse")
+    os.makedirs(source)
+    _append_rows(spark, source, [(1, "2024-01-01 00:00:00", "a")])
+    engine = SyncEngine(
+        spark=spark,
+        catalog=ParquetCatalog(spark, str(source)),
+        target=WarehouseTarget(spark, wh),
+        state=StateStore(spark, wh),
+        id_field="event_id",
+    )
+    engine.sync_full()
+    _append_rows(
+        spark, source, [(2, "2024-01-02 00:00:00", "b"), (3, "2024-01-03 00:00:00", "c")]
+    )
+    if faults:
+        engine.catalog = FlakyCatalog(spark, str(source))
+    rounds = engine.sync_continuous(max_rounds=3, interval_s=0.0)
+    rows = sorted(
+        tuple(r) for r in engine.target.read("logs").select("event_id", "payload").collect()
+    )
+    st = engine.state.get("logs")
+    return engine, rounds, rows, (st.last_sync_time, st.last_id, st.last_sync_count)
+
+
+def test_continuous_survives_listing_and_round_errors(spark, tmp_path):
+    """The poll loop's error policy: a failed listing or table round is
+    counted and the next round retries, so the run ends where a run
+    without faults ends."""
+    clean, clean_rounds, clean_rows, clean_state = _continuous_run(
+        spark, tmp_path / "clean", faults=False
+    )
+    flaky, rounds, rows, state = _continuous_run(spark, tmp_path / "flaky", faults=True)
+    assert [[r.rows for r in rnd] for rnd in clean_rounds] == [[2], [0], [0]]
+    assert [[r.rows for r in rnd] for rnd in rounds] == [[], [], [2]]
+    assert (flaky.errors, clean.errors) == (2, 0)
+    assert rows == clean_rows == [(1, "a"), (2, "b"), (3, "c")]
+    assert state == clean_state
+
+
 def _part_files(engine, table):
     import glob
 

@@ -494,13 +494,10 @@ def test_commit_watermark_prefix_stops_at_incomplete_range():
     (those rows would be lost forever). The fold walks ranges in index
     order, takes each candidate, and stops at the first partial or
     missing report — the partial range's own progress still counts."""
-    from es_to_clickhouse_spark.sources.mongo_wire import (
-        WM_SENTINEL,
-        commit_watermark_prefix,
-    )
+    from es_to_clickhouse_spark.sources.mongo_wire import commit_watermark_prefix
 
     def line(idx, status, tag):
-        return f"{WM_SENTINEL}{idx:08d}:{status}:{tag}"
+        return (idx, status == "C", tag or None)
 
     # all complete → last candidate wins
     assert commit_watermark_prefix(
@@ -719,3 +716,66 @@ def test_cli_continuous_survives_catalog_blip(spark, tmp_path, capsys):
         assert rc == 1  # the blip is still reported in the exit code
     finally:
         srv.shutdown()
+
+
+def test_sync_incremental_ids_crossing_99_to_100(fake_mongod, spark, tmp_path):
+    """The committed ``int:`` mark moves 99 → 100 as a number; compared
+    as strings ``"int:100" < "int:99"`` would pin it and every later
+    round would re-drain id 100 onward."""
+    from es_to_clickhouse_spark.sink import WarehouseTarget
+    from es_to_clickhouse_spark.sources.mongo_wire import (
+        MongoWireSession,
+        sync_incremental_mongo_wire,
+    )
+    from es_to_clickhouse_spark.state import StateStore
+
+    docs = [{"_id": i, "n": i} for i in range(100)]
+    port, log = fake_mongod(docs=docs)
+    sess = MongoWireSession(port=port, database="db", batch_size=50)
+    target = WarehouseTarget(spark, str(tmp_path / "wh"))
+    state = StateStore(spark, str(tmp_path / "wh"))
+    assert sync_incremental_mongo_wire(spark, sess, target, state, "ev") == (
+        "full", 100, "int:99"
+    )
+    docs.extend({"_id": i, "n": i} for i in (100, 101))
+    assert sync_incremental_mongo_wire(spark, sess, target, state, "ev") == (
+        "incremental", 2, "int:101"
+    )
+    assert state.get("ev").last_id == "int:101"
+    del log[:]
+    assert sync_incremental_mongo_wire(spark, sess, target, state, "ev") == (
+        "incremental", 0, "int:101"
+    )
+    assert [c["filter"] for c in log if "find" in c][0] == {"_id": {"$gt": 101}}
+    wh = spark.read.parquet(str(tmp_path / "wh" / "ev"))
+    assert sorted(int(r["_id"]) for r in wh.select("_id").collect()) == list(range(102))
+
+
+@pytest.mark.parametrize("splits", [1, 4], ids=["splits=1", "splits=4"])
+def test_sync_mongo_wire_round_job_count(fake_mongod, spark, tmp_path, count_jobs, splits):
+    """An active round is the snapshot job, the JSON schema pass over
+    the checkpoint and the append: 3 jobs. An idle round is the snapshot
+    alone: 1 job."""
+    from es_to_clickhouse_spark.sink import WarehouseTarget
+    from es_to_clickhouse_spark.sources.mongo_wire import (
+        MongoWireSession,
+        sync_incremental_mongo_wire,
+    )
+    from es_to_clickhouse_spark.state import StateStore
+
+    docs = [{"_id": i, "n": i, "s": f"v{i}"} for i in range(400)]
+    port, _ = fake_mongod(docs=docs)
+    sess = MongoWireSession(port=port, database="db", batch_size=100)
+    target = WarehouseTarget(spark, str(tmp_path / "wh"))
+    state = StateStore(spark, str(tmp_path / "wh"))
+
+    def sync():
+        return sync_incremental_mongo_wire(
+            spark, sess, target, state, "ev", splits=splits
+        )
+
+    assert sync()[:2] == ("full", 400)
+    assert count_jobs(sync) == (("incremental", 0, "int:399"), 1)
+    docs.extend({"_id": i, "n": i, "s": f"v{i}"} for i in range(400, 440))
+    assert count_jobs(sync) == (("incremental", 40, "int:439"), 3)
+    assert count_jobs(sync) == (("incremental", 0, "int:439"), 1)

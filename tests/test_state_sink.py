@@ -108,6 +108,19 @@ def test_state_sees_other_writers_and_restored_snapshots(spark, tmp_path):
     assert first.get("t1").last_sync_time == "2024-01-01"
 
 
+def test_advance_orders_int_tagged_ids_numerically():
+    """Mongo's ``int:``-tagged id marks move forward as numbers: as
+    strings ``"int:100" < "int:99"``, which would pin the mark at 99."""
+    st = SyncState("t1", last_id="int:99")
+    assert st.advance(1, max_id="int:100").last_id == "int:100"
+    assert st.advance(1, max_id="int:100").advance(1, max_id="int:99").last_id == (
+        "int:100"
+    )
+    # other tags (and a mixed pair) still compare as strings
+    assert st.advance(1, max_id="str:a").last_id == "str:a"
+    assert SyncState("t1", last_id="str:b").advance(1, max_id="str:a").last_id == "str:b"
+
+
 def test_state_commit_rejects_mistyped_field(spark, tmp_path):
     """A raw int in a string column raises before any byte lands — no
     part file (and no temp file) is left behind."""
