@@ -10,8 +10,9 @@ Reference entry points re-expressed (SURVEY §3):
 - ``--list-only``        es/es_to_bytehouse.py:1246-1253
 
 The CLI only builds the source (the parquet catalog, or with
-``--ch-http-url`` / ``--es-http-url`` / ``--mongo-uri`` a live wire in
-the incremental and continuous modes) and the target; ``SyncEngine``
+``--ch-http-url`` / ``--es-http-url`` / ``--mongo-uri`` a live wire,
+whose round bootstraps unseen tables itself, so every mode but
+``full`` runs on it) and the target; ``SyncEngine``
 runs every mode, prints one JSON line per table round or error, and
 the exit code is 1 when any listing, table round or pattern failed.
 
@@ -67,7 +68,7 @@ def build_parser(env: EnvConfig | None = None) -> argparse.ArgumentParser:
         "--source-dir",
         default=env.source_dir,
         help="parquet source catalog dir [env: SOURCE_DIR] — required "
-        "unless --ch-http-url drives a live incremental sync",
+        "unless a live source URL is given",
     )
     p.add_argument(
         "--warehouse",
@@ -136,8 +137,8 @@ def build_parser(env: EnvConfig | None = None) -> argparse.ArgumentParser:
         "--ch-http-url",
         default=env.ch_http_url,
         help="ClickHouse HTTP-interface URL (e.g. http://ch:8123) — "
-        "switches --mode incremental to the jar-free live source "
-        "(sources/ch_http.py) instead of the parquet catalog "
+        "selects the jar-free live source (sources/ch_http.py) "
+        "instead of the parquet catalog "
         "[env: CH_HTTP_URL]",
     )
     p.add_argument(
@@ -156,8 +157,8 @@ def build_parser(env: EnvConfig | None = None) -> argparse.ArgumentParser:
     p.add_argument(
         "--es-http-url",
         default=env.es_http_url,
-        help="Elasticsearch HTTP URL (e.g. http://es:9200) — switches "
-        "--mode incremental to the jar-free live SLICED-SCROLL source "
+        help="Elasticsearch HTTP URL (e.g. http://es:9200) — selects "
+        "the jar-free live SLICED-SCROLL source "
         "(sources/es.py sync_incremental_es_http): full-bootstrap for "
         "unseen indices, watermark ranges after [env: ES_HTTP_URL]",
     )
@@ -183,8 +184,8 @@ def build_parser(env: EnvConfig | None = None) -> argparse.ArgumentParser:
     p.add_argument(
         "--mongo-uri",
         default=env.mongo_uri,
-        help="MongoDB URI (mongodb://host:port) — switches --mode "
-        "incremental to the jar-free live OP_MSG source "
+        help="MongoDB URI (mongodb://host:port) — selects the "
+        "jar-free live OP_MSG source "
         "(sources/mongo_wire.py: keyset scan with typed _id resume) "
         "[env: MONGO_URI]",
     )
@@ -302,13 +303,18 @@ def main(argv: list[str] | None = None, environ: dict | None = None) -> int:
             f"invalid ES_CURSOR / --es-cursor {args.es_cursor!r}: "
             "expected 'scroll' or 'search_after'"
         )
-    live = args.mode in ("incremental", "continuous") and [
-        u for u in (args.ch_http_url, args.es_http_url, args.mongo_uri) if u
-    ]
-    if live and len(live) > 1:
+    live = [u for u in (args.ch_http_url, args.es_http_url, args.mongo_uri) if u]
+    if len(live) > 1:
         parser.error(
             "--ch-http-url / --es-http-url / --mongo-uri are mutually "
             "exclusive source selections"
+        )
+    if live and args.mode == "full":
+        # a wire round is incremental once the table has state; it has
+        # no way to re-read a table from scratch
+        parser.error(
+            "--mode full cannot run on a live source; --mode auto "
+            "bootstraps unseen tables and syncs the rest incrementally"
         )
     if not args.source_dir and not live:
         parser.error("--source-dir is required (or set SOURCE_DIR)")

@@ -725,7 +725,9 @@ def rj1_range_join(spark, sf_dir):
     "q3_shipping_priority",
     """
     SELECT l.l_orderkey,
-           round(sum(l.l_extendedprice * (1 - l.l_discount)), 2) AS revenue,
+           CAST(round(sum(CAST(l.l_extendedprice AS DECIMAL(12,2))
+                          * (1 - CAST(l.l_discount AS DECIMAL(3,2)))), 2)
+                AS DOUBLE) AS revenue,
            strftime(o.o_orderdate, '%Y-%m-%d') AS orderdate,
            o.o_orderpriority
     FROM customer c
@@ -741,7 +743,10 @@ def rj1_range_join(spark, sf_dir):
 def q3_shipping_priority(spark, sf_dir):
     """TPC-H Q3 shape: fact-fact shuffle join on l_orderkey with the
     customer dim broadcast; filters pushed to the parquet scans on both
-    fact sides before the join."""
+    fact sides before the join. Revenue sums exact decimals (prices are
+    whole cents, discounts whole hundredths): a double sum lands a
+    half-cent boundary on different sides of round(., 2) in Spark and
+    DuckDB."""
     c = t(spark, sf_dir, "customer")
     o = t(spark, sf_dir, "orders")
     l = t(spark, sf_dir, "lineitem")
@@ -762,8 +767,12 @@ def q3_shipping_priority(spark, sf_dir):
         )
         .agg(
             F.round(
-                F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2
-            ).alias("revenue")
+                F.sum(
+                    F.col("l_extendedprice").cast("decimal(12,2)")
+                    * (1 - F.col("l_discount").cast("decimal(3,2)"))
+                ),
+                2,
+            ).cast("double").alias("revenue")
         )
         .select("l_orderkey", "revenue", "orderdate", "o_orderpriority")
         .orderBy(F.desc("revenue"), "l_orderkey")
@@ -871,7 +880,7 @@ def o2_keyset_page(spark, sf_dir):
     scale-correct replacement for LIMIT/OFFSET: the predicate prunes at
     the scan, the sort is TakeOrderedAndProject. Keyset offset 500 so
     the page is non-empty at EVERY test SF (sf0.001 ids stop at 999;
-    the old 5000 cutoff made this vacuously green there — r6 VERDICT)."""
+    a higher cutoff would make this vacuously green there)."""
     return (
         t(spark, sf_dir, "events")
         .where(F.col("event_id") > 500)
@@ -1316,7 +1325,7 @@ def rj2_interval_coverage(spark, sf_dir):
     # cut points are table statistics (same contract as j9's cache): the
     # coverage lookup's bucket cuts sample the truncated point column,
     # and recomputing them cost one driver quantile job per invocation.
-    # Staleness trade (ADVICE r14): the entry is keyed on sf_dir and
+    # Staleness trade: the entry is keyed on sf_dir and
     # never invalidated, so if the files under sf_dir are REWRITTEN
     # within one process lifetime the cuts reflect the first snapshot —
     # still correct (cut placement only moves bucket balance, any cut

@@ -323,8 +323,8 @@ def sk8_session_p95_sketch(spark, sf_dir):
     reduce to a bounded sketch whose estimate the DuckDB oracle
     replicates bit-for-bit (md5 bottom-k + ceil(p*n) selection). At a
     billion sessions b5's exact array cell is the scale hazard — this
-    query IS the documented swap, incrementally maintainable via
-    rollup.refresh_rollup since bottom-k merges exactly."""
+    query IS the documented swap, and bottom-k merges exactly across
+    batches."""
     from es_to_clickhouse_spark.functions import epoch_micros
     from es_to_clickhouse_spark.rollup import batch_partials, sketch_quantile
 

@@ -1,20 +1,13 @@
 """ClickHouse/ByteHouse DDL generation (SURVEY S16-S18).
 
-Pure string builders mirroring the reference's target DDL:
+Pure string builders for the target DDL the HTTP sink
+(sources/ch_http.ClickHouseHttpTarget) sends:
 
-- wide ``Nullable(String)`` table + system columns ``_id``, optional
-  ``_source``, ``_timestamp`` with defaults (es/es_to_bytehouse.py:300-336,
-  mongodb/mongodb_to_bytehouse.py:363-394);
-- ``ENGINE = CnchMergeTree() ORDER BY tuple() UNIQUE KEY _id`` upsert
-  contract (es/es_to_bytehouse.py:329-334);
-- passthrough DDL copying source column types verbatim
+- ``CREATE DATABASE IF NOT EXISTS`` (es/es_to_bytehouse.py:401-410);
+- passthrough DDL from the Spark schema
   (clickhouse/clickhouse_to_bytehouse.py:240-262);
-- idempotent ``ALTER TABLE ADD COLUMN`` (es/es_to_bytehouse.py:1020-1041);
 - Spark-type → ClickHouse-type map for typed targets (an engine extension;
   the reference maps everything to String, §1.2).
-
-These strings feed the JDBC sink's DDL path; generation itself needs no
-server, so it's fully unit-tested.
 """
 
 from __future__ import annotations
@@ -56,41 +49,6 @@ def create_database_sql(database: str) -> str:
     return f"CREATE DATABASE IF NOT EXISTS {quote_ident(database)}"
 
 
-def create_wide_string_table_sql(
-    database: str,
-    table: str,
-    fields: list[str],
-    engine: str = "MergeTree",
-    unique_key: str | None = "_id",
-    store_source: bool = False,
-) -> str:
-    """The reference's target DDL shape (es/es_to_bytehouse.py:300-336):
-    every data field Nullable(String); system columns typed; upsert key.
-
-    ``engine``: "CnchMergeTree" for ByteHouse, "ReplacingMergeTree" is the
-    open-source ClickHouse upsert analog (UNIQUE KEY is ByteHouse-only,
-    so for plain ClickHouse we emit ReplacingMergeTree(_timestamp)).
-    """
-    cols = ["`_id` String"]
-    if store_source:
-        cols.append("`_source` String")
-    cols += [f"{quote_ident(f)} Nullable(String)" for f in sorted(fields)]
-    cols.append("`_timestamp` DateTime64(3) DEFAULT now64(3)")
-    body = ",\n  ".join(cols)
-    if engine == "CnchMergeTree" and unique_key:
-        tail = f"ENGINE = CnchMergeTree() ORDER BY tuple() UNIQUE KEY {quote_ident(unique_key)}"
-    elif unique_key:
-        tail = (
-            f"ENGINE = ReplacingMergeTree(`_timestamp`) ORDER BY {quote_ident(unique_key)}"
-        )
-    else:
-        tail = f"ENGINE = {engine}() ORDER BY tuple()"
-    return (
-        f"CREATE TABLE IF NOT EXISTS {quote_ident(database)}.{quote_ident(table)} (\n"
-        f"  {body}\n) {tail}"
-    )
-
-
 def create_typed_table_sql(
     database: str, table: str, schema: T.StructType, engine: str = "MergeTree"
 ) -> str:
@@ -104,13 +62,3 @@ def create_typed_table_sql(
         f"CREATE TABLE IF NOT EXISTS {quote_ident(database)}.{quote_ident(table)} (\n"
         f"  {cols}\n) ENGINE = {engine}() ORDER BY tuple()"
     )
-
-
-def add_columns_sql(database: str, table: str, new_fields: list[str]) -> list[str]:
-    """Idempotent column adds (es/es_to_bytehouse.py:1020-1041) — one
-    statement per column, IF NOT EXISTS instead of swallowing errors."""
-    return [
-        f"ALTER TABLE {quote_ident(database)}.{quote_ident(table)} "
-        f"ADD COLUMN IF NOT EXISTS {quote_ident(f)} Nullable(String)"
-        for f in sorted(new_fields)
-    ]

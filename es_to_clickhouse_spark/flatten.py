@@ -131,29 +131,3 @@ def stringify_columns_mongo(schema: T.StructType) -> list[Column]:
 def flatten_mongo(df: DataFrame) -> DataFrame:
     """Mongo-dialect stringify-projection (one projection)."""
     return df.select(*stringify_columns_mongo(df.schema))
-
-
-def flatten_struct_type(
-    schema: T.StructType, dialect: str = "es", prefix: str = ""
-) -> dict[str, T.DataType]:
-    """Schema-level flatten (the mapping analog, es/es_to_bytehouse.py:275-294):
-    returns {flat_name: leaf_type} without touching data."""
-    out: dict[str, T.DataType] = {}
-    for field in schema.fields:
-        name = sanitize_field_name(field.name, dialect)
-        flat = f"{prefix}_{name}" if prefix else name
-        if dialect == "es" and isinstance(field.dataType, T.StructType):
-            out.update(flatten_struct_type(field.dataType, dialect, flat))
-        else:
-            out[flat] = field.dataType
-    return out
-
-
-def schema_union(*field_maps: dict[str, T.DataType]) -> dict[str, T.DataType]:
-    """Union of declared ∪ sampled field sets, first-seen type wins
-    (es/es_to_bytehouse.py:762-771)."""
-    out: dict[str, T.DataType] = {}
-    for m in field_maps:
-        for k, v in m.items():
-            out.setdefault(k, v)
-    return out

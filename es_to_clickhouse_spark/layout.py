@@ -96,34 +96,6 @@ def zorder_by(
     return df.withColumn(out_col, zorder_value(normed, bits))
 
 
-def write_partitioned(
-    df: DataFrame,
-    path: str,
-    partition_cols: list[str],
-    cluster_cols: list[str] | None = None,
-    files_per_partition: int = 1,
-    fmt: str = "parquet",
-) -> None:
-    """Hive-style partitioned write (``path/col=value/...``): the coarse
-    pruning layer above file stats — a partition-column predicate never
-    LISTS the other directories, which is what keeps a 100 TB table's
-    planning time flat. ``cluster_cols`` additionally range-clusters
-    within each partition (stats-based pruning for non-partition keys).
-
-    The repartition on partition_cols bounds the writer to
-    ``files_per_partition`` files per partition — without it every task
-    writes to every partition (tasks x partitions small files)."""
-    out = df.repartition(files_per_partition * 32, *partition_cols)
-    if cluster_cols:
-        out = out.sortWithinPartitions(*partition_cols, *cluster_cols)
-    (
-        out.write.mode("overwrite")
-        .partitionBy(*partition_cols)
-        .format(fmt)
-        .save(path)
-    )
-
-
 def compact(
     df: DataFrame,
     dest_path: str,

@@ -1,4 +1,4 @@
-"""Deduplication operators: exact, MinHash(+LSH), n-gram Jaccard, SimHash,
+"""Deduplication operators: exact, MinHash(+LSH), Jaccard verify, SimHash,
 embedding near-dup.
 
 Scale design:
@@ -10,9 +10,9 @@ Scale design:
   near-dup search into a groupBy on band keys: candidate pairs only ever
   materialize within a bucket. Bucket sizes are bounded in practice; a
   ``max_bucket`` guard drops pathological buckets (logged, not silently).
-- **n-gram Jaccard** is the verify step applied to candidate pairs (never
-  all pairs at scale; the corpus query blocks by `lang` to stay quadratic
-  only within small blocks).
+- **Jaccard** is the verify step applied to candidate pairs (never all
+  pairs at scale); within-block pairing goes through
+  :func:`salted_block_pairs`.
 - **SimHash** packs token-hash bit votes into a 16-bit signature with pure
   integer expressions.
 """
@@ -122,7 +122,7 @@ def salted_block_pairs(
     scans as one partition and AQE will not widen it on byte-size
     grounds — the cost here is compute, invisible to size heuristics.
 
-    ``salt_col`` (r15): name of an int column on ``base`` holding a
+    ``salt_col``: name of an int column on ``base`` holding a
     PER-ROW salt count that must be CONSTANT WITHIN EACH BLOCK (it is a
     function of the block, e.g. ceil(block_population / target) — see
     :func:`sized_block_salts`). Both pair sides then derive the same
@@ -131,7 +131,7 @@ def salted_block_pairs(
     granularity: uniform small blocks pay zero replication, oversized
     blocks alone fan out. Overrides ``n_salts`` when given.
 
-    ``n_parts`` (r15): pair-exchange partition count; defaults to
+    ``n_parts``: pair-exchange partition count; defaults to
     ``defaultParallelism``. The pair join is a forced SHUFFLE_HASH (see
     below) whose per-partition build map holds ~build_bytes/n_parts: a
     count pinned to the LOCAL core count OOMs once the replicated
@@ -166,8 +166,8 @@ def salted_block_pairs(
     # SHUFFLE_HASH, not the default sort-merge: both join inputs carry
     # the full payload (vectors / token arrays), and SMJ SORTS both
     # replicated sides — at 2M x dim-768 x 2 probes that sort spilled
-    # >34 GB on top of the exchange and filled the disk (r14 realdim
-    # autopsy). A shuffled hash join streams one side against a
+    # >34 GB on top of the exchange and filled the disk. A shuffled
+    # hash join streams one side against a
     # per-partition build map (~bytes/partitions resident, spillable
     # since Spark 3.1), so the pair stage pays the exchange ONCE with
     # no sort copies. Pair-key uniformity (the salt-pair design above)
@@ -178,95 +178,6 @@ def salted_block_pairs(
         # same-salt bucket (lo == hi): id order dedups; cross-salt: every
         # pair appears exactly once (a.salt == lo < hi == b.salt)
         (F.col("_salt_a") != F.col("_salt_b")) | (F.col("_ida") < F.col("_idb"))
-    )
-
-
-def ngram_jaccard_pairs(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    block_col: str,
-    threshold: float = 0.5,
-    n_salts: int = 16,
-) -> DataFrame:
-    """Near-dup pairs by token-set Jaccard, blocked by ``block_col`` so the
-    self-join is quadratic only within blocks (at scale the block key is an
-    LSH band key from minhash_lsh_buckets). Pairing and skew balance come
-    from :func:`salted_block_pairs`; the OUTPUT SET is byte-identical to
-    the naive blocked join (pairs normalize to (least, greatest))."""
-    # tokens are hashed to 64-bit longs BEFORE the quadratic stage: the
-    # per-pair array_intersect then compares fixed-width longs instead of
-    # variable-length strings (~2x cheaper measured at sf0.1). Jaccard is
-    # unchanged because xxhash64 preserves distinctness within a pair up
-    # to collision odds ~ (tokens/doc)^2 / 2^64 ~ 1e-16 — deterministic,
-    # so results are bit-reproducible across runs either way.
-    # repartition the SOURCE before the tokenize/hash projection: a
-    # single-file source scans as one partition, and both join sides
-    # (including the broadcast build side, whose child runs as its own
-    # job) would otherwise evaluate the HOF-lambda tokenizer in a single
-    # task — measured 14 s broadcast-build stalls at sf0.1 without this.
-    n_tasks = df.sparkSession.sparkContext.defaultParallelism
-    base = df.repartition(n_tasks).select(
-        F.col(id_col),
-        F.col(block_col).alias("_block"),
-        F.transform(
-            F.array_distinct(tokens(F.col(text_col))), lambda s: F.xxhash64(s)
-        ).alias("_tok"),
-    )
-    pairs = salted_block_pairs(base, id_col, ["_tok"], n_salts)
-    # size-ratio prefilter INSIDE the join condition: J >= t implies
-    # min(|A|,|B|)/max >= t (I <= min, U >= max), so integer size
-    # compares — ordered before anything array-valued, short-circuiting
-    # in codegen — prune pairs before any intersect is computed. The
-    # margin (t - 0.00005) accounts for the round(.,4) applied to J
-    # before the threshold test, so no boundary pair is lost.
-    tm = F.lit(float(threshold) - 0.00005)
-    na, nb = F.size("_tok_a").cast("double"), F.size("_tok_b").cast("double")
-    pairs = pairs.where((na >= tm * nb) & (nb >= tm * na))
-    # INTEGER single-intersect prefilter: writing the threshold test as
-    # round(I/U,4) >= t puts array_intersect in the expression tree 3x
-    # (guard, numerator, denominator via U = sz - I) and neither CSE nor
-    # a projection barrier prevents per-pair re-evaluation once Catalyst
-    # inlines the filter into the join (measured: 3x intersects = ~5 s
-    # vs ~2 s at sf0.1). Algebra removes the duplication exactly:
-    #   I/U >= t-eps  <=>  (10^5+m)*I >= m*(|A|+|B|),  m ~ 10^5*t - 5
-    # — one intersect, two int multiplies. m is taken ONE NOTCH WEAKER
-    # (-6 instead of -5) so the prefilter is strictly weaker than the
-    # rounded test; the exact round(.,4) >= t filter then runs only on
-    # the boundary sliver (~output-sized), keeping results identical.
-    inter1 = F.size(F.array_intersect("_tok_a", "_tok_b"))
-    sz = F.size("_tok_a") + F.size("_tok_b")
-    if threshold > 0:
-        m = int(round(100000 * threshold)) - 6
-        pairs = pairs.where(
-            (F.lit(100000 + m) * inter1 >= F.lit(m) * sz) & (sz > 0)
-        )
-    # The exact round-based test is deliberately CASE-free when
-    # threshold > 0 (the prefilter already guarantees union > 0 on every
-    # surviving pair, so the empty-union guard is dead code there):
-    # Catalyst inlines this filter into the join condition as the LAST
-    # conjunct, where && short-circuiting makes it run only on prefilter
-    # survivors — and keeping a CaseWhen OUT of the join condition keeps
-    # the join inside whole-stage codegen, which is the difference
-    # between ~1.5 s and ~4 s at sf0.1 for the identical algorithm.
-    slim = pairs.select(
-        F.least("_ida", "_idb").alias("id_a"),
-        F.greatest("_ida", "_idb").alias("id_b"),
-        inter1.alias("_inter"),
-        sz.alias("_sz"),
-    )
-    union = F.col("_sz") - F.col("_inter")
-    jc = (
-        F.round(F.col("_inter") / union, 4)
-        if threshold > 0
-        else F.round(
-            F.when(union == 0, F.lit(0.0)).otherwise(F.col("_inter") / union), 4
-        )
-    )
-    return (
-        slim.select("id_a", "id_b", jc.alias("jaccard"))
-        .where(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", "jaccard")
     )
 
 
@@ -296,7 +207,7 @@ def lsh_neardup_pairs(
     shingle size.
     """
     # repartition the single-file source once so the md5 minhash and the
-    # tokenizer projections run on all cores (the d5 lesson), and share
+    # tokenizer projections run on all cores, and share
     # ONE materialized token frame across both verify joins — otherwise
     # each join re-executes the tokenize subtree in a single task.
     df = df.repartition(df.sparkSession.sparkContext.defaultParallelism)
@@ -319,7 +230,7 @@ def lsh_neardup_pairs(
         .distinct()  # a pair may collide in several bands — verify once
     )
     # token sets hashed to longs (xxhash64 preserves within-pair
-    # distinctness to ~1e-16 — same argument as ngram_jaccard_pairs, and
+    # distinctness up to collision odds ~ (tokens/doc)^2 / 2^64, and
     # jaccard only needs set cardinalities) and checkpointed once: both
     # verify joins read one materialization instead of re-running the
     # HOF-lambda tokenizer per side.
@@ -377,33 +288,6 @@ def simhash16(text: Column) -> Column:
     return out
 
 
-def adaptive_salts(n_blocks: int, n_tasks: int, cap: int = 16) -> int:
-    """Salt count for :func:`salted_block_pairs` from the BLOCK COUNT:
-    salting exists to split few-large-block skew across tasks, and its
-    price is ~(n_salts+1)/2 x payload replication through the pair
-    join's exchange. With many blocks the join is already parallel and
-    the replication is pure waste — measured r13: d18 at 2M x dim-768
-    has ~62k (label x cell) blocks of ~32 rows, and the fixed 16-salt
-    replication pushed ~100 GB of vector bytes through the exchange
-    (disk overflow); one salt moves 12 GB and the block count alone
-    feeds all 32 cores. Rule: no salt once blocks >= 4x tasks; below
-    that, enough salts that block_count * n_salts^2/2 spreads ~4x the
-    task count (pair-key population ~ B * s(s+1)/2).
-
-    SUPERSEDED for the embedding pair stage (r15): a COUNT-keyed rule
-    is blind to per-block SIZE skew — the r14 realdim autopsy measured
-    d14's first decade at 41.8x because low-rank geometry concentrates
-    vectors into a few giant cells that a many-cells-no-salt verdict
-    leaves on single straggler tasks. :func:`sized_block_salts` salts
-    each block by its OBSERVED population instead; this function
-    remains for count-only callers and its pinned tests."""
-    import math
-
-    if n_blocks >= 4 * n_tasks:
-        return 1
-    return min(cap, max(2, math.ceil(math.sqrt(4 * n_tasks / max(n_blocks, 1)))))
-
-
 #: per-salt-bucket row target for sized_block_salts: a block at or
 #: under the target keeps one salt (zero replication); an oversized
 #: block gets ceil(population/target) salts, so every salt-pair key
@@ -437,7 +321,8 @@ def sized_block_salts(
 ) -> DataFrame:
     """Attach a per-row salt count ``out_col`` derived from each block's
     OBSERVED population: ceil(population / target), 1 for blocks at or
-    under target (guide §2.5 — skew; the r14 realdim autopsy).
+    under target, so a skewed block histogram splits only its oversized
+    blocks.
 
     ``base`` must carry ``_block``. The population scan is one
     payload-free aggregate over the checkpointed base (the checkpoint
@@ -452,7 +337,7 @@ def sized_block_salts(
     pair still meets exactly once — :func:`salted_block_pairs`), only
     how it spreads over tasks.
 
-    ``stats`` (r15): optional dict; when given, ONE extra scalar
+    ``stats``: optional dict; when given, ONE extra scalar
     aggregate over the block histogram (a driver job returning 3
     numbers — the j9/rj2 bounded-probe pattern) records
     ``stats["replicated_rows"]`` (rows × salts summed over blocks: it
@@ -544,8 +429,8 @@ def embedding_neardup_pairs(
 
     n_tasks = df.sparkSession.sparkContext.defaultParallelism
     v = F.col(vec_col).cast("array<double>")
-    # Cauchy-Schwarz prefix-bound prefilter (r15, guide §2.3/§1.2 "per-
-    # task work"): split each vector into a prefix of p = dim/6 elements
+    # Cauchy-Schwarz prefix-bound prefilter: split each vector into a
+    # prefix of p = dim/6 elements
     # and a tail; for any pair, dot(a, b) <= dot(a_p, b_p) +
     # ||a_tail||*||b_tail|| exactly (Cauchy-Schwarz on the tails), so a
     # pair whose BOUND is below the threshold — minus the round(.,4)
@@ -561,8 +446,8 @@ def embedding_neardup_pairs(
     # d21 slightly worse), so small-dim rows carry an empty prefix and
     # the pair conjunct short-circuits on one int compare. The CASE
     # sits in the per-row projection BELOW the pair exchange (never
-    # inlined into the join condition — the d5 CaseWhen lesson applies
-    # only to pair-level expressions); the pair-level keep-conjunct is
+    # inlined into the join condition, where a CaseWhen would leave
+    # whole-stage codegen); the pair-level keep-conjunct is
     # comparisons and one OR only. Results are identical BY BOUND, not
     # by luck: prune requires bound < threshold - 6e-5 while the exact
     # test passes only when cos >= threshold - 5e-5 (HALF_UP round to
@@ -574,8 +459,8 @@ def embedding_neardup_pairs(
     # the vector rides the pair join in its RAW (float) width — the
     # double cast happens per element inside the dot fold, which is
     # bit-identical (every float is exactly representable) and halves
-    # the bytes through the quadratic stage's shuffles (the r13
-    # dim-768 disk-overflow lesson, operators/similarity.py). The
+    # the bytes through the quadratic stage's shuffles (at dim 768 the
+    # double-width payload overflowed the disk). The
     # prefix rides raw for the same reason (~dim/6 extra floats/row).
     tail_d = F.slice(
         vr, plen + 1, F.greatest(F.size(vr) - plen, F.lit(0))
@@ -591,17 +476,16 @@ def embedding_neardup_pairs(
             F.aggregate(tail_d, F.lit(0.0), lambda acc, x: acc + x * x)
         ).alias("_rn"),
     )
-    # SIZE-AWARE salting (r15, guide §2.5): each block is salted by its
-    # OBSERVED population (sized_block_salts), replacing the r13
-    # count-keyed rule (adaptive_salts) that was blind to per-block
-    # size skew — the r14 realdim autopsy: low-rank geometry piles
-    # vectors into a few giant IVF cells, the many-cells verdict chose
-    # no salt, and d14's quadratic stage ran on single straggler tasks
-    # (first decade 41.8x). Population-keyed salts split exactly the
-    # oversized blocks while uniform histograms (d18's label x cell)
-    # keep the zero-replication plan the r13 disk autopsy demanded.
-    # Pair-exchange partition count from the OBSERVED replicated volume
-    # (r15, guide §2.2/§5): the forced SHUFFLE_HASH join builds
+    # SIZE-AWARE salting: each block is salted by its OBSERVED
+    # population (sized_block_salts). A salt count keyed on the block
+    # COUNT is blind to per-block size skew: low-rank geometry piles
+    # vectors into a few giant IVF cells, a many-cells rule chooses no
+    # salt, and the quadratic stage runs on single straggler tasks (d14
+    # measured 41.8x on its first decade). Population-keyed salts split
+    # exactly the oversized blocks while uniform histograms (d18's
+    # label x cell) keep the zero-replication plan.
+    # Pair-exchange partition count from the OBSERVED replicated volume:
+    # the forced SHUFFLE_HASH join builds
     # ~build_bytes/n_parts per partition, and the old defaultParallelism
     # pin — a LOCAL core-count constant — OOM'd the hash build at
     # 2M x dim-768 (~30 GB replicated build side over 32 partitions).
@@ -629,7 +513,7 @@ def embedding_neardup_pairs(
         # cheap conjuncts first: Catalyst inlines this filter into the
         # join condition where && short-circuits in codegen, so the
         # prefix fold runs only on large-dim pairs and the full-dim
-        # fold only on bound survivors (the d5 conjunct-order device)
+        # fold only on bound survivors
         tm = float(threshold) - 0.00006
         pairs = pairs.where(
             (F.col("_pl_a") <= 0)
@@ -772,9 +656,9 @@ def screen_against_store(
     # A re-ingest of an overlapping batch can append the same doc id to
     # the store twice; duplicated token rows would multiply the verify
     # join (inflating n_hist_matches) and duplicated bucket rows would
-    # inflate the cap's population count (ADVICE r11). Idempotent
+    # inflate the cap's population count. Idempotent
     # screening: collapse the store to one row per identity — AFTER the
-    # touched-keys prune (r14): the dedup is (band_id, band_key, id)-
+    # touched-keys prune: the dedup is (band_id, band_key, id)-
     # local, so deduping only the pruned rows returns identical rows
     # for every touched bucket while the exchange covers batch-bounded
     # rows instead of the whole store.
@@ -810,14 +694,14 @@ def screen_against_store(
         F.col(id_col).alias("_bid"), F.col("tok_hashes").alias("_ta")
     ).localCheckpoint(eager=False)
     # Prune the store token table to candidate ids BEFORE the
-    # idempotency dedup (r14): dropDuplicates([id]) keeps an ARBITRARY
+    # idempotency dedup: dropDuplicates([id]) keeps an ARBITRARY
     # row when a re-ingested doc id appears with different tok_hashes
     # (its text changed between appends), making verify-join jaccards
-    # flap across runs (ADVICE r12) — max over the orderable array is a
+    # flap across runs — max over the orderable array is a
     # deterministic per-id tiebreak, so pruning by id first returns the
     # identical token row for every id the verify join will read. The
     # dedup is an ARRAY-buffer aggregate (SortAggregate — arrays demote
-    # hash aggregation, the r13 realdim lesson), and running it over
+    # hash aggregation), and running it over
     # the WHOLE store sorted the entire token table once per append;
     # candidate ids are batch-bounded, so this broadcast semi-join
     # keeps the per-append cost candidate-sized at any store size.
@@ -899,7 +783,7 @@ class PersistedNearDupStore:
         return f"{self.path}/tokens"
 
     def _recover(self, spark) -> None:
-        """Heal the half-completed compact swap (ADVICE r13): a crash
+        """Heal the half-completed compact swap: a crash
         between ``rename(live -> _old)`` and ``rename(tmp -> live)``
         leaves the live dir absent with the full history stranded in
         ``<dir>_old`` — without recovery ``_exists`` goes False, the
@@ -924,7 +808,7 @@ class PersistedNearDupStore:
         # os.path.isdir is a DRIVER-LOCAL check, permanently False for
         # hdfs:// / s3a:// store paths — the class's own production
         # target — which would silently disable the screen while
-        # signatures keep appending (ADVICE r12). fsio routes through
+        # signatures keep appending. fsio routes through
         # the Hadoop FileSystem API, which resolves any configured
         # scheme (and bare local paths against file://).
         from es_to_clickhouse_spark import fsio
@@ -987,12 +871,12 @@ class PersistedNearDupStore:
         commit inverts the failure mode: a crash between store append
         and sink append makes the replayed batch screen as a near-dup
         of its own failed attempt — dropped from the sink while the
-        watermark advances, silent permanent loss (ADVICE r12, high).
+        watermark advances, silent permanent loss.
         With append-last, the same crash merely re-appends signatures
         on replay, which :func:`screen_against_store`'s store-side
         dedup makes harmless.
 
-        Concurrent-compaction safety (judge r13 #6): a :meth:`compact`
+        Concurrent-compaction safety: a :meth:`compact`
         swap that lands between this screen's plan capture (the parquet
         read lists store files eagerly) and its materialization deletes
         the listed files out from under the running job. ONE retry
@@ -1017,8 +901,8 @@ class PersistedNearDupStore:
         min_files: int = 24,
     ) -> tuple[int, int] | None:
         """Rewrite the store's append-per-round small files into
-        ~``target_bytes`` files (judge r12 #5: at ``files_per_append=8``
-        per table, a year of hourly appends is ~140k files; open() and
+        ~``target_bytes`` files (at ``files_per_append=8`` per table, a
+        year of hourly appends is ~140k files; open() and
         listing overhead then dominate every screen). Returns
         (bucket_files, token_files) after the rewrite, or ``None`` when
         the store is absent or already under ``min_files`` total.
@@ -1109,7 +993,7 @@ def substring_dedup_profile(
     """Exact repeated-SUBSTRING dedup signal (word w-gram granularity):
     per document, the maximal token spans whose every w-gram also
     appears in at least one OTHER document — the substring-level
-    complement of doc-level Jaccard (d5) and of eval-contamination
+    complement of doc-level Jaccard and of eval-contamination
     (txt10), i.e. the "dedup repeated spans, not whole docs" stage of a
     training-data pipeline (Lee et al. 2022-style, re-expressed as
     three uniform-key shuffles instead of a suffix array).

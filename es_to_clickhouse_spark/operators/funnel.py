@@ -15,9 +15,7 @@ and ends before ts <= start + window. One Exchange on the key, ONE
 sort shared by every window, zero self-joins, zero per-user scans —
 the plan a 100 TB event log wants.
 
-The streaming twin (same fold, incremental) is
-streaming/stateful.funnel_stream; the 3-level corpus instance is
-b6_window_funnel.
+The 3-level corpus instance is b6_window_funnel.
 """
 
 from __future__ import annotations

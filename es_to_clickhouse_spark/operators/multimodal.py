@@ -1,11 +1,12 @@
 """Multimodal columns: image/audio/video as opaque binary + typed metadata.
 
-The container has no image/audio codecs, so the DECODE step is stubbed
-(deterministic fake or NotImplementedError) — but everything Spark-side is
-real and tested: the schema (binary payload + metadata struct), the
-Arrow-batched ``mapInPandas`` plumbing, the batch shapes, and the
-partitioning story (payloads hash-partition by id; metadata projections
-never deserialize the payload column thanks to parquet column pruning).
+The container has no image/audio codecs, so the full-raster DECODE step
+is a deterministic fake (header and raw-pixel formats decode for real as
+Column math) — but everything Spark-side is real and tested: the schema
+(binary payload + metadata struct), the Arrow-batched ``mapInPandas``
+plumbing, the batch shapes, and the partitioning story (payloads
+hash-partition by id; metadata projections never deserialize the payload
+column thanks to parquet column pruning).
 """
 
 from __future__ import annotations
@@ -51,53 +52,6 @@ def to_assets(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
             F.md5(F.col(text_col)).alias("checksum"),
         ).alias("meta"),
     )
-
-
-def image_codec():
-    """Import-probe for a real raster codec (PIL). Returns the PIL
-    ``Image`` module when the environment provides one, else None —
-    probed at call time, so an environment that gains Pillow upgrades
-    :func:`decode_image` to a REAL decode with zero code change."""
-    try:
-        from PIL import Image  # noqa: PLC0415 — the probe IS the point
-
-        return Image
-    except ImportError:
-        return None
-
-
-def decode_image(payload: bytes) -> dict:
-    """Full raster decode, env-gated (judge r7 item 7):
-
-    - with a codec (``pip install pillow`` in a real deployment):
-      decodes the payload and returns ``{"width", "height", "mode",
-      "n_pixels"}`` — the real path, covered by a
-      skipped-unless-codec round-trip test;
-    - without one (this container: ``import PIL`` →
-      ModuleNotFoundError, no package egress —
-      tests/test_connector_env.py records the probe): raises
-      NotImplementedError, fail-closed.
-
-    Callers' Arrow contract is unchanged either way; the plumbing
-    tests (mm2–mm4) use :func:`sample_frames`'s deterministic fake as
-    the oracle path. HEADER decode (dimensions) needs no codec at all:
-    :func:`png_dims` / :func:`jpeg_sof0_dims` are pure Column math.
-    """
-    Image = image_codec()
-    if Image is None:
-        raise NotImplementedError(
-            "image decode requires codec libs (not installed)"
-        )
-    import io
-
-    with Image.open(io.BytesIO(payload)) as img:
-        img.load()  # force the raster decode, not just the header
-        return {
-            "width": img.width,
-            "height": img.height,
-            "mode": img.mode,
-            "n_pixels": img.width * img.height,
-        }
 
 
 #: PNG wire format: 8-byte signature, then the IHDR chunk
@@ -411,7 +365,7 @@ def ppm_pixel_stats(
     sum / min / max / mean for each RGB channel, entirely JVM-side (one
     ``F.aggregate`` fold per image; zero Python, zero codec libs) — the
     first multimodal op in the battery that decodes a raster payload,
-    not just its header (cf. the honest-fake decode_image above).
+    not just its header.
 
     Wire format (Netpbm spec, public): ASCII header "P6 <w> <h> <max>"
     terminated by one whitespace byte, then w*h pixels of 3 samples
@@ -541,7 +495,7 @@ def bmp_pixel_stats(
     Fails closed (all-NULL stats) on: non-BM magic, bpp != 24,
     compression != BI_RGB (0), zero/oversized dimensions, a pixel-array
     offset pointing inside the 54-byte header (would decode header
-    bytes as pixels — ADVICE r6), or a payload shorter than
+    bytes as pixels), or a payload shorter than
     offset + stride * |h|."""
     p = F.col(payload_col)
     w, h, bpp = bmp_dims(p)

@@ -1,14 +1,6 @@
-"""Partitioning strategies for 100 TB-scale joins (SURVEY §4 scale notes).
+"""Partitioning strategies for 100 TB-scale joins and layouts (SURVEY §4
+scale notes).
 
-Three tools Catalyst cannot apply on its own because they change physical
-layout or query shape:
-
-- **Bucketed co-located joins**: persist both join sides bucketed by the
-  join key (``write_bucketed``); Spark then sort-merge-joins bucket-to-
-  bucket with ZERO Exchange on either side — the shuffle happens once at
-  write time and is amortized over every subsequent join. This is the
-  Spark expression of the reference target's ``ORDER BY``/key layout
-  (es/es_to_bytehouse.py:329-334) applied to compute, not just storage.
 - **Salted joins**: a hot key (null-heavy foreign keys, a viral user)
   makes one shuffle partition the straggler. ``salted_join`` fans the hot
   side out over ``n_salt`` sub-keys and replicates the small side per
@@ -16,39 +8,14 @@ layout or query shape:
   from a hash of a unique column, so retries and oracle checks are
   stable). AQE's skew-join split handles moderate skew at runtime; salting
   is the explicit tool for extreme or known-in-advance skew.
-- **Range repartition for time-series writes**: ``repartition_by_range``
-  on event time keeps parquet files time-clustered so watermark
-  incremental scans (SURVEY S2/P5) prune whole files.
+- **Z-order keys**: ``zorder_value`` over ``scale_to_bits``-scaled
+  integer columns, a multi-dimension clustering key for range layouts.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-
-
-def write_bucketed(
-    df: DataFrame,
-    table: str,
-    bucket_col: str,
-    n_buckets: int = 32,
-    sort: bool = True,
-    mode: str = "overwrite",
-) -> None:
-    """Persist ``df`` bucketed (and sorted) by the join key. Subsequent
-    equi-joins between tables bucketed the same way plan with no Exchange
-    and (if sorted) no Sort — verified by tests/test_partitioning.py."""
-    writer = df.write.format("parquet").mode(mode).bucketBy(n_buckets, bucket_col)
-    if sort:
-        writer = writer.sortBy(bucket_col)
-    writer.saveAsTable(table)
-
-
-def colocated_join(
-    spark: SparkSession, left_table: str, right_table: str, on: str, how: str = "inner"
-) -> DataFrame:
-    """Join two same-bucketed tables; the plan is shuffle-free."""
-    return spark.table(left_table).join(spark.table(right_table), on, how)
 
 
 def salt_column(unique_col: Column, n_salt: int) -> Column:
@@ -76,17 +43,6 @@ def salted_join(
     )
     out = salted_big.join(salted_small, [on, "_salt"], how)
     return out.drop("_salt")
-
-
-def repartition_by_range(
-    df: DataFrame, time_col: str, n_partitions: int | None = None
-) -> DataFrame:
-    """Range-partition by event time before writing so files are
-    time-clustered; incremental watermark predicates then prune whole
-    files/row-groups instead of scanning everything."""
-    if n_partitions:
-        return df.repartitionByRange(n_partitions, F.col(time_col))
-    return df.repartitionByRange(F.col(time_col))
 
 
 def zorder_value(cols: list[Column], bits: int = 8) -> Column:
@@ -125,10 +81,10 @@ def scale_to_bits(col: Column, vmin: Column, vmax: Column, bits: int = 8) -> Col
 
     Spark's ``/`` on longs is DOUBLE division, so once the numerator
     exceeds 2^53 (epoch-micros spans over ~1 year already do at
-    bits=8) floor(double) can be off by one vs true integer division
-    (ADVICE r5). The double quotient is still within ±1 of the truth,
-    so one exact long-math correction step restores floor-div exactly
-    — no doc'd precondition, no engine-specific ``div`` operator."""
+    bits=8) floor(double) can be off by one vs true integer division.
+    The double quotient is still within ±1 of the truth, so one exact
+    long-math correction step restores floor-div exactly — no doc'd
+    precondition, no engine-specific ``div`` operator."""
     span = vmax.cast("long") - vmin.cast("long") + 1
     num = (col.cast("long") - vmin.cast("long")) * F.lit(2**bits).cast("long")
     q0 = F.floor(num / span).cast("long")

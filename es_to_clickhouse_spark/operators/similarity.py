@@ -88,7 +88,7 @@ def ivf_assign(
     (the embedding_neardup_pairs device): the N x k compute happens in
     the crossJoin's mapper, and a compactly-written source (one ~100 MB
     parquet file = ONE input split) would otherwise run the whole
-    assign as a single task — measured r10 at the 100x decade: d14's
+    assign as a single task — measured at the 100x decade: d14's
     assign sat on one core for minutes while 31 idled. The one-pass
     N-row shuffle is noise next to the N x k fold work it spreads.
     Norms are hoisted out of the N x k stage (the
@@ -137,7 +137,7 @@ def ivf_assign_two_level(
     round_digits: int = 6,
     k: int | None = None,
 ) -> DataFrame:
-    """ANN-assisted IVF assignment (VERDICT r10 item 3): two-level
+    """ANN-assisted IVF assignment: two-level
     coarse quantization. The dense assign (:func:`ivf_assign`) scores
     every vector against all k centroids — with SemDeDup's
     corpus-scaled k (~n/256) that matrix is ~N²/256 and dominates at
@@ -170,8 +170,8 @@ def ivf_assign_two_level(
     needs fixed-size mutable buffers), and the sort then spills the
     ENTIRE m-times-expanded frame: measured at 2M x dim-768 the
     vector-through-the-argmax variant spilled ~350 GB and died with
-    SPILL_OUT_OF_MEMORY / no-space-on-device (r13 realdim bench
-    autopsy), where the dim-64 runs had merely been silently slower.
+    SPILL_OUT_OF_MEMORY / no-space-on-device, where the dim-64 runs had
+    merely been silently slower.
     The vectors are re-attached AFTER each argmax by an id-keyed join
     against the lazily-checkpointed (id, vec, norm) frame — one
     unexpanded shuffle instead of an m-times-expanded sort."""
@@ -418,10 +418,10 @@ def pq_assign(
 #: dense cross join's advantage is amortized join overhead, which is
 #: constant per row, while its cost is k·dim interpreted fold elements,
 #: so the boundary moves with dimensionality. Anchors: at dim 64
-#: (SCALE_BENCH assign decades, r12) dense wins at k=837
+#: (SCALE_BENCH assign decades) dense wins at k=837
 #: (k·dim = 54k: 0.842 s vs 4.111 s) and two-level wins at k=7,861
 #: (503k: 81 s vs a deliberately-unrun dense matrix); at dim 768
-#: (tools/realdim_bench.py, r13) dense wins at k=78 (60k: 10.8 s vs
+#: (tools/realdim_bench.py) dense wins at k=78 (60k: 10.8 s vs
 #: 18.4 s whole-pipeline) and LOSES by >10x at k=781 (600k: the dense
 #: pass ground past 14 minutes where two-level takes ~2 — aborted).
 #: Every measured point is consistent with a single work threshold
@@ -438,11 +438,10 @@ def _k_dim(
     centroids: DataFrame, k: int | None, dim: int | None
 ) -> tuple[int, int]:
     """Fill in the centroid count / dimensionality tier-routing scalars
-    the caller didn't supply — in ONE bounded aggregate job (r14: the
-    separate count() + first(size) probes cost two driver jobs per
-    assign construction; every corpus pass pays them). min(size) over a
-    uniform-dim table equals the old first-row size; an empty table
-    yields (0, 0) exactly as before."""
+    the caller didn't supply — in ONE bounded aggregate job (separate
+    count() + first(size) probes would cost two driver jobs per assign
+    construction). min(size) over a uniform-dim table equals the
+    first-row size; an empty table yields (0, 0)."""
     row = centroids.agg(
         F.count(F.lit(1)).alias("_k"), F.min(F.size("cv")).alias("_d")
     ).first()
@@ -461,7 +460,7 @@ def ivf_assign_auto(
     k: int | None = None,
     dim: int | None = None,
 ) -> DataFrame:
-    """Tier-routed IVF assignment (judge r12 #8): pick
+    """Tier-routed IVF assignment: pick
     dense / two-level / log-depth-hierarchical from the measured
     crossovers above, so scaling a pipeline from 2k vectors to 10^9 is
     a data change, not a code change. All three tiers emit the same
@@ -486,94 +485,6 @@ def ivf_assign_auto(
     )
 
 
-def refined_centroids(
-    df: DataFrame,
-    centroids: DataFrame,
-    iters: int = 1,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    round_digits: int = 6,
-    sample_per_cell: int = 32,
-) -> DataFrame:
-    """1-3 Lloyd iterations over sampled centroids, at scale-safe cost
-    (judge r13 #1's second primitive): hash-sampled data points make a
-    nearly flat argmax landscape; moving each centroid to its cell's
-    mean sharpens the cells, lifting single-cell blocking recall
-    (+0.07..+0.10 per the realdim numpy design study — the multi-probe
-    split in :func:`ivf_assign_probes` is the bigger lever and the two
-    compose).
-
-    Differences from :func:`lloyd_step` (the sim5 oracle-pinned exact
-    single step, unchanged): (a) the E-step assigns a deterministic
-    HASH SAMPLE of ~sample_per_cell * k vectors, not the full corpus —
-    with corpus-scaled k (~n/256) a full dense E-step is the N x k
-    matrix every assign tier exists to avoid; (b) assignment routes
-    through the tier-routed :func:`ivf_assign_auto`; (c) the long-form
-    means are re-packed to (cent_id, cv) arrays so the output drops
-    into any assign/probe entry point. A cell that catches no sample
-    keeps its previous centroid (real Lloyd's empty-cell rule).
-    Deterministic end-to-end: hash cut, argmax tie-breaks, fixed
-    rounding, position-sorted repack.
-
-    Scale shape: per iteration, one bounded sample scan + assign over
-    ~32k rows + a (cell, dim)-keyed partial mean (shuffle carries
-    k*dim rows per partition). The collect_list repack buffers ONE
-    row per (cell, dim) group — bounded by k*dim, never by data — so
-    the SortAggregate demotion it costs sorts a centroid-sized frame,
-    not an expanded corpus (the r13 350 GB spill autopsy does not
-    apply)."""
-    from es_to_clickhouse_spark.operators.sketch import hash32
-
-    k, dim = _k_dim(centroids, None, None)
-    n = df.count()
-    if k == 0 or n == 0:
-        return centroids
-    want = min(n, sample_per_cell * k)
-    cut = ((1 << 32) * want) // n
-    sample = df.where(hash32(F.col(id_col), "lloyd") < cut).select(
-        id_col, vec_col
-    ).localCheckpoint(eager=False)
-    for _ in range(iters):
-        assigned = ivf_assign_auto(
-            sample, centroids, id_col, vec_col, round_digits, k=k, dim=dim
-        ).select(id_col, "cent_id")
-        dims = assigned.join(sample, id_col).select(
-            "cent_id", F.posexplode(vec_col).alias("pos", "val")
-        )
-        means = (
-            dims.groupBy("cent_id", "pos")
-            .agg(
-                F.round(F.avg(F.col("val").cast("double")), round_digits)
-                .alias("m")
-            )
-            .groupBy("cent_id")
-            .agg(
-                F.array_sort(
-                    F.collect_list(F.struct("pos", "m"))
-                ).alias("_pm")
-            )
-            .select(
-                "cent_id",
-                F.transform("_pm", lambda s: s["m"]).alias("cv"),
-            )
-        )
-        # empty-cell rule: a centroid whose cell caught no sample keeps
-        # its previous vector (left join, coalesce)
-        centroids = (
-            centroids.select("cent_id", F.col("cv").alias("_old"))
-            .join(means, "cent_id", "left")
-            .select(
-                "cent_id",
-                F.coalesce(
-                    F.col("cv").cast("array<float>"),
-                    F.col("_old").cast("array<float>"),
-                ).alias("cv"),
-            )
-            .localCheckpoint()  # cut the iteration's lineage (CC lesson)
-        )
-    return centroids
-
-
 def ivf_assign_probes(
     df: DataFrame,
     centroids: DataFrame,
@@ -584,7 +495,7 @@ def ivf_assign_probes(
     k: int | None = None,
     dim: int | None = None,
 ) -> DataFrame:
-    """Recall-preserving multi-probe IVF assignment (judge r13 #1) via
+    """Recall-preserving multi-probe IVF assignment via
     QUANTIZER SPLITTING: the centroid set is partitioned into
     ``n_probes`` deterministic groups (rank parity over cent_id — never
     an md5-parity cut, which can leave a group empty at small k), each
@@ -596,7 +507,7 @@ def ivf_assign_probes(
     centroid ids), so the probed cells never collide across groups.
 
     Why this construction, measured (dim-768/rank-128 realdim fixture,
-    numpy design study, r14): single-cell blocking keeps only 0.55 of
+    numpy design study): single-cell blocking keeps only 0.55 of
     planted cos~0.95 near-dup pairs at k=398 because the hash-sampled
     argmax landscape is nearly flat — the perturbation flips the argmax
     across a cell boundary. Probing the top-2 cells fixes that (0.876)
@@ -661,7 +572,7 @@ def sampled_centroids(
     the corpus, cell populations grow linearly, and the within-cell
     quadratic comes back — measured as d14's 23.6x third decade with
     only 2,000 of the intended 7,812 centroids existing
-    (SCALE_BENCH.md r12). A hash cut keeps the expected count at
+    (SCALE_BENCH.md). A hash cut keeps the expected count at
     max(floor, n/per_cell) under ANY id distribution, is a row-local
     scan-stage predicate (no sort, no limit, no shuffle), and the
     integer comparison ``h32 * 1 < cut`` replays bit-identically in
@@ -673,9 +584,8 @@ def sampled_centroids(
         # already counted the corpus pass it in to skip the job
         n = df.count()
     if n == 0:
-        # empty corpus: the value-threshold rule this replaced returned
-        # an empty frame gracefully; without the guard the cut below
-        # divides by zero (ADVICE r12)
+        # empty corpus: empty centroid frame; the cut below would
+        # divide by zero
         return df.select(
             F.col(id_col).alias("cent_id"), F.col(vec_col).alias("cv")
         )

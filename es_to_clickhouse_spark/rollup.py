@@ -1,38 +1,20 @@
-"""Incremental rollup maintenance (continuous aggregates).
+"""Mergeable partial-state aggregates (the ClickHouse ``*State`` analogs).
 
 The reference replicates raw rows and leaves aggregation to the target
-warehouse; at 100 TB the standard practice is a maintained ROLLUP table
-(daily/hourly grains) refreshed per micro-batch — recomputing the whole
-aggregate every round would re-scan the full history for data that
-didn't change.
-
-Shape (the TimescaleDB/Materialize "continuous aggregate" pattern,
-re-expressed in Spark terms):
-
-1. the new micro-batch aggregates to MERGEABLE partial state
-   (sum/count/min/max — avg is derived sum/count at read time, never
-   stored, because stored averages don't merge — plus two optional
-   sketch partials, below);
-2. only the grain partitions the batch TOUCHES are read back, merged
-   (union + re-aggregate), and rewritten via dynamic partition
-   overwrite — untouched partitions are not read, not written, not
-   listed;
-3. the rollup table is Hive-partitioned on the leading grain column,
-   so point/range queries prune to partitions and the overwrite is
-   atomic per partition.
-
-Sketch partials — the two aggregate states every warehouse dashboard
-needs that plain sum/cnt/min/max can't derive (the reference's target
-warehouse gets them as ClickHouse ``quantileState``/``uniqState``;
+warehouse, whose rollup tables hold aggregate STATES
+(``quantileState``/``uniqState``/``topKState``/``argMaxState``;
 clickhouse/clickhouse_to_bytehouse.py materializes into exactly such
-tables):
+tables). :func:`batch_partials` computes those states for one batch per
+grain: sum/count/min/max (avg is derived sum/count at read time, never
+stored, because stored averages don't merge) plus optional sketch
+partials, each chosen so that merging two states is exact or carries a
+stated bound:
 
 - ``v_qsk`` (``key_col=``): quantile sample — the ``quantile_k`` rows
   with the smallest md5-derived hash of ``key_col``, stored as a sorted
   ``array<struct<h,v>>``. Bottom-k-by-hash is EXACTLY mergeable
-  (bottom-k of a union == bottom-k of the per-part bottom-k's), so the
-  incrementally-maintained sample is bit-identical to a recompute, and
-  the estimator is engine-reproducible (DuckDB computes the same md5
+  (bottom-k of a union == bottom-k of the per-part bottom-k's), and the
+  estimator is engine-reproducible (DuckDB computes the same md5
   hash — the oracle pattern of operators/sketch.py). Rank error of the
   p-quantile estimate ~ sqrt(p(1-p)/k): ~3.1% at the median for k=256.
 - ``v_hllr`` (``distinct_col=``): deterministic HLL registers (classic
@@ -42,39 +24,26 @@ tables):
   p=8 (raw HLL, no bias branch — see operators/sketch.py hll_distinct
   for why the correction is deliberately omitted).
 - ``v_topk`` + ``v_topk_err`` (``topk_col=``): heavy-hitter summary
-  (Misra-Gries / SpaceSaving family, the ``topKState`` analog): <=
-  ``topk_k`` per-key LOWER-bound counts plus one cumulated undercount
-  bound. Exact per-batch counts compress deterministically (total
-  (count desc, key asc) order); merges sum key-wise then re-compress.
-  Guarantee (Agarwal et al., Mergeable Summaries): stored <= true <=
-  stored + err for present keys, true <= err for absent keys — so any
-  key with true count > err is guaranteed present. Unlike v_qsk/v_hllr
-  the state is split-dependent (compress points differ), but the BOUNDS
-  hold on every path and replaying identical batches is bit-identical.
+  (Misra-Gries / SpaceSaving family): <= ``topk_k`` per-key LOWER-bound
+  counts plus one undercount bound. Exact per-batch counts compress
+  deterministically (total (count desc, key asc) order). Guarantee
+  (Agarwal et al., Mergeable Summaries): stored <= true <= stored + err
+  for present keys, true <= err for absent keys — so any key with true
+  count > err is guaranteed present.
+- ``v_amax`` (``arg_col=``): one (v, a) struct whose lexicographic max
+  is exactly associative.
 
-Delivery contract: merging the same batch twice double-counts (the
-partials are additive, and re-inserting a row re-draws the same hash
-but duplicates its mass in sum/cnt), so the caller feeds EXACTLY-ONCE
-batches — the engine's watermark predicates (incremental.py) provide
-precisely that stream; for at-least-once sources, dedup first
-(sink.upsert_view).
+:func:`sketch_quantile` and :func:`sketch_distinct` read the estimates
+off the states; corpus sk7–sk10 calibrate them against exact answers.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-
 from pyspark.sql.window import Window
 
-from es_to_clickhouse_spark import fsio
 from es_to_clickhouse_spark.operators.sketch import bottom_k_rows, hash32
-
-#: partial-state suffixes a rollup row carries per value column
-PARTIALS = ("sum", "cnt", "min", "max")
-#: optional sketch partials (present when key_col / distinct_col /
-#: topk_col given)
-SKETCH_PARTIALS = ("qsk", "hllr", "topk")
 
 QUANTILE_K = 256
 HLL_P = 8
@@ -203,13 +172,7 @@ def batch_partials(
     one (v, a) struct whose lexicographic max is exactly associative,
     so incremental == recompute bit-for-bit; ties break to the largest
     arg string, deterministic where ClickHouse's is first-seen).
-    COMPATIBILITY: rollup directories written before v_amax kept its
-    native type store ``v`` as double; refreshing such a directory with
-    new long/decimal-typed partials would union struct<v:double> with
-    struct<v:long> and coerce back to double, silently losing the
-    past-2^53 precision fix — REBUILD pre-existing rollups to get exact
-    argmax (ADVICE r6). The
-    sketch options ride as extra columns joined on the grain — the
+    The sketch options ride as extra columns joined on the grain — the
     joins are grain-co-partitioned aggregates over the same batch, and
     the sketch sides are bounded (<= quantile_k rows / <= 2^hll_p
     registers / <= topk_k counters per grain) regardless of batch
@@ -224,7 +187,7 @@ def batch_partials(
         # the value stays in its NATIVE orderable type: struct max only
         # needs an ordering, and a double cast would collapse distinct
         # bigint/decimal values past 2^53, picking a wrong argmax and
-        # losing v_amax_val precision (ADVICE r5)
+        # losing v_amax_val precision
         aggs.append(
             F.max(
                 F.when(
@@ -274,150 +237,13 @@ def batch_partials(
     return out
 
 
-def _merge(
-    parts: DataFrame,
-    grain_cols: list[str],
-    quantile_k: int = QUANTILE_K,
-    topk_k: int = TOPK_K,
-) -> DataFrame:
-    """Merge partial-state rows that share a grain (associative).
-
-    sums/counts add, min/max fold, the quantile sample re-selects the
-    ``quantile_k`` smallest hashes of the concatenated samples (flatten
-    + sort + slice — array ops, deliberately no lambda HOFs: this plan
-    contains a union, and Spark 4's Union constraint rewrite crashes on
-    array-lambda expressions under joins), HLL registers re-max by
-    register via explode (bounded: rows-per-grain × 2^p entries), and
-    top-k summaries merge by key-wise count sum followed by one MG
-    compress — the new delta joins the accumulated error bounds
-    (mergeable-summaries guarantee: stored <= true <= stored + err)."""
-    aggs = [
-        F.sum("v_sum").alias("v_sum"),
-        F.sum("v_cnt").alias("v_cnt"),
-        F.min("v_min").alias("v_min"),
-        F.max("v_max").alias("v_max"),
-    ]
-    if "v_amax" in parts.columns:
-        # struct max is associative/commutative: merge == one more max
-        aggs.append(F.max("v_amax").alias("v_amax"))
-    if "v_qsk" in parts.columns:
-        # collect_list skips NULL arrays (all-null grains stay empty)
-        aggs.append(
-            F.slice(
-                F.sort_array(F.flatten(F.collect_list("v_qsk"))),
-                1,
-                quantile_k,
-            ).alias("v_qsk")
-        )
-    merged = parts.groupBy(*grain_cols).agg(*aggs)
-    if "v_topk" in parts.columns:
-        summed = (
-            parts.select(*grain_cols, F.explode("v_topk").alias("_e"))
-            .groupBy(*grain_cols, F.col("_e.key").alias("_tk"))
-            .agg(F.sum("_e.cnt").alias("_tc"))
-        )
-        errs = parts.groupBy(*grain_cols).agg(
-            F.sum("v_topk_err").alias("_prev_err")
-        )
-        tk = (
-            _mg_compress(summed, grain_cols, topk_k)
-            .join(errs, list(grain_cols), "right")
-            .select(
-                *grain_cols,
-                "v_topk",
-                (
-                    F.coalesce(F.col("_d"), F.lit(0))
-                    + F.coalesce(F.col("_prev_err"), F.lit(0))
-                ).cast("long").alias("v_topk_err"),
-            )
-        )
-        merged = merged.join(tk, list(grain_cols), "left")
-    if "v_hllr" in parts.columns:
-        regs = (
-            parts.select(*grain_cols, F.explode("v_hllr").alias("_e"))
-            .groupBy(*grain_cols, "_e.reg")
-            .agg(F.max("_e.rho").alias("rho"))
-            .groupBy(*grain_cols)
-            .agg(
-                F.sort_array(
-                    F.collect_list(F.struct(F.col("reg"), F.col("rho")))
-                ).alias("v_hllr")
-            )
-        )
-        merged = merged.join(regs, list(grain_cols), "left")
-    return merged
-
-
-def refresh_rollup(
-    spark: SparkSession,
-    path: str,
-    batch: DataFrame,
-    grain_cols: list[str],
-    value_col: str,
-    key_col: str | None = None,
-    distinct_col: str | None = None,
-    quantile_k: int = QUANTILE_K,
-    hll_p: int = HLL_P,
-    topk_col: str | None = None,
-    topk_k: int = TOPK_K,
-    arg_col: str | None = None,
-) -> int:
-    """Merge one micro-batch into the rollup at ``path``; returns the
-    number of grain partitions touched. Only touched partitions of the
-    leading grain column are read (partition-pruned via an IN filter on
-    driver-collected touched keys — bounded by the batch's distinct
-    grains, not table size) and rewritten (dynamic partition
-    overwrite). The sketch options (``key_col``/``distinct_col``/
-    ``topk_col`` and their size knobs) must be consistent across every
-    refresh of the same rollup table."""
-    new = batch_partials(
-        batch, grain_cols, value_col, key_col, distinct_col, quantile_k,
-        hll_p, topk_col, topk_k, arg_col,
-    )
-    lead = grain_cols[0]
-    touched = [r[0] for r in new.select(lead).distinct().collect()]
-    if not touched:
-        return 0  # empty batch: write nothing (idle-round no-op)
-    merged = new
-    if fsio.exists(spark, path):
-        # Hive partition-value inference may read the leading grain back
-        # as date/int; cast to the batch's type so merges stay
-        # schema-stable round after round. A NULL grain lands in (and
-        # reads back from) the __HIVE_DEFAULT_PARTITION__ directory as
-        # NULL — isin() never matches NULL, so it needs its own isNull
-        # arm or the dynamic overwrite would replace that partition with
-        # only the new batch's partials, losing prior state.
-        non_null = [v for v in touched if v is not None]
-        cond = (
-            F.col(lead).isin(non_null) if non_null else F.lit(False)
-        )
-        if len(non_null) < len(touched):
-            cond = cond | F.col(lead).isNull()
-        old = (
-            spark.read.parquet(path)
-            .withColumn(lead, F.col(lead).cast(new.schema[lead].dataType))
-            .where(cond)
-        )
-        merged = _merge(old.unionByName(new), grain_cols, quantile_k, topk_k)
-    # dynamic overwrite: ONLY the partitions present in `merged` are
-    # replaced; every other partition's files are untouched
-    (
-        merged.repartition(*[F.col(c) for c in grain_cols])
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy(lead)
-        .parquet(path)
-    )
-    return len(touched)
-
-
 def sketch_quantile(v_qsk: Column, p: float) -> Column:
     """Discrete (type-1, ceil(p*n)) quantile estimate from the ``v_qsk``
     sample — the same nearest-rank arithmetic the corpus's exact
     discrete quantiles use (b5), applied to the sample. NULL when the
-    sample is empty/NULL. The `transform` lambda is confined to the
-    READ path: never put it in the merge plan, whose union would trip
-    Spark 4's Union.rewriteConstraints lambda crash under a join."""
+    sample is empty/NULL. Keep the `transform` lambda out of any plan
+    that unions partials under a join: Spark 4's
+    Union.rewriteConstraints crashes on array lambdas there."""
     vals = F.array_sort(F.transform(v_qsk, lambda e: e["v"]))
     n = F.size(vals)
     idx = F.greatest(F.ceil(F.lit(float(p)) * n).cast("int"), F.lit(1))
@@ -440,266 +266,3 @@ def sketch_distinct(v_hllr_name: str = "v_hllr", p: int = HLL_P) -> Column:
     n = F.size(F.col(v_hllr_name))
     est = F.floor(F.lit(alpha_mm) / (s + (F.lit(float(m)) - n)))
     return F.when(n >= 0, est.cast("long"))
-
-
-def read_rollup(spark: SparkSession, path: str) -> DataFrame:
-    """The query view over the rollup: derived avg alongside the raw
-    mergeable state (avg computed at read time — stored averages can't
-    merge), plus p50/p95 and approx-distinct estimates when the sketch
-    partials are present."""
-    df = spark.read.parquet(path)
-    df = df.withColumn("v_avg", F.col("v_sum") / F.col("v_cnt"))
-    if "v_qsk" in df.columns:
-        df = df.withColumn(
-            "v_p50", sketch_quantile(F.col("v_qsk"), 0.5)
-        ).withColumn("v_p95", sketch_quantile(F.col("v_qsk"), 0.95))
-    if "v_hllr" in df.columns:
-        df = df.withColumn("v_distinct", sketch_distinct("v_hllr"))
-    if "v_amax" in df.columns:
-        df = df.withColumn("v_amax_val", F.col("v_amax.v")).withColumn(
-            "v_amax_arg", F.col("v_amax.a")
-        )
-    return df
-
-
-# ---------------------------------------------------- funnel partial
-#
-# windowFunnelState analog: a MERGEABLE per-key funnel state, so a
-# funnel dashboard is incrementally maintainable like the other
-# partials. operators/funnel.window_funnel is the one-shot batch
-# computation; streaming/stateful.funnel_stream the streaming twin;
-# this is the rollup (incremental batch) leg.
-#
-# State per key, for an n-condition funnel with window W (all
-# timestamps in the same unit, epoch micros in the corpus):
-#
-#   f_ach            max funnel depth fully achieved so far (window
-#                    check applied at each completion event)
-#   f_i{l}           best (latest) chain START among chains reaching
-#                    depth l using seen events only, l = 1..n-1 —
-#                    the seed material future batches can extend
-#   f_r{j}_{l}       0/1: seen events can extend a chain already at
-#                    depth j to depth l (conds j+1..l in order),
-#                    1 <= j < l <= n-1 (diagonal identity implicit)
-#   f_m{j}_{k}       earliest timestamp of a cond_k event preceded by
-#                    a j->(k-1) extension path within seen events,
-#                    1 <= j < k <= n: a chain at depth j with start s
-#                    completes depth k through these events iff
-#                    s >= f_m{j}_{k} - W
-#
-# Composition of two states A (earlier events) then B (later events)
-# is associative — boolean matrix product for R, seeded max for I,
-# path-filtered min for M, and cross-boundary completions
-# A.I[m] >= B.M[m][k] - W folding into ach — so incremental refreshes
-# equal a full recompute BIT-FOR-BIT as long as batches arrive STRICTLY
-# time-partitioned (every event in a batch is later than every event in
-# the previous batch — equal timestamps must not straddle a boundary;
-# the watermarked-append contract every incremental funnel feed has).
-# Late data violating that contract needs a recompute of the affected
-# keys, same as ClickHouse's AggregatingMergeTree funnel rollups.
-
-
-def funnel_partials(
-    batch: DataFrame,
-    key_cols: list[str],
-    ts_col: str,
-    order_cols: list[str],
-    conds: list[Column],
-    window: int,
-) -> DataFrame:
-    """Per-key mergeable funnel state for one micro-batch. One Exchange
-    on the key and ONE shared sort (the cascaded-running-max device of
-    operators/funnel.window_funnel, plus O(n^2) seeded-reachability
-    cascades — n is the condition count, 3 in the corpus), then a
-    single groupBy; no self-joins, no per-key collects."""
-    n = len(conds)
-    assert n >= 2, "a funnel needs at least two conditions"
-    w_prev = (
-        Window.partitionBy(*key_cols)
-        .orderBy(ts_col, *order_cols)
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    out = batch.withColumn(
-        "_fs1", F.max(F.when(conds[0], F.col(ts_col))).over(w_prev)
-    )
-    for i in range(2, n):
-        out = out.withColumn(
-            f"_fs{i}", F.max(F.when(conds[i - 1], F.col(f"_fs{i-1}"))).over(w_prev)
-        )
-    # seeded reachability BEFORE each row: _fr{j}_{l} = 1 iff prior
-    # batch events extend a depth-j seed to depth l
-    for j in range(1, n):
-        for l in range(j + 1, n):
-            prev_ok = (
-                F.lit(True) if l - 1 == j else (F.col(f"_fr{j}_{l-1}") == 1)
-            )
-            out = out.withColumn(
-                f"_fr{j}_{l}",
-                F.coalesce(
-                    F.max(F.when(conds[l - 1] & prev_ok, 1)).over(w_prev),
-                    F.lit(0),
-                ),
-            )
-    aggs = []
-    # internal best chain starts reaching depth l (seed material)
-    aggs.append(F.max(F.when(conds[0], F.col(ts_col))).alias("f_i1"))
-    for l in range(2, n):
-        aggs.append(F.max(F.when(conds[l - 1], F.col(f"_fs{l-1}"))).alias(f"f_i{l}"))
-    for j in range(1, n):
-        for l in range(j + 1, n):
-            prev_ok = F.lit(True) if l - 1 == j else (F.col(f"_fr{j}_{l-1}") == 1)
-            aggs.append(
-                F.coalesce(
-                    F.max(F.when(conds[l - 1] & prev_ok, 1)), F.lit(0)
-                ).alias(f"f_r{j}_{l}")
-            )
-        for k in range(j + 1, n + 1):
-            prev_ok = F.lit(True) if k - 1 == j else (F.col(f"_fr{j}_{k-1}") == 1)
-            aggs.append(
-                F.min(F.when(conds[k - 1] & prev_ok, F.col(ts_col))).alias(
-                    f"f_m{j}_{k}"
-                )
-            )
-    # fully-achieved level within the batch (window check at the
-    # completion event; intermediate events are automatically inside
-    # the window — time-ordered chain, see operators/funnel.py)
-    aggs.append(F.coalesce(F.max(F.when(conds[0], 1)), F.lit(0)).alias("_fl1"))
-    for k in range(2, n + 1):
-        aggs.append(
-            F.coalesce(
-                F.max(
-                    F.when(
-                        conds[k - 1]
-                        & (F.col(f"_fs{k-1}") >= F.col(ts_col) - window),
-                        1,
-                    )
-                ),
-                F.lit(0),
-            ).alias(f"_fl{k}")
-        )
-    g = out.groupBy(*key_cols).agg(*aggs)
-    ach = F.lit(0)
-    for k in range(1, n + 1):
-        ach = F.when(F.col(f"_fl{k}") == 1, k).otherwise(ach)
-    return g.select(
-        *key_cols,
-        *[c for c in g.columns if c.startswith("f_")],
-        ach.cast("int").alias("f_ach"),
-    )
-
-
-def _funnel_compose(n: int, window: int) -> list[Column]:
-    """Column expressions composing funnel state A (alias ``a``,
-    earlier events) with B (alias ``b``, later events). NULL state on
-    either side (key absent from that batch) behaves as the identity."""
-
-    def aR(j: int, m: int) -> Column:
-        return F.lit(1) if j == m else F.coalesce(F.col(f"a.f_r{j}_{m}"), F.lit(0))
-
-    def bR(m: int, l: int) -> Column:
-        return F.lit(1) if m == l else F.coalesce(F.col(f"b.f_r{m}_{l}"), F.lit(0))
-
-    exprs: list[Column] = []
-    for j in range(1, n):
-        for l in range(j + 1, n):
-            exprs.append(
-                F.greatest(
-                    *[
-                        F.when((aR(j, m) == 1) & (bR(m, l) == 1), 1).otherwise(0)
-                        for m in range(j, l + 1)
-                    ]
-                ).alias(f"f_r{j}_{l}")
-            )
-    for l in range(1, n):
-        cands = [F.col(f"b.f_i{l}")] + [
-            F.when(bR(m, l) == 1, F.col(f"a.f_i{m}")) for m in range(1, l + 1)
-        ]
-        exprs.append(F.greatest(*cands).alias(f"f_i{l}"))
-    for j in range(1, n):
-        for k in range(j + 1, n + 1):
-            cands = [F.col(f"a.f_m{j}_{k}")] + [
-                F.when(aR(j, m) == 1, F.col(f"b.f_m{m}_{k}"))
-                for m in range(j, min(k - 1, n - 1) + 1)
-            ]
-            exprs.append(F.least(*cands).alias(f"f_m{j}_{k}"))
-    ach_cands = [
-        F.coalesce(F.col("a.f_ach"), F.lit(0)),
-        F.coalesce(F.col("b.f_ach"), F.lit(0)),
-    ]
-    for m in range(1, n):
-        for k in range(m + 1, n + 1):
-            ach_cands.append(
-                F.when(
-                    F.col(f"a.f_i{m}") >= F.col(f"b.f_m{m}_{k}") - window,
-                    k,
-                ).otherwise(0)
-            )
-    exprs.append(F.greatest(*ach_cands).cast("int").alias("f_ach"))
-    return exprs
-
-
-#: hash buckets for the funnel rollup layout: the funnel key is an
-#: entity id (user), so partitioning by the key itself would mean one
-#: directory per user; a refresh rewrites only the buckets its batch
-#: touches
-FUNNEL_BUCKETS = 64
-
-
-def refresh_funnel_rollup(
-    spark: SparkSession,
-    path: str,
-    batch: DataFrame,
-    key_cols: list[str],
-    ts_col: str,
-    order_cols: list[str],
-    conds: list[Column],
-    n_conds: int,
-    window: int,
-) -> int:
-    """Merge one time-ordered micro-batch into the funnel rollup at
-    ``path``; returns the number of hash buckets touched. Buckets are
-    pmod(hash(keys), FUNNEL_BUCKETS); a refresh reads back ONLY the
-    touched buckets — in full, since a bucket holds many keys — full-
-    outer-joins them with the new partials on the keys, and rewrites
-    just those buckets (dynamic partition overwrite). ``conds`` must be
-    resolvable against ``batch``; pass ``n_conds`` = len(conds) so the
-    stored-state shape is explicit."""
-    new = funnel_partials(batch, key_cols, ts_col, order_cols, conds, window)
-    new = new.withColumn(
-        "_fb", F.pmod(F.hash(*key_cols), F.lit(FUNNEL_BUCKETS))
-    )
-    touched = [r[0] for r in new.select("_fb").distinct().collect()]
-    if not touched:
-        return 0
-    merged = new
-    if fsio.exists(spark, path):
-        old = (
-            spark.read.parquet(path)
-            .where(F.col("_fb").isin(touched))
-            .drop("_fb")
-        )
-        state_cols = [c for c in new.columns if c.startswith("f_")]
-        joined = old.alias("a").join(
-            new.drop("_fb").alias("b"), list(key_cols), "full_outer"
-        )
-        merged = joined.select(
-            *key_cols, *_funnel_compose(n_conds, window)
-        ).withColumn("_fb", F.pmod(F.hash(*key_cols), F.lit(FUNNEL_BUCKETS)))
-        assert sorted(c for c in merged.columns if c.startswith("f_")) == sorted(
-            state_cols
-        )
-    (
-        merged.repartition("_fb")
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("_fb")
-        .parquet(path)
-    )
-    return len(touched)
-
-
-def read_funnel_rollup(spark: SparkSession, path: str) -> DataFrame:
-    """Query view: per-key achieved funnel level (plus the raw
-    mergeable state columns for debugging/continuation)."""
-    df = spark.read.parquet(path).drop("_fb")
-    return df.withColumn("funnel_level", F.col("f_ach"))

@@ -7,7 +7,7 @@ The reference writes to ByteHouse via batched INSERTs into a wide
 (es/es_to_bytehouse.py:1020-1051).
 
 Spark-first, the target is a warehouse table (parquet directory here; the
-same interface backs a JDBC/ClickHouse writer):
+same interface backs the live ClickHouse writer, sources/ch_http.py):
 
 - **Schema evolution** is a driver-side diff of ``df.schema`` vs the live
   target schema, kept in the table's ``_schema.json`` sidecar; new
@@ -108,9 +108,6 @@ class WarehouseTarget:
             return {f.name: f.dataType.simpleString() for f in df.schema.fields}
         return {}
 
-    def live_columns(self, table: str) -> set[str]:
-        return set(self.live_schema(table))
-
     def _write_schema(self, table: str, columns: dict[str, str]) -> None:
         meta = fsio.join(self.table_path(table), SCHEMA_FILE)
         fsio.write_text(
@@ -144,9 +141,9 @@ class WarehouseTarget:
     def append(self, table: str, df: DataFrame, add_system_cols: bool = True) -> None:
         """Append a micro-batch with pre-write schema evolution
         (replaces the reference's insert→fail→ALTER→retry loop at
-        es/es_to_bytehouse.py:693-736 with a proactive diff; the reactive
-        loop itself exists as :func:`insert_with_repair` for sinks with
-        concurrent writers)."""
+        es/es_to_bytehouse.py:693-736 with a proactive diff; the live
+        ClickHouse sink adds the reactive repair for concurrent writers,
+        sources/ch_http.write_table)."""
         if add_system_cols and TS_COL not in df.columns:
             df = df.withColumn(TS_COL, F.current_timestamp())
         batch_types = {f.name: f.dataType.simpleString() for f in df.schema.fields}
@@ -203,7 +200,7 @@ class WarehouseTarget:
         Why this exists: every non-empty continuous round appends one
         part (engine.py), so a 60 s-interval daemon grows ~1440
         files/table/day — after a month every scan pays a 40k-file
-        listing+open tax. The idle-round skip (r4) stops EMPTY junk;
+        listing+open tax. The idle-round skip stops EMPTY junk;
         compaction is the other half of the ops story, same as
         ClickHouse's background merges on the reference's target
         (MergeTree parts) — but explicit, because a parquet directory
@@ -316,26 +313,3 @@ MISSING_COLUMN_MARKERS = (
 def is_missing_column_error(exc: BaseException) -> bool:
     msg = str(exc).lower()
     return any(m in msg for m in MISSING_COLUMN_MARKERS)
-
-
-def insert_with_repair(df: DataFrame, insert, add_columns, retries: int = 1) -> int:
-    """Reactive insert-repair loop (es/es_to_bytehouse.py:696-723): run
-    ``insert(df)``; if it fails with a missing-column error — which with
-    CONCURRENT writers can happen even after a proactive diff, because
-    another writer may have rewritten the target between the diff and the
-    insert — re-diff via ``add_columns({col: ddl_type})`` (the callback
-    performs the live diff + ALTER, e.g.
-    ``WarehouseTarget.add_new_columns`` or a JDBC ``ALTER TABLE ADD
-    COLUMN`` executor) and retry. Returns the number of columns added by
-    repair; non-schema errors and exhausted retries propagate."""
-    batch_types = {f.name: f.dataType.simpleString() for f in df.schema.fields}
-    added_total = 0
-    for attempt in range(retries + 1):
-        try:
-            insert(df)
-            return added_total
-        except Exception as exc:  # noqa: BLE001 - classified below
-            if attempt >= retries or not is_missing_column_error(exc):
-                raise
-            added_total += int(add_columns(batch_types) or 0)
-    return added_total

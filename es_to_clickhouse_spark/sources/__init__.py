@@ -1,24 +1,18 @@
 """Source readers behind one interface (SURVEY §2.1).
 
-The testbed source is parquet (catalog.ParquetCatalog). Production
-sources mirror the reference's three systems, each expressed as a
-Catalyst-planned connector read instead of hand-rolled pagination:
+The testbed source is parquet (catalog.ParquetCatalog). The reference's
+three live systems are spoken jar-free, over their own public wire
+protocols, each executor-parallel:
 
-- :mod:`.jdbc` — ClickHouse (or any JDBC) with **partitioned range
-  scans** replacing the reference's O(n²) LIMIT/OFFSET walk
-  (clickhouse/clickhouse_to_bytehouse.py:303-306).
-- :mod:`.es` — Elasticsearch via the elasticsearch-hadoop connector
-  (scroll pagination ↔ connector-managed splits).
-- :mod:`.mongo` — MongoDB via the mongo-spark connector (keyset paging ↔
-  partitioner).
+- :mod:`.es` — Elasticsearch over HTTP: scroll and PIT + ``search_after``
+  drains, sliced across executors (the reference's scroll loop).
+- :mod:`.ch_http` — ClickHouse over the HTTP interface: a source with
+  parallel range scans in place of the reference's O(n²) LIMIT/OFFSET
+  walk (clickhouse/clickhouse_to_bytehouse.py:303-306), and the live
+  target sink.
+- :mod:`.mongo_wire` — MongoDB over OP_MSG: the reference's ``_id``
+  keyset scan, split into disjoint ranges.
 
-- :mod:`.json_docs` — dynamic-schema JSON document ingestion: sampled
-  schema inference, batch-over-batch schema evolution, malformed-row
-  quarantine (the reference's sampled scans + reactive schema repair,
-  es/es_to_bytehouse.py:338-395,696-736, re-expressed declaratively).
-
-The ES/Mongo connectors aren't installed in this container; their
-readers raise a clear error with the exact spark-submit packages needed,
-while their *option-building* logic (URL, pushdown, split sizing) is pure
-and unit-tested.
+The ``*_fixture`` modules are loopback fakes of those servers for the
+tests, the corpus and the benchmark.
 """

@@ -109,8 +109,7 @@ def describe_to_schema(rows: list[dict]) -> T.StructType:
 
 @dataclass
 class ClickHouseHttpSource:
-    """ClickHouse over HTTP — same engine surface as
-    :class:`sources.jdbc.JdbcSource`, loopback-testable."""
+    """ClickHouse over HTTP (jar-free), loopback-testable."""
 
     host: str = "http://localhost:8123"
     database: str = "default"
@@ -419,7 +418,7 @@ class ClickHouseHttpSource:
         DESCRIBE-diff + ALTER on the driver before any post, plus a
         reactive repair on the executors — a post failing with a
         missing-column error replays the idempotent ALTER set and
-        re-posts once (the reference's insert_with_repair contract,
+        re-posts once (the reference's insert-repair loop,
         es/es_to_bytehouse.py:696-723, over the HTTP interface).
 
         ``dedup_epoch`` upgrades delivery from at-least-once to

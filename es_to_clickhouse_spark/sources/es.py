@@ -9,10 +9,8 @@ speaks (es/es_to_bytehouse.py), driven over stdlib HTTP.
   corpus queries and the sync round;
 - :func:`sync_incremental_es_http`: one live incremental sync round
   (mapping fetch → range-query drain → flatten → append → watermark);
-- mapping helpers (typed schemas from ``_mapping``), :func:`range_query`
-  (the reference's incremental DSL) and :class:`EsSource` (the
-  elasticsearch-hadoop connector options; the connector is not
-  installed, so its read raises with setup instructions).
+- mapping helpers (typed schemas from ``_mapping``) and
+  :func:`range_query` (the reference's incremental DSL).
 """
 
 from __future__ import annotations
@@ -124,8 +122,7 @@ def scroll_docs(scroll_response: dict, store_source: bool = False) -> list[dict]
     """Rows from a recorded ``_search?scroll`` response page: one dict per
     hit with ``_id`` merged in (and the raw document as a ``_source`` JSON
     string when ``store_source``), exactly the row shape the reference
-    builds per hit (es/es_to_bytehouse.py:608-622). In production the
-    connector does this server-side; this is the wire-format contract."""
+    builds per hit (es/es_to_bytehouse.py:608-622)."""
     rows = []
     for hit in scroll_response.get("hits", {}).get("hits", []):
         source = hit.get("_source", {})
@@ -1017,41 +1014,3 @@ def range_query(
     # the reference wraps the single range in a LIST
     # (es/es_to_bytehouse.py:856-860: "filter": [ {range...} ])
     return json.dumps({"query": {"bool": {"filter": [ranges[0]]}}})
-
-
-@dataclass
-class EsSource:
-    nodes: str = "localhost"
-    port: int = 9200
-    scroll_size: int = 1000  # SCROLL_SIZE default (es/es_to_bytehouse.py:149)
-    scroll_timeout: str = "5m"  # SCROLL_TIMEOUT (es/es_to_bytehouse.py:150)
-
-    def options(self, index: str, query: str | None = None) -> dict[str, str]:
-        opts = {
-            "es.nodes": self.nodes,
-            "es.port": str(self.port),
-            "es.resource": index,
-            "es.scroll.size": str(self.scroll_size),
-            "es.scroll.keepalive": self.scroll_timeout,
-            "es.read.metadata": "true",  # exposes _id (target key, S14)
-        }
-        if query:
-            opts["es.query"] = query
-        return opts
-
-    def read_index(
-        self, spark: SparkSession, index: str, query: str | None = None
-    ) -> DataFrame:
-        try:
-            return (
-                spark.read.format("org.elasticsearch.spark.sql")
-                .options(**self.options(index, query))
-                .load()
-            )
-        except Exception as e:  # noqa: BLE001
-            raise RuntimeError(
-                "Elasticsearch read requires the elasticsearch-hadoop "
-                "connector: spark-submit --packages "
-                "org.elasticsearch:elasticsearch-spark-30_2.13:8.x. "
-                f"Underlying: {e}"
-            ) from e

@@ -1,9 +1,8 @@
 """MongoDB wire protocol (OP_MSG) over a plain TCP socket — the
-jar-free, driver-free path that lets the keyset-scan protocol
-(:class:`sources.mongo.KeysetSession`) run against a REAL socket
-instead of replayed batches. Public wire format throughout: the BSON
-spec (bsonspec.org) and the OP_MSG framing (opcode 2013, MongoDB 3.6+
-standard message), both stable public documentation.
+jar-free, driver-free keyset scan of the reference's Mongo daemon.
+Public wire format throughout: the BSON spec (bsonspec.org) and the
+OP_MSG framing (opcode 2013, MongoDB 3.6+ standard message), both stable
+public documentation.
 
 The reference's scan (mongodb/mongodb_to_bytehouse.py:524-565) drives
 pymongo's ``collection.find(query).sort("_id", 1).limit(BATCH_SIZE)``;
@@ -228,9 +227,9 @@ def read_frame(sock: socket.socket) -> bytes:
 
 @dataclass
 class MongoWireSession:
-    """Keyset scan over a live OP_MSG socket — the socket-driven
-    counterpart of :class:`sources.mongo.KeysetSession.drain`, same row
-    shape and failure contract."""
+    """Keyset scan over a live OP_MSG socket: ``find`` pages sorted on
+    ``_id`` with a ``$gt`` resume filter; a failed fetch keeps the rows
+    already drained."""
 
     host: str = "127.0.0.1"
     port: int = 27017

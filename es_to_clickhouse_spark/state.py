@@ -51,7 +51,6 @@ from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.pandas.types import to_arrow_schema
-from pyspark.sql.window import Window
 
 from es_to_clickhouse_spark import fsio
 
@@ -142,17 +141,6 @@ class StateStore:
         if not self._exists():
             return self.spark.createDataFrame([], STATE_SCHEMA)
         return self.spark.read.schema(STATE_SCHEMA).parquet(self.path)
-
-    def latest(self):
-        """Latest state row per table (ORDER BY updated_at DESC LIMIT 1
-        per key — es/es_to_bytehouse.py:437-440)."""
-        w = Window.partitionBy("table_name").orderBy(F.desc("updated_at"))
-        return (
-            self.read_all()
-            .withColumn("_rn", F.row_number().over(w))
-            .where(F.col("_rn") == 1)
-            .drop("_rn")
-        )
 
     def _refresh(self) -> None:
         names = {

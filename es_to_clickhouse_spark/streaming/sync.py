@@ -9,8 +9,8 @@ Maps the reference's semantics onto Structured Streaming:
   truth for offsets; the engine ALSO appends to the queryable
   ``_sync_state`` table per batch (the reference's state table is a
   user-facing feature, es/es_to_bytehouse.py:412-465).
-- T3 late data: event-time watermark via ``withWatermark`` for windowed
-  aggs; upsert reconciliation happens at read time (sink.upsert_view).
+- T3 late data: upsert reconciliation happens at read time
+  (sink.upsert_view).
 - T8 delivery: foreachBatch + idempotent-by-_id target = the same
   at-least-once + upsert contract as the reference.
 - T4 upgrade on the LIVE ClickHouse sink: ``ch_http.write_table``
@@ -127,64 +127,3 @@ class StreamingSync:
             .trigger(**(trigger or {"processingTime": "60 seconds"}))
         )
         return writer.start()
-
-
-def windowed_counts(
-    events: DataFrame,
-    ts_col: str = "ts",
-    window: str = "10 minutes",
-    watermark: str = "30 minutes",
-    keys: list[str] | None = None,
-) -> DataFrame:
-    """Late-data-tolerant windowed aggregation (T7): works on both batch
-    and streaming DataFrames; on streams the watermark bounds state."""
-    df = events.withWatermark(ts_col, watermark) if events.isStreaming else events
-    group = [F.window(ts_col, window).alias("w")] + [F.col(k) for k in (keys or [])]
-    return df.groupBy(*group).agg(
-        F.count(F.lit(1)).alias("n"),
-    )
-
-
-def dedup_within_watermark(
-    events: DataFrame,
-    keys: list[str],
-    ts_col: str = "ts",
-    delay: str = "30 minutes",
-) -> DataFrame:
-    """Streaming exact dedup with BOUNDED state (the streaming twin of
-    operators/dedup.exact_dedup): duplicates of a key arriving within the
-    watermark horizon are suppressed; state for a key is dropped once the
-    watermark passes, so memory is O(keys-per-horizon), not O(all keys
-    ever) — the property that keeps a continuous 100 TB ingest alive."""
-    return events.withWatermark(ts_col, delay).dropDuplicatesWithinWatermark(keys)
-
-
-def interval_join_stream(
-    left: DataFrame,
-    right: DataFrame,
-    key: str,
-    left_ts: str,
-    right_ts: str,
-    left_watermark: str = "30 minutes",
-    right_watermark: str = "30 minutes",
-    within: str = "1 hour",
-    how: str = "inner",
-) -> DataFrame:
-    """Watermarked stream-stream interval join: match left rows to right
-    rows with the same key where right_ts in [left_ts, left_ts + within].
-    Both watermarks + the time-range predicate bound the join state on
-    BOTH sides (without the range condition Spark would buffer streams
-    forever). The batch analogue is operators/range_join.py.
-
-    ``how='left_outer'`` additionally emits unmatched left rows (null
-    right columns) — but only once the watermark passes their match
-    window's upper bound, i.e. in a LATER micro-batch; an attribution
-    pipeline sees its no-click impressions one watermark-delay late."""
-    lw = left.withWatermark(left_ts, left_watermark)
-    rw = right.withWatermark(right_ts, right_watermark)
-    cond = (
-        (lw[key] == rw[key])
-        & (rw[right_ts] >= lw[left_ts])
-        & (rw[right_ts] <= F.expr(f"{left_ts} + INTERVAL {within}"))
-    )
-    return lw.join(rw, cond, how).drop(rw[key])

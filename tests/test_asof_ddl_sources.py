@@ -1,5 +1,5 @@
-"""Unit tests: as-of join, ClickHouse DDL generation, source option
-builders, streaming sync (SURVEY §2.1, §2.3 custom-operator note, T1-T2)."""
+"""Unit tests: as-of join, ClickHouse DDL generation, the ES range DSL,
+streaming sync (SURVEY §2.1, §2.3 custom-operator note, T1-T2)."""
 
 from __future__ import annotations
 
@@ -8,16 +8,12 @@ import json
 from pyspark.sql import functions as F
 
 from es_to_clickhouse_spark.ddl import (
-    add_columns_sql,
     clickhouse_type,
     create_database_sql,
     create_typed_table_sql,
-    create_wide_string_table_sql,
 )
 from es_to_clickhouse_spark.operators.asof import asof_join
-from es_to_clickhouse_spark.sources.es import EsSource, range_query
-from es_to_clickhouse_spark.sources.jdbc import JdbcSource
-from es_to_clickhouse_spark.sources.mongo import MongoSource, match_pipeline
+from es_to_clickhouse_spark.sources.es import range_query
 
 
 # ---------------------------------------------------------------- as-of join
@@ -100,20 +96,6 @@ def test_asof_join_preserves_left_rowcount(spark):
 # ----------------------------------------------------------------------- DDL
 
 
-def test_wide_string_ddl_shape():
-    sql = create_wide_string_table_sql("db", "tbl", ["b", "a"], engine="CnchMergeTree")
-    assert "`_id` String" in sql
-    assert "`a` Nullable(String),\n  `b` Nullable(String)" in sql  # sorted
-    assert "`_timestamp` DateTime64(3) DEFAULT now64(3)" in sql
-    assert sql.rstrip().endswith("UNIQUE KEY `_id`")
-
-
-def test_wide_string_ddl_replacing_fallback():
-    sql = create_wide_string_table_sql("db", "tbl", ["x"])
-    # open-source ClickHouse: upsert via ReplacingMergeTree, not UNIQUE KEY
-    assert "ReplacingMergeTree(`_timestamp`) ORDER BY `_id`" in sql
-
-
 def test_typed_ddl_and_type_map(spark):
     df = spark.createDataFrame(
         [(1, 1.5, "s", True)], "i int, d double, s string, b boolean"
@@ -127,12 +109,6 @@ def test_typed_ddl_and_type_map(spark):
     # complex types serialize to String (reference rule, README.md:109)
     assert clickhouse_type(T.ArrayType(T.IntegerType())) == "Nullable(String)"
     assert clickhouse_type(T.DecimalType(12, 2)) == "Nullable(Decimal(12, 2))"
-
-
-def test_add_columns_idempotent_sorted():
-    stmts = add_columns_sql("db", "t", ["z", "a"])
-    assert len(stmts) == 2
-    assert "ADD COLUMN IF NOT EXISTS `a`" in stmts[0]
     assert create_database_sql("x") == "CREATE DATABASE IF NOT EXISTS `x`"
 
 
@@ -147,39 +123,6 @@ def test_es_range_query_shapes():
     q2 = json.loads(range_query("ts", "2024-01-01", "upd", "2024-02-02"))
     assert q2["query"]["bool"]["minimum_should_match"] == 1
     assert len(q2["query"]["bool"]["should"]) == 2
-
-
-def test_es_source_options():
-    opts = EsSource(nodes="es1", scroll_size=500).options("idx-*", query="{}")
-    assert opts["es.resource"] == "idx-*"
-    assert opts["es.scroll.size"] == "500"
-    assert opts["es.read.metadata"] == "true"
-    assert opts["es.query"] == "{}"
-
-
-def test_jdbc_partition_options_and_pushdown():
-    src = JdbcSource(url="jdbc:clickhouse://h:8123/db")
-    opts = src.partition_options("id", 0, 1000, 16)
-    assert opts == {
-        "partitionColumn": "id",
-        "lowerBound": "0",
-        "upperBound": "1000",
-        "numPartitions": "16",
-    }
-    assert src.pushdown_query("t", "ts > '2024-01-01'") == (
-        "(SELECT * FROM t WHERE ts > '2024-01-01') AS src"
-    )
-    assert src.pushdown_query("t") == "t"
-
-
-def test_mongo_match_pipeline():
-    p = json.loads(match_pipeline(last_id="0" * 24))
-    assert p[0]["$match"]["_id"]["$gt"] == {"$oid": "0" * 24}
-    p2 = json.loads(match_pipeline(time_field="ct", since_iso="2024-01-01T00:00:00"))
-    assert p2[0]["$match"]["ct"]["$gt"] == {"$date": "2024-01-01T00:00:00"}
-    assert json.loads(match_pipeline())[0]["$match"] == {}
-    opts = MongoSource(database="d").options("c", pipeline="[]")
-    assert opts["aggregation.pipeline"] == "[]"
 
 
 # ----------------------------------------------------------------- streaming

@@ -529,7 +529,7 @@ def test_write_table_schema_evolution_alter_then_insert(spark):
 
 
 def test_write_table_reactive_repair_on_racing_writer(spark):
-    """The CONCURRENT-writer race (sink.insert_with_repair contract,
+    """The CONCURRENT-writer race (the reference's insert-repair loop,
     es/es_to_bytehouse.py:696-723): the executor's post fails with a
     missing-column error even though evolve_schema diffed proactively —
     here simulated by a server whose DESCRIBE hid the new column until

@@ -1,36 +1,17 @@
-"""Live-connector environment gate — the S7/S11/S15 closure test.
+"""Environment gate for the live-server sources.
 
-The ES scroll protocol, the Mongo keyset protocol, and the ClickHouse
-DDL/INSERT/pushdown builders are all golden-tested as pure folds
-(tests/test_source_contracts.py); the ONLY untested surface is the
-literal socket I/O, which needs connector jars and live servers this
-sandbox cannot provide. This module records the evidence and becomes a
-real round-trip the moment an environment supplies the pieces:
-
-Recorded resolution attempt (round 5, this sandbox):
-
-    spark.jars.packages=com.clickhouse:clickhouse-jdbc:0.6.0,
-                        org.elasticsearch:elasticsearch-spark-30_2.13:8.13.4
-    -> Ivy: "Host repo1.maven.org not found.
-        url=https://repo1.maven.org/maven2/com/clickhouse/clickhouse-jdbc/..."
-       "Host repos.spark-packages.org not found."
-       "module not found: com.clickhouse#clickhouse-jdbc;0.6.0"
-    -> [JAVA_GATEWAY_EXITED] Java gateway process exited before sending
-       its port number (session cannot even build)
-    DNS probe: urlopen https://repo1.maven.org/maven2/
-    -> URLError [Errno -2] Name or service not known
-
-i.e. no DNS egress at all — not a wrong coordinate, not a missing
-mirror. Everything query-expressible about S7/S11/S15 is green
-elsewhere; COVERAGE.md marks them done-modulo-environment.
+Every source the CLI runs is a jar-free wire (ES and ClickHouse over
+HTTP, Mongo over OP_MSG), tested against loopback fakes
+(tests/test_source_contracts.py, tests/test_ch_http.py,
+tests/test_mongo_wire.py). The one surface no test reaches is a real
+remote server, which needs network egress this environment does not
+have. The probe below records that; if it ever fails, live round-trips
+against real servers can be added.
 """
 
 from __future__ import annotations
 
-import os
 import socket
-
-import pytest
 
 
 def _network_available() -> bool:
@@ -42,121 +23,9 @@ def _network_available() -> bool:
         return False
 
 
-def _jvm_has_class(spark, cls: str) -> bool:
-    try:
-        getattr(spark._jvm.java.lang.Class, "forName")(cls)
-        return True
-    except Exception:
-        return False
-
-
-def test_clickhouse_jdbc_round_trip_or_skip(spark):
-    """Full JDBC write+read through sources/jdbc.py when the environment
-    provides a driver jar (CLASSPATH) and a live server (CH_JDBC_URL);
-    otherwise skip with the recorded diagnosis so the gap stays visible
-    and attributable to the environment, not the engine."""
-    if not _jvm_has_class(spark, "com.clickhouse.jdbc.ClickHouseDriver"):
-        pytest.skip(
-            "done-modulo-environment: no ClickHouse JDBC driver on the "
-            "classpath and no network to fetch one (recorded attempt: "
-            "spark.jars.packages -> 'Host repo1.maven.org not found' / "
-            "'module not found: com.clickhouse#clickhouse-jdbc;0.6.0' / "
-            "JAVA_GATEWAY_EXITED; DNS probe: Errno -2 Name or service "
-            "not known). Builders are golden-tested in "
-            "test_source_contracts.py; only socket I/O is unexercised."
-        )
-    url = os.environ.get("CH_JDBC_URL")
-    if not url:
-        pytest.skip(
-            "ClickHouse driver present but no live server (set "
-            "CH_JDBC_URL=jdbc:clickhouse://host:8123/db to enable the "
-            "round-trip)."
-        )
-    from es_to_clickhouse_spark.sources.jdbc import JdbcSource
-
-    src = JdbcSource(url=url)
-    df = spark.createDataFrame([(1, "a"), (2, "b")], "id long, s string")
-    src.write_table(df, "sg_probe", mode="overwrite")
-    back = src.read_table(spark, "sg_probe")
-    assert sorted((r.id, r.s) for r in back.collect()) == [(1, "a"), (2, "b")]
-
-
-def test_es_spark_connector_or_skip(spark):
-    """ES connector presence gate (S2/S11 live path). The scroll
-    protocol itself — slice fan-out, resume, cleanup, failure replay —
-    is a pure fold with transcript goldens (sources/es.py:155,
-    test_source_contracts.py); this gate only covers the wire."""
-    if not _jvm_has_class(spark, "org.elasticsearch.spark.sql.DefaultSource"):
-        pytest.skip(
-            "done-modulo-environment: elasticsearch-spark connector not "
-            "on the classpath and no network to fetch it (same recorded "
-            "resolution failure as the ClickHouse gate)."
-        )
-    if not os.environ.get("ES_NODES"):
-        pytest.skip("ES connector present but no live cluster (set ES_NODES).")
-
-
-def test_jdbc_round_trip_option_assembly_never_rots():
-    """NON-skipped twin of the gated round-trip above (judge r7 item 8):
-    the exact option dicts the live test would hand to Spark's JDBC
-    reader/writer, asserted unconditionally so the surface can't rot
-    invisibly behind the environment skip."""
-    from es_to_clickhouse_spark.sources.jdbc import JdbcSource
-
-    src = JdbcSource(url="jdbc:clickhouse://host:8123/db", user="u", password="p")
-    # the read side of the skipped round-trip (plus the scale options)
-    ropts = src.read_options(
-        "sg_probe",
-        where="`t` > '2024-01-01'",
-        partition_column="id",
-        bounds=(0, 1000),
-        num_partitions=8,
-    )
-    assert ropts == {
-        "url": "jdbc:clickhouse://host:8123/db",
-        "user": "u",
-        "password": "p",
-        "driver": "com.clickhouse.jdbc.ClickHouseDriver",
-        "fetchsize": "10000",
-        "dbtable": "(SELECT * FROM sg_probe WHERE `t` > '2024-01-01') AS src",
-        "partitionColumn": "id",
-        "lowerBound": "0",
-        "upperBound": "1000",
-        "numPartitions": "8",
-    }
-    # unpartitioned read: a bare dbtable, no range options
-    assert src.read_options("sg_probe")["dbtable"] == "sg_probe"
-    assert "partitionColumn" not in src.read_options("sg_probe")
-    # the write side of the skipped round-trip
-    assert src.write_options("sg_probe", batch_size=500) == {
-        "url": "jdbc:clickhouse://host:8123/db",
-        "user": "u",
-        "password": "p",
-        "driver": "com.clickhouse.jdbc.ClickHouseDriver",
-        "fetchsize": "10000",
-        "dbtable": "sg_probe",
-        "batchsize": "500",
-        "isolationLevel": "NONE",
-    }
-
-
-def test_jarless_reads_fail_with_setup_instructions(spark):
-    """The failure contract the gated tests leave unexercised: without
-    jars, read paths raise actionable RuntimeErrors naming the missing
-    package — never a bare stack bomb."""
-    from es_to_clickhouse_spark.sources.es import EsSource
-    from es_to_clickhouse_spark.sources.jdbc import JdbcSource
-
-    with pytest.raises(RuntimeError, match="driver jar is required"):
-        JdbcSource(url="jdbc:clickhouse://h:8123/db").read_table(spark, "t")
-    with pytest.raises(RuntimeError, match="elasticsearch-hadoop"):
-        EsSource().read_index(spark, "idx")
-
-
 def test_network_probe_is_still_dead():
-    """If this ever FAILS, the environment gained egress — revisit the
-    two gates above and run the live round-trips instead of skipping."""
+    """If this ever FAILS, the environment gained egress — live
+    round-trips against real servers can run instead of loopback fakes."""
     assert not _network_available(), (
-        "Network egress detected: the connector round-trips can now run. "
-        "Provision jars via spark.jars.packages and drop this guard."
+        "Network egress detected: live-server round-trips can now run."
     )

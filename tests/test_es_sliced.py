@@ -476,8 +476,9 @@ def test_sync_es_http_timestamp_rebind(spark, tmp_path):
 
 
 def test_cli_es_http_mode(spark, tmp_path, capsys):
-    """`--es-http-url` through the CLI: glob expansion against the live
-    catalog, full-then-incremental across two invocations, exit codes."""
+    """`--es-http-url` through the CLI, in the incremental and the
+    default auto mode: glob expansion against the live catalog,
+    full-then-incremental across two invocations, exit codes."""
     from es_to_clickhouse_spark.__main__ import main
 
     docs = [
@@ -487,33 +488,49 @@ def test_cli_es_http_mode(spark, tmp_path, capsys):
     ]
     srv, host, log = _es_sync_parts(tmp_path, docs)
     try:
-        wh = str(tmp_path / "wh")
-        base = ["--mode", "incremental", "--warehouse", wh,
-                "--es-http-url", host]
-        rc = main(base + ["--tables", "e*"], environ={})
-        assert rc == 0
-        out = [
-            json.loads(ln) for ln in capsys.readouterr().out.splitlines()
-            if ln.startswith("{")
-        ]
-        assert out == [
-            {"table": "ev", "mode": "full_es_http", "rows": 3,
-             "watermark": "2024-05-03 10:00:00"}
-        ]
-        # second invocation: state carries over -> incremental, idle
-        rc = main(base + ["--tables", "ev"], environ={})
-        assert rc == 0
-        out = [
-            json.loads(ln) for ln in capsys.readouterr().out.splitlines()
-            if ln.startswith("{")
-        ]
-        assert out[0]["mode"] == "incremental_es_http"
-        assert out[0]["rows"] == 0
-        # a typo'd index fails loudly with a non-zero exit
-        rc = main(base + ["--tables", "nope"], environ={})
-        assert rc == 1
+        for cli_mode in ("incremental", "auto"):
+            wh = str(tmp_path / f"wh_{cli_mode}")
+            base = ["--mode", cli_mode, "--warehouse", wh,
+                    "--es-http-url", host]
+            rc = main(base + ["--tables", "e*"], environ={})
+            assert rc == 0, cli_mode
+            out = [
+                json.loads(ln) for ln in capsys.readouterr().out.splitlines()
+                if ln.startswith("{")
+            ]
+            assert out == [
+                {"table": "ev", "mode": "full_es_http", "rows": 3,
+                 "watermark": "2024-05-03 10:00:00"}
+            ], cli_mode
+            # second invocation: state carries over -> incremental, idle
+            rc = main(base + ["--tables", "ev"], environ={})
+            assert rc == 0, cli_mode
+            out = [
+                json.loads(ln) for ln in capsys.readouterr().out.splitlines()
+                if ln.startswith("{")
+            ]
+            assert out[0]["mode"] == "incremental_es_http", cli_mode
+            assert out[0]["rows"] == 0, cli_mode
+            # a typo'd index fails loudly with a non-zero exit
+            rc = main(base + ["--tables", "nope"], environ={})
+            assert rc == 1, cli_mode
+            capsys.readouterr()
     finally:
         srv.shutdown()
+
+
+def test_cli_full_mode_rejects_live_source(tmp_path):
+    """A wire round cannot redo a full sync, so `--mode full` with a
+    live source URL is a parser error (exit 2) before any Spark work,
+    even when a parquet --source-dir is also given."""
+    from es_to_clickhouse_spark.__main__ import main
+
+    with pytest.raises(SystemExit) as e:
+        main(["--mode", "full", "--warehouse", str(tmp_path / "wh"),
+              "--source-dir", str(tmp_path), "--es-http-url",
+              "http://127.0.0.1:9", "--tables", "ev"],
+             environ={})
+    assert e.value.code == 2
 
 
 def test_cli_es_to_ch_pipeline(spark, tmp_path, capsys):

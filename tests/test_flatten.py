@@ -6,12 +6,7 @@ import json
 
 from pyspark.sql import Row
 
-from es_to_clickhouse_spark.flatten import (
-    flatten_es,
-    flatten_mongo,
-    flatten_struct_type,
-    schema_union,
-)
+from es_to_clickhouse_spark.flatten import flatten_es, flatten_mongo
 
 
 def _es_fixture(spark):
@@ -97,17 +92,6 @@ def test_flatten_mongo_name_sanitize(spark):
     df = spark.createDataFrame([(1,)], "`bad$key` long")
     out = flatten_mongo(df)
     assert out.columns == ["bad_key"]
-
-
-def test_flatten_struct_type_and_union(spark):
-    df = _es_fixture(spark)
-    declared = flatten_struct_type(df.schema, "es")
-    assert "user_name" in declared and "user_city" in declared
-    sampled = {"user_name": None, "extra_field": None}
-    merged = schema_union(declared, sampled)
-    # union fills gaps, first-seen wins (es/es_to_bytehouse.py:762-771)
-    assert "extra_field" in merged
-    assert merged["user_name"] is declared["user_name"]
 
 
 def test_store_source_column(spark):

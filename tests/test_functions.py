@@ -93,27 +93,6 @@ def test_glob_filter_column(spark):
     assert got == ["a_log", "exact"]
 
 
-def test_register_engine_udfs(spark):
-    from es_to_clickhouse_spark.udf import register_engine_udfs
-
-    names = register_engine_udfs(spark)
-    assert set(names) == {"sanitize_field", "sanitize_table", "glob_match", "is_system"}
-    row = spark.sql(
-        """
-        SELECT sanitize_field('user.geo-city', 'es') AS a,
-               sanitize_field('bad$key', 'mongo') AS b,
-               sanitize_table('2024-logs.app', 'es') AS c,
-               glob_match('orders_2024', 'orders_*,events') AS d,
-               glob_match('other', 'orders_*') AS e,
-               is_system('.kibana', 'es') AS f
-        """
-    ).collect()[0]
-    assert row.a == "user_geo_city"
-    assert row.b == "bad_key"
-    assert row.c == "idx_2024_logs_app"
-    assert row.d is True and row.e is False and row.f is True
-
-
 def test_alert_hook_rate_limit(monkeypatch):
     """A6: identical LEVEL:msg[:100] alerts suppressed within the window
     (es/es_to_bytehouse.py:48-55)."""

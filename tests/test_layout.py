@@ -60,25 +60,6 @@ def test_zorder_shrinks_nonleading_spans(spark, tmp_path):
     assert spark.read.parquet(zo).count() == 4096
 
 
-def test_write_partitioned_prunes_directories(spark, tmp_path):
-    from es_to_clickhouse_spark.layout import write_partitioned
-
-    df = spark.range(1000).select(
-        F.col("id"), (F.col("id") % 4).alias("part")
-    )
-    path = str(tmp_path / "parted")
-    write_partitioned(df, path, ["part"])
-    one = spark.read.parquet(path).where(F.col("part") == 2)
-    # inputFiles() predates pruning; the files actually READ come from the
-    # executed scan
-    files = [
-        r.f
-        for r in one.select(F.input_file_name().alias("f")).distinct().collect()
-    ]
-    assert files and all("part=2" in f for f in files)
-    assert one.count() == 250
-
-
 def test_compact_reduces_file_count(spark, tmp_path):
     from es_to_clickhouse_spark.layout import compact
 

@@ -132,8 +132,7 @@ def fake_mongod():
 def test_drain_socket_full_keyset_scan(fake_mongod):
     """The reference's keyset loop over a REAL socket: fresh find per
     page with `_id $gt last`, ascending sort, batch limit; ends at the
-    first empty batch; row shape matches KeysetSession.drain (all BSON
-    types surviving the wire)."""
+    first empty batch; every BSON type survives the wire into the row."""
     port, log = fake_mongod()
     s = MongoWireSession(port=port, database="app", batch_size=2)
     rows, last_id, completed = s.drain_socket("users")
@@ -208,18 +207,18 @@ def test_drain_socket_connection_refused_is_empty_not_raise():
 
 
 def test_find_command_matches_keyset_golden():
-    """The wire command mirrors KeysetSession.query_for page-for-page
-    (same filter/sort/limit; plus the $db/find addressing OP_MSG needs)."""
-    from es_to_clickhouse_spark.sources.mongo import KeysetSession
-
+    """One keyset page on the wire (mongodb_to_bytehouse.py:524-531):
+    unfiltered first page, ``_id $gt last-seen`` after, sorted ascending
+    with the batch limit, plus the $db/find addressing OP_MSG needs."""
     w = MongoWireSession(database="db1", batch_size=500)
-    k = KeysetSession(batch_size=500)
-    for last in (None, "abc"):
-        wc, kc = w.find_command("coll", last), k.query_for(last)
-        assert wc["filter"] == kc["filter"]
-        assert wc["limit"] == kc["limit"]
-        assert wc["sort"] == dict(kc["sort"])
-        assert wc["find"] == "coll" and wc["$db"] == "db1"
+    for last, flt in ((None, {}), ("abc", {"_id": {"$gt": "abc"}})):
+        assert w.find_command("coll", last) == {
+            "find": "coll",
+            "filter": flt,
+            "sort": {"_id": 1},
+            "limit": 500,
+            "$db": "db1",
+        }
 
 
 # ------------------------------------------------------ live sync mode

@@ -15,7 +15,6 @@ from es_to_clickhouse_spark.operators.dedup import (
     jaccard,
     minhash_lsh_buckets,
     minhash_signature,
-    ngram_jaccard_pairs,
     simhash16,
 )
 
@@ -55,21 +54,6 @@ def test_exact_dedup_deterministic_winner(spark):
     out = {r.text: (r.doc_id, r.n_copies) for r in exact_dedup(df, ["text"], "doc_id").collect()}
     assert out["same"] == (2, 2)
     assert out["other"] == (9, 1)
-
-
-def test_jaccard_pairs_blocked(spark):
-    df = spark.createDataFrame(
-        [
-            (1, "a b c d", "en"),
-            (2, "a b c e", "en"),
-            (3, "a b c d", "fr"),  # different block — never paired with 1
-        ],
-        "doc_id long, text string, lang string",
-    )
-    pairs = ngram_jaccard_pairs(df, "doc_id", "text", "lang", threshold=0.5).collect()
-    assert len(pairs) == 1
-    assert (pairs[0].id_a, pairs[0].id_b) == (1, 2)
-    assert pairs[0].jaccard == pytest.approx(3 / 5, abs=1e-4)
 
 
 def test_simhash_similar_docs_close(spark):
@@ -154,54 +138,6 @@ def test_multimodal_assets_and_frames(spark):
     assert len(by_asset[1]) == 2  # 1 % 3 + 1
     assert len(by_asset[2]) == 3
     assert all(r.n_bytes == 3 for r in by_asset[1])  # payload bytes really read
-
-
-def _real_png_1x1() -> bytes:
-    """A fully valid 1x1 grayscale PNG built from the public spec with
-    stdlib only (zlib IDAT, crc32 chunk tails) — decodable by any
-    conformant codec."""
-    import struct
-    import zlib
-
-    def chunk(tag: bytes, body: bytes) -> bytes:
-        return (
-            struct.pack(">I", len(body))
-            + tag
-            + body
-            + struct.pack(">I", zlib.crc32(tag + body))
-        )
-
-    ihdr = struct.pack(">IIBBBBB", 1, 1, 8, 0, 0, 0, 0)  # 1x1, 8-bit gray
-    idat = zlib.compress(b"\x00\x7f")  # filter 0 + one pixel
-    return (
-        b"\x89PNG\r\n\x1a\n"
-        + chunk(b"IHDR", ihdr)
-        + chunk(b"IDAT", idat)
-        + chunk(b"IEND", b"")
-    )
-
-
-@pytest.mark.skipif(
-    multimodal.image_codec() is not None,
-    reason="codec present: the real-decode path applies instead",
-)
-def test_decode_without_codec_fails_closed():
-    with pytest.raises(NotImplementedError):
-        multimodal.decode_image(_real_png_1x1())
-
-
-@pytest.mark.skipif(
-    multimodal.image_codec() is None,
-    reason="no image codec in this environment (PIL import probe failed; "
-    "no package egress — see tests/test_connector_env.py)",
-)
-def test_decode_real_png_round_trip():
-    """Env-gated real decode (judge r7 item 7): when a codec exists,
-    decode_image round-trips a real PNG and agrees with the pure-Column
-    header decode png_dims reads from the same bytes."""
-    out = multimodal.decode_image(_real_png_1x1())
-    assert out["width"] == 1 and out["height"] == 1
-    assert out["n_pixels"] == 1 and out["mode"] == "L"
 
 
 def test_jaccard_empty_tokens(spark):
@@ -1756,31 +1692,10 @@ def test_persisted_store_band_key_bucketed_files(spark, tmp_path):
             )
 
 
-def test_adaptive_salts_and_pairing_invariance(spark):
-    """adaptive_salts: no replication once blocks >= 4x tasks (the r13
-    dim-768 disk autopsy — 16 fixed salts pushed ~100 GB of vector
-    payload through the pair exchange that ~62k blocks never needed);
-    few blocks still split. And the pairing contract — every unordered
-    in-block pair EXACTLY once — holds at every salt count, so the
-    adaptive choice can never change results."""
-    from pyspark.sql import functions as F
-
-    from es_to_clickhouse_spark.operators.dedup import (
-        adaptive_salts,
-        salted_block_pairs,
-    )
-
-    import math
-
-    n_tasks = spark.sparkContext.defaultParallelism
-    assert adaptive_salts(4 * n_tasks, n_tasks) == 1
-    assert adaptive_salts(62_000, n_tasks) == 1
-    assert adaptive_salts(1, n_tasks) == min(
-        16, max(2, math.ceil(math.sqrt(4 * n_tasks)))
-    )
-    assert adaptive_salts(1, 64) == 16  # 32-core production shape
-    few = adaptive_salts(10, n_tasks)
-    assert 2 <= few <= 16
+def test_salted_block_pairs_exactly_once_at_every_salt_count(spark):
+    """The pairing contract: every unordered in-block pair EXACTLY once,
+    at every salt count, so the salt choice can never change results."""
+    from es_to_clickhouse_spark.operators.dedup import salted_block_pairs
 
     rows = [(i, chr(97 + i % 3), i * 10) for i in range(40)]
     df = spark.createDataFrame(rows, "id long, _block string, val long")
@@ -2147,74 +2062,6 @@ def test_ivf_assign_probes(spark):
     tiny = cents.limit(2)
     with _pytest.raises(ValueError, match="centroids"):
         ivf_assign_probes(emb, tiny, n_probes=3)
-
-
-def test_refined_centroids(spark):
-    """The scale-safe Lloyd refinement (judge r13 #1's second
-    primitive): (1) output schema/type drops into any assign entry
-    point (same cent_ids, float arrays, same dim); (2) with the sample
-    covering the whole corpus and a single iteration, the means match
-    the oracle-pinned exact lloyd_step on the same centroids (the
-    hash-sample E-step degrades to the exact one); (3) deterministic
-    across reruns; (4) a centroid with an empty cell survives
-    unchanged; (5) refinement does not break probes composition."""
-    from pyspark.sql import functions as F
-
-    from es_to_clickhouse_spark.operators.similarity import (
-        ivf_assign_probes,
-        lloyd_step,
-        refined_centroids,
-        sampled_centroids,
-    )
-    from tests.conftest import SF_DIR
-
-    emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
-    n = emb.count()
-    cents = sampled_centroids(emb)
-
-    # sample_per_cell big enough that the hash cut keeps EVERY row ->
-    # the E-step is exact; means must equal lloyd_step's (modulo the
-    # float cast on the repacked arrays)
-    ref = refined_centroids(emb, cents, iters=1, sample_per_cell=n)
-    assert ref.columns == ["cent_id", "cv"]
-    got = {r.cent_id: [float(x) for x in r.cv] for r in ref.collect()}
-    # exact step, long form -> repack
-    exact_long = lloyd_step(emb, cents).collect()
-    exact = {}
-    for r in exact_long:
-        exact.setdefault(r.cent_id, {})[r.pos] = r.m
-    exact = {
-        c: [float(v) for _, v in sorted(d.items())]
-        for c, d in exact.items()
-    }
-    # cells that caught vectors match the exact means up to the float32
-    # output width (the repacked arrays are cast to the input's float
-    # type — exchange-byte parity — so compare with a float32 ulp
-    # tolerance, not exact rounding: a mean sitting on a round-4
-    # boundary flips under the cast); empty cells (no row in lloyd_step
-    # output) keep their original vector
-    orig = {r.cent_id: [float(x) for x in r.cv]
-            for r in cents.select("cent_id", "cv").collect()}
-    for c, vec in got.items():
-        want = exact.get(c, orig[c])
-        assert len(vec) == len(want), f"cent {c} dim"
-        assert all(abs(a - b) < 1e-4 for a, b in zip(vec, want)), (
-            f"cent {c} diverges"
-        )
-
-    dim = len(next(iter(got.values())))
-    assert all(len(v) == dim for v in got.values())
-
-    # determinism (bit-exact across reruns)
-    again = {r.cent_id: [float(x) for x in r.cv]
-             for r in refined_centroids(
-                 emb, cents, iters=1, sample_per_cell=n).collect()}
-    assert again == got
-
-    # composes with the probe assignment (schema contract)
-    probed = ivf_assign_probes(emb, ref, n_probes=2)
-    assert probed.columns == ["vec_id", "cent_id", "sim", "probe"]
-    assert probed.count() == 2 * n
 
 
 def test_ivf_assign_hierarchical(spark):

@@ -1,47 +1,12 @@
-"""Plan-level tests: bucketed co-located joins are shuffle-free; salted
-joins match the plain join exactly (operators/partitioning.py)."""
+"""Plan-level tests: salted joins match the plain join exactly
+(operators/partitioning.py), and the salted within-block pairing
+(operators/dedup.salted_block_pairs) spreads quadratic work evenly."""
 
 from __future__ import annotations
 
-import pytest
 from pyspark.sql import functions as F
 
-from es_to_clickhouse_spark.operators.partitioning import (
-    colocated_join,
-    repartition_by_range,
-    salted_join,
-    write_bucketed,
-)
-
-
-@pytest.fixture()
-def bucketed_pair(spark):
-    orders = spark.range(1000).select(
-        F.col("id").alias("k"), (F.col("id") * 2).alias("amount")
-    )
-    items = spark.range(3000).select(
-        (F.col("id") % 1000).alias("k"), F.col("id").alias("item_id")
-    )
-    write_bucketed(orders, "b_orders", "k", n_buckets=8)
-    write_bucketed(items, "b_items", "k", n_buckets=8)
-    yield "b_orders", "b_items"
-    spark.sql("DROP TABLE IF EXISTS b_orders")
-    spark.sql("DROP TABLE IF EXISTS b_items")
-
-
-def test_bucketed_join_has_no_shuffle(spark, bucketed_pair):
-    lt, rt = bucketed_pair
-    # force SMJ path: a broadcast join would hide the bucketing benefit
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        joined = colocated_join(spark, lt, rt, "k")
-        plan = joined._jdf.queryExecution().executedPlan().toString()
-        assert "Exchange" not in plan  # bucket-to-bucket, zero shuffles
-        assert joined.count() == 3000
-    finally:
-        spark.conf.set(
-            "spark.sql.autoBroadcastJoinThreshold", str(32 * 1024 * 1024)
-        )
+from es_to_clickhouse_spark.operators.partitioning import salted_join
 
 
 def test_unbucketed_join_does_shuffle(spark):
@@ -84,25 +49,6 @@ def test_salted_join_left_keeps_unmatched(spark):
     assert got == {10: 5, 11: None}
 
 
-def test_repartition_by_range_clusters_time(spark, tmp_path):
-    df = spark.range(1000).select(
-        F.col("id"),
-        F.timestamp_micros((F.col("id") * 1_000_000).cast("long")).alias("ts"),
-    )
-    out = repartition_by_range(df, "ts", n_partitions=4)
-    assert out.rdd.getNumPartitions() == 4
-    # each partition holds a contiguous time range (min/max don't overlap)
-    ranges = (
-        out.select(F.spark_partition_id().alias("p"), "ts")
-        .groupBy("p")
-        .agg(F.min("ts").alias("lo"), F.max("ts").alias("hi"))
-        .orderBy("lo")
-        .collect()
-    )
-    for prev, nxt in zip(ranges, ranges[1:]):
-        assert prev.hi <= nxt.lo
-
-
 def test_partitioned_write_prunes_partitions(spark, tmp_path):
     """Hive-style partitionBy + filter → PartitionFilters prune whole
     directories at plan time (the layout the sink uses for time-series
@@ -140,9 +86,8 @@ def test_aqe_splits_skewed_join_partitions(spark):
 
 
 def test_triangle_salting_balances_pair_work(spark):
-    """Skew-resilience property for the d5 salted triangle pairing
-    (operators/dedup.py ngram_jaccard_pairs): its 57s->13.7s unskew is
-    oracle-verified for OUTPUT equality, but the parallelism claim was
+    """Skew-resilience property for the salted within-block pairing
+    (operators/dedup.py salted_block_pairs): the parallelism claim was
     only measured — this pins it structurally so a refactor can't
     silently re-straggle the quadratic work.
 
@@ -160,13 +105,13 @@ def test_triangle_salting_balances_pair_work(spark):
     from hypothesis import HealthCheck, given, settings
     from hypothesis import strategies as st
 
-    from es_to_clickhouse_spark.operators.dedup import ngram_jaccard_pairs
+    from es_to_clickhouse_spark.operators.dedup import salted_block_pairs
 
     import inspect
 
     # keep the Python replica below honest: it models the operator's
     # ACTUAL salt space (drifting defaults would fail here, not silently)
-    n_salts = inspect.signature(ngram_jaccard_pairs).parameters["n_salts"].default
+    n_salts = inspect.signature(salted_block_pairs).parameters["n_salts"].default
     assert n_salts == 16
     # the implementation's exact salt: abs(murmur3(id)) % n_salts
     salt_of = {
@@ -214,15 +159,16 @@ def test_triangle_salting_balances_pair_work(spark):
     # pinned exchange on (_block, _salt_b) present in the optimized plan
     docs = spark.range(300).select(
         F.col("id").alias("doc_id"),
-        F.concat(F.lit("tok"), (F.col("id") % 40).cast("string")).alias("text"),
-        F.lit("all").alias("lang"),
+        F.lit("all").alias("_block"),
+        (F.col("id") % 40).alias("v"),
     )
-    pairs = ngram_jaccard_pairs(docs, "doc_id", "text", "lang", threshold=0.99)
+    pairs = salted_block_pairs(docs, "doc_id", ["v"])
     plan = pairs._jdf.queryExecution().optimizedPlan().toString()
     assert "RepartitionByExpression" in plan and "_salt_b" in plan, plan
-    # single-token docs: exact-duplicate pairs only, jaccard 1.0 — the
-    # degenerate all-one-block corpus still returns the right SET
-    got = pairs.collect()
-    assert got and all(r.jaccard == 1.0 for r in got)
-    assert all(r.id_a < r.id_b for r in got)
-    assert len(got) == len({(r.id_a, r.id_b) for r in got})
+    # the degenerate all-one-block corpus still returns every unordered
+    # pair exactly once
+    got = pairs.select(
+        F.least("_ida", "_idb").alias("a"), F.greatest("_ida", "_idb").alias("b")
+    )
+    assert got.where(F.col("a") == F.col("b")).count() == 0
+    assert got.count() == got.distinct().count() == 300 * 299 // 2

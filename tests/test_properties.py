@@ -7,7 +7,6 @@ behaviors under test:
 - name sanitization (es/es_to_bytehouse.py:283-285,548-549;
   mongodb/mongodb_to_bytehouse.py:310-311; table rule :738-745)
 - glob matching (clickhouse/clickhouse_to_bytehouse.py:83-98)
-- schema flatten + union (es/es_to_bytehouse.py:275-294, 762-771)
 """
 
 from __future__ import annotations
@@ -17,9 +16,7 @@ import fnmatch
 
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
-from pyspark.sql import types as T
 
-from es_to_clickhouse_spark.flatten import flatten_struct_type, schema_union
 from es_to_clickhouse_spark.functions import (
     match_names,
     sanitize_field_name,
@@ -71,65 +68,6 @@ def test_match_names_subset_and_fnmatch_parity(names, patterns):
     }
     # exactly the fnmatch-matching names, input-order-preserving, deduped
     assert got == [n for n in dict.fromkeys(names) if n in matching]
-
-
-# -- schema-level flatten properties (pure, no Spark) ----------------------
-
-leaf_types = st.sampled_from(
-    [T.StringType(), T.LongType(), T.DoubleType(), T.BooleanType()]
-)
-
-
-def struct_types(depth: int = 2):
-    field_name = st.text(
-        alphabet=st.sampled_from("abcxyz.-@_"), min_size=1, max_size=6
-    )
-    base = st.builds(
-        lambda names, types: T.StructType(
-            [
-                T.StructField(n, t)
-                for n, t in zip(
-                    dict.fromkeys(names), types
-                )  # dedup names, keep order
-            ]
-        ),
-        st.lists(field_name, min_size=1, max_size=4, unique=True),
-        st.lists(leaf_types, min_size=4, max_size=4),
-    )
-    if depth == 0:
-        return base
-    inner = struct_types(depth - 1)
-    return st.builds(
-        lambda names, children: T.StructType(
-            [
-                T.StructField(n, c)
-                for n, c in zip(dict.fromkeys(names), children)
-            ]
-        ),
-        st.lists(field_name, min_size=1, max_size=3, unique=True),
-        st.lists(st.one_of(leaf_types, inner), min_size=3, max_size=3),
-    )
-
-
-@given(struct_types())
-@settings(suppress_health_check=[HealthCheck.too_slow], deadline=None)
-def test_flatten_struct_type_leaves_only(schema):
-    flat = flatten_struct_type(schema, "es")
-    # every value is a leaf type (no StructType survives ES flatten)
-    assert all(not isinstance(v, T.StructType) for v in flat.values())
-    # flat names carry no ES-sanitized specials
-    assert all("." not in k and "-" not in k and "@" not in k for k in flat)
-
-
-@given(struct_types(), struct_types())
-@settings(suppress_health_check=[HealthCheck.too_slow], deadline=None)
-def test_schema_union_first_seen_wins(a, b):
-    fa = flatten_struct_type(a, "es")
-    fb = flatten_struct_type(b, "es")
-    u = schema_union(fa, fb)
-    assert set(u) == set(fa) | set(fb)
-    for k, v in fa.items():
-        assert u[k] == v  # first map wins on conflicts
 
 
 # -- upsert determinism under physical layout (hypothesis) ---------------

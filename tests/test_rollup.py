@@ -1,179 +1,41 @@
-"""Incremental rollup (continuous aggregate) maintenance — rollup.py."""
+"""Mergeable partial-state aggregates and their read-time estimators —
+rollup.py."""
 
 from __future__ import annotations
 
 import pytest
-import glob
-import os
 
 from pyspark.sql import functions as F
 
 from es_to_clickhouse_spark.rollup import (
     batch_partials,
-    read_rollup,
-    refresh_rollup,
+    sketch_distinct,
+    sketch_quantile,
 )
 
 
-def _events(spark, rows):
-    return spark.createDataFrame(rows, "d string, user_id long, value double")
-
-
-def _full_recompute(spark, all_rows):
-    return {
-        (r.d, r.user_id): (r.v_sum, r.v_cnt, r.v_min, r.v_max)
-        for r in batch_partials(
-            _events(spark, all_rows), ["d", "user_id"], "value"
-        ).collect()
-    }
-
-
-def test_incremental_refresh_equals_full_recompute(spark, tmp_path):
-    path = str(tmp_path / "rollup")
-    b1 = [("2024-01-01", 1, 10.0), ("2024-01-01", 2, 4.0), ("2024-01-02", 1, 7.0)]
-    b2 = [("2024-01-02", 1, 3.0), ("2024-01-03", 2, 5.0)]  # touches d2, d3 only
-    assert refresh_rollup(spark, path, _events(spark, b1), ["d", "user_id"], "value") == 2
-    assert refresh_rollup(spark, path, _events(spark, b2), ["d", "user_id"], "value") == 2
-    # partition-value inference reads d back as DATE; normalize to str
-    got = {
-        (str(r.d), r.user_id): (r.v_sum, r.v_cnt, r.v_min, r.v_max)
-        for r in read_rollup(spark, path).collect()
-    }
-    assert got == _full_recompute(spark, b1 + b2)
-    # derived avg merges correctly across batches (d2/u1: (7+3)/2)
-    avg = {
-        (str(r.d), r.user_id): r.v_avg for r in read_rollup(spark, path).collect()
-    }
-    assert avg[("2024-01-02", 1)] == 5.0
-
-
-def test_untouched_partitions_not_rewritten(spark, tmp_path):
-    path = str(tmp_path / "rollup")
-    refresh_rollup(
-        spark,
-        path,
-        _events(spark, [("2024-01-01", 1, 1.0), ("2024-01-02", 1, 2.0)]),
-        ["d", "user_id"],
-        "value",
-    )
-
-    def files_of(day):
-        return {
-            p: os.path.getmtime(p)
-            for p in glob.glob(os.path.join(path, f"d={day}", "*.parquet"))
-        }
-
-    before = files_of("2024-01-01")
-    assert before
-    # batch touching ONLY 2024-01-02: day-1 partition must be byte-identical
-    refresh_rollup(
-        spark,
-        path,
-        _events(spark, [("2024-01-02", 1, 9.0)]),
-        ["d", "user_id"],
-        "value",
-    )
-    assert files_of("2024-01-01") == before
-    got = {
-        (str(r.d), r.user_id): (r.v_sum, r.v_cnt)
-        for r in read_rollup(spark, path).collect()
-    }
-    assert got[("2024-01-02", 1)] == (11.0, 2)
-    assert got[("2024-01-01", 1)] == (1.0, 1)
-
-
-def test_null_leading_grain_keeps_prior_state(spark, tmp_path):
-    """The r4 ADVICE medium finding: a NULL leading grain lands in the
-    __HIVE_DEFAULT_PARTITION__ directory, and `isin(touched)` never
-    matches NULL — without an isNull arm the second batch's dynamic
-    overwrite would replace that partition with only its own partials,
-    silently dropping batch 1's contribution."""
-    path = str(tmp_path / "rollup")
-    b1 = [(None, 1, 5.0), ("2024-01-01", 1, 1.0)]
-    b2 = [(None, 1, 3.0)]  # touches ONLY the null partition
-    refresh_rollup(spark, path, _events(spark, b1), ["d", "user_id"], "value")
-    refresh_rollup(spark, path, _events(spark, b2), ["d", "user_id"], "value")
-    got = {
-        (r.d if r.d is None else str(r.d), r.user_id): (
-            r.v_sum, r.v_cnt, r.v_min, r.v_max,
-        )
-        for r in read_rollup(spark, path).collect()
-    }
-    assert got[(None, 1)] == (8.0, 2, 3.0, 5.0)  # merged, not replaced
-    assert got[("2024-01-01", 1)] == (1.0, 1, 1.0, 1.0)
-    # an all-null batch (non_null empty → lit(False) | isNull arm)
-    refresh_rollup(spark, path, _events(spark, [(None, 1, 2.0)]), ["d", "user_id"], "value")
-    got2 = {
-        (r.d if r.d is None else str(r.d), r.user_id): (r.v_sum, r.v_cnt)
-        for r in read_rollup(spark, path).collect()
-    }
-    assert got2[(None, 1)] == (10.0, 3)
-
-
-def test_empty_batch_is_noop(spark, tmp_path):
-    path = str(tmp_path / "rollup")
-    refresh_rollup(
-        spark, path, _events(spark, [("2024-01-01", 1, 1.0)]), ["d", "user_id"], "value"
-    )
-    before = sorted(glob.glob(os.path.join(path, "**", "*.parquet"), recursive=True))
-    assert refresh_rollup(spark, path, _events(spark, []), ["d", "user_id"], "value") == 0
-    after = sorted(glob.glob(os.path.join(path, "**", "*.parquet"), recursive=True))
-    assert after == before
-
-
-def test_sketch_partials_incremental_equals_recompute(spark, tmp_path):
-    """v_qsk (bottom-k-by-hash quantile sample) and v_hllr (HLL
-    registers) are EXACTLY mergeable: the incrementally-maintained
-    state after three overlapping batches is bit-identical to a one-shot
-    batch_partials over the union — not merely within sketch error."""
-    import random
-
-    from es_to_clickhouse_spark.rollup import batch_partials
-
-    random.seed(7)
-    rows = [
-        (f"2024-01-{1 + (i % 3):02d}", i, float((i * 131) % 1000), i % 37)
-        for i in range(900)
-    ]
-    schema = "d string, rid long, value double, uid long"
-    batches = [rows[0:300], rows[300:650], rows[650:900]]
-    path = str(tmp_path / "rollup")
-    for b in batches:
-        refresh_rollup(
-            spark, path, spark.createDataFrame(b, schema), ["d"], "value",
-            key_col="rid", distinct_col="uid", quantile_k=64,
-        )
-    got = {
-        str(r.d): (list(r.v_qsk), list(r.v_hllr), r.v_sum, r.v_cnt)
-        for r in spark.read.parquet(path).collect()
-    }
-    want = {
-        str(r.d): (list(r.v_qsk), list(r.v_hllr), r.v_sum, r.v_cnt)
-        for r in batch_partials(
-            spark.createDataFrame(rows, schema), ["d"], "value",
-            key_col="rid", distinct_col="uid", quantile_k=64,
-        ).collect()
-    }
-    assert got == want
-
-
-def test_sketch_estimates_within_documented_bounds(spark, tmp_path):
+def test_sketch_estimates_within_documented_bounds(spark):
     """Read-time estimators vs exact answers on deterministic data:
     p50/p95 from the k=256 sample within ~4-sigma rank error
     (sqrt(p(1-p)/k)), HLL distinct within 3x its 6.5% standard error.
     Deterministic hash -> the observed errors are fixed, so the
     assertions cannot flake."""
-    from es_to_clickhouse_spark.rollup import read_rollup
-
     n = 5000
     rows = [("g", i, float(i), i % 1200) for i in range(n)]
     schema = "d string, rid long, value double, uid long"
-    path = str(tmp_path / "rollup")
-    refresh_rollup(
-        spark, path, spark.createDataFrame(rows, schema), ["d"], "value",
-        key_col="rid", distinct_col="uid",
+    r = (
+        batch_partials(
+            spark.createDataFrame(rows, schema), ["d"], "value",
+            key_col="rid", distinct_col="uid",
+        )
+        .select(
+            (F.col("v_sum") / F.col("v_cnt")).alias("v_avg"),
+            sketch_quantile(F.col("v_qsk"), 0.5).alias("v_p50"),
+            sketch_quantile(F.col("v_qsk"), 0.95).alias("v_p95"),
+            sketch_distinct("v_hllr").alias("v_distinct"),
+        )
+        .collect()[0]
     )
-    r = read_rollup(spark, path).collect()[0]
     # values are 0..4999 uniform: rank error of the estimate = value
     # error / n. 4 sigma at p=.5, k=256 -> .125; at p=.95 -> .055
     assert abs(r.v_p50 - 2500.0) / n < 0.125, r.v_p50
@@ -182,111 +44,39 @@ def test_sketch_estimates_within_documented_bounds(spark, tmp_path):
     assert r.v_avg == sum(range(n)) / n
 
 
-def test_sketch_null_values_excluded_but_counted_consistently(spark, tmp_path):
+def test_sketch_null_values_excluded_but_counted_consistently(spark):
     """NULL values: excluded from the quantile sample (matching v_cnt's
     count(value) semantics); NULL distinct keys excluded from HLL."""
-    from es_to_clickhouse_spark.rollup import read_rollup
-
     rows = [("g", 1, 10.0, 5), ("g", 2, None, None), ("g", 3, 30.0, 5)]
     schema = "d string, rid long, value double, uid long"
-    path = str(tmp_path / "rollup")
-    refresh_rollup(
-        spark, path, spark.createDataFrame(rows, schema), ["d"], "value",
-        key_col="rid", distinct_col="uid",
+    r = (
+        batch_partials(
+            spark.createDataFrame(rows, schema), ["d"], "value",
+            key_col="rid", distinct_col="uid",
+        )
+        .select(
+            "v_cnt",
+            "v_qsk",
+            sketch_quantile(F.col("v_qsk"), 0.5).alias("v_p50"),
+            sketch_distinct("v_hllr").alias("v_distinct"),
+        )
+        .collect()[0]
     )
-    r = read_rollup(spark, path).collect()[0]
     assert r.v_cnt == 2 and len(r.v_qsk) == 2
     assert sorted(e.v for e in r.v_qsk) == [10.0, 30.0]
     assert r.v_p50 in (10.0, 30.0) and r.v_distinct >= 1
 
 
-def test_streaming_foreachbatch_maintains_rollup(spark, tmp_path):
-    """Structured Streaming → continuous aggregate: a file stream feeds
-    refresh_rollup per micro-batch (foreachBatch), and the maintained
-    rollup equals a batch recompute over everything streamed — the
-    at-scale shape for live dashboards over a synced table (each batch
-    touches only its grain partitions; history is never re-read)."""
-    src = tmp_path / "stream_src"
-    src.mkdir()
-    rollup_path = str(tmp_path / "rollup")
-    schema = "d string, user_id long, value double"
-
-    b1 = spark.createDataFrame(
-        [("2024-01-01", 1, 2.0), ("2024-01-01", 1, 4.0), ("2024-01-02", 2, 10.0)],
-        schema,
-    )
-    b1.write.mode("append").parquet(str(src))
-
-    def handle(batch, batch_id):
-        # sketch partials maintained through the STREAMING path too:
-        # user_id doubles as the sample/distinct key (unique per grain
-        # row here, which is all the exactly-once contract needs)
-        refresh_rollup(
-            batch.sparkSession, rollup_path, batch, ["d", "user_id"], "value",
-            key_col="user_id", distinct_col="user_id",
-        )
-
-    stream = spark.readStream.schema(schema).parquet(str(src))
-    q = (
-        stream.writeStream.foreachBatch(handle)
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-
-    # second wave of files → second streaming run picks up ONLY new files
-    b2 = spark.createDataFrame(
-        [("2024-01-02", 2, 6.0), ("2024-01-03", 1, 1.0)], schema
-    )
-    b2.write.mode("append").parquet(str(src))
-    q2 = (
-        spark.readStream.schema(schema)
-        .parquet(str(src))
-        .writeStream.foreachBatch(handle)
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q2.awaitTermination(120)
-
-    got = {
-        (str(r.d), r.user_id): (r.v_sum, r.v_cnt, r.v_avg)
-        for r in read_rollup(spark, rollup_path).collect()
-    }
-    assert got == {
-        ("2024-01-01", 1): (6.0, 2, 3.0),
-        ("2024-01-02", 2): (16.0, 2, 8.0),
-        ("2024-01-03", 1): (1.0, 1, 1.0),
-    }
-    # streaming-maintained sketches == one-shot recompute, bit-exact
-    from es_to_clickhouse_spark.rollup import batch_partials
-
-    everything = b1.unionByName(b2)
-    want_sk = {
-        (str(r.d), r.user_id): (list(r.v_qsk), list(r.v_hllr))
-        for r in batch_partials(
-            everything, ["d", "user_id"], "value",
-            key_col="user_id", distinct_col="user_id",
-        ).collect()
-    }
-    got_sk = {
-        (str(r.d), r.user_id): (list(r.v_qsk), list(r.v_hllr))
-        for r in spark.read.parquet(rollup_path).collect()
-    }
-    assert got_sk == want_sk
-
-
-@pytest.mark.slow  # r15: driver test-gate budget
-def test_topk_partial_bounds_and_determinism(spark, tmp_path):
-    """Heavy-hitter partial (v_topk/v_topk_err — the topKState analog):
-    after a multi-batch refresh over a skewed stream, (a) every stored
-    count is a LOWER bound and stored+err an UPPER bound of the true
-    count, (b) every key whose true count exceeds err is present —
-    so the genuinely heavy keys can never be lost, (c) absent keys have
-    true count <= err, and (d) replaying the identical batch sequence
-    into a fresh rollup yields a bit-identical summary (deterministic
-    compress via the total (count desc, key asc) order)."""
+@pytest.mark.slow  # tier-1 time budget
+def test_topk_partial_bounds_and_determinism(spark):
+    """Heavy-hitter partial (v_topk/v_topk_err — the topKState analog)
+    over a skewed batch: (a) every stored count is a LOWER bound and
+    stored+err an UPPER bound of the true count, (b) every key whose
+    true count exceeds err is present — so the genuinely heavy keys can
+    never be lost, (c) absent keys have true count <= err, and (d)
+    recomputing the same batch yields a bit-identical summary
+    (deterministic compress via the total (count desc, key asc)
+    order)."""
     import collections
 
     k = 8
@@ -294,23 +84,20 @@ def test_topk_partial_bounds_and_determinism(spark, tmp_path):
     stream = (
         ["hot"] * 450 + ["warm"] * 200 + [f"cold{i % 30}" for i in range(350)]
     )
-    # deterministic interleave so batches mix hot and cold
+    # deterministic interleave so the partitions mix hot and cold
     stream = [stream[(i * 131) % len(stream)] for i in range(len(stream))]
-    batches = [stream[0:250], stream[250:600], stream[600:1000]]
     true = collections.Counter(stream)
 
-    def run(path):
-        for b in batches:
-            df = spark.createDataFrame(
-                [("g", i, 1.0, key) for i, key in enumerate(b)],
-                "d string, rid long, value double, page string",
-            )
-            refresh_rollup(
-                spark, path, df, ["d"], "value", topk_col="page", topk_k=k
-            )
-        return spark.read.parquet(path).collect()[0]
+    def run():
+        df = spark.createDataFrame(
+            [("g", i, 1.0, key) for i, key in enumerate(stream)],
+            "d string, rid long, value double, page string",
+        ).repartition(3)
+        return batch_partials(
+            df, ["d"], "value", topk_col="page", topk_k=k
+        ).collect()[0]
 
-    r = run(str(tmp_path / "r1"))
+    r = run()
     stored = {e.key: e.cnt for e in r.v_topk}
     err = r.v_topk_err
     assert len(stored) <= k and err > 0
@@ -325,292 +112,59 @@ def test_topk_partial_bounds_and_determinism(spark, tmp_path):
     assert stored["hot"] >= true["hot"] - err
     assert stored["warm"] >= true["warm"] - err
 
-    r2 = run(str(tmp_path / "r2"))
+    r2 = run()
     assert [tuple(e) for e in r2.v_topk] == [tuple(e) for e in r.v_topk]
     assert r2.v_topk_err == err
 
 
-def test_topk_partial_small_grain_is_exact(spark, tmp_path):
-    """Fewer distinct keys than topk_k: no compress ever fires, err
-    stays 0, and the summary IS the exact count table."""
-    path = str(tmp_path / "rollup")
+def test_topk_partial_small_grain_is_exact(spark):
+    """Fewer distinct keys than topk_k: no compress fires, err stays 0,
+    and the summary IS the exact count table."""
     rows = [("g", i, 1.0, ["a", "b", "c"][i % 3]) for i in range(90)]
+    rows.append(("g", 99, 1.0, "a"))
     df = spark.createDataFrame(
         rows, "d string, rid long, value double, page string"
     )
-    refresh_rollup(spark, path, df, ["d"], "value", topk_col="page", topk_k=8)
-    refresh_rollup(
-        spark, path,
-        spark.createDataFrame(
-            [("g", 99, 1.0, "a")], "d string, rid long, value double, page string"
-        ),
-        ["d"], "value", topk_col="page", topk_k=8,
-    )
-    r = spark.read.parquet(path).collect()[0]
+    r = batch_partials(df, ["d"], "value", topk_col="page", topk_k=8).collect()[0]
     assert r.v_topk_err == 0
     assert {e.key: e.cnt for e in r.v_topk} == {"a": 31, "b": 30, "c": 30}
 
 
-@pytest.mark.slow  # r15: driver test-gate budget
-def test_sketch_merge_exact_under_arbitrary_splits(spark, tmp_path):
-    """Hypothesis over batch split points: however a 600-row stream is
-    cut into refresh_rollup batches, the maintained v_qsk and v_hllr
-    states are bit-identical to the one-shot recompute (their merges
-    are exact, not approximately associative), sums/counts match, and
-    the v_topk BOUNDS hold (its state may differ by split — only the
-    guarantees are split-invariant)."""
-    import collections
-
-    from hypothesis import HealthCheck, given, settings
-    from hypothesis import strategies as st
-
-    rows = [
-        (f"2024-01-{1 + (i % 2):02d}", i, float((i * 37) % 50), i % 13,
-         f"pg{(i * 7) % 21}")
-        for i in range(600)
-    ]
-    schema = "d string, rid long, value double, uid long, page string"
-    want = {
-        str(r.d): (list(r.v_qsk), list(r.v_hllr), r.v_sum, r.v_cnt)
-        for r in batch_partials(
-            spark.createDataFrame(rows, schema), ["d"], "value",
-            key_col="rid", distinct_col="uid", quantile_k=32,
-            topk_col="page", topk_k=6,
-        ).collect()
-    }
-    true_counts = {
-        d: collections.Counter(
-            r[4] for r in rows if r[0] == d
-        )
-        for d in {r[0] for r in rows}
-    }
-    case_n = [0]
-
-    @given(st.sets(st.integers(min_value=1, max_value=599), max_size=4))
-    @settings(
-        max_examples=5,
-        deadline=None,
-        suppress_health_check=[HealthCheck.function_scoped_fixture],
-    )
-    def check(cuts):
-        case_n[0] += 1
-        path = str(tmp_path / f"r{case_n[0]}")
-        edges = [0] + sorted(cuts) + [600]
-        for lo, hi in zip(edges, edges[1:]):
-            if lo == hi:
-                continue
-            refresh_rollup(
-                spark, path, spark.createDataFrame(rows[lo:hi], schema),
-                ["d"], "value", key_col="rid", distinct_col="uid",
-                quantile_k=32, topk_col="page", topk_k=6,
-            )
-        got_rows = spark.read.parquet(path).collect()
-        got = {
-            str(r.d): (list(r.v_qsk), list(r.v_hllr), r.v_sum, r.v_cnt)
-            for r in got_rows
-        }
-        assert got == want, sorted(cuts)
-        for r in got_rows:
-            stored = {e.key: e.cnt for e in r.v_topk}
-            err = r.v_topk_err
-            tc = true_counts[str(r.d)]
-            for key, cnt in stored.items():
-                assert cnt <= tc[key] <= cnt + err, (sorted(cuts), key)
-            for key, n in tc.items():
-                if n > err:
-                    assert key in stored, (sorted(cuts), key, n, err)
-
-    check()
-
-
-def test_argmax_partial_incremental_equals_recompute(spark, tmp_path):
-    """v_amax (argMaxState analog): the (value, arg) struct max merges
-    associatively, so split-up batches end at the same winner as one
-    recompute — including a later batch stealing the max, ties breaking
-    to the larger arg, and NULL values never winning."""
-    path = str(tmp_path / "amax")
+def test_argmax_partial_ties_and_nulls(spark):
+    """v_amax (argMaxState analog): the (value, arg) struct max picks the
+    largest value, ties break to the larger arg string, and NULL values
+    never win."""
 
     def ev(rows):
         return spark.createDataFrame(rows, "d string, user_id long, value double")
 
-    b1 = [
+    rows = [
         ("2024-01-01", 7, 10.0),
         ("2024-01-01", 3, 10.0),   # tie with u7: larger arg string wins
         ("2024-01-02", 1, None),   # NULL never wins
         ("2024-01-02", 2, 1.0),
+        ("2024-01-01", 5, 2.0),
+        ("2024-01-02", 9, 99.0),
     ]
-    b2 = [
-        ("2024-01-01", 5, 2.0),    # does not steal d1
-        ("2024-01-02", 9, 99.0),   # steals d2
-    ]
-    for b in (b1, b2):
-        refresh_rollup(spark, path, ev(b), ["d"], "value", arg_col="user_id")
     got = {
-        str(r.d): (r.v_amax_val, r.v_amax_arg)
-        for r in read_rollup(spark, path).collect()
-    }
-    full = {
         str(r.d): (r["v_amax"]["v"], r["v_amax"]["a"])
-        for r in batch_partials(ev(b1 + b2), ["d"], "value", arg_col="user_id").collect()
+        for r in batch_partials(ev(rows), ["d"], "value", arg_col="user_id").collect()
     }
-    assert got == full
     assert got["2024-01-01"] == (10.0, "7")  # tie -> max arg string
     assert got["2024-01-02"] == (99.0, "9")
 
 
-def test_argmax_partial_exact_past_double_precision(spark, tmp_path):
+def test_argmax_partial_exact_past_double_precision(spark):
     """bigint values beyond 2^53: a double cast in the v_amax struct
     would collapse 2^53 and 2^53+1 into the same value and could pick
-    the wrong arg (ADVICE r5) — the value must stay in its native
-    orderable type through partials, merges, and the stored rollup."""
-    path = str(tmp_path / "amax_big")
+    the wrong arg — the value must stay in its native orderable type in
+    the partial."""
     base = 1 << 53
-
-    def ev(rows):
-        return spark.createDataFrame(rows, "d string, user_id long, value long")
-
-    b1 = [("2024-01-01", 1, base), ("2024-01-01", 2, base + 1)]
-    b2 = [("2024-01-01", 3, base - 1)]
-    for b in (b1, b2):
-        refresh_rollup(spark, path, ev(b), ["d"], "value", arg_col="user_id")
-    r = read_rollup(spark, path).collect()[0]
-    assert (r.v_amax_val, r.v_amax_arg) == (base + 1, "2")
-    assert isinstance(r.v_amax_val, int)
-
-
-# ---------------------------------------------------- funnel partial
-
-
-def _funnel_conds():
-    return [F.col("et") == s for s in ("a", "b", "c")]
-
-
-@pytest.mark.slow  # r15: driver test-gate budget
-def test_funnel_rollup_incremental_equals_recompute_randomized(spark, tmp_path):
-    """The mergeable funnel state must reproduce window_funnel exactly
-    when the same events arrive split into time-ordered micro-batches —
-    including chains spanning batch boundaries, seeds expiring across a
-    boundary, within-batch completions, and keys absent from some
-    batches. Randomized sweep: 8 seeds x 6 keys x ~30 events each,
-    split at 2 strict time boundaries."""
-    import random
-
-    from es_to_clickhouse_spark.operators.funnel import window_funnel
-    from es_to_clickhouse_spark.rollup import (
-        read_funnel_rollup,
-        refresh_funnel_rollup,
+    df = spark.createDataFrame(
+        [("2024-01-01", 1, base), ("2024-01-01", 2, base + 1),
+         ("2024-01-01", 3, base - 1)],
+        "d string, user_id long, value long",
     )
-
-    W = 50
-    for seed in range(8):
-        rng = random.Random(seed)
-        rows = []
-        eid = 0
-        for k in range(6):
-            n_ev = rng.randint(5, 30)
-            ts = 0
-            for _ in range(n_ev):
-                ts += rng.randint(1, 25)
-                rows.append((k, eid, ts, rng.choice("abcx")))
-                eid += 1
-        # strict time boundaries at 1/3 and 2/3 of the global ts range
-        all_ts = sorted({r[2] for r in rows})
-        b1, b2 = all_ts[len(all_ts) // 3], all_ts[2 * len(all_ts) // 3]
-        batches = [
-            [r for r in rows if r[2] <= b1],
-            [r for r in rows if b1 < r[2] <= b2],
-            [r for r in rows if r[2] > b2],
-        ]
-        schema = "user_id long, event_id long, us long, et string"
-        path = str(tmp_path / f"funnel_{seed}")
-        for b in batches:
-            if not b:
-                continue
-            refresh_funnel_rollup(
-                spark, path, spark.createDataFrame(b, schema),
-                ["user_id"], "us", ["event_id"], _funnel_conds(), 3, W,
-            )
-        got = {
-            r.user_id: r.funnel_level
-            for r in read_funnel_rollup(spark, path).collect()
-        }
-        want = {
-            r.user_id: r.funnel_level
-            for r in window_funnel(
-                spark.createDataFrame(rows, schema),
-                "user_id", "us", ["event_id"], _funnel_conds(), W,
-            ).collect()
-        }
-        # keys with zero funnel-relevant events may be absent vs level 0
-        want_nz = {k: v for k, v in want.items()}
-        for k in want_nz:
-            assert got.get(k, 0) == want_nz[k], (seed, k, got, want)
-
-
-def test_funnel_rollup_boundary_chain_and_expiry(spark, tmp_path):
-    """Directed cases: (1) a chain spanning all three batches completes
-    iff its start is within the window of the completion event; (2) a
-    seed older than the window when cond_3 fires must NOT complete;
-    (3) a later restart (new cond_1) rescues the chain."""
-    from es_to_clickhouse_spark.rollup import (
-        read_funnel_rollup,
-        refresh_funnel_rollup,
-    )
-
-    W = 100
-    schema = "user_id long, event_id long, us long, et string"
-    batches = [
-        # u1: a@10 -> b@60 -> c@105 (within 100) => 3
-        # u2: a@10 -> b@60 -> c@150 (start expired: 150-100 > 10) => 2
-        # u3: a@10, a@80 -> b@120 -> c@170 (second start rescues) => 3
-        [(1, 1, 10, "a"), (2, 2, 10, "a"), (3, 3, 10, "a"), (3, 4, 80, "a")],
-        [(1, 5, 60, "b"), (2, 6, 60, "b"), (3, 7, 120, "b")],
-        [(1, 8, 105, "c"), (2, 9, 150, "c"), (3, 10, 170, "c")],
-    ]
-    path = str(tmp_path / "funnel_directed")
-    for b in batches:
-        refresh_funnel_rollup(
-            spark, path, spark.createDataFrame(b, schema),
-            ["user_id"], "us", ["event_id"], _funnel_conds(), 3, W,
-        )
-    got = {
-        r.user_id: r.funnel_level
-        for r in read_funnel_rollup(spark, path).collect()
-    }
-    assert got == {1: 3, 2: 2, 3: 3}
-
-
-def test_funnel_partials_compose_associatively(spark):
-    """(A . B) . C == A . (B . C): compose the same three batch states
-    in both groupings via the refresh machinery run over different
-    split points of the same stream — same final state either way."""
-    from es_to_clickhouse_spark.rollup import funnel_partials, _funnel_compose
-
-    W = 40
-    schema = "user_id long, event_id long, us long, et string"
-    rows = [
-        (1, 1, 5, "a"), (1, 2, 20, "b"), (1, 3, 42, "c"),
-        (1, 4, 50, "a"), (1, 5, 70, "b"), (1, 6, 95, "c"),
-        (2, 7, 5, "a"), (2, 8, 80, "b"), (2, 9, 90, "c"),
-    ]
-
-    def part(lo, hi):
-        sub = [r for r in rows if lo < r[2] <= hi]
-        return funnel_partials(
-            spark.createDataFrame(sub, schema),
-            ["user_id"], "us", ["event_id"], _funnel_conds(), W,
-        )
-
-    def compose(a, b):
-        return (
-            a.alias("a")
-            .join(b.alias("b"), ["user_id"], "full_outer")
-            .select("user_id", *_funnel_compose(3, W))
-        )
-
-    A, B, C = part(0, 30), part(30, 60), part(60, 100)
-    left = compose(compose(A, B), C)
-    right = compose(A, compose(B, C))
-    l = sorted(map(tuple, left.collect()))
-    r = sorted(map(tuple, right.collect()))
-    assert l == r
+    r = batch_partials(df, ["d"], "value", arg_col="user_id").collect()[0]
+    assert (r["v_amax"]["v"], r["v_amax"]["a"]) == (base + 1, "2")
+    assert isinstance(r["v_amax"]["v"], int)

@@ -4,18 +4,14 @@ The engine's loop semantics (reference es/es_to_bytehouse.py:1069-1102,
 SURVEY T1-T6) are tested piecewise elsewhere; this is the one e2e that
 runs them TOGETHER, the way a deployed daemon would hit them: empty
 rounds interleaved with new data, late updates (old created_at / new
-updated_at, caught by the OR-clause), and schema-evolving appends —
-while a continuous aggregate (rollup.py) is maintained off every
-round's delta. Asserts, per round:
+updated_at, caught by the OR-clause), and schema-evolving appends. Asserts, per round:
 
 - rows moved match the scenario exactly (no re-fetch, no miss);
 - part-file count frozen on idle rounds, growing on active ones;
 - sync state commits EXACTLY on non-empty rounds, and every watermark
   (time, update-time, id) is monotone non-decreasing across all 20;
 
-and at the end: the incrementally-maintained rollup equals a one-shot
-recompute over the full warehouse (including the exact quantile-sample
-partial), the evolved column exists with NULL backfill, and dedup'd
+and at the end: the evolved column exists with NULL backfill, and dedup'd
 warehouse contents match the source of truth.
 """
 
@@ -30,13 +26,6 @@ from pyspark.sql import functions as F
 
 from es_to_clickhouse_spark.catalog import ParquetCatalog
 from es_to_clickhouse_spark.engine import SyncEngine
-from es_to_clickhouse_spark.operators.funnel import window_funnel
-from es_to_clickhouse_spark.rollup import (
-    batch_partials,
-    read_funnel_rollup,
-    refresh_funnel_rollup,
-    refresh_rollup,
-)
 from es_to_clickhouse_spark.sink import WarehouseTarget
 from es_to_clickhouse_spark.state import StateStore
 
@@ -68,7 +57,6 @@ def _state_key(st):
 def test_twenty_round_soak(spark, tmp_path):
     source = tmp_path / "source"
     os.makedirs(source)
-    rollup_path = str(tmp_path / "rollup")
     day = lambda i: f"2024-02-{i:02d}"
     _write(
         spark,
@@ -87,90 +75,6 @@ def test_twenty_round_soak(spark, tmp_path):
         id_field="event_id",
     )
     engine.sync_full()
-
-    # rollup maintenance off each round's warehouse delta, keyed by row
-    # VERSION (_id, updated_at) so a late UPDATE feeds as a new version
-    # — the exactly-once contract rollup.refresh_rollup requires
-    seen: set[tuple] = set()
-
-    def feed_rollup():
-        wh = engine.target.read("docs", dedup=False).select(
-            "_id",
-            F.col("updated_at").cast("string").alias("_u"),
-            F.to_date("created_at").cast("string").alias("d"),
-            "value",
-        )
-        rows = wh.collect()
-        fresh = [r for r in rows if (r._id, r._u) not in seen]
-        seen.update((r._id, r._u) for r in rows)
-        if not fresh:
-            return []
-        batch = spark.createDataFrame(
-            [(r.d, f"{r._id}#{r._u}", r.value) for r in fresh],
-            "d string, vkey string, value double",
-        )
-        refresh_rollup(
-            spark, rollup_path, batch, ["d"], "value", key_col="vkey"
-        )
-        return fresh
-
-    # -- funnel rollup leg (VERDICT r6 #4): a continuously-maintained
-    # windowFunnel partial rides the same 20 rounds. Each fresh row
-    # version maps to ONE deterministic funnel event (user = _id mod 3,
-    # strictly increasing event time, step letter cycling a/b/c/x), so
-    # chains span empty/late/evolving rounds and batch boundaries.
-    funnel_path = str(tmp_path / "funnel_rollup")
-    FUNNEL_SCHEMA = "user_id long, event_id long, us long, et string"
-    FW = 500  # us advances 7/event and a user sees every ~3rd event, so
-    # this spans most of the soak — wide enough that a->b->c chains
-    # REALLY form across rounds (expiry semantics are pinned by the
-    # directed + randomized tests in test_rollup.py; the soak's job is
-    # cross-round incremental maintenance)
-    fconds = lambda: [F.col("et") == s for s in ("a", "b", "c")]  # noqa: E731
-    funnel_events: list[tuple] = []
-    fclock = [0]
-
-    def _funnel_files():
-        return {
-            p: os.stat(p).st_mtime_ns
-            for p in glob.glob(os.path.join(funnel_path, "_fb=*", "*.parquet"))
-        }
-
-    def feed_funnel(fresh):
-        batch = []
-        for r in sorted(fresh, key=lambda r: int(r._id)):
-            fclock[0] += 7
-            eid = len(funnel_events)
-            ev = (int(r._id) % 3, eid, fclock[0], "abcx"[(int(r._id) + eid) % 4])
-            funnel_events.append(ev)
-            batch.append(ev)
-        before = _funnel_files()
-        touched = refresh_funnel_rollup(
-            spark,
-            funnel_path,
-            spark.createDataFrame(batch, FUNNEL_SCHEMA),
-            ["user_id"], "us", ["event_id"], fconds(), 3, FW,
-        )
-        after = _funnel_files()
-        changed_dirs = {
-            os.path.basename(os.path.dirname(p))
-            for p in set(after) - set(before)
-            | {p for p in after if p in before and after[p] != before[p]}
-        }
-        if not batch:
-            # idle round: zero buckets touched, zero files rewritten
-            assert touched == 0 and after == before
-        else:
-            # active round: ONLY the touched buckets' partitions moved
-            assert touched >= 1 and len(changed_dirs) == touched
-        # untouched bucket files are bit-level untouched every round
-        assert all(
-            after[p] == before[p]
-            for p in before
-            if os.path.basename(os.path.dirname(p)) not in changed_dirs
-        )
-
-    feed_funnel(feed_rollup())
 
     # 20-round scenario script: (tag, rows-to-append, expected-moved)
     next_id = [3]
@@ -235,7 +139,6 @@ def test_twenty_round_soak(spark, tmp_path):
                 assert b >= a, (i, tag, a, b)
         assert int(st_after.last_id) >= int(st_before.last_id), (i, tag)
         wm_history.append(_state_key(st_after))
-        feed_funnel(feed_rollup())
 
     # -- end state ------------------------------------------------------
     wh = engine.target.read("docs")
@@ -248,41 +151,3 @@ def test_twenty_round_soak(spark, tmp_path):
     dedup = engine.target.read("docs", dedup=True)
     src = spark.read.parquet(str(source / "docs.parquet"))
     assert dedup.count() == src.select("event_id").distinct().count()
-
-    # incrementally-maintained rollup == one-shot recompute over every
-    # fed version — including the bit-exact quantile sample
-    wh_versions = engine.target.read("docs", dedup=False).select(
-        F.to_date("created_at").cast("string").alias("d"),
-        F.concat_ws("#", "_id", F.col("updated_at").cast("string")).alias("vkey"),
-        "value",
-    )
-    want = {
-        r.d: (r.v_sum, r.v_cnt, r.v_min, r.v_max, list(r.v_qsk))
-        for r in batch_partials(
-            wh_versions, ["d"], "value", key_col="vkey"
-        ).collect()
-    }
-    got = {
-        str(r.d): (r.v_sum, r.v_cnt, r.v_min, r.v_max, list(r.v_qsk))
-        for r in spark.read.parquet(rollup_path).collect()
-    }
-    assert got == want
-
-    # incrementally-maintained FUNNEL rollup == one-shot window_funnel
-    # recompute over every event ever fed (chains crossed batch
-    # boundaries on the 'late'/'evolve' rounds by construction)
-    f_got = {
-        r.user_id: r.funnel_level
-        for r in read_funnel_rollup(spark, funnel_path).collect()
-    }
-    f_want = {
-        r.user_id: r.funnel_level
-        for r in window_funnel(
-            spark.createDataFrame(funnel_events, FUNNEL_SCHEMA),
-            "user_id", "us", ["event_id"], fconds(), FW,
-        ).collect()
-    }
-    assert set(f_got) == set(f_want) and all(
-        f_got[k] == f_want[k] for k in f_want
-    ), (f_got, f_want)
-    assert max(f_want.values()) >= 2  # the soak actually built chains

@@ -1,7 +1,7 @@
-"""Wire-level connector contract tests: recorded ES scroll/mapping JSON,
-Mongo golden pipelines, ClickHouse DDL goldens — the live-server paths
-are environmental (no jars/servers in the sandbox), so the contracts are
-pinned against recorded wire formats instead (VERDICT round 1, item 4)."""
+"""Wire-level source contract tests: recorded ES scroll/mapping JSON,
+the ClickHouse typed DDL golden, and loopback ES servers. Live servers
+are environmental, so the contracts are pinned against recorded wire
+formats."""
 
 from __future__ import annotations
 
@@ -9,13 +9,8 @@ import json
 
 from pyspark.sql import types as T
 
-from es_to_clickhouse_spark.ddl import (
-    add_columns_sql,
-    create_typed_table_sql,
-    create_wide_string_table_sql,
-)
+from es_to_clickhouse_spark.ddl import create_typed_table_sql
 from es_to_clickhouse_spark.sources.es import (
-    EsSource,
     flatten_mapping,
     mapping_properties,
     mapping_to_spark_fields,
@@ -23,14 +18,8 @@ from es_to_clickhouse_spark.sources.es import (
     ScrollSession,
     scroll_docs,
 )
-from es_to_clickhouse_spark.sources.jdbc import JdbcSource
-from es_to_clickhouse_spark.sources.mongo import (
-    MongoSource,
-    match_pipeline,
-    sample_pipeline,
-)
 
-# -- recorded wire payloads (shapes per the public ES/Mongo REST APIs,
+# -- recorded wire payloads (shapes per the public ES REST API,
 #    field behaviors per the reference's handling of them) --------------
 
 MAPPING_RESPONSE = {
@@ -149,70 +138,6 @@ def test_es_incremental_dsl_wire_golden():
     assert json.loads(range_query("ts")) == {"query": {"match_all": {}}}
 
 
-def test_es_connector_options_golden():
-    opts = EsSource(nodes="es1,es2", port=9201, scroll_size=500).options(
-        "logs-*", query=range_query("ts", "2024-01-01")
-    )
-    assert opts["es.nodes"] == "es1,es2"
-    assert opts["es.port"] == "9201"
-    assert opts["es.resource"] == "logs-*"
-    assert opts["es.scroll.size"] == "500"  # SCROLL_SIZE (Dockerfile:36)
-    assert opts["es.scroll.keepalive"] == "5m"  # SCROLL_TIMEOUT (:37)
-    assert opts["es.read.metadata"] == "true"
-    assert "range" in opts["es.query"]
-
-
-def test_mongo_pipeline_wire_goldens():
-    """Golden pipelines vs mongodb/mongodb_to_bytehouse.py:611-631
-    (keyset `_id $gt ObjectId` / time `$gt date`, as extended JSON) and
-    :347-353 ($sample schema discovery)."""
-    oid = "65f0a1b2c3d4e5f6a7b8c9d0"
-    assert json.loads(match_pipeline(last_id=oid)) == [
-        {"$match": {"_id": {"$gt": {"$oid": oid}}}}
-    ]
-    assert json.loads(
-        match_pipeline(time_field="created_at", since_iso="2024-01-01T00:00:00Z")
-    ) == [{"$match": {"created_at": {"$gt": {"$date": "2024-01-01T00:00:00Z"}}}}]
-    # keyset wins when both are present (reference prefers last_id)
-    assert json.loads(match_pipeline(oid, "created_at", "2024-01-01T00:00:00Z")) == [
-        {"$match": {"_id": {"$gt": {"$oid": oid}}}}
-    ]
-    assert json.loads(match_pipeline()) == [{"$match": {}}]
-    assert json.loads(sample_pipeline(1000)) == [{"$sample": {"size": 1000}}]
-
-
-def test_mongo_connector_options_golden():
-    opts = MongoSource(uri="mongodb://m1:27017", database="app").options(
-        "users", pipeline=sample_pipeline(10)
-    )
-    assert opts["connection.uri"] == "mongodb://m1:27017"
-    assert opts["database"] == "app" and opts["collection"] == "users"
-    assert "partitioner" in opts and "aggregation.pipeline" in opts
-
-
-def test_clickhouse_wide_string_ddl_golden():
-    """Target DDL golden vs es/es_to_bytehouse.py:300-336: system columns
-    (_id String, _source String, _timestamp DateTime64(3) DEFAULT
-    now64(3)), every field Nullable(String), CnchMergeTree + ORDER BY
-    tuple() + UNIQUE KEY _id."""
-    sql = create_wide_string_table_sql(
-        "es_migration",
-        "logs",
-        ["message", "agent_id"],
-        engine="CnchMergeTree",
-        store_source=True,
-    )
-    assert sql == (
-        "CREATE TABLE IF NOT EXISTS `es_migration`.`logs` (\n"
-        "  `_id` String,\n"
-        "  `_source` String,\n"
-        "  `agent_id` Nullable(String),\n"
-        "  `message` Nullable(String),\n"
-        "  `_timestamp` DateTime64(3) DEFAULT now64(3)\n"
-        ") ENGINE = CnchMergeTree() ORDER BY tuple() UNIQUE KEY `_id`"
-    )
-
-
 def test_clickhouse_typed_passthrough_ddl_golden():
     """Typed DDL golden (clickhouse/clickhouse_to_bytehouse.py:240-262
     column-list shape; types from the Spark schema)."""
@@ -233,31 +158,6 @@ def test_clickhouse_typed_passthrough_ddl_golden():
         "  `tags` Nullable(String)\n"
         ") ENGINE = MergeTree() ORDER BY tuple()"
     )
-
-
-def test_alter_add_columns_golden():
-    stmts = add_columns_sql("db", "t", ["z_field", "a_field"])
-    assert stmts == [
-        "ALTER TABLE `db`.`t` ADD COLUMN IF NOT EXISTS `a_field` Nullable(String)",
-        "ALTER TABLE `db`.`t` ADD COLUMN IF NOT EXISTS `z_field` Nullable(String)",
-    ]
-
-
-def test_jdbc_scan_options_golden():
-    src = JdbcSource(url="jdbc:clickhouse://ch:8123/db", user="u", password="p")
-    base = src.base_options()
-    assert base["driver"] == "com.clickhouse.jdbc.ClickHouseDriver"
-    assert base["fetchsize"] == "10000"
-    assert src.pushdown_query("t", "ts > '2024-01-01'") == (
-        "(SELECT * FROM t WHERE ts > '2024-01-01') AS src"
-    )
-    part = src.partition_options("id", 0, 1_000_000, 64)
-    assert part == {
-        "partitionColumn": "id",
-        "lowerBound": "0",
-        "upperBound": "1000000",
-        "numPartitions": "64",
-    }
 
 
 def _page(scroll_id, ids):
@@ -516,53 +416,6 @@ def test_original_time_field_rebind_rules():
         }
     }
     assert original_time_field("timestamp", nested) == "@timestamp"
-
-
-def test_mongo_keyset_session_transcript_golden():
-    """Keyset-scan protocol (mongodb_to_bytehouse.py:524-565): first
-    query unfiltered, every later query `_id $gt last-seen`, all sorted
-    ascending with the batch limit; loop ends at the first empty batch."""
-    from es_to_clickhouse_spark.sources.mongo import KeysetSession
-
-    s = KeysetSession(batch_size=2)
-    batches = [
-        [{"_id": "a1", "v": 1}, {"_id": "a2", "v": 2}],
-        [{"_id": "b9", "v": 3}],
-        [],
-    ]
-    rows, queries = s.drain(batches)
-    assert [r["_id"] for r in rows] == ["a1", "a2", "b9"]
-    assert queries == [
-        {"filter": {}, "sort": [("_id", 1)], "limit": 2},
-        {"filter": {"_id": {"$gt": "a2"}}, "sort": [("_id", 1)], "limit": 2},
-        {"filter": {"_id": {"$gt": "b9"}}, "sort": [("_id", 1)], "limit": 2},
-    ]
-
-
-def test_mongo_keyset_session_failure_keeps_partial():
-    """A failed page fetch keeps drained rows — restartable from the
-    last _id watermark (keyset pagination needs no server cursor)."""
-    from es_to_clickhouse_spark.sources.mongo import KeysetSession
-
-    s = KeysetSession(batch_size=10)
-    rows, queries = s.drain(
-        [[{"_id": "x", "n": 9}], ConnectionError("reset"), [{"_id": "y"}]]
-    )
-    assert [r["_id"] for r in rows] == ["x"]
-    # next restart would resume from 'x'
-    assert queries[-1]["filter"] == {"_id": {"$gt": "x"}}
-
-
-def test_mongo_keyset_session_store_source_json():
-    """STORE_SOURCE fidelity: the raw doc serialized with default=str
-    (mongodb_to_bytehouse.py:542-543)."""
-    from es_to_clickhouse_spark.sources.mongo import KeysetSession
-
-    rows, _ = KeysetSession().drain(
-        [[{"_id": "a", "k": 5}], []], store_source=True
-    )
-    assert json.loads(rows[0]["_source"]) == {"_id": "a", "k": 5}
-    assert rows[0]["k"] == 5
 
 
 # ------------------------------------------- loopback-socket scroll

@@ -1,12 +1,10 @@
-"""E2E test: applyInPandasWithState first-occurrence dedup across
-micro-batches (SURVEY T2/T3/T8 — streaming twin of the upsert view)."""
+"""Structured Streaming through foreachBatch: stream-static enrichment,
+the StreamingSync append into a typed target, and the retry helper for
+py4j transport drops under suite load."""
 
 from __future__ import annotations
 
 import functools
-import os
-
-from es_to_clickhouse_spark.streaming.stateful import first_seen_stream
 
 
 def _recycle_session(spark):
@@ -79,113 +77,6 @@ def _retry_transient(fn):
     return wrapper
 
 
-def _run_batch(spark, src_dir, ckpt, out_dir, schema):
-    stream = spark.readStream.schema(schema).parquet(str(src_dir))
-    deduped = first_seen_stream(stream, key_col="user_id", id_col="event_id")
-
-    def sink(batch, _bid):
-        batch.write.mode("append").parquet(str(out_dir))
-
-    q = (
-        deduped.writeStream.foreachBatch(sink)
-        .outputMode("update")
-        .option("checkpointLocation", str(ckpt))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(180)
-
-
-def _emitted(spark, out_dir):
-    if not os.path.exists(str(out_dir)):
-        return set()
-    return {
-        (r.key, r.first_id) for r in spark.read.parquet(str(out_dir)).collect()
-    }
-
-
-def test_first_seen_dedup_across_batches(spark, tmp_path):
-    src = tmp_path / "src"
-    ckpt = tmp_path / "ckpt"
-    out = tmp_path / "out"
-    df1 = spark.createDataFrame(
-        [(10, 1), (11, 1), (20, 2)], "event_id long, user_id long"
-    )
-    df1.coalesce(1).write.mode("append").parquet(str(src))
-    schema = df1.schema
-
-    _run_batch(spark, src, ckpt, out, schema)
-    # user 1 first appears with min event_id 10; user 2 with 20
-    assert _emitted(spark, out) == {(1, 10), (2, 20)}
-
-    # batch 2: user 1 re-appears (suppressed — state remembers), user 3 new
-    df2 = spark.createDataFrame([(5, 1), (30, 3)], "event_id long, user_id long")
-    df2.coalesce(1).write.mode("append").parquet(str(src))
-    _run_batch(spark, src, ckpt, out, schema)
-    # batch-2 emits ONLY user 3 (user 1's event 5 is suppressed by state)
-    assert _emitted(spark, out) == {(1, 10), (2, 20), (3, 30)}
-
-
-def test_windowed_agg_watermark_drops_late_rows(spark, tmp_path):
-    """T3/T7: event-time watermark bounds state; a row arriving after the
-    watermark passed its window is dropped — the finalized window count
-    never changes (the documented alternative to the reference's unbounded
-    OR-clause re-fetch for streaming aggregations)."""
-    from es_to_clickhouse_spark.streaming.sync import windowed_counts
-
-    src = tmp_path / "src"
-    ckpt = tmp_path / "ckpt"
-    out = tmp_path / "out"
-    schema = "ts timestamp, v long"
-
-    def write(rows):
-        spark.createDataFrame(rows, "ts string, v long").selectExpr(
-            "cast(ts as timestamp) ts", "v"
-        ).coalesce(1).write.mode("append").parquet(str(src))
-
-    def run():
-        stream = spark.readStream.schema(
-            spark.read.parquet(str(src)).schema
-        ).parquet(str(src))
-        agg = windowed_counts(stream, ts_col="ts", window="10 minutes",
-                              watermark="10 minutes")
-        q = (
-            agg.selectExpr("w.start AS win_start", "n")
-            .writeStream.foreachBatch(
-                lambda b, _i: b.write.mode("append").parquet(str(out))
-            )
-            .outputMode("append")
-            .option("checkpointLocation", str(ckpt))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(180)
-
-    # batch 1: two rows in the 10:00 window; 10:25 advances watermark to 10:15
-    write(
-        [
-            ("2024-01-01 10:00:30", 1),
-            ("2024-01-01 10:05:00", 2),
-            ("2024-01-01 10:25:00", 3),
-        ]
-    )
-    run()
-    got1 = {
-        (str(r.win_start), r.n) for r in spark.read.parquet(str(out)).collect()
-    }
-    assert got1 == {("2024-01-01 10:00:00", 2)}  # 10:00 window finalized
-
-    # batch 2: a late row for the CLOSED 10:00 window (dropped), plus
-    # 10:45 which advances the watermark past the 10:25 row's window
-    write([("2024-01-01 10:02:00", 9), ("2024-01-01 10:45:00", 4)])
-    run()
-    got2 = {
-        (str(r.win_start), r.n) for r in spark.read.parquet(str(out)).collect()
-    }
-    # 10:00 stays n=2 (late row dropped); 10:20 window finalized with n=1
-    assert got2 == {("2024-01-01 10:00:00", 2), ("2024-01-01 10:20:00", 1)}
-
-
 def test_stream_static_broadcast_enrichment(spark, tmp_path):
     """Stream-static join: a streaming fact enriched against a static
     broadcast dimension — the streaming twin of j1's broadcast dim join
@@ -214,154 +105,6 @@ def test_stream_static_broadcast_enrichment(spark, tmp_path):
     q.awaitTermination(120)
     got = {(r.event_id, r.tier) for r in spark.read.parquet(str(out)).collect()}
     assert got == {(1, "gold"), (2, "silver"), (3, "gold")}
-
-
-def test_dedup_within_watermark_across_batches(spark, tmp_path):
-    """Streaming exact dedup with bounded state: duplicate keys inside the
-    watermark horizon are suppressed across micro-batches."""
-    from es_to_clickhouse_spark.streaming.sync import dedup_within_watermark
-
-    src = tmp_path / "src"
-    out = tmp_path / "out"
-    ckpt = tmp_path / "ckpt"
-    schema = "ts timestamp, k long, v string"
-
-    def write(rows):
-        spark.createDataFrame(rows, "ts string, k long, v string").selectExpr(
-            "cast(ts as timestamp) ts", "k", "v"
-        ).coalesce(1).write.mode("append").parquet(str(src))
-
-    def run():
-        stream = spark.readStream.schema(schema).parquet(str(src))
-        deduped = dedup_within_watermark(stream, ["k"], ts_col="ts", delay="1 hour")
-        q = (
-            deduped.writeStream.foreachBatch(
-                lambda b, _i: b.write.mode("append").parquet(str(out))
-            )
-            .outputMode("append")
-            .option("checkpointLocation", str(ckpt))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(180)
-
-    write([("2024-01-01 10:00:00", 1, "a"), ("2024-01-01 10:01:00", 1, "dup"),
-           ("2024-01-01 10:02:00", 2, "b")])
-    run()
-    got1 = {(r.k, r.v) for r in spark.read.parquet(str(out)).collect()}
-    assert sorted(k for k, _ in got1) == [1, 2]  # one row per key
-
-    # batch 2: key 1 again within the horizon -> suppressed; key 3 new
-    write([("2024-01-01 10:10:00", 1, "dup2"), ("2024-01-01 10:11:00", 3, "c")])
-    run()
-    got2 = {(r.k, r.v) for r in spark.read.parquet(str(out)).collect()}
-    assert got2 == got1 | {(3, "c")}
-
-
-@_retry_transient
-def test_stream_stream_interval_join(spark, tmp_path):
-    """Watermarked stream-stream interval join: clicks attribute to an
-    impression of the same key within 1 hour AFTER the impression."""
-    from es_to_clickhouse_spark.streaming.sync import interval_join_stream
-
-    imp_src = tmp_path / "imp"
-    clk_src = tmp_path / "clk"
-    out = tmp_path / "out"
-
-    imps = spark.createDataFrame(
-        [("2024-01-01 10:00:00", 1, "i1"), ("2024-01-01 12:00:00", 2, "i2")],
-        "imp_ts string, k long, imp_id string",
-    ).selectExpr("cast(imp_ts as timestamp) imp_ts", "k", "imp_id")
-    clks = spark.createDataFrame(
-        [
-            ("2024-01-01 10:30:00", 1, "c-hit"),      # 30 min after i1 -> match
-            ("2024-01-01 11:30:00", 1, "c-late"),     # 90 min after i1 -> no match
-            ("2024-01-01 11:59:00", 2, "c-early"),    # before i2 -> no match
-        ],
-        "clk_ts string, k long, clk_id string",
-    ).selectExpr("cast(clk_ts as timestamp) clk_ts", "k", "clk_id")
-    imps.coalesce(1).write.parquet(str(imp_src))
-    clks.coalesce(1).write.parquet(str(clk_src))
-
-    ls = spark.readStream.schema(imps.schema).parquet(str(imp_src))
-    rs = spark.readStream.schema(clks.schema).parquet(str(clk_src))
-    joined = interval_join_stream(
-        ls, rs, key="k", left_ts="imp_ts", right_ts="clk_ts", within="1 hour"
-    )
-    q = (
-        joined.writeStream.foreachBatch(
-            lambda b, _i: b.write.mode("append").parquet(str(out))
-        )
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(180)
-    got = {(r.imp_id, r.clk_id) for r in spark.read.parquet(str(out)).collect()}
-    assert got == {("i1", "c-hit")}
-
-
-@_retry_transient
-def test_stream_stream_left_outer_interval_join(spark, tmp_path):
-    """Left-outer stream-stream join: unmatched impressions surface with
-    null click columns — emitted only in a LATER batch, after the
-    watermark passes their match window."""
-    from es_to_clickhouse_spark.streaming.sync import interval_join_stream
-
-    imp_src = tmp_path / "imp"
-    clk_src = tmp_path / "clk"
-    out = tmp_path / "out"
-
-    imps = spark.createDataFrame(
-        [("2024-01-01 09:00:00", 3, "i-lonely"), ("2024-01-01 10:00:00", 1, "i1")],
-        "imp_ts string, k long, imp_id string",
-    ).selectExpr("cast(imp_ts as timestamp) imp_ts", "k", "imp_id")
-    clks = spark.createDataFrame(
-        [("2024-01-01 10:30:00", 1, "c-hit")],
-        "clk_ts string, k long, clk_id string",
-    ).selectExpr("cast(clk_ts as timestamp) clk_ts", "k", "clk_id")
-    imps.coalesce(1).write.parquet(str(imp_src))
-    clks.coalesce(1).write.parquet(str(clk_src))
-
-    def run_once():
-        ls = spark.readStream.schema(imps.schema).parquet(str(imp_src))
-        rs = spark.readStream.schema(clks.schema).parquet(str(clk_src))
-        joined = interval_join_stream(
-            ls, rs, key="k", left_ts="imp_ts", right_ts="clk_ts",
-            within="1 hour", how="left_outer",
-        )
-        q = (
-            joined.writeStream.foreachBatch(
-                lambda b, _i: b.write.mode("append").parquet(str(out))
-            )
-            .option("checkpointLocation", str(tmp_path / "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(180)
-
-    run_once()
-    # the GLOBAL watermark is min(left, right): BOTH streams need later
-    # data to advance it past i-lonely's match window, and the eviction
-    # fires in the batch after the advance — hence two more rounds
-    for hour in ("14", "16"):
-        spark.createDataFrame(
-            [(f"2024-01-01 {hour}:00:00", 9, "i-far")],
-            "imp_ts string, k long, imp_id string",
-        ).selectExpr(
-            "cast(imp_ts as timestamp) imp_ts", "k", "imp_id"
-        ).coalesce(1).write.mode("append").parquet(str(imp_src))
-        spark.createDataFrame(
-            [(f"2024-01-01 {hour}:00:00", 9, "c-far")],
-            "clk_ts string, k long, clk_id string",
-        ).selectExpr(
-            "cast(clk_ts as timestamp) clk_ts", "k", "clk_id"
-        ).coalesce(1).write.mode("append").parquet(str(clk_src))
-        run_once()
-
-    got = {(r.imp_id, r.clk_id) for r in spark.read.parquet(str(out)).collect()}
-    assert ("i1", "c-hit") in got
-    assert ("i-lonely", None) in got  # emitted after watermark passed 10:00
 
 
 def test_streaming_into_typed_evolved_target(spark, tmp_path):
@@ -399,144 +142,6 @@ def test_streaming_into_typed_evolved_target(spark, tmp_path):
     assert dict(out.dtypes)["n"] == "bigint"
     got = {r._id: r.n for r in out.select("_id", "n").collect()}
     assert got == {"0": 7, "1": None}
-
-
-@_retry_transient
-def test_streaming_funnel_matches_batch_windowfunnel(spark, tmp_path):
-    """funnel_stream across 3 time-ordered micro-batches ends at exactly
-    b6_window_funnel's levels on the combined static frame — the
-    streaming fold IS the batch cascaded-windows decomposition replayed
-    incrementally (chains crossing batch boundaries included)."""
-    import datetime as dt
-    import random
-
-    from es_to_clickhouse_spark.corpus.behavior import b6_window_funnel
-    from es_to_clickhouse_spark.streaming.stateful import funnel_stream
-
-    rng = random.Random(42)
-    base = dt.datetime(2024, 1, 1)
-    h = 3_600_000_000
-    rows = []  # (event_id, us, user_id, event_type)
-    for eid in range(300):
-        rows.append(
-            (
-                eid,
-                eid * h // 2 + rng.randrange(h // 4),  # ~30m apart, jittered
-                rng.randrange(8),
-                rng.choice(["view", "click", "purchase", "signup", "error"]),
-            )
-        )
-    rows.sort(key=lambda r: r[1])
-
-    src = tmp_path / "src"
-    ckpt = tmp_path / "ckpt"
-    out = tmp_path / "out"
-    os.makedirs(str(src), exist_ok=True)
-    schema = "event_id long, us long, user_id long, event_type string"
-
-    def run_stream_batch(chunk, idx):
-        spark.createDataFrame(chunk, schema).coalesce(1).write.parquet(
-            f"{src}/b{idx}"
-        )
-        stream = spark.readStream.schema(schema).parquet(f"{src}/*")
-        lv = funnel_stream(stream)
-
-        def sink(batch, _bid):
-            batch.write.mode("append").parquet(str(out))
-
-        q = (
-            lv.writeStream.foreachBatch(sink)
-            .outputMode("update")
-            .option("checkpointLocation", str(ckpt))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(180)
-
-    third = len(rows) // 3
-    for idx, chunk in enumerate((rows[:third], rows[third : 2 * third], rows[2 * third :])):
-        run_stream_batch(chunk, idx)
-
-    # level is monotone: the final per-user level is the max emitted
-    got = {}
-    for r in spark.read.parquet(str(out)).collect():
-        got[r.user_id] = max(got.get(r.user_id, 0), r.funnel_level)
-
-    batch_dir = tmp_path / "batch"
-    spark.createDataFrame(
-        [
-            (eid, base + dt.timedelta(microseconds=us), uid, et)
-            for eid, us, uid, et in rows
-        ],
-        "event_id long, ts timestamp, user_id long, event_type string",
-    ).write.parquet(f"{batch_dir}/events.parquet")
-    want = {
-        r.user_id: r.funnel_level
-        for r in b6_window_funnel(spark, str(batch_dir)).collect()
-    }
-    assert got == want
-    assert set(want.values()) != {0}  # the corpus actually exercises depth
-
-
-@_retry_transient
-def test_streaming_funnel_four_stages_matches_batch(spark, tmp_path):
-    """The generalized stage list: a 4-stage streaming funnel across 2
-    micro-batches equals the generic batch window_funnel operator."""
-    import random
-
-    from es_to_clickhouse_spark.operators.funnel import window_funnel
-    from es_to_clickhouse_spark.streaming.stateful import funnel_stream
-    from pyspark.sql import functions as F
-
-    rng = random.Random(7)
-    stages = ("a", "b", "c", "d")
-    rows = sorted(
-        (
-            (eid, rng.randrange(1000), rng.randrange(6), rng.choice("abcdx"))
-            for eid in range(240)
-        ),
-        key=lambda r: r[1],
-    )
-    schema = "event_id long, us long, user_id long, event_type string"
-
-    src, ckpt, out = tmp_path / "src", tmp_path / "ckpt", tmp_path / "out"
-    os.makedirs(str(src), exist_ok=True)
-    for idx, chunk in enumerate((rows[:120], rows[120:])):
-        spark.createDataFrame(chunk, schema).coalesce(1).write.parquet(
-            f"{src}/b{idx}"
-        )
-        stream = spark.readStream.schema(schema).parquet(f"{src}/*")
-        lv = funnel_stream(stream, window_us=500, stages=stages)
-
-        def sink(batch, _bid):
-            batch.write.mode("append").parquet(str(out))
-
-        q = (
-            lv.writeStream.foreachBatch(sink)
-            .outputMode("update")
-            .option("checkpointLocation", str(ckpt))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(180)
-
-    got = {}
-    for r in spark.read.parquet(str(out)).collect():
-        got[r.user_id] = max(got.get(r.user_id, 0), r.funnel_level)
-
-    want = {
-        r.user_id: r.funnel_level
-        for r in window_funnel(
-            spark.createDataFrame(rows, schema),
-            key_col="user_id",
-            ts_col="us",
-            order_cols=["event_id"],
-            conds=[F.col("event_type") == c for c in stages],
-            window=500,
-        ).collect()
-    }
-    assert got == want
-    assert max(want.values()) >= 3  # deep chains actually exercised
 
 
 def test_retry_transient_recycles_session(spark, tmp_path):

@@ -249,7 +249,7 @@ def main() -> None:
         "honest input to sizing: a 100 TB audio corpus at R MB/s/core",
         "needs 100e6/R core-seconds for inventory alone. When actual",
         "sample decode is needed, the same Arrow batches feed a real",
-        "codec via the env-gated `image_codec()` pattern.",
+        "codec inside the same `mapInPandas` batch function.",
         "",
     ]
     out = "\n".join(lines)
