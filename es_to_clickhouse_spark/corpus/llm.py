@@ -257,13 +257,13 @@ def d18_embedding_neardup_cell(spark, sf_dir):
 
     Why MULTI-PROBE: with a single cell per vector, a near-dup pair
     straddling a cell boundary is silently kept — measured at
-    dim-768/rank-128 real-embedding geometry (tools/realdim_bench.py
-    r13): recall of planted cos~0.95 pairs decayed 0.63 -> 0.46 ->
+    dim-768/rank-128 real-embedding geometry (SCALE_BENCH.md realdim
+    section): recall of planted cos~0.95 pairs decayed 0.63 -> 0.46 ->
     0.37 across two decades as the corpus-scaled cell count grew. Two
     independent quantizer halves agree on a pair with high probability
     exactly when one of them straddles (their Voronoi boundaries are
     independent): 0.55 -> 0.82 recall at k=398 in the numpy design
-    study, re-measured end-to-end by tools/realdim_bench.py. A pair
+    study, re-measured end-to-end in SCALE_BENCH.md. A pair
     found in both halves emits the same (id_a, id_b, cos) row twice —
     distinct() collapses it (bit-identical cosine both times). This is
     the variant a real dedup-within-language/source pipeline runs at

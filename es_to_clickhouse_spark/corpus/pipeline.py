@@ -558,7 +558,7 @@ def d14_semantic_dedup(spark, sf_dir):
     expected cell size stays ~256 and the within-cell quadratic stays
     LINEAR in total rows (r10: with the count pinned at 8, cells grew
     with the data and the second scale decade measured 59.7x on 10x
-    rows — tools/scale_decade_bench.py caught it; SemDeDup itself
+    rows — SCALE_BENCH.md's 100x decade; SemDeDup itself
     scales k with the corpus, e.g. 11k clusters for LAION). With k
     scaling, the DENSE N x k assign matrix becomes the next
     superlinearity (~N²/256) — assignment routes through
@@ -783,8 +783,9 @@ def sim12_multiprobe_audit(spark, sf_dir):
     design: each vector sits in 2 cells of ~2x population — the
     measured price of recall 0.37 -> the realdim lift,
     SCALE_BENCH.md r14). The recall side needs planted ground truth,
-    so it lives in tools/realdim_bench.py; this query owns the cost
-    side at every oracle-checked scale."""
+    so it is measured by ``tools/scale.py``'s ``realdim_d18`` (recorded
+    in SCALE_BENCH.md); this query owns the cost side at every
+    oracle-checked scale."""
     from es_to_clickhouse_spark.operators.similarity import (
         ivf_assign_auto,
         ivf_assign_probes,

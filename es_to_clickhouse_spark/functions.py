@@ -46,49 +46,22 @@ def py_str(col: Column, dtype: T.DataType) -> Column:
     return col.cast("string")
 
 
-def upper_bound_index(cuts: list[float], key: Column) -> Column:
-    """Count of sorted ``cuts`` values <= ``key`` (the bucket index for
-    quantile-cut bucketizing), as a BINARY-SEARCH tree of nested CASE
-    WHENs: each row evaluates log2(len(cuts)) comparisons, beating both
-    a linear indicator-sum chain and the array HOF (which scans all
-    cuts per row). Never use the tempting ``F.size(F.filter(array,
-    lambda x: x <= k))`` for this: when the expression ends up in a
-    union child that sits under a join, constraint inference
-    (Union.rewriteConstraints) walks the lambda and crashes with
-    NoSuchElementException remapping its attribute references (Spark 4
-    optimizer bug — regression test in tests/test_asof_ddl_sources.py).
-    Plain comparisons rewrite fine. NULL key yields bucket 0 (every
-    comparison is null → falsy → the search walks left; same as the HOF
-    form, which filtered nothing)."""
-    if not cuts:
-        return F.lit(0)
-    vals = sorted(float(c) for c in cuts)
-
-    def build(lo: int, hi: int) -> Column:
-        # invariant: the answer (count of vals <= key) lies in [lo, hi]
-        if lo == hi:
-            return F.lit(lo)
-        mid = (lo + hi) // 2
-        return F.when(F.lit(vals[mid]) <= key, build(mid + 1, hi)).otherwise(
-            build(lo, mid)
-        )
-
-    return build(0, len(vals))
-
-
 def upper_bound_index_sql(cuts: list[float], key_sql: str) -> str:
-    """:func:`upper_bound_index` as ONE SQL string for ``F.expr`` —
-    the same binary-search tree of nested CASE WHENs, built as text.
+    """Count of sorted ``cuts`` values <= ``key_sql`` (the bucket index
+    for quantile-cut bucketizing), as ONE SQL string for ``F.expr``: a
+    binary-search tree of nested CASE WHENs, so each row evaluates
+    log2(len(cuts)) comparisons. NULL key yields bucket 0 (every
+    comparison is null, hence falsy, and the search walks left).
 
-    Why a text twin exists (r14): the Column form constructs every
-    node of the ~2·len(cuts) expression tree through py4j — one
-    driver socket round-trip per ``F.when``/``F.lit``/comparison,
-    ~570 round-trips for 31 cuts, measured ~0.6 s of pure
-    DataFrame-CONSTRUCTION time per global as-of join (three
-    bucketize sites per join). Parsing the identical tree from one
-    string is one round-trip. Evaluation semantics are unchanged —
-    same tree, same log2(len(cuts)) comparisons per row, same NULL →
-    bucket 0 (NULL comparisons are falsy and walk left).
+    Never bucketize with ``F.size(F.filter(array, lambda x: x <= k))``:
+    when that expression lands in a union child under a join, constraint
+    inference (Union.rewriteConstraints) walks the lambda and crashes
+    remapping its attribute references (a Spark 4 optimizer bug;
+    regression test in tests/test_asof_ddl_sources.py). Plain comparisons
+    rewrite fine. And build the tree as text, not as Column objects:
+    every ``F.when``/``F.lit`` is one py4j round-trip, ~570 for 31 cuts,
+    measured ~0.6 s of construction per global as-of join; parsing one
+    string is one round-trip.
 
     ``key_sql`` must be a parse-ready SQL expression (quote column
     names with backticks); it is inlined at every comparison, so keep
@@ -96,9 +69,7 @@ def upper_bound_index_sql(cuts: list[float], key_sql: str) -> str:
     first. Cut literals carry the ``D`` double-literal suffix so they
     parse as DoubleType directly — a bare ``1.5`` parses as DECIMAL,
     and the resulting Cast(Literal(Decimal)) nodes measurably blow up
-    the first execution (~10 s cold vs ~2 s, r14 A/B in the j9
-    context; plain double literals match what ``F.lit(float)``
-    built)."""
+    the first execution (~10 s cold vs ~2 s in the j9 context)."""
     if not cuts:
         return "0"
     vals = sorted(float(c) for c in cuts)
@@ -107,9 +78,9 @@ def upper_bound_index_sql(cuts: list[float], key_sql: str) -> str:
         r = repr(v)
         # repr is shortest-round-trip; the D suffix needs a plain
         # mantissa[.fraction][Ee±exp] shape, which repr of a finite
-        # float always is — guard anyway (ANCHORED, so malformed shapes
-        # like '1-2' or '3.4.5' fall through — ADVICE r14) and fall
-        # back to a folded cast
+        # float always is — guard anyway (anchored, so malformed shapes
+        # like '1-2' or '3.4.5' fall through) and fall back to a folded
+        # cast
         if re.fullmatch(r"-?\d+(\.\d+)?([eE][+-]?\d+)?", r):
             return f"{r}D"
         return f"CAST('{r}' AS DOUBLE)"

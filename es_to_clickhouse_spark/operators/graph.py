@@ -165,7 +165,7 @@ def connected_components(
     EARLIER pays only no-op rounds over its already-contracted star
     forest — measured cheaper than the probe it replaces at every
     bench scale. An exponential-backoff cadence was tried and REJECTED
-    by measurement (r7, tools/cc_scale_bench): on a 10^6-edge path it
+    by measurement (CC_SCALE_BENCH.md): on a 10^6-edge path it
     saved 4 probes but overshot the fixpoint by 7 rounds, and a no-op
     round on a GIANT component is two full shuffles over its
     (n-1)-edge star forest — 55.1 s vs 44.5 s, +24%. The follow-up

@@ -421,7 +421,7 @@ def pq_assign(
 #: (SCALE_BENCH assign decades) dense wins at k=837
 #: (k·dim = 54k: 0.842 s vs 4.111 s) and two-level wins at k=7,861
 #: (503k: 81 s vs a deliberately-unrun dense matrix); at dim 768
-#: (tools/realdim_bench.py) dense wins at k=78 (60k: 10.8 s vs
+#: (SCALE_BENCH.md realdim) dense wins at k=78 (60k: 10.8 s vs
 #: 18.4 s whole-pipeline) and LOSES by >10x at k=781 (600k: the dense
 #: pass ground past 14 minutes where two-level takes ~2 — aborted).
 #: Every measured point is consistent with a single work threshold

@@ -724,7 +724,7 @@ def read_index_http(
     - typed (``schema`` given, no ``store_source``): the RAW page texts
       (:meth:`ScrollSession.drain_http_pages_status`, zero per-row
       Python); the JVM explodes ``hits.hits`` under a wrapper schema.
-      Measured on a loopback server (tools/es_drain_bench.py, 100k docs
+      Measured on a loopback server (COVERAGE.md S2, 100k docs
       × 12 fields, page 1000): 1.5× faster than the per-row path (2.39 s
       → 1.60 s), and the RDD carries pages (1000× fewer elements);
     - ``store_source`` or schemaless: NDJSON rows

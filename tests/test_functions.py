@@ -116,22 +116,23 @@ def test_alert_hook_rate_limit(monkeypatch):
     assert speed_eta(0, None, 0.0) == (0.0, None, None)
 
 
-@pytest.mark.slow  # r15: driver test-gate budget
-def test_upper_bound_index_matches_bisect(spark):
-    """upper_bound_index (the binary-search CASE tree under asof
-    bucketing, layout binning, and pk1's running sum) == Python's
-    bisect_right on arbitrary cut lists and keys, including dup cuts,
-    keys equal to cuts, +/-inf-ish extremes, and NULL (bucket 0). One
-    1-row Spark job evaluates every generated case as its own column."""
+@pytest.mark.slow  # hypothesis over many Spark-evaluated columns
+def test_upper_bound_index_sql_matches_bisect(spark):
+    """upper_bound_index_sql (the binary-search CASE tree under as-of
+    bucketing) == Python's bisect_right on arbitrary cut lists and keys:
+    dup cuts, keys exactly on a cut, +/-1e12 extremes, empty cuts, and a
+    NULL key (bucket 0). One 1-row Spark job evaluates every generated
+    case as its own column, the keys read from columns as the as-of join
+    reads them."""
     import bisect
 
     from hypothesis import given, settings
     from hypothesis import strategies as st
 
-    from es_to_clickhouse_spark.functions import upper_bound_index
+    from es_to_clickhouse_spark.functions import upper_bound_index_sql
 
     finite = st.floats(
-        min_value=-1e9, max_value=1e9, allow_nan=False, allow_infinity=False
+        min_value=-1e12, max_value=1e12, allow_nan=False, allow_infinity=False
     )
 
     @given(
@@ -143,91 +144,28 @@ def test_upper_bound_index_matches_bisect(spark):
     )
     @settings(max_examples=12, deadline=None)
     def check(cases):
-        cols = []
+        keys = [F.lit(None).cast("double").alias("_nullk")]
         for i, (cuts, key) in enumerate(cases):
-            cols.append(
-                upper_bound_index(cuts, F.lit(float(key))).alias(f"c{i}")
-            )
+            keys.append(F.lit(float(key)).alias(f"_k{i}"))
             # keys exactly ON a cut exercise the <= boundary
             if cuts:
+                keys.append(F.lit(float(cuts[0])).alias(f"_b{i}"))
+        base = spark.range(1).select(*keys)
+        cols = [F.expr(upper_bound_index_sql([1.0, 2.0], "`_nullk`")).alias("n")]
+        for i, (cuts, _key) in enumerate(cases):
+            cols.append(F.expr(upper_bound_index_sql(cuts, f"`_k{i}`")).alias(f"c{i}"))
+            if cuts:
                 cols.append(
-                    upper_bound_index(cuts, F.lit(float(cuts[0]))).alias(
-                        f"b{i}"
-                    )
+                    F.expr(upper_bound_index_sql(cuts, f"`_b{i}`")).alias(f"b{i}")
                 )
-        cols.append(
-            upper_bound_index([1.0, 2.0], F.lit(None).cast("double")).alias(
-                "nullkey"
-            )
-        )
-        row = spark.range(1).select(*cols).collect()[0]
+        row = base.select(*cols).collect()[0]
         for i, (cuts, key) in enumerate(cases):
             want = bisect.bisect_right(sorted(cuts), key)
             assert row[f"c{i}"] == want, (cuts, key, row[f"c{i}"], want)
             if cuts:
-                want_b = bisect.bisect_right(sorted(cuts), cuts[0])
-                assert row[f"b{i}"] == want_b
-        assert row["nullkey"] == 0
+                assert row[f"b{i}"] == bisect.bisect_right(sorted(cuts), cuts[0])
+        assert row["n"] == 0
 
     check()
-
-
-@pytest.mark.slow  # r15: driver test-gate budget
-def test_upper_bound_index_sql_matches_column_form(spark):
-    """upper_bound_index_sql (r14: the same binary-search CASE tree
-    parsed from ONE SQL string — the as-of bucketize construction-cost
-    fix) evaluates identically to the Column-built form on arbitrary
-    cut lists and keys, including dup cuts, boundary keys, empty cuts,
-    and NULL keys (bucket 0). One Spark job evaluates every generated
-    case through BOTH forms side by side."""
-    import bisect
-
-    from hypothesis import given, settings
-    from hypothesis import strategies as st
-    from pyspark.sql import functions as F
-
-    from es_to_clickhouse_spark.functions import (
-        upper_bound_index,
-        upper_bound_index_sql,
-    )
-
-    finite = st.floats(
-        min_value=-1e12, max_value=1e12, allow_nan=False, allow_infinity=False
-    )
-
-    @given(
-        st.lists(
-            st.tuples(st.lists(finite, max_size=12), finite),
-            min_size=1,
-            max_size=20,
-        )
-    )
-    @settings(max_examples=12, deadline=None)
-    def check(cases):
-        cols = [F.lit(None).cast("double").alias("_nullk")]
-        for i, (cuts, key) in enumerate(cases):
-            cols.append(F.lit(float(key)).alias(f"_k{i}"))
-        base = spark.range(1).select(*cols)
-        out_cols = []
-        for i, (cuts, key) in enumerate(cases):
-            out_cols.append(
-                upper_bound_index(cuts, F.col(f"_k{i}")).alias(f"c{i}")
-            )
-            out_cols.append(
-                F.expr(upper_bound_index_sql(cuts, f"`_k{i}`")).alias(f"s{i}")
-            )
-        if cases:
-            cuts0 = cases[0][0]
-            out_cols.append(
-                F.expr(upper_bound_index_sql(cuts0, "`_nullk`")).alias("sn")
-            )
-        row = base.select(*out_cols).collect()[0]
-        for i, (cuts, key) in enumerate(cases):
-            want = bisect.bisect_right(sorted(cuts), key)
-            assert row[f"c{i}"] == want, (cuts, key)
-            assert row[f"s{i}"] == want, (cuts, key)
-        assert row["sn"] == 0
-
-    check()
-    # empty cuts: the SQL form is the literal "0"
+    # empty cuts: every key is in bucket 0
     assert upper_bound_index_sql([], "`x`") == "0"

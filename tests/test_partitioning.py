@@ -85,34 +85,50 @@ def test_aqe_splits_skewed_join_partitions(spark):
     assert n == expected
 
 
+def _salt_pair_work(counts: list[int]) -> dict[tuple[int, int], int]:
+    """Join rows per (lo, hi) key of dedup.salted_block_pairs for one
+    block whose rows fall ``counts[s]`` into salt ``s``: the lower-salt
+    side meets the higher at exactly one key, so key (lo, hi) joins
+    counts[lo] * counts[hi] rows for lo < hi and counts[s]**2 for
+    lo == hi (before the id-order filter halves the latter)."""
+    n = len(counts)
+    return {
+        (lo, hi): counts[lo] * counts[hi] for lo in range(n) for hi in range(lo, n)
+    }
+
+
 def test_triangle_salting_balances_pair_work(spark):
     """Skew-resilience property for the salted within-block pairing
-    (operators/dedup.py salted_block_pairs): the parallelism claim was
-    only measured — this pins it structurally so a refactor can't
-    silently re-straggle the quadratic work.
+    (operators/dedup.py salted_block_pairs), pinned structurally so a
+    refactor cannot silently re-straggle the quadratic work.
 
-    Replicates the salting math exactly (same Murmur3 salt, collected
-    once from the JVM): for every hypothesis-generated block-size
-    distribution — including the degenerate all-one-block corpus — the
-    candidate-comparison count of the heaviest (block, partner_salt)
-    bucket must stay a small multiple of the balanced share 2/n_salts.
-    A de-salted refactor concentrates ~100% in one bucket; a halved
-    salt space ~2x the share — both fail instantly. Also pins the plan:
-    the explicit repartition on (_block, _salt_b) must survive (it is
-    what defeats the one-task single-file scan, and AQE cannot restore
-    it because quadratic compute is invisible to byte-size heuristics).
+    The work model is the operator's (lo, hi) salt-pair key with its
+    exact Murmur3 salt (collected once from the JVM), and the real
+    operator's per-key output is checked against that model below. For
+    every hypothesis-generated block-size distribution, including the
+    degenerate all-one-block corpus, the heaviest key must stay a small
+    multiple of the balanced share 1/n_keys (n_keys = n(n+1)/2 salt
+    pairs): a de-salted refactor puts all of a block's work on one key,
+    and the old (block, partner-salt) key's heaviest key carries over
+    16x the balanced share.
+    Also pins the plan: the explicit repartition on (_block, _salt_lo,
+    _salt_hi) must survive (it is what defeats the one-task single-file
+    scan; AQE cannot restore it because quadratic compute is invisible
+    to byte-size heuristics).
     """
-    from hypothesis import HealthCheck, given, settings
+    import inspect
+    import re
+
+    from hypothesis import given, settings
     from hypothesis import strategies as st
 
     from es_to_clickhouse_spark.operators.dedup import salted_block_pairs
 
-    import inspect
-
-    # keep the Python replica below honest: it models the operator's
-    # ACTUAL salt space (drifting defaults would fail here, not silently)
+    # keep the model honest: it uses the operator's ACTUAL salt space
+    # (drifting defaults fail here, not silently)
     n_salts = inspect.signature(salted_block_pairs).parameters["n_salts"].default
     assert n_salts == 16
+    n_keys = n_salts * (n_salts + 1) // 2
     # the implementation's exact salt: abs(murmur3(id)) % n_salts
     salt_of = {
         r.id: r.s
@@ -121,54 +137,68 @@ def test_triangle_salting_balances_pair_work(spark):
         .collect()
     }
 
+    def salt_counts(ids) -> list[int]:
+        counts = [0] * n_salts
+        for i in ids:
+            counts[salt_of[i]] += 1
+        return counts
+
     @given(
         st.lists(st.integers(min_value=50, max_value=400), min_size=1, max_size=6)
     )
     @settings(max_examples=50, deadline=None)
     def check(block_sizes):
         nid = iter(range(3000))
-        max_bucket, total, per_block_nonempty = 0, 0, []
-        for b, size in enumerate(block_sizes):
-            counts = [0] * n_salts
-            for _ in range(size):
-                counts[salt_of[next(nid)]] += 1
-            nonempty = 0
-            left_cum = 0
-            for j in range(n_salts):
-                left_cum += counts[j]
-                bucket = left_cum * counts[j]  # |a side| x |b side|
-                if bucket:
-                    nonempty += 1
-                total += bucket
-                max_bucket = max(max_bucket, bucket)
-            per_block_nonempty.append(nonempty)
-        # balanced share is ~2/n_salts; 2x headroom absorbs Murmur salt
-        # fluctuation at size>=50 while still failing hard on any
-        # re-straggle (de-salted ~= 1.0, halved salts ~= 2x share)
-        assert max_bucket <= max(4.0 / n_salts * total, 1.0), (
-            block_sizes, max_bucket, total,
-        )
-        # the quadratic work of EVERY block spreads over most salt buckets
-        assert all(ne >= n_salts // 2 for ne in per_block_nonempty), (
-            block_sizes, per_block_nonempty,
-        )
+        max_key, total = 0, 0
+        for size in block_sizes:
+            work = _salt_pair_work(salt_counts(next(nid) for _ in range(size)))
+            total += sum(work.values())
+            max_key = max(max_key, max(work.values()))
+        # 6x headroom absorbs Murmur salt fluctuation (a lone block of
+        # 50..400 rows peaks at 3.6x, at 50 rows) while a de-salted key
+        # (n_keys x) and the partner-salt key (16.7x at its best block
+        # size in this range) fail hard
+        assert max_key <= 6.0 / n_keys * total, (block_sizes, max_key, total)
 
     check()
 
-    # degenerate corpus through the real operator: ONE block, and the
-    # pinned exchange on (_block, _salt_b) present in the optimized plan
+    # degenerate corpus through the real operator: ONE block of 300 rows
     docs = spark.range(300).select(
         F.col("id").alias("doc_id"),
         F.lit("all").alias("_block"),
         (F.col("id") % 40).alias("v"),
     )
     pairs = salted_block_pairs(docs, "doc_id", ["v"])
-    plan = pairs._jdf.queryExecution().optimizedPlan().toString()
-    assert "RepartitionByExpression" in plan and "_salt_b" in plan, plan
-    # the degenerate all-one-block corpus still returns every unordered
-    # pair exactly once
-    got = pairs.select(
+    qe = pairs._jdf.queryExecution()
+
+    def repartition_keys(plan: str) -> list[list[str]]:
+        return [
+            [re.sub(r"#\d+L?$", "", k.strip()) for k in keys.split(",")]
+            for keys in re.findall(r"RepartitionByExpression \[([^\]]*)\]", plan)
+        ]
+
+    analyzed = qe.analyzed().toString()
+    assert ["_block", "_salt_lo", "_salt_hi"] in repartition_keys(analyzed), analyzed
+    # and the optimizer keeps it (the constant block folds to a literal)
+    optimized = qe.optimizedPlan().toString()
+    assert any(
+        keys[1:] == ["_salt_lo", "_salt_hi"] for keys in repartition_keys(optimized)
+    ), optimized
+    # the operator's pairs per key are the model's join rows per key,
+    # less the same-salt duplicates its id-order filter drops
+    counts = salt_counts(range(300))
+    want = {
+        k: w if k[0] < k[1] else counts[k[0]] * (counts[k[0]] - 1) // 2
+        for k, w in _salt_pair_work(counts).items()
+    }
+    got = {
+        (r["_salt_lo"], r["_salt_hi"]): r["count"]
+        for r in pairs.groupBy("_salt_lo", "_salt_hi").count().collect()
+    }
+    assert got == {k: w for k, w in want.items() if w}
+    # every unordered pair exactly once
+    got_pairs = pairs.select(
         F.least("_ida", "_idb").alias("a"), F.greatest("_ida", "_idb").alias("b")
     )
-    assert got.where(F.col("a") == F.col("b")).count() == 0
-    assert got.count() == got.distinct().count() == 300 * 299 // 2
+    assert got_pairs.where(F.col("a") == F.col("b")).count() == 0
+    assert got_pairs.count() == got_pairs.distinct().count() == 300 * 299 // 2

@@ -123,8 +123,8 @@ def test_connected_components_pathological_chain_olog_rounds(spark):
 
 @pytest.mark.slow  # r15: driver test-gate budget
 def test_connected_components_topology_round_pins(spark):
-    """Round-count pins across the three cc_scale_bench topologies
-    (small instances of tools/cc_scale_bench.py's generators): star
+    """Round-count pins across the three CC_SCALE_BENCH.md topologies
+    (small path, grid and blob graphs like the ones measured there): star
     contraction's convergence round stays O(log n) on path and grid
     and constant on the dedup-cluster blob shape; the default probe
     schedule (5, then every 2) confirms within 2 rounds of the true
